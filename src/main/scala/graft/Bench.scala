@@ -1,20 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{bit_xor, col, struct, xxhash64}
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh").toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Harness.cpus
+    val spark = Harness.session(cpus)
     // optional arg: comma-separated query-name filter (local iteration only;
     // the driver invokes with no args → full suite)
     val wanted = args.headOption.map(_.split(",").toSeq)
@@ -74,45 +65,7 @@ object Bench {
       // leave no warm-up residue behind in the session or on disk
       try spark.sql("DROP DATABASE IF EXISTS graft_warmup CASCADE")
       catch { case _: Throwable => () }
-      // Files.walk holds directory handles until CLOSED — leaked streams
-      // leak fds for the JVM's life (same fix as PipelineQueries.wipeDir)
-      try {
-        val s = java.nio.file.Files.walk(warmDir)
-        try s.sorted(java.util.Comparator.reverseOrder())
-          .forEach(f => java.nio.file.Files.deleteIfExists(f))
-        finally s.close()
-      } catch { case _: Throwable => () }
-    }
-    // Checksum aggregation: materializes EVERY column (count() would let
-    // Catalyst prune the projections being measured — regex passes, hashes,
-    // derived columns), while EliminateSorts drops the top-level orderBy
-    // that exists only for the oracle's deterministic compare — a global
-    // sort would execute the whole subtree twice (range-partitioner
-    // sampling pass + sort pass) and we'd be timing the harness, not the
-    // operator. bit_xor, NOT sum: ANSI mode throws ARITHMETIC_OVERFLOW on
-    // a sum of uniform 64-bit hashes after a handful of rows, which would
-    // abort (and under-time) every large-output query. Falls back to the
-    // noop sink for column types xxhash64 can't digest.
-    def runTimed(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      try {
-        val out = fn(spark, sfDir)
-        try out.agg(bit_xor(xxhash64(struct(out.columns.toIndexedSeq.map(col): _*)))).head()
-        catch {
-          // only a plan-time rejection (e.g. a type xxhash64 can't digest)
-          // falls back to the noop sink; a RUNTIME failure must not silently
-          // re-execute the whole query and report the doubled time
-          case _: org.apache.spark.sql.AnalysisException =>
-            out.write.format("noop").mode("overwrite").save()
-        }
-      } catch { case _: Throwable => () }
-      val dt = (System.nanoTime() - t0) / 1e9
-      // untimed inter-query cleanup: drop caches and nudge the
-      // ContextCleaner so one query's localCheckpoint blocks don't
-      // pressure the next query's memory (position-dependent noise)
-      try { spark.catalog.clearCache() } catch { case _: Throwable => () }
-      System.gc()
-      dt
+      Harness.rmTree(warmDir)
     }
     // Run-health calibration: the same tiny fixed query timed before the
     // suite and again after it. On a healthy machine the two agree; on a
@@ -136,38 +89,32 @@ object Bench {
     }
     calibrate() // untimed: compiles the calibration plan itself
     val calFirst = calibrate()
-    val results = selected.map { case (name, fn) => name -> runTimed(fn) }
-    val (regressionsConfirmed, failReport) = diffAgainstBaseline(results,
-      name => runTimed(SparkEntry.queries(name)))
+    val results = selected.map { case (name, fn) => name -> runTimed(spark, sfDir, fn) }
+    // a re-time that fails counts as over the gate: the query broke, not just slowed
+    val (regressionsConfirmed, failReport) = diffAgainstBaseline(
+      results.collect { case (k, Right(v)) => k -> v },
+      name => runTimed(spark, sfDir, SparkEntry.queries(name))
+        .getOrElse(Double.PositiveInfinity))
     val calLast = calibrate()
-    val loaded = calLast > 1.5 * calFirst || calFirst > 1.5 * calLast
-    val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val total = results.map(_._2).sum
-    // Summary fields AFTER the per-query map: the driver's BENCH_r{N}.json
-    // captures a TAIL of this (long) stdout line, so anything ahead of the
-    // map can be lost to truncation — in r7 the head-positioned total/sf
-    // were unrecoverable from the artifact. Key order is irrelevant to any
-    // JSON parser; it only decides what survives a tail capture.
-    val line = s"""{"metric":"total","queries":$qs,"value":$total,"unit":"sec","n":${results.size},"sf":"$sfDir","calibration_first_s":$calFirst,"calibration_last_s":$calLast,"loaded":$loaded,"regressions_confirmed":$regressionsConfirmed}"""
-    println(line)
+    val summary = Summary(results, sfDir, calFirst, calLast, regressionsConfirmed, cpus)
     // Lossless per-query artifact: bench_full.json is the complete record
     // the baseline is re-pinned from (BASELINE.md §pinning). FULL-SUITE RUNS
     // ONLY: a filtered local-iteration run must not clobber the pin source
     // with a subset map. The pin source is written ONLY by default-core runs:
     // the driver's low-core scaling pass previously overwrote it and
-    // destroyed the lossless 32-core record of the same round (r14) — every
-    // full run now ALSO leaves a core-count-suffixed copy so both records
+    // destroyed the lossless default-core record of the same round (r14) —
+    // every full run ALSO leaves a core-count-suffixed copy so both records
     // survive on disk whatever order the driver runs them in.
     if (wanted.isEmpty) {
       def writeArtifact(p: String): Unit =
         try java.nio.file.Files.writeString(
-          java.nio.file.Paths.get(p), line + "\n")
+          java.nio.file.Paths.get(p), summary.fullLine + "\n")
         catch { case e: Exception =>
           System.err.println(s"[bench] $p write failed: ${e.getMessage}") }
       writeArtifact(s"bench_full_c$cpus.json")
-      if (cpus == "32") writeArtifact("bench_full.json")
+      if (pinsBaseline(cpus)) writeArtifact("bench_full.json")
     }
+    println(summary.line)
     // fail-fast exit LAST: exiting before the line is printed and
     // bench_full.json is written would discard the whole suite's timings —
     // the data needed to debug the very regression being reported
@@ -176,11 +123,86 @@ object Bench {
     // regression report below) can emit after the first print, and the
     // driver's artifact keeps a bounded TAIL of stdout — the last line is
     // the one with the best chance of surviving the capture whole
-    println(line)
+    println(summary.line)
     if (failReport.nonEmpty) {
       failReport.foreach(r => System.err.println(s"[bench-regression] $r"))
       sys.exit(1)
     }
+  }
+
+  /** Whether a full run writes the `bench_full.json` pin source: only a run
+    * on the default core count, so a scaling pass at other core counts never
+    * overwrites the default-core record. */
+  private[graft] def pinsBaseline(cpus: Int, default: Int = Harness.defaultCpus): Boolean =
+    cpus == default
+
+  /** Times one query: Right(seconds), or Left(the failure) when the query
+    * throws — a failure is never recorded as a timing, since its partial
+    * wall time measures how far the query got, not the query.
+    *
+    * Checksum aggregation: materializes EVERY column (count() would let
+    * Catalyst prune the projections being measured — regex passes, hashes,
+    * derived columns), while EliminateSorts drops the top-level orderBy
+    * that exists only for the oracle's deterministic compare — a global
+    * sort would execute the whole subtree twice (range-partitioner
+    * sampling pass + sort pass) and we'd be timing the harness, not the
+    * operator. bit_xor, NOT sum: ANSI mode throws ARITHMETIC_OVERFLOW on
+    * a sum of uniform 64-bit hashes after a handful of rows, which would
+    * abort (and under-time) every large-output query. Falls back to the
+    * noop sink for column types xxhash64 can't digest. */
+  private[graft] def runTimed(spark: SparkSession, sfDir: String,
+                              fn: (SparkSession, String) => DataFrame): Either[String, Double] = {
+    val t0 = System.nanoTime()
+    val outcome = try {
+      val out = fn(spark, sfDir)
+      try out.agg(bit_xor(xxhash64(struct(out.columns.toIndexedSeq.map(col): _*)))).head()
+      catch {
+        // only a plan-time rejection (e.g. a type xxhash64 can't digest)
+        // falls back to the noop sink; a RUNTIME failure must not silently
+        // re-execute the whole query and report the doubled time
+        case _: org.apache.spark.sql.AnalysisException =>
+          out.write.format("noop").mode("overwrite").save()
+      }
+      Right((System.nanoTime() - t0) / 1e9)
+    } catch { case e: Throwable =>
+      Left(s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).linesIterator.nextOption().getOrElse("")}")
+    }
+    // untimed inter-query cleanup: drop caches and nudge the
+    // ContextCleaner so one query's localCheckpoint blocks don't
+    // pressure the next query's memory (position-dependent noise)
+    try { spark.catalog.clearCache() } catch { case _: Throwable => () }
+    System.gc()
+    outcome
+  }
+
+  /** The run's outcome. `line` is the stdout summary, kept under 1.5 KB so
+    * a capture that keeps only the last 2,000 chars of stdout still holds
+    * it whole: totals, calibration, and the slowest queries. `fullLine` is the lossless record for `bench_full*.json`:
+    * every query's seconds, and every failure with its error. Failed queries
+    * count in `n` and `failed`, never in `value`. */
+  private[graft] final case class Summary(
+      results: Seq[(String, Either[String, Double])], sfDir: String,
+      calFirst: Double, calLast: Double, regressionsConfirmed: Int, cpus: Int) {
+    private val ok = results.collect { case (k, Right(v)) => k -> v }
+    private val failed = results.collect { case (k, Left(e)) => k -> e }
+    private def obj(kvs: Seq[(String, String)]) =
+      kvs.map { case (k, v) => s"${Harness.str(k)}:$v" }.mkString("{", ",", "}")
+    // a drift of either calibration against the other means ambient load
+    // moved underneath the run — the gate and the reader discount uniformly
+    private val loaded = calLast > 1.5 * calFirst || calFirst > 1.5 * calLast
+    private def fields(queries: String, failures: String) =
+      s"""{"metric":"total",$queries"value":${ok.map(_._2).sum},"unit":"sec",""" +
+        s""""n":${results.size},"failed":${failed.size},$failures"sf":${Harness.str(sfDir)},""" +
+        s""""calibration_first_s":$calFirst,"calibration_last_s":$calLast,"loaded":$loaded,""" +
+        s""""regressions_confirmed":$regressionsConfirmed,"cpus":$cpus}"""
+
+    def line: String = fields(
+      s""""slowest":${obj(ok.sortBy(-_._2).take(10).map { case (k, v) => k -> Harness.num(v) })},""",
+      s""""failed_queries":${failed.take(10).map(f => Harness.str(f._1)).mkString("[", ",", "]")},""")
+
+    def fullLine: String = fields(
+      s""""queries":${obj(ok.map { case (k, v) => k -> v.toString })},""",
+      s""""failures":${obj(failed.map { case (k, e) => k -> Harness.str(e) })},""")
   }
 
   /** One adjudicated gate decision: queries over the first-pass gate

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Demo utility: re-materialize a CSV as a real .xlsx workbook (all cells
   * as-typed strings) so the reference-compatibility demo can drive the
   * collect-to-cleanse pipeline through the Excel source the way the
@@ -9,10 +7,7 @@ import org.apache.spark.sql.SparkSession
 object CsvToXlsx {
   def main(args: Array[String]): Unit = {
     require(args.length == 2, "usage: CsvToXlsx <in.csv> <out.xlsx>")
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(cores = 4)
     // read raw (no inference): the workbook carries the file's literal text
     val df = spark.read.option("header", "true").csv(args(0))
     val rows = Seq(df.columns.toSeq) ++

@@ -1,695 +1,819 @@
 package graft
 
 import graft.functions.{SimilarityFunctions => S}
+import graft.functions.expressions.{HashExpressions => HX, SketchAggregates => SK}
+import graft.operators.{Ann, ConnectedComponents => CC, Dedup, EntityMatch}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Scale-growth checkpoint (BASELINE.md): replicate the sf0.1 corpus Nx with
-  * id offsets and time the similarity-join family, validating that runtime
-  * tracks OUTPUT size (true pairs grow ~N² from replicated cliques) rather
-  * than input-pairs (which would be the all-pairs quadratic signature).
-  * Each stage is materialized inside its own timer (localCheckpoint + count)
-  * so the CC timing measures CC, not a lazy re-execution of the join.
-  * Usage: runMain graft.ScaleCheck [sfDir] [replication]. */
+/** The scale and profiling harness (BASELINE.md's scale rows). Each named
+  * section times its operator family at 1x and at n× — the documents
+  * fixture replicated with id offsets, or a generated fixture grown n× —
+  * so growth can be checked against the contract stated on the section:
+  * runtime tracking OUTPUT size or input size, never an all-pairs or hot-key
+  * quadratic. Each row is materialized inside its own timer
+  * (localCheckpoint + count, or a checksum sink where count() would let
+  * Catalyst prune the work) and emits one JSON record ([[Harness.Timer]]).
+  *
+  * Usage: runMain graft.ScaleCheck [sfDir] [n] [name,...]
+  * where each name is a section, or a SparkEntry query (timed with the
+  * Bench checksum sink, its slow jobs listed). No names = every section.
+  * The 100× tier runs the sections in [[Tier100]] with n=100: unperturbed
+  * replication there grows dup-clique output quadratically and measures the
+  * output writer, not the operator. */
 object ScaleCheck {
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val n = args.lift(1).map(_.toInt).getOrElse(10)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh").toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val names = resolve(args.lift(2))
+    val spark = Harness.session()
+    try run(spark, sfDir, n, names) finally spark.stop()
+  }
 
-    // Per-block shuffle-write bytes via a stage listener (events are async —
-    // the short drain sleep makes the numbers approximate but comparable
-    // between the 1x and Nx rows, which is what the growth check needs).
-    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong()
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(
-          s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-        shuffleBytes.addAndGet(s.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-    })
-    def timed[A](tag: String)(f: => (A, Long)): A = {
-      // untimed inter-row cleanup (Bench.runTimed's posture): drop caches
-      // and nudge the ContextCleaner so earlier rows' localCheckpoint
-      // blocks don't pressure this row's execution memory — measured: the
-      // winnow 10× row ran 54.7 s isolated vs 557 s late in the sequence
-      // (identical code, identical result rows), pure position noise
-      try { spark.catalog.clearCache() } catch { case _: Throwable => () }
-      System.gc()
-      Thread.sleep(200)
-      val sb0 = shuffleBytes.get()
-      val t0 = System.nanoTime()
-      val (a, rows) = f
-      val dt = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(200)
-      val sMB = (shuffleBytes.get() - sb0) / 1e6
-      println(f"[scale] $tag: $rows rows in $dt%.1f s (shuffle ~$sMB%.1f MB)")
-      a
+  /** The names a filter selects; an unknown name fails, since a typo must
+    * not pass as an empty measurement. */
+  private[graft] def resolve(filter: Option[String]): Seq[String] = filter.fold(sections.map(_._1)) { f =>
+    val names = f.split(",").map(_.trim).filter(_.nonEmpty).toSeq
+    val queries = SparkEntry.queries
+    val unknown = names.filterNot(k => bySection.contains(k) || queries.contains(k))
+    require(names.nonEmpty, "empty section filter")
+    require(unknown.isEmpty, s"unknown section or query: ${unknown.mkString(", ")}")
+    names
+  }
+
+  private[graft] def run(spark: SparkSession, sfDir: String, n: Int, names: Seq[String],
+                         emit: String => Unit = println(_)): Unit = {
+    val timer = new Harness.Timer(spark, n, emit)
+    val ctx = new Ctx(spark, sfDir, n, timer)
+    try names.foreach { name =>
+      timer.section = name
+      bySection.get(name).fold(query(ctx, name))(_(ctx))
+    } finally timer.close()
+  }
+
+  /** What every section sees. Fixtures are lazy, so a filtered run builds
+    * only what its sections use. */
+  final class Ctx(val spark: SparkSession, val sfDir: String, val n: Int,
+                  val timed: Harness.Timer) {
+    def row(tag: String)(rows: => Long): Unit = timed(tag)(((), rows))
+    def tiers[A](one: A, grown: A): Seq[(A, String)] = Seq(one -> "1x", grown -> s"${n}x")
+    /** Times `f` over the documents fixture and over its n replicas. */
+    def docsRows(name: String)(f: DataFrame => Long): Unit =
+      tiers(docs, rep).foreach { case (df, tag) => row(s"$name $tag")(f(df)) }
+    def table(name: String): DataFrame = queries.Tables(spark, sfDir, name)
+    def nextId(df: DataFrame, idCol: String): Long = df.agg(max(col(idCol))).head().getLong(0) + 1
+    /** k copies of `df`, copy i with `idCol` shifted by i·offset. */
+    def replicate(df: DataFrame, idCol: String, offset: Long, k: Int): DataFrame =
+      (0 until k).map(i => df.withColumn(idCol, col(idCol) + lit(i.toLong * offset)))
+        .reduce(_ unionByName _)
+
+    lazy val docs: DataFrame = {
+      val d = table("documents").select(col("doc_id"), col("lang"), col("source"), col("text"))
+      d.count() // warm
+      d
     }
-    def toks(df: DataFrame) = df.select(col("lang"), col("source"), col("doc_id"),
-      array_distinct(S.tokens(col("text"))).as("toks"))
+    /** Replica offset: clears the real id range, so replicas never alias. */
+    lazy val offset: Long = nextId(docs, "doc_id")
+    lazy val rep: DataFrame = replicate(docs, "doc_id", offset, n)
+    /** Replica i with the tokens whose hash lands in 2/5 of the space
+      * rewritten to a replica-suffixed spelling: within-replica similarity
+      * is untouched, cross-replica jaccard drops to ~(3/5)/(2·2/5+3/5) ≈
+      * 0.43 < 0.7. So n× input grows true near-dup output ~n× (bounded
+      * dup groups, the 100 TB regime) instead of n²-sized cliques. */
+    def perturbed(i: Int): DataFrame = docs.select(
+      (col("doc_id") + lit(i.toLong * offset)).as("doc_id"),
+      col("lang"), col("source"),
+      array_join(transform(split(col("text"), "\\s+"), t =>
+        when(pmod(xxhash64(t, lit(i)), lit(5)) < 2, concat(t, lit("_r"), lit(i)))
+          .otherwise(t)), " ").as("text"))
+    lazy val pert: DataFrame = perturbed(0)
+    lazy val pertRep: DataFrame = (0 until n).map(perturbed).reduce(_ unionByName _)
+    lazy val emb: DataFrame = table("embeddings").select(col("vec_id"), col("embedding"))
+    lazy val embOffset: Long = nextId(emb, "vec_id")
+    lazy val embRep: DataFrame = replicate(emb, "vec_id", embOffset, n)
+    /** Pipeline-query fixtures, staged once before the first query row. */
+    lazy val staged: Unit = queries.PipelineQueries.stageFixtures(spark, sfDir)
+  }
 
-    val docs = queries.Tables(spark, sfDir, "documents")
-      .select(col("doc_id"), col("lang"), col("source"), col("text"))
-    docs.count() // warm
-    // replica offset must clear the real id range or replicas would alias
-    val offset = docs.agg(max(col("doc_id"))).head().getLong(0) + 1
-    val rep = (0 until n).map(i => docs.select(
-        (col("doc_id") + lit(i.toLong * offset)).as("doc_id"),
-        col("lang"), col("source"), col("text")))
-      .reduce(_ unionByName _)
+  /** Checksum sink: materializes `cols` (count() alone would let Catalyst
+    * prune the expressions being measured) and returns the row count. */
+  private def checksum(df: DataFrame, cols: String*): Long = {
+    val h = if (cols.size == 1) xxhash64(col(cols.head)) else xxhash64(struct(cols.map(col): _*))
+    df.agg(bit_xor(h).as("ck"), count(lit(1)).as("cnt")).head().getLong(1)
+  }
 
-    def pairsOf(df: DataFrame, tag: String): DataFrame =
-      timed(s"jaccardSelfJoin t=0.7 blocked $tag") {
-        val p = operators.Dedup.jaccardSelfJoin(toks(df), "toks", "doc_id",
-            Seq("lang", "source"), 0.7)
-          .select(col("id_a"), col("id_b"))
-          .localCheckpoint(true) // materialized INSIDE this timer
-        (p, p.count())
+  private def checkpoint(df: DataFrame): (DataFrame, Long) = {
+    val p = df.localCheckpoint(true)
+    (p, p.count())
+  }
+
+  /** A SparkEntry query as one row, with the Bench checksum sink. */
+  private def query(c: Ctx, name: String): Unit = {
+    c.staged
+    c.row(name) {
+      val out = SparkEntry.queries(name)(c.spark, c.sfDir)
+      try checksum(out, out.columns.toIndexedSeq: _*)
+      catch { case _: org.apache.spark.sql.AnalysisException =>
+        // a column type xxhash64 can't digest: noop sink, rows observed
+        val obs = org.apache.spark.sql.Observation("rows")
+        out.observe(obs, count(lit(1)).as("rows")).write.format("noop").mode("overwrite").save()
+        obs.get("rows").asInstanceOf[Long]
       }
-    val pairs1 = pairsOf(docs, "1x")
-    val pairsN = pairsOf(rep, s"${n}x")
-    // localEdgeThreshold=0 FORCES the distributed loop at both scales: this
-    // checkpoint validates the distributed algorithm's growth curve, and the
-    // small-graph union-find cutover would otherwise make 1x incomparable
-    timed("connected components (distributed) 1x")(((),
-      operators.ConnectedComponents.run(pairs1, "id_a", "id_b",
-        localEdgeThreshold = 0).count()))
-    timed(s"connected components (distributed) ${n}x")(((),
-      operators.ConnectedComponents.run(pairsN, "id_a", "id_b",
-        localEdgeThreshold = 0).count()))
-    timed("connected components (auto cutover) 1x")(((),
-      operators.ConnectedComponents.run(pairs1, "id_a", "id_b").count()))
+    }
+  }
 
-    // Incremental CC: FIXED daily edge batch merged into a 1x/10x stored
-    // labeling (built OUTSIDE the timer). The replay graph is the
-    // batch-touched components' star edges + the batch — compare against
-    // the from-scratch distributed rows above, which re-traverse the graph.
-    locally {
+  private def toks(df: DataFrame) = df.select(col("lang"), col("source"), col("doc_id"),
+    array_distinct(S.tokens(col("text"))).as("toks"))
+
+  private def jaccardPairs(c: Ctx, df: DataFrame, tag: String): DataFrame =
+    c.timed(tag)(checkpoint(Dedup.jaccardSelfJoin(toks(df), "toks", "doc_id",
+      Seq("lang", "source"), 0.7).select(col("id_a"), col("id_b"))))
+
+  private def codebooks(seed: Int): Array[Array[Array[Double]]] = {
+    val fc = HX.fixedCentroids(seed, 128, 8)
+    Array.tabulate(8)(j => fc.slice(j * 16, j * 16 + 16))
+  }
+
+  private def scaleDb(c: Ctx): String = {
+    val db = s"graftscale${math.abs(c.sfDir.hashCode)}"
+    c.spark.sql(s"CREATE DATABASE IF NOT EXISTS $db")
+    db
+  }
+
+  private def entity(c: Ctx, i: Long): DataFrame = c.table("customer").select(
+    (col("c_custkey") + lit(i * 10000000L)).as("customerno"),
+    col("c_name").as("name"), col("c_nationkey").as("nationkey"),
+    col("c_mktsegment").as("segment"),
+    concat(lit("g-"), col("c_custkey") + lit(i * 10000000L)).as("globalid"))
+
+  private val fspec = EntityMatch.MatchSpec(
+    primaryTable = "", globalIdField = "globalid", sortField = "",
+    sourcePrimaryKey = "", sourceSystemKey = "",
+    levels = Seq(EntityMatch.LevelSpec("1", Seq("blk"),
+      Seq(EntityMatch.FieldSpec("name", "string", "jarowinkler", Some(0.85), 1.0)), 1.0)))
+  private def noGid(df: DataFrame) = df.withColumn("globalid", lit(null).cast("string"))
+  private def withGid(df: DataFrame) = df.withColumn("globalid", concat(lit("g-"), col("rid")))
+  private def fuzzyRun(c: Ctx, tag: String, incoming: DataFrame, primary: DataFrame,
+                       collapse: Boolean = false, saltThreshold: Int = 1024): Unit =
+    c.row(s"fuzzy match $tag") {
+      val (m, u) = EntityMatch.fuzzyMatch(noGid(incoming), withGid(primary), fspec,
+        Seq("rid"), collapseIncoming = collapse, saltTupleThreshold = saltThreshold)
+      m.count() + u.count()
+    }
+
+  /** Incremental dedup: FIXED daily batch (drawn from `one`) against a
+    * growing stored corpus. The batch×stored prefix join is stored-TOKEN-
+    * linear on the index side (never corpus-pairs), so wall should grow
+    * well under n× — the daily cost contract vs re-deduplicating the whole
+    * corpus each day. */
+  private def incrementalDedup(c: Ctx, one: DataFrame, grown: DataFrame): Unit = {
+    import c._
+    val toksOf = (df: DataFrame) => df.select(col("doc_id"), col("lang"),
+      col("source"), array_distinct(S.tokens(col("text"))).as("toks"))
+    val batch = toksOf(one.filter(pmod(col("doc_id"), lit(7)) === 0)
+      .select((col("doc_id") + lit(1000L * offset)).as("doc_id"),
+        col("lang"), col("source"), col("text")))
+      .localCheckpoint(true)
+    tiers(one, grown).foreach { case (df, tag) =>
+      row(s"incremental dedup, fixed batch vs $tag stored corpus")(
+        Dedup.incrementalDedup(toksOf(df), batch, "toks", "doc_id", Seq("lang", "source"), 0.7)
+          .groupBy(col("status")).count().collect().map(_.getLong(1)).sum)
+    }
+  }
+
+  /** Persisted BM25 index: encode-only append of a fixed batch + search vs
+    * a 1x/n× stored postings index (built OUTSIDE the timer — persisted
+    * state). Stored text is never re-tokenized; search prunes postings to
+    * the query-matched terms map-side — daily wall must grow well under n×. */
+  private def bm25Index(c: Ctx, one: DataFrame, grown: DataFrame): Unit = {
+    import c._
+    import graft.operators.Retrieval
+    val batch = one.filter(pmod(col("doc_id"), lit(7)) === 0)
+      .select((col("doc_id") + lit(3000L * offset)).as("doc_id"), col("text"))
+      .localCheckpoint(true)
+    tiers(one, grown).foreach { case (df, tag) =>
+      val (p, l) = Retrieval.bm25Index(df.select(col("doc_id"), col("text")), "text", "doc_id")
+      val (pi, li) = (p.localCheckpoint(true), l.localCheckpoint(true))
+      row(s"bm25 index append fixed batch + top-10 search vs $tag index") {
+        val (p2, l2) = Retrieval.bm25Append(pi, li, batch, "text", "doc_id")
+        Retrieval.bm25Search(p2, l2, "doc_id", queries.TextQueries.Bm25Queries, k = 10).count()
+      }
+    }
+  }
+
+  /** Incremental MinHash (signature-index path): FIXED daily batch against
+    * a growing stored INDEX, built OUTSIDE the timer (persisted state in
+    * the daily contract). Timed: batch banding + broadcast semi-join of
+    * stored bucket rows down to batch-touched buckets + batch-driven pair
+    * join + verify. Pair enumeration is batch-scoped by construction, so
+    * wall must grow well under n×. */
+  private def incrementalMinhash(c: Ctx, one: DataFrame, grown: DataFrame): Unit = {
+    import c._
+    val batch = one.filter(pmod(col("doc_id"), lit(7)) === 0)
+      .select((col("doc_id") + lit(2000L * offset)).as("doc_id"), col("text"))
+      .localCheckpoint(true)
+    tiers(one, grown).foreach { case (df, tag) =>
+      val idx = Dedup.minhashIndex(df.select(col("doc_id"), col("text")), "text", "doc_id")
+        .localCheckpoint(true)
+      row(s"incremental minhash, fixed batch vs $tag stored index")(
+        Dedup.incrementalMinhash(idx, batch, "text", "doc_id", threshold = 0.7)._1
+          .groupBy(col("status")).count().collect().map(_.getLong(1)).sum)
+    }
+  }
+
+  /** Stored corpus for the substring rows: a unique trail per doc, and the
+    * boilerplate banner on every 13th doc (`hot`: on every doc). */
+  private def substringCorpus(c: Ctx, body: String, rows: Long, off: Long,
+                              hot: Boolean = false): DataFrame = {
+    val banner = lit(" shared-fortycharacter-boilerplate-banner-text")
+    c.spark.range(rows).select((col("id") + off).as("doc_id"),
+      concat(lit(body), ((col("id") + off) * 7919L).cast("string"),
+        if (hot) banner else when(pmod(col("id"), lit(13L)) === 0, banner).otherwise(lit("")))
+        .as("text"))
+  }
+
+  private def substringScrub(idx: DataFrame, batch: DataFrame, needUpdatedIndex: Boolean): Long =
+    checksum(operators.SuffixArray.incrementalScrubRepeatedCharSpans(idx, batch,
+      "doc_id", "text", 40, keepFirst = true, needUpdatedIndex = needUpdatedIndex)._1,
+      "doc_id", "n_masked", "scrubbed_text")
+
+  /** Ring communities of 10 nodes; `offsets` are the in-ring edge steps. */
+  private def ring(c: Ctx, rows: Long, offsets: Seq[Long]): DataFrame = {
+    val dsts = offsets.map(o => col("id") - pmod(col("id"), lit(10L)) + pmod(col("id") + o, lit(10L)))
+    c.spark.range(rows).select(col("id").as("src"),
+      (if (dsts.size == 1) dsts.head else explode(array(dsts: _*))).as("dst"))
+  }
+
+  /** 50 fixed edges from every `stride`-th node to its ring's node +5. */
+  private def ringBatch(c: Ctx, stride: Long): DataFrame = c.spark.range(50)
+    .select((col("id") * stride).as("src"), (col("id") * stride + 5L).as("dst"))
+    .localCheckpoint(true)
+
+  /** A 2-out-degree synthetic graph over the ids of `nodes`. */
+  private def twoOutEdges(nodes: DataFrame): DataFrame = {
+    val nn = nodes.agg((max(col("doc_id")) + 1).as("__n"))
+    nodes.crossJoin(broadcast(nn)).select(col("doc_id").as("src"),
+      explode(array((col("doc_id") * 2 + 1) % col("__n"),
+        (col("doc_id") * 5 + 3) % col("__n"))).as("dst"))
+  }
+
+  /** Every section, in run order. */
+  private[graft] val sections: Seq[(String, Ctx => Unit)] = Seq(
+
+    // Exact prefix-filter jaccard join over n identical replicas: true pairs
+    // grow ~n² from the replicated cliques, so runtime must track OUTPUT
+    // size, not input pairs (the all-pairs quadratic signature). The pairs
+    // then feed connected components — localEdgeThreshold=0 FORCES the
+    // distributed loop at both scales (the small-graph union-find cutover
+    // would make 1x incomparable) — and incremental CC: a FIXED daily edge
+    // batch merged into a 1x/n× stored labeling built outside the timer,
+    // whose replay graph is only the batch-touched components' star edges.
+    "jaccard" -> { c => import c._
+      val pairs1 = jaccardPairs(c, docs, "jaccardSelfJoin t=0.7 blocked 1x")
+      val pairsN = jaccardPairs(c, rep, s"jaccardSelfJoin t=0.7 blocked ${n}x")
+      tiers(pairs1, pairsN).foreach { case (p, tag) =>
+        row(s"connected components (distributed) $tag")(
+          CC.run(p, "id_a", "id_b", localEdgeThreshold = 0).count())
+      }
+      row("connected components (auto cutover) 1x")(CC.run(pairs1, "id_a", "id_b").count())
       val batchE = docs.filter(pmod(col("doc_id"), lit(7)) === 0)
         .select(col("doc_id").as("src"), (col("doc_id") + lit(1L)).as("dst"))
         .localCheckpoint(true)
-      Seq(pairs1 -> "1x", pairsN -> s"${n}x").foreach { case (p, tag) =>
-        val labels = operators.ConnectedComponents.run(p, "id_a", "id_b",
-          localEdgeThreshold = 0).localCheckpoint(true)
-        timed(s"incremental CC, fixed edge batch vs $tag stored labeling")(((),
-          operators.ConnectedComponents.incremental(labels, batchE).count()))
+      tiers(pairs1, pairsN).foreach { case (p, tag) =>
+        val labels = CC.run(p, "id_a", "id_b", localEdgeThreshold = 0).localCheckpoint(true)
+        row(s"incremental CC, fixed edge batch vs $tag stored labeling")(
+          CC.incremental(labels, batchE).count())
       }
-    }
+    },
+
+    // The same join over PERTURBED replicas (see Ctx.perturbed): input
+    // grows n× and true output ~n× — the 100× tier's form of the row.
+    "jaccard_perturbed" -> { c => import c._
+      tiers(pert, pertRep).foreach { case (df, tag) =>
+        jaccardPairs(c, df, s"jaccardSelfJoin t=0.7 blocked $tag (perturbed replicas)")
+      }
+    },
 
     // Adversarial LSH skew: a flood of IDENTICAL docs puts one degenerate
     // bucket in every band — unguarded, the within-bucket self-join is
     // quadratic in the flood (50k copies → 1.25B candidate pairs per band).
     // The guard chains hot buckets, so the hot run must stay within ~2× of
     // the uniform run (growth tracks flood SIZE, not flood²).
-    val hotText = docs.select(col("text")).head().getString(0)
-    def minhashOn(df: DataFrame, tag: String): Unit =
-      timed(s"minhash pairs $tag") {
-        val p = operators.Dedup.minhashPairs(df, "text", "doc_id")
-          .localCheckpoint(true)
-        (p, p.count())
+    "minhash" -> { c => import c._
+      val hotText = docs.select(col("text")).head().getString(0)
+      val ids = docs.select(col("doc_id"), col("text"))
+      def minhashOn(df: DataFrame, tag: String): Unit =
+        timed(s"minhash pairs $tag")(checkpoint(Dedup.minhashPairs(df, "text", "doc_id")))
+      minhashOn(ids, "uniform 1x")
+      Seq(5000, 5000 * n).foreach { flood =>
+        val floodDf = spark.range(flood).select(
+          (col("id") + lit(10L * offset * math.max(n, 1))).as("doc_id"), lit(hotText).as("text"))
+        minhashOn(ids.unionByName(floodDf), s"hot-bucket flood=$flood")
       }
-    val ids = docs.select(col("doc_id"), col("text"))
-    minhashOn(ids, "uniform 1x")
-    Seq(5000, 5000 * n).foreach { flood =>
-      val floodDf = spark.range(flood).select(
-        (col("id") + lit(10L * offset * math.max(n, 1))).as("doc_id"),
-        lit(hotText).as("text"))
-      minhashOn(ids.unionByName(floodDf), s"hot-bucket flood=$flood")
-    }
+    },
 
-    // Directed containment join (round 8): same prefix-filter family as
-    // jaccardSelfJoin but with a FULL b-side index — the growth check
-    // validates that candidates stay token-linear (shuffle ~N, output ~N²
-    // from the replicated identical cliques where every replica contains
-    // every other with C = 1.0). 2-gram shingles: unigram sets are
-    // degenerate on the shared-vocabulary synthetic corpus.
-    def shingled(df: DataFrame) = df.select(col("lang"), col("source"),
-      col("doc_id"), S.wordShingles(col("text"), 2).as("toks"))
-    def containOf(df: DataFrame, tag: String): Unit =
-      timed(s"containmentJoin t=0.8 blocked $tag")(((),
-        operators.Dedup.containmentJoin(shingled(df), "toks", "doc_id",
-          Seq("lang", "source"), 0.8).count()))
-    containOf(docs, "1x")
-    containOf(rep, s"${n}x")
+    // Directed containment join: same prefix-filter family as
+    // jaccardSelfJoin but with a FULL b-side index — candidates must stay
+    // token-linear (shuffle ~n, output ~n² from the replicated identical
+    // cliques where every replica contains every other with C = 1.0).
+    // 2-gram shingles: unigram sets are degenerate on the shared-vocabulary
+    // synthetic corpus.
+    "containment" -> { c => import c._
+      docsRows("containmentJoin t=0.8 blocked")(df => Dedup.containmentJoin(
+        df.select(col("lang"), col("source"), col("doc_id"),
+          S.wordShingles(col("text"), 2).as("toks")),
+        "toks", "doc_id", Seq("lang", "source"), 0.8).count())
+    },
+
+    // The containment join (the q126 family) over perturbed replicas with
+    // planted 60%-prefix snippets of every 9th doc: cross-replica
+    // containments don't form, so true output grows ~n× (within-replica
+    // snippet→source pairs). The a-side prefix is rank-linear and the b-side
+    // full inverted index token-linear — no pairs² term from the hot
+    // shared-vocab tokens (rare/perturbed tokens dominate the prefixes).
+    "containment_snippets" -> { c => import c._
+      def withSnippets(df: DataFrame): DataFrame = df.unionByName(
+        df.filter(pmod(col("doc_id"), lit(9)) === 0)
+          .select((col("doc_id") + lit(100L * offset)).as("doc_id"),
+            col("lang"), col("source"),
+            array_join(slice(split(col("text"), "\\s+"), lit(1),
+              greatest(ceil(size(split(col("text"), "\\s+")) * lit(0.6))
+                .cast("int"), lit(1))), " ").as("text")))
+      tiers(pert, pertRep).foreach { case (df, tag) =>
+        row(s"containmentJoin t=0.8 blocked, planted snippets $tag")(
+          Dedup.containmentJoin(withSnippets(df).select(col("lang"), col("source"),
+              col("doc_id"), HX.hashed_shingles(col("text"), 2).as("toks")),
+            "toks", "doc_id", Seq("lang", "source"), 0.8)
+            .select(col("id_a"), col("id_b")).localCheckpoint(true).count())
+      }
+    },
 
     // K5 partition-scoped upsert: a batch confined to ONE of 25 nationkey
-    // partitions must cost ~the affected partition, not the table — the Nx
-    // upsert should grow FAR slower than Nx (the residual growth is the
+    // partitions must cost ~the affected partition, not the table — the n×
+    // upsert should grow FAR slower than n× (the residual growth is the
     // column-pruned semi-join scan that finds stale partitions).
-    val db = s"graftscale${math.abs(sfDir.hashCode)}"
-    spark.sql(s"CREATE DATABASE IF NOT EXISTS $db")
-    val cust = queries.Tables(spark, sfDir, "customer")
-    def entity(i: Long) = cust.select(
-      (col("c_custkey") + lit(i * 10000000L)).as("customerno"),
-      col("c_name").as("name"), col("c_nationkey").as("nationkey"),
-      col("c_mktsegment").as("segment"),
-      concat(lit("g-"), col("c_custkey") + lit(i * 10000000L)).as("globalid"))
-    def mkPrimary(tbl: String, df: DataFrame): Unit = {
-      spark.sql(s"DROP TABLE IF EXISTS $db.$tbl")
-      df.write.partitionBy("nationkey").saveAsTable(s"$db.$tbl")
-    }
-    mkPrimary("prim1", entity(0))
-    mkPrimary("primN", (0 until n).map(i => entity(i.toLong)).reduce(_ unionByName _))
-    val mspec = operators.EntityMatch.MatchSpec(
-      primaryTable = "", globalIdField = "globalid", sortField = "",
-      sourcePrimaryKey = "", sourceSystemKey = "", levels = Seq.empty,
-      partitionBy = Seq("nationkey"))
-    val batch = entity(0).filter(col("nationkey") === 0)
-      .withColumn("segment", lit("UPDATED")).localCheckpoint(true)
-    val batchRows = batch.count()
-    Seq("prim1" -> "1x", "primN" -> s"${n}x").foreach { case (tbl, tag) =>
-      timed(s"upsert $batchRows rows into 1/25 partitions of $tag table")(((),
-        { operators.EntityMatch.upsert(spark, s"$db.$tbl", batch, mspec)
-          spark.table(s"$db.$tbl").count() }))
-    }
+    "upsert" -> { c => import c._
+      val db = scaleDb(c)
+      def mkPrimary(tbl: String, df: DataFrame): Unit = {
+        spark.sql(s"DROP TABLE IF EXISTS $db.$tbl")
+        df.write.partitionBy("nationkey").saveAsTable(s"$db.$tbl")
+      }
+      mkPrimary("prim1", entity(c, 0))
+      mkPrimary("primN", (0 until n).map(i => entity(c, i.toLong)).reduce(_ unionByName _))
+      val mspec = EntityMatch.MatchSpec(
+        primaryTable = "", globalIdField = "globalid", sortField = "",
+        sourcePrimaryKey = "", sourceSystemKey = "", levels = Seq.empty,
+        partitionBy = Seq("nationkey"))
+      val batch = entity(c, 0).filter(col("nationkey") === 0)
+        .withColumn("segment", lit("UPDATED")).localCheckpoint(true)
+      val batchRows = batch.count()
+      tiers("prim1", "primN").foreach { case (tbl, tag) =>
+        row(s"upsert $batchRows rows into 1/25 partitions of $tag table") {
+          EntityMatch.upsert(spark, s"$db.$tbl", batch, mspec)
+          spark.table(s"$db.$tbl").count()
+        }
+      }
+    },
 
     // Compaction FLAT contract: the SAME two fragmented partitions inside a
-    // 1x table vs an Nx table (replicas land in NEW nationkey values, so the
+    // 1x table vs an n× table (replicas land in NEW nationkey values, so the
     // fragmented partitions are byte-identical at both scales). The wall
     // must track the AFFECTED bytes — flat in table size — because the
     // manifest walk is O(files) and unselected partitions are never opened.
-    def mkFragmented(tbl: String, extra: Int): Unit = {
-      spark.sql(s"DROP TABLE IF EXISTS $db.$tbl")
-      val base = entity(0)
-      val allRows = (base +: (1 to extra).map(i => entity(0).select(
-          col("customerno") + lit(i * 40000000L) as "customerno", col("name"),
-          (col("nationkey") + lit(i * 25)).as("nationkey"),
-          col("segment"), col("globalid"))))
-        .reduce(_ unionByName _)
-      allRows.write.partitionBy("nationkey").saveAsTable(s"$db.$tbl")
-      // fragment ONLY nationkey 0 and 1: 16 appended slices each
-      val frag = base.filter(col("nationkey") < 2).repartition(16)
-        .select(spark.table(s"$db.$tbl").columns.map(col).toIndexedSeq: _*)
-      frag.write.mode("append").insertInto(s"$db.$tbl")
-    }
-    mkFragmented("frag1", 0)
-    mkFragmented("fragN", n - 1)
-    Seq("frag1" -> "1x", "fragN" -> s"${n}x").foreach { case (tbl, tag) =>
-      timed(s"compact 2 fragmented partitions of $tag table")(((),
-        { val r = catalog.Compaction.compactTable(spark, s"$db.$tbl",
-            targetBytes = 128L << 20)
-          require(r.partitionsCompacted == 2, s"expected 2 selected: $r")
-          r.filesAfter.toLong }))
-    }
-
-    // No-op compaction = pure manifest walk: tables of 250 vs 2500
-    // single-file partitions, nothing selectable — the wall IS the driver
-    // listing, parallelized over partition dirs; 10× the partition count
-    // must stay near-flat (it would serialize linearly single-threaded on
-    // a per-listing-latency store).
-    Seq(250, 2500).foreach { parts =>
-      val tbl = s"noop$parts"
-      spark.sql(s"DROP TABLE IF EXISTS $db.$tbl")
-      spark.range(parts).select(col("id"), col("id").as("p"))
-        .repartition(1).write.partitionBy("p").saveAsTable(s"$db.$tbl")
-      timed(s"no-op compaction (manifest walk only), $parts partitions")(((),
-        { val r = catalog.Compaction.compactTable(spark, s"$db.$tbl",
-            targetBytes = 128L << 20)
-          require(r.partitionsCompacted == 0, s"expected no-op: $r")
-          r.partitionsSeen.toLong }))
-    }
-
-    // J4 fuzzy blocking join — adversarial hot block: flood rows sharing ONE
-    // block value with boilerplate (identical) field values on BOTH sides.
-    // Unguarded, the blocking join is flood² score evaluations (50k flood →
-    // 2.5B jaro calls); the primary-side tuple collapse (EntityMatch.scala)
-    // makes it flood × distinct-tuples, so the hot run must stay within ~2×
-    // of the uniform run.
-    val fspec = operators.EntityMatch.MatchSpec(
-      primaryTable = "", globalIdField = "globalid", sortField = "",
-      sourcePrimaryKey = "", sourceSystemKey = "",
-      levels = Seq(operators.EntityMatch.LevelSpec("1", Seq("blk"),
-        Seq(operators.EntityMatch.FieldSpec("name", "string", "jarowinkler",
-          Some(0.85), 1.0)), 1.0)))
-    def fuzzySide(side: String, nRows: Int): DataFrame = spark.range(nRows).select(
-      concat(lit(side), col("id")).as("rid"),
-      concat(lit("blk"), pmod(col("id"), lit(1000))).as("blk"),
-      concat(lit("name "), pmod(xxhash64(col("id") * 7), lit(4000))).as("name"))
-    def withGid(df: DataFrame) =
-      df.withColumn("globalid", concat(lit("g-"), col("rid")))
-    def noGid(df: DataFrame) =
-      df.withColumn("globalid", lit(null).cast("string"))
-    def fuzzyRun(tag: String, incoming: DataFrame, primary: DataFrame,
-                 collapse: Boolean = false,
-                 saltThreshold: Int = 1024): Unit =
-      timed(s"fuzzy match $tag") {
-        val (m, u) = operators.EntityMatch.fuzzyMatch(incoming, primary, fspec,
-          Seq("rid"), collapseIncoming = collapse,
-          saltTupleThreshold = saltThreshold)
-        ((), m.count() + u.count())
+    // Then no-op compaction = pure manifest walk over 250 vs 2500
+    // single-file partitions: the wall IS the driver listing, parallelized
+    // over partition dirs, so 10× the partitions must stay near-flat.
+    "compaction" -> { c => import c._
+      val db = scaleDb(c)
+      def mkFragmented(tbl: String, extra: Int): Unit = {
+        spark.sql(s"DROP TABLE IF EXISTS $db.$tbl")
+        val base = entity(c, 0)
+        (base +: (1 to extra).map(i => base.select(
+            col("customerno") + lit(i * 40000000L) as "customerno", col("name"),
+            (col("nationkey") + lit(i * 25)).as("nationkey"),
+            col("segment"), col("globalid"))))
+          .reduce(_ unionByName _)
+          .write.partitionBy("nationkey").saveAsTable(s"$db.$tbl")
+        // fragment ONLY nationkey 0 and 1: 16 appended slices each
+        base.filter(col("nationkey") < 2).repartition(16)
+          .select(spark.table(s"$db.$tbl").columns.map(col).toIndexedSeq: _*)
+          .write.mode("append").insertInto(s"$db.$tbl")
       }
-    val fuzzyBase = 20000
-    fuzzyRun("uniform 1x", noGid(fuzzySide("i", fuzzyBase)),
-      withGid(fuzzySide("p", fuzzyBase)))
-    Seq(5000, 5000 * n).foreach { flood =>
-      def floodDf(side: String) = spark.range(flood).select(
-        concat(lit(s"f$side"), col("id")).as("rid"), lit("HOTBLOCK").as("blk"),
-        lit("Boilerplate Corp Inc").as("name"))
-      fuzzyRun(s"hot-block flood=$flood",
-        noGid(fuzzySide("i", fuzzyBase).unionByName(floodDf("i"))),
-        withGid(fuzzySide("p", fuzzyBase).unionByName(floodDf("p"))))
-      // incoming-side signature collapse: the flood's F identical incoming
-      // rows score ONCE, the winner broadcasts back — F×1 becomes 1×1
-      fuzzyRun(s"hot-block flood=$flood collapseIncoming",
-        noGid(fuzzySide("i", fuzzyBase).unionByName(floodDf("i"))),
-        withGid(fuzzySide("p", fuzzyBase).unionByName(floodDf("p"))),
-        collapse = true)
-    }
+      mkFragmented("frag1", 0)
+      mkFragmented("fragN", n - 1)
+      tiers("frag1", "fragN").foreach { case (tbl, tag) =>
+        row(s"compact 2 fragmented partitions of $tag table") {
+          val r = catalog.Compaction.compactTable(spark, s"$db.$tbl", targetBytes = 128L << 20)
+          require(r.partitionsCompacted == 2, s"expected 2 selected: $r")
+          r.filesAfter.toLong
+        }
+      }
+      Seq(250, 2500).foreach { parts =>
+        val tbl = s"noop$parts"
+        spark.sql(s"DROP TABLE IF EXISTS $db.$tbl")
+        spark.range(parts).select(col("id"), col("id").as("p"))
+          .repartition(1).write.partitionBy("p").saveAsTable(s"$db.$tbl")
+        row(s"no-op compaction (manifest walk only), $parts partitions") {
+          val r = catalog.Compaction.compactTable(spark, s"$db.$tbl", targetBytes = 128L << 20)
+          require(r.partitionsCompacted == 0, s"expected no-op: $r")
+          r.partitionsSeen.toLong
+        }
+      }
+    },
 
-    // Adversarial DISTINCT-tuple hot block — the case the tuple collapse
-    // cannot linearize: one block value, every field tuple unique on both
-    // sides, so the F_i × F_p score evaluations are semantically REQUIRED.
-    // The scalability question is task BALANCE: AQE's skew split keys on
-    // partition input BYTES and this block is tiny-input/quadratic-output
-    // (it never splits), so the explicit salt guard must spread the block
-    // across tasks — guard-off vs guard-on at identical candidate volume,
-    // then sqrt(10)× flood (= 10× candidate volume) to show wall tracking
-    // WORK, not flood².
-    Seq(2000 -> "F=2000 (4M cands)", 6325 -> "F=6325 (40M cands)").foreach {
-      case (flood, tag) =>
-        def distinctFlood(side: String) = spark.range(flood).select(
-          concat(lit(s"d$side"), col("id")).as("rid"), lit("HOTBLOCK").as("blk"),
-          concat(lit("uniq "), lit(side), col("id")).as("name"))
-        if (flood == 2000)
-          fuzzyRun(s"distinct-tuple hot block $tag SALT OFF",
-            noGid(distinctFlood("i")), withGid(distinctFlood("p")),
-            saltThreshold = Int.MaxValue)
-        fuzzyRun(s"distinct-tuple hot block $tag salt split",
-          noGid(distinctFlood("i")), withGid(distinctFlood("p")))
-    }
+    // J4 fuzzy blocking join. Adversarial hot block: flood rows sharing ONE
+    // block value with boilerplate (identical) field values on BOTH sides.
+    // Unguarded, the blocking join is flood² score evaluations; the
+    // primary-side tuple collapse makes it flood × distinct-tuples, so the
+    // hot run must stay within ~2× of the uniform run, and collapseIncoming
+    // scores the flood's identical incoming rows ONCE (F×1 becomes 1×1).
+    // Then the DISTINCT-tuple hot block the collapse cannot linearize: the
+    // F_i × F_p score evaluations are REQUIRED, and AQE's skew split (keyed
+    // on input BYTES) never splits this tiny-input/quadratic-output block,
+    // so the explicit salt guard must spread it across tasks — guard off vs
+    // on at identical candidate volume, then sqrt(10)× flood (10× candidate
+    // volume) to show wall tracking WORK, not flood².
+    "fuzzy" -> { c => import c._
+      def side(s: String, nRows: Int): DataFrame = spark.range(nRows).select(
+        concat(lit(s), col("id")).as("rid"),
+        concat(lit("blk"), pmod(col("id"), lit(1000))).as("blk"),
+        concat(lit("name "), pmod(xxhash64(col("id") * 7), lit(4000))).as("name"))
+      fuzzyRun(c, "uniform 1x", side("i", 20000), side("p", 20000))
+      Seq(5000, 5000 * n).foreach { flood =>
+        def floodDf(s: String) = side(s, 20000).unionByName(spark.range(flood).select(
+          concat(lit(s"f$s"), col("id")).as("rid"), lit("HOTBLOCK").as("blk"),
+          lit("Boilerplate Corp Inc").as("name")))
+        fuzzyRun(c, s"hot-block flood=$flood", floodDf("i"), floodDf("p"))
+        fuzzyRun(c, s"hot-block flood=$flood collapseIncoming", floodDf("i"), floodDf("p"),
+          collapse = true)
+      }
+      Seq(2000 -> "F=2000 (4M cands)", 6325 -> "F=6325 (40M cands)").foreach {
+        case (flood, tag) =>
+          def distinctFlood(s: String) = spark.range(flood).select(
+            concat(lit(s"d$s"), col("id")).as("rid"), lit("HOTBLOCK").as("blk"),
+            concat(lit("uniq "), lit(s), col("id")).as("name"))
+          if (flood == 2000)
+            fuzzyRun(c, s"distinct-tuple hot block $tag SALT OFF",
+              distinctFlood("i"), distinctFlood("p"), saltThreshold = Int.MaxValue)
+          fuzzyRun(c, s"distinct-tuple hot block $tag salt split",
+            distinctFlood("i"), distinctFlood("p"))
+      }
+    },
 
-    // Realistic key distribution (not uniform replication): Zipf(≈1) block
-    // values via inverse CDF — floor(exp(u·ln K)) gives P(block=r) ∝
-    // ln(1+1/r) ≈ 1/r — with bounded field cardinality (200 distinct names),
-    // the shape real boilerplate-heavy head blocks have. Candidate count is
-    // Σ_b inc_b × distinctTuples_b, so 10× rows must grow wall ~linearly,
-    // never head-block².
-    def zipfSide(side: String, nRows: Int): DataFrame = {
-      val k = 10000.0
-      val u = pmod(xxhash64(col("id"), lit(side)), lit(1000000)).cast("double") / 1000000.0
-      spark.range(nRows).select(
-        concat(lit(side), col("id")).as("rid"),
-        concat(lit("z"), floor(exp(u * math.log(k)))).as("blk"),
-        concat(lit("name "), pmod(xxhash64(col("id") * 13), lit(200))).as("name"))
-    }
-    val zipfBase = 15000
-    Seq(1 -> "1x", n -> s"${n}x").foreach { case (m, tag) =>
-      fuzzyRun(s"zipf-blocks $tag", noGid(zipfSide("i", zipfBase * m)),
-        withGid(zipfSide("p", zipfBase * m)))
-      // the head block has many rows but bounded DISTINCT signatures (200
-      // names) — collapsing incoming turns head-rows × 200 score evals into
-      // ≤200 × 200, the regime this knob exists for
-      fuzzyRun(s"zipf-blocks $tag collapseIncoming",
-        noGid(zipfSide("i", zipfBase * m)), withGid(zipfSide("p", zipfBase * m)),
-        collapse = true)
-    }
+    // Realistic key distribution: Zipf(≈1) block values via inverse CDF —
+    // floor(exp(u·ln K)) gives P(block=r) ∝ ln(1+1/r) ≈ 1/r — with bounded
+    // field cardinality (200 distinct names), the shape of real
+    // boilerplate-heavy head blocks. Candidates are Σ_b inc_b ×
+    // distinctTuples_b, so n× rows must grow wall ~linearly, never
+    // head-block². collapseIncoming turns head-rows × 200 score evals into
+    // ≤200 × 200, the regime the knob exists for.
+    "fuzzy_zipf" -> { c => import c._
+      def zipfSide(s: String, nRows: Int): DataFrame = {
+        val u = pmod(xxhash64(col("id"), lit(s)), lit(1000000)).cast("double") / 1000000.0
+        spark.range(nRows).select(
+          concat(lit(s), col("id")).as("rid"),
+          concat(lit("z"), floor(exp(u * math.log(10000.0)))).as("blk"),
+          concat(lit("name "), pmod(xxhash64(col("id") * 13), lit(200))).as("name"))
+      }
+      tiers(1, n).foreach { case (m, tag) =>
+        fuzzyRun(c, s"zipf-blocks $tag", zipfSide("i", 15000 * m), zipfSide("p", 15000 * m))
+        fuzzyRun(c, s"zipf-blocks $tag collapseIncoming",
+          zipfSide("i", 15000 * m), zipfSide("p", 15000 * m), collapse = true)
+      }
+    },
 
     // Distributed k-means step: one assignment scan + one aggregation with
-    // map-side partial sums — runtime must track input ~linearly, shuffle
-    // stays k × dim-ish (partial aggregates), never input-sized.
-    val embT = queries.Tables(spark, sfDir, "embeddings")
-      .select(col("vec_id"), col("embedding"))
-    val embOff = embT.agg(max(col("vec_id"))).head().getLong(0) + 1
-    val embN = (0 until n).map(i => embT.select(
-        (col("vec_id") + lit(i.toLong * embOff)).as("vec_id"), col("embedding")))
-      .reduce(_ unionByName _)
-    val kmCents = functions.expressions.HashExpressions.fixedCentroids(100, 16, 64)
-    Seq(embT -> "1x", embN -> s"${n}x").foreach { case (df, tag) =>
-      timed(s"kmeans step k=16 $tag")(((),
-        operators.Ann.kmeansStep(df, "embedding", kmCents).count()))
-    }
+    // map-side partial sums — runtime ~linear in input, shuffle k × dim-ish.
+    "kmeans" -> { c => import c._
+      val cents = HX.fixedCentroids(100, 16, 64)
+      tiers(emb, embRep).foreach { case (df, tag) =>
+        row(s"kmeans step k=16 $tag")(Ann.kmeansStep(df, "embedding", cents).count())
+      }
+    },
 
     // PQ: encode is the one full read of raw vectors (map-side, no shuffle);
-    // ADC search scans only the m-byte codes against broadcast query tables.
-    // Both must track corpus size linearly with near-zero shuffle.
-    val pqFc = functions.expressions.HashExpressions.fixedCentroids(200, 128, 8)
-    val pqBooks = Array.tabulate(8)(j => pqFc.slice(j * 16, j * 16 + 16))
-    val pqQ = embT.filter(col("vec_id") < 8)
-      .select(col("vec_id").as("qid"), col("embedding"))
-    Seq(embT -> "1x", embN -> s"${n}x").foreach { case (df, tag) =>
-      val codes = timed(s"pq encode m=8 k=16 $tag") {
-        val c = operators.Ann.pqEncode(df, "embedding", pqBooks)
-          .select(col("vec_id"), col("code")).localCheckpoint(true)
-        (c, c.count())
+    // ADC search scans only the m-byte codes against broadcast query tables;
+    // full IVF-PQ is one assign+encode scan, then ADC over the nprobe probed
+    // lists only. All must track corpus size linearly with near-zero shuffle.
+    "pq" -> { c => import c._
+      val books = codebooks(200)
+      val cents = HX.fixedCentroids(100, 16, 64)
+      val q = emb.filter(col("vec_id") < 8).select(col("vec_id").as("qid"), col("embedding"))
+      tiers(emb, embRep).foreach { case (df, tag) =>
+        val codes = timed(s"pq encode m=8 k=16 $tag")(checkpoint(
+          Ann.pqEncode(df, "embedding", books).select(col("vec_id"), col("code"))))
+        row(s"pq adc top-10, 8 queries $tag")(
+          Ann.pqTopK(codes, q, "embedding", "vec_id", "qid", books, k = 10).count())
+        row(s"ivf-pq top-10 nprobe=4, 8 queries $tag")(Ann.ivfPqTopK(df, q, "embedding",
+          "vec_id", "qid", cents, books, k = 10, nprobe = 4).count())
       }
-      timed(s"pq adc top-10, 8 queries $tag")(((),
-        operators.Ann.pqTopK(codes, pqQ, "embedding", "vec_id", "qid",
-          pqBooks, k = 10).count()))
-      // full IVF-PQ: one assign+encode scan, then ADC only over the nprobe
-      // probed lists — per-query cost must track list size, not corpus
-      timed(s"ivf-pq top-10 nprobe=4, 8 queries $tag")(((),
-        operators.Ann.ivfPqTopK(df, pqQ, "embedding", "vec_id", "qid",
-          kmCents, pqBooks, k = 10, nprobe = 4).count()))
-    }
+    },
 
     // Image perceptual-hash dedup: PNG fixtures generated IN EXECUTORS
-    // (grouped near-dups, q100's pattern), decoded for real, dHashed,
-    // paired via the banded hamming join — decode is the dominant cost and
-    // must parallelize; only (id, fp) may shuffle.
-    locally {
+    // (grouped near-dups, q100's pattern), decoded for real, dHashed, paired
+    // via the banded hamming join — decode dominates and must parallelize;
+    // only (id, fp) may shuffle.
+    "image_dedup" -> { c => import c._
       import org.apache.spark.sql.Row
       import org.apache.spark.sql.types.{BinaryType, LongType, StructField, StructType}
-      val mediaSchema = StructType(Seq(
+      val schema = StructType(Seq(
         StructField("media_id", LongType), StructField("content", BinaryType)))
-      def media(count: Int) = multimodal.Multimodal.mapBatched(
-        spark.range(count).select(col("id").as("media_id")), 64, mediaSchema) { b =>
-          b.iterator.map(r => Row(r.getLong(0),
-            multimodal.ImageIoCodec.nearDupPattern(r.getLong(0), 8, 8, 5)))
-        }
-      Seq(5000 -> "1x", 5000 * n -> s"${n}x").foreach { case (cnt, tag) =>
-        timed(s"image dhash dedup pairs $tag")(((),
-          multimodal.Multimodal.imageDupePairs(media(cnt), maxHamming = 3).count()))
+      def media(cnt: Int) = multimodal.Multimodal.mapBatched(
+        spark.range(cnt).select(col("id").as("media_id")), 64, schema) { b =>
+        b.iterator.map(r => Row(r.getLong(0),
+          multimodal.ImageIoCodec.nearDupPattern(r.getLong(0), 8, 8, 5)))
       }
-    }
+      tiers(5000, 5000 * n).foreach { case (cnt, tag) =>
+        row(s"image dhash dedup pairs $tag")(
+          multimodal.Multimodal.imageDupePairs(media(cnt), maxHamming = 3).count())
+      }
+    },
 
     // DQ quarantine: 3 row-level rules fold into ONE pass — runtime must
-    // track input size (≤ Nx), never rules × passes.
-    val orders = queries.Tables(spark, sfDir, "orders")
-      .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
-        col("o_totalprice"))
-    val ordersN = (0 until n).map(_ => orders).reduce(_ unionByName _)
-    val dqRules = Seq(
-      "ColumnValues 'o_orderstatus' in ['O','F']",
-      "ColumnValues 'o_totalprice' >= 30000",
-      "CustomSql 'SELECT o_orderkey FROM primary WHERE o_custkey IS NOT NULL'")
-    Seq(orders -> "1x", ordersN -> s"${n}x").foreach { case (df, tag) =>
-      timed(s"dq quarantine 3 rules $tag")(((),
-        { val r = new dq.DqEngine().runQuarantine(df, dqRules)
-          r.passed.count() + r.failed.count() }))
-    }
+    // track input size (≤ n×), never rules × passes.
+    "dq" -> { c => import c._
+      val orders = table("orders").select(col("o_orderkey"), col("o_custkey"),
+        col("o_orderstatus"), col("o_totalprice"))
+      val rules = Seq(
+        "ColumnValues 'o_orderstatus' in ['O','F']",
+        "ColumnValues 'o_totalprice' >= 30000",
+        "CustomSql 'SELECT o_orderkey FROM primary WHERE o_custkey IS NOT NULL'")
+      tiers(orders, (0 until n).map(_ => orders).reduce(_ unionByName _)).foreach {
+        case (df, tag) =>
+          row(s"dq quarantine 3 rules $tag") {
+            val r = new dq.DqEngine().runQuarantine(df, rules)
+            r.passed.count() + r.failed.count()
+          }
+      }
+    },
 
-    // Repetition metrics: per-row kernel — runtime must track input (~Nx),
-    // zero shuffle.
-    Seq(docs -> "1x", rep -> s"${n}x").foreach { case (df, tag) =>
-      timed(s"line repetition metrics $tag")(((),
-        operators.Repetition.lineRepetition(df, "doc_id", "text").count()))
-    }
+    // Repetition metrics: per-row kernel — runtime ~n×, zero shuffle.
+    "line_repetition" -> { c =>
+      c.docsRows("line repetition metrics")(df =>
+        operators.Repetition.lineRepetition(df, "doc_id", "text").count())
+    },
 
     // 13-gram decontamination: per-doc distinct gram hashes against a
-    // broadcast bench side — runtime must track corpus size (~Nx), never
-    // corpus × bench.
-    val benchDocs = docs.filter(col("doc_id") % 25 === 0).select(col("doc_id"),
-      array_join(slice(S.tokens(col("text")), 3, 30), " ").as("text"))
-    Seq(docs -> "1x", rep -> s"${n}x").foreach { case (df, tag) =>
-      timed(s"13-gram decontamination $tag")(((),
-        operators.Dedup.ngramOverlapJoin(df.select(col("doc_id"), col("text")),
-          benchDocs, "text", "doc_id", n = 13).count()))
-    }
+    // broadcast bench side — runtime ~n×, never corpus × bench.
+    "decontamination" -> { c => import c._
+      val bench = docs.filter(col("doc_id") % 25 === 0).select(col("doc_id"),
+        array_join(slice(S.tokens(col("text")), 3, 30), " ").as("text"))
+      docsRows("13-gram decontamination")(df => Dedup.ngramOverlapJoin(
+        df.select(col("doc_id"), col("text")), bench, "text", "doc_id", n = 13).count())
+    },
+
+    // Bloom decontamination: build = one bounded aggregate over the (fixed)
+    // bench set; probe = one codegen'd corpus scan with the 128 KiB bitset as
+    // a reference object. Wall tracks the scan; corpus-side shuffle ~ZERO
+    // (localCheckpoint sink — count() would prune the probe).
+    "bloom_decontamination" -> { c => import c._
+      val bench = docs.filter(pmod(col("doc_id"), lit(25)) === 0).select(col("doc_id"), col("text"))
+      docsRows("bloom decontamination n=13") { df =>
+        val p = Dedup.bloomDecontaminate(df.select(col("doc_id"), col("text")), bench,
+          "text", "doc_id", n = 13).localCheckpoint(true)
+        val cnt = p.count()
+        p.unpersist(true)
+        cnt
+      }
+    },
 
     // Corpus-level keep-first line dedup: replicated corpora are the
-    // adversarial case (every line repeats Nx across replicas) — the
-    // keep-first aggregation must absorb that map-side, runtime ~Nx.
-    Seq(docs -> "1x", rep -> s"${n}x").foreach { case (df, tag) =>
-      timed(s"corpus line dedup $tag")(((),
-        operators.Repetition.dropRepeatedLinesCorpus(df, "doc_id", "text").count()))
-    }
+    // adversarial case (every line repeats n× across replicas) — the
+    // keep-first aggregation must absorb that map-side, runtime ~n×.
+    "line_dedup" -> { c =>
+      c.docsRows("corpus line dedup")(df =>
+        operators.Repetition.dropRepeatedLinesCorpus(df, "doc_id", "text").count())
+    },
 
-    // Token-budget sample: two-phase bucket prefix-sum — runtime must stay
-    // ~flat in corpus size (bounded bucket frame + one boundary bucket),
-    // not track a global sort.
-    val docsTok = docs.select(col("doc_id"),
-      functions.TextFunctions.tokenCount(col("text")).cast("long").as("n_tokens"))
-    val repTok = rep.select(col("doc_id"),
-      functions.TextFunctions.tokenCount(col("text")).cast("long").as("n_tokens"))
-    Seq(docsTok -> "1x", repTok -> s"${n}x").foreach { case (df, tag) =>
-      timed(s"token-budget sample $tag")(((),
-        operators.Sampling.tokenBudgetSample(df, "doc_id", "n_tokens", 100000L).count()))
-    }
-
-    // Sequence packing: exact distributed prefix sum — runtime ~Nx (one
+    // Token-budget sample: two-phase bucket prefix-sum — runtime ~flat in
+    // corpus size (bounded bucket frame + one boundary bucket), no global sort.
+    // Sequence packing: exact distributed prefix sum — runtime ~n× (one
     // bucket shuffle + broadcast), never a global sort.
-    Seq(docsTok -> "1x", repTok -> s"${n}x").foreach { case (df, tag) =>
-      timed(s"sequence packing $tag")(((),
-        operators.Sampling.packSequences(df, "doc_id", "n_tokens", 2048L).count()))
-    }
+    "sampling" -> { c => import c._
+      def withTokens(df: DataFrame) = df.select(col("doc_id"),
+        functions.TextFunctions.tokenCount(col("text")).cast("long").as("n_tokens"))
+      val sides = tiers(withTokens(docs), withTokens(rep))
+      sides.foreach { case (df, tag) =>
+        row(s"token-budget sample $tag")(operators.Sampling.tokenBudgetSample(
+          df, "doc_id", "n_tokens", 100000L).count())
+      }
+      sides.foreach { case (df, tag) =>
+        row(s"sequence packing $tag")(operators.Sampling.packSequences(
+          df, "doc_id", "n_tokens", 2048L).count())
+      }
+    },
 
     // Unigram-NLL scoring: explode + vocab agg + token join + doc agg —
-    // runtime tracks corpus tokens (~Nx).
-    Seq(docs -> "1x", rep -> s"${n}x").foreach { case (df, tag) =>
-      timed(s"unigram nll $tag")(((),
-        operators.Tfidf.unigramNll(df, "text", "doc_id").count()))
-    }
+    // runtime tracks corpus tokens (~n×).
+    "unigram_nll" -> { c =>
+      c.docsRows("unigram nll")(df => operators.Tfidf.unigramNll(df, "text", "doc_id").count())
+    },
 
     // Semantic dedup: cluster-blocked pairs — candidate volume is
-    // Σ cluster², so the replicated corpus (identical embeddings x N in the
+    // Σ cluster², so the replicated corpus (identical embeddings n× in the
     // same clusters) is adversarial; the hot-cluster chain guard must keep
-    // growth ~linear in OUTPUT, not cluster².
-    val sdCents = functions.expressions.HashExpressions.fixedCentroids(200, 64, 64)
-    // embN reused from the kmeans block: replica ids already clear the real
-    // id range there (a second hand-rolled replication could drift)
-    Seq(embT -> "1x", embN -> s"${n}x").foreach { case (df, tag) =>
-      timed(s"semantic dedup k=64 $tag")(((),
-        operators.Dedup.semanticDedupPairs(df, "embedding", "vec_id", sdCents,
-          threshold = 0.3).count()))
-    }
-    // SemDeDup over the persisted index: same cluster blocking, but pair
-    // scoring runs on m-byte CODES (SDC prefilter) and only survivors join
-    // raw vectors — the index is built outside the timer (persisted state).
-    locally {
-      val sdFc = functions.expressions.HashExpressions.fixedCentroids(300, 128, 8)
-      val sdCb = Array.tabulate(8)(j => sdFc.slice(j * 16, j * 16 + 16))
-      Seq(embT -> "1x", embN -> s"${n}x").foreach { case (df, tag) =>
-        val idx = operators.Ann.ivfPqIndex(df, "embedding", "vec_id",
-          sdCents, sdCb).localCheckpoint(true)
-        timed(s"semantic dedup over index (SDC prefilter) $tag")(((),
-          operators.Dedup.semanticDedupPairsIndexed(idx, df, "embedding",
-            "vec_id", sdCb, sdcMax = 80.0, threshold = 0.3).count()))
+    // growth ~linear in OUTPUT. Then SemDeDup over the persisted index
+    // (built outside the timer): pair scoring on m-byte CODES (SDC
+    // prefilter), only survivors join raw vectors.
+    "semantic_dedup" -> { c => import c._
+      val cents = HX.fixedCentroids(200, 64, 64)
+      tiers(emb, embRep).foreach { case (df, tag) =>
+        row(s"semantic dedup k=64 $tag")(Dedup.semanticDedupPairs(df, "embedding", "vec_id",
+          cents, threshold = 0.3).count())
       }
-    }
-    // BPE training: the corpus is scanned ONCE (wordVocab aggregation);
-    // each of the 5 merges runs over the vocab table, whose size is
-    // replication-INVARIANT (same words, Nx frequencies) — total must grow
-    // far slower than Nx (only the initial scan scales with the corpus).
-    Seq(docs -> "1x", rep -> s"${n}x").foreach { case (df, tag) =>
-      timed(s"bpe train 5 merges $tag")(((),
-        operators.Bpe.train(df, "text", 5).count()))
-    }
-    // Driver-cutover depth: 500 merges must cost ~the single corpus scan
-    // plus driver-local milliseconds per merge (the distributed loop would
-    // be ~1000 Spark jobs here). The raw synthetic corpus fully merges
-    // after ~90 ranks, so the depth row enriches each doc with its hash
-    // hex-words — a vocabulary wide enough that all 500 merges are REAL
-    // (hex-gram combinations don't exhaust). Also the encode pass: trained
-    // table compiled to literals, one linear corpus scan, zero shuffle.
-    Seq(docs -> "1x", rep -> s"${n}x").foreach { case (df, tag) =>
-      val enriched = df.withColumn("text",
-        concat_ws(" ", col("text"), md5(col("text")), sha1(col("text"))))
-      timed(s"bpe train 500 merges (local cutover, hash-widened vocab) $tag")(((),
-        operators.Bpe.train(enriched, "text", 500).count()))
-    }
-    locally {
+      val books = codebooks(300)
+      tiers(emb, embRep).foreach { case (df, tag) =>
+        val idx = Ann.ivfPqIndex(df, "embedding", "vec_id", cents, books).localCheckpoint(true)
+        row(s"semantic dedup over index (SDC prefilter) $tag")(
+          Dedup.semanticDedupPairsIndexed(idx, df, "embedding", "vec_id", books,
+            sdcMax = 80.0, threshold = 0.3).count())
+      }
+    },
+
+    // BPE training scans the corpus ONCE (wordVocab aggregation); each merge
+    // runs over the vocab table, whose size is replication-INVARIANT — total
+    // must grow far slower than n×. The depth row: 500 merges must cost
+    // ~the single scan plus driver-local milliseconds per merge (the
+    // distributed loop would be ~1000 Spark jobs); each doc is widened with
+    // its hash hex-words so all 500 merges are REAL. The encode pass:
+    // trained table compiled to literals, one linear corpus scan, zero
+    // shuffle, checksum-materialized (count() would prune the encode chain).
+    "bpe" -> { c => import c._
+      docsRows("bpe train 5 merges")(df => operators.Bpe.train(df, "text", 5).count())
+      docsRows("bpe train 500 merges (local cutover, hash-widened vocab)")(df =>
+        operators.Bpe.train(df.withColumn("text",
+          concat_ws(" ", col("text"), md5(col("text")), sha1(col("text")))), "text", 500).count())
       val merges = operators.Bpe.train(docs, "text", 64)
         .orderBy("rank").select("pair_left", "pair_right")
         .collect().map(r => (r.getString(0), r.getString(1))).toSeq
-      Seq(docs -> "1x", rep -> s"${n}x").foreach { case (df, tag) =>
-        // checksum-materialize the segments (count() would let Catalyst
-        // prune the whole encode expression chain and time a bare scan —
-        // the r2 sink trap, BASELINE.md §pinning)
-        timed(s"bpe encode 64 merges $tag") {
-          val enc = operators.Bpe.encode(df, "text", merges)
-          // head() reads the checksum VALUE — a count() on top of the agg
-          // would let pruning drop the bit_xor expression itself
-          enc.agg(bit_xor(xxhash64(col("segments"))).as("ck"), count(lit(1)).as("n"))
-            .head() match { case r => ((), r.getLong(1)) }
-        }
-      }
-    }
-    // BM25 retrieval: query terms broadcast, corpus tokens semi-joined down
-    // immediately after the explode — runtime must track corpus tokens
-    // (~Nx), shuffle only matched (doc, term) rows.
-    Seq(docs -> "1x", rep -> s"${n}x").foreach { case (df, tag) =>
-      timed(s"bm25 top-10, 4 queries $tag")(((),
-        operators.Retrieval.bm25TopK(df, "text", "doc_id",
-          queries.TextQueries.Bm25Queries, k = 10).count()))
-    }
+      docsRows("bpe encode 64 merges")(df =>
+        checksum(operators.Bpe.encode(df, "text", merges), "segments"))
+    },
 
-    // Persisted BM25 index: encode-only append of a fixed batch + search vs
-    // a 1x/10x stored postings index (built OUTSIDE the timer — persisted
-    // state). Stored text is never re-tokenized; search prunes postings to
-    // the query-matched terms map-side — daily wall must grow well under Nx.
-    locally {
-      val batch = docs.filter(pmod(col("doc_id"), lit(7)) === 0)
-        .select((col("doc_id") + lit(3000L * offset)).as("doc_id"), col("text"))
-        .localCheckpoint(true)
-      Seq(docs -> "1x", rep -> s"${n}x").foreach { case (df, tag) =>
-        val (p, l) = operators.Retrieval.bm25Index(
-          df.select(col("doc_id"), col("text")), "text", "doc_id")
-        val (pi, li) = (p.localCheckpoint(true), l.localCheckpoint(true))
-        timed(s"bm25 index append fixed batch + top-10 search vs $tag index")(((),
-          { val (p2, l2) = operators.Retrieval.bm25Append(pi, li, batch,
-              "text", "doc_id")
-            operators.Retrieval.bm25Search(p2, l2, "doc_id",
-              queries.TextQueries.Bm25Queries, k = 10).count() }))
-      }
-    }
+    // BM25 retrieval: query terms broadcast, corpus tokens semi-joined down
+    // right after the explode — runtime ~corpus tokens, shuffle only the
+    // matched (doc, term) rows.
+    "bm25" -> { c =>
+      c.docsRows("bm25 top-10, 4 queries")(df => operators.Retrieval.bm25TopK(df, "text",
+        "doc_id", queries.TextQueries.Bm25Queries, k = 10).count())
+    },
+
+    "bm25_index" -> (c => bm25Index(c, c.docs, c.rep)),
+    "bm25_index_perturbed" -> (c => bm25Index(c, c.pert, c.pertRep)),
 
     // DSIR importance resampling: both models collapse to a 64-row broadcast
-    // bucket table — runtime tracks corpus tokens (~Nx), shuffle is the
-    // (doc, bucket) aggregation, never the token stream twice.
-    Seq(docs -> "1x", rep -> s"${n}x").foreach { case (df, tag) =>
-      timed(s"dsir resample top-100 $tag")(((),
-        operators.Sampling.dsirSample(df, "doc_id", "text",
-          col("lang") === "en", nBuckets = 64, k = 100).count()))
-    }
+    // bucket table — runtime ~corpus tokens, shuffle the (doc, bucket) agg.
+    "dsir" -> { c =>
+      c.docsRows("dsir resample top-100")(df => operators.Sampling.dsirSample(df, "doc_id",
+        "text", col("lang") === "en", nBuckets = 64, k = 100).count())
+    },
 
-    // Repeated-span scrub — replication is the ADVERSARIAL case: every
-    // 8-gram appears in N distinct replica docs, so the ENTIRE gram table
-    // goes hot and every doc is fully masked. Runtime must track grams
-    // (linear), never hot-gram × doc pairs; the rebuild is row-local.
-    // Checksum sink: count() would let Catalyst prune the rebuild lambda.
-    Seq(docs -> "1x", rep -> s"${n}x").foreach { case (df, tag) =>
-      timed(s"span scrub n=8 (all-hot under replication) $tag")(((),
-        operators.Repetition.scrubRepeatedSpans(df, "doc_id", "text", 8, 2)
-          .agg(bit_xor(xxhash64(col("scrubbed_text"))).as("ck"),
-            count(lit(1)).as("cnt")).head().getLong(1)))
-    }
+    // Repeated-span scrub — replication is ADVERSARIAL: every 8-gram appears
+    // in n distinct replica docs, so the ENTIRE gram table goes hot and every
+    // doc is fully masked. Runtime must track grams (linear), never
+    // hot-gram × doc pairs; the rebuild is row-local.
+    "span_scrub" -> { c =>
+      c.docsRows("span scrub n=8 (all-hot under replication)")(df => checksum(
+        operators.Repetition.scrubRepeatedSpans(df, "doc_id", "text", 8, 2), "scrubbed_text"))
+    },
 
-    // Naive Bayes classify: model = bounded (class, token) count table;
-    // scoring = one explode × classes fan + the count join — runtime ~Nx.
-    Seq(docs -> "1x", rep -> s"${n}x").foreach { case (df, tag) =>
-      timed(s"naive bayes train+classify $tag")(((),
-        operators.Retrieval.naiveBayes(df, "text", "doc_id", "lang",
-          pmod(col("doc_id"), lit(2)) === 0).count()))
-    }
+    // q107's shape with a banner planted on every 7th doc, over PERTURBED
+    // replicas: within-replica banner grams stay hot (~14% of a replica's
+    // docs share them) while cross-replica grams diverge — the hot set grows
+    // ~linearly, the regime a real corpus's boilerplate is in.
+    // localCheckpoint sink: count() of the left-preserving join would let
+    // Catalyst prune the whole gram/scrub computation.
+    "span_scrub_perturbed" -> { c => import c._
+      def banner(df: DataFrame): DataFrame = df.select(col("doc_id"),
+        when(pmod(col("doc_id"), lit(7)) === 0,
+          concat(col("text"), lit(" subscribe to our newsletter for updates" +
+            " terms of service apply today"))).otherwise(col("text")).as("text"))
+      tiers(pert, pertRep).foreach { case (df, tag) =>
+        row(s"span scrub n=8 minDocs=2 $tag (perturbed replicas)") {
+          val p = operators.Repetition.scrubRepeatedSpans(banner(df), "doc_id", "text",
+            n = 8, minDocs = 2).localCheckpoint(true)
+          val cnt = p.count()
+          p.unpersist(true)
+          cnt
+        }
+      }
+    },
 
-    // Epoch shuffle-shard: one hash shuffle + per-shard sort — runtime ~Nx,
-    // shuffle ~rows × key width. Checksum sink (no filter depends on pos, so
-    // count() would prune the window entirely).
-    Seq(docs -> "1x", rep -> s"${n}x").foreach { case (df, tag) =>
-      timed(s"epoch shuffle-shard 32 shards $tag")(((),
-        operators.Sampling.epochShuffleShard(df.select(col("doc_id")),
-            "doc_id", "ep0", 32)
-          .agg(bit_xor(xxhash64(struct(col("doc_id"), col("shard"),
-            col("pos")))).as("ck"), count(lit(1)).as("cnt"))
-          .head().getLong(1)))
-    }
+    // Naive Bayes: model = bounded (class, token) count table; scoring =
+    // one explode × classes fan + the count join — runtime ~n×.
+    "naive_bayes" -> { c =>
+      c.docsRows("naive bayes train+classify")(df => operators.Retrieval.naiveBayes(df,
+        "text", "doc_id", "lang", pmod(col("doc_id"), lit(2)) === 0).count())
+    },
+
+    // Epoch shuffle-shard: one hash shuffle + per-shard sort — runtime ~n×,
+    // shuffle ~rows × key width.
+    "epoch_shard" -> { c =>
+      c.docsRows("epoch shuffle-shard 32 shards")(df => checksum(
+        operators.Sampling.epochShuffleShard(df.select(col("doc_id")), "doc_id", "ep0", 32),
+        "doc_id", "shard", "pos"))
+    },
+
     // Mergeable sketch aggregates (KMV + CMS): partial sketches build
-    // map-side and shuffle BYTES PER PARTITION (k longs / d×w longs), so
-    // runtime tracks the token scan (~Nx) while shuffle stays ~flat — the
-    // defining property vs. shuffling token-grained rows.
-    Seq(docs -> "1x", rep -> s"${n}x").foreach { case (df, tag) =>
-      import functions.expressions.{SketchAggregates => SK}
-      val toks = df.select(col("lang"), explode(S.tokens(col("text"))).as("tok"))
-      timed(s"kmv+cms sketch per lang $tag")(((),
-        toks.groupBy(col("lang"))
-          .agg(SK.kmv_sketch(
-              conv(substring(md5(col("tok")), 1, 15), 16, 10).cast("long"), 64)
-            .as("kmv"),
-            SK.cms_sketch(col("tok"), 4, 64).as("cms"))
-          .count()))
-    }
+    // map-side and shuffle BYTES PER PARTITION, so runtime tracks the token
+    // scan (~n×) while shuffle stays ~flat.
+    "kmv_cms" -> { c =>
+      c.docsRows("kmv+cms sketch per lang")(df =>
+        df.select(col("lang"), explode(S.tokens(col("text"))).as("tok"))
+          .groupBy(col("lang"))
+          .agg(SK.kmv_sketch(conv(substring(md5(col("tok")), 1, 15), 16, 10).cast("long"), 64)
+            .as("kmv"), SK.cms_sketch(col("tok"), 4, 64).as("cms"))
+          .count())
+    },
 
     // Web-text curation chain (PII scrub + HTML strip + Gopher rules + URL
-    // canonicalize): one fused whole-stage-codegen projection — runtime ~Nx,
-    // ZERO shuffle. Checksum sink (count() would prune the regex chains).
-    Seq(docs -> "1x", rep -> s"${n}x").foreach { case (df, tag) =>
+    // canonicalize): one fused whole-stage-codegen projection — ~n×, ZERO
+    // shuffle.
+    "web_text" -> { c =>
       import functions.{TextFunctions => T}
-      timed(s"web-text chain (pii+html+gopher+url) $tag")(((),
+      c.docsRows("web-text chain (pii+html+gopher+url)")(df => checksum(
         df.select((Seq(col("doc_id"),
-            T.piiScrub(col("text")).as("pii"),
-            T.stripHtml(col("text")).as("html"),
-            T.canonicalizeUrl(concat(lit("https://www.site"),
-              col("doc_id") % 7, lit(".example.com/p/"), col("doc_id"),
-              lit("/?utm_source=x&id="), col("doc_id"))).as("url")) ++
-            T.gopherFlags(col("text"))): _*)
-          .agg(bit_xor(xxhash64(struct(col("pii"), col("html"), col("url"),
-            col("pass")))).as("ck"), count(lit(1)).as("cnt"))
-          .head().getLong(1)))
-    }
-    // Fixed-point PageRank, 3 iterations over a 2-out-degree synthetic graph
-    // (edges = 2× nodes): per-iteration cost is one edge join + one integer
-    // aggregation — runtime must track edges ~linearly, and integer
-    // arithmetic means the Nx result is the 1x result per replica block.
-    locally {
-      def prNodes(df: DataFrame) = df.select(col("doc_id"))
-      def prEdges(nodesDf: DataFrame) = {
-        val nn = nodesDf.agg((max(col("doc_id")) + 1).as("__n"))
-        nodesDf.crossJoin(broadcast(nn)).select(col("doc_id").as("src"),
-          explode(array((col("doc_id") * 2 + 1) % col("__n"),
-            (col("doc_id") * 5 + 3) % col("__n"))).as("dst"))
-      }
-      Seq(docs -> "1x", rep -> s"${n}x").foreach { case (df, tag) =>
-        timed(s"pagerank 3 iters $tag")(((),
-          operators.PageRank.fixedPoint(prEdges(prNodes(df)), "src", "dst",
-            prNodes(df), "doc_id", iterations = 3).count()))
-      }
-    }
+          T.piiScrub(col("text")).as("pii"),
+          T.stripHtml(col("text")).as("html"),
+          T.canonicalizeUrl(concat(lit("https://www.site"),
+            col("doc_id") % 7, lit(".example.com/p/"), col("doc_id"),
+            lit("/?utm_source=x&id="), col("doc_id"))).as("url")) ++
+          T.gopherFlags(col("text"))): _*),
+        "pii", "html", "url", "pass"))
+    },
 
-    // Aho-Corasick blocklist masking with a WIDE dictionary (2k terms): one
-    // automaton broadcast as an expression reference, linear per-row scan —
-    // runtime ~Nx, zero shuffle, cost independent of dict size (the regex
-    // alternation this replaces grows with every added term).
-    locally {
+    // Fixed-point PageRank, 3 iterations over a 2-out-degree graph: one
+    // edge join + one integer aggregation per iteration — ~linear in edges,
+    // and integer arithmetic means the n× result is the 1x result per
+    // replica block.
+    "pagerank" -> { c =>
+      c.docsRows("pagerank 3 iters") { df =>
+        val nodes = df.select(col("doc_id"))
+        operators.PageRank.fixedPoint(twoOutEdges(nodes), "src", "dst", nodes, "doc_id",
+          iterations = 3).count()
+      }
+    },
+
+    // Aho-Corasick masking with a WIDE (2k-term) dictionary: one automaton
+    // broadcast as an expression reference, linear per-row scan — ~n×, zero
+    // shuffle, cost independent of dictionary size.
+    "ac_mask" -> { c =>
       val dict = (0 until 2000).map(i => s"blocked$i term$i") :+ "the"
-      Seq(docs -> "1x", rep -> s"${n}x").foreach { case (df, tag) =>
-        timed(s"ac mask 2k-term dict $tag")(((),
-          df.select(functions.TextFunctions.maskTerms(col("text"), dict).as("m"))
-            .agg(bit_xor(xxhash64(col("m"))).as("ck"), count(lit(1)).as("cnt"))
-            .head().getLong(1)))
-      }
-    }
+      c.docsRows("ac mask 2k-term dict")(df => checksum(
+        df.select(functions.TextFunctions.maskTerms(col("text"), dict).as("m")), "m"))
+    },
 
-    // Histogram-bucket quantiles: one groupBy with map-side combine over
-    // 64 buckets — runtime ~Nx, shuffle bounded by groups × buckets.
-    Seq(docs -> "1x", rep -> s"${n}x").foreach { case (df, tag) =>
-      timed(s"histogram quantiles p50/p90/p99 $tag")(((),
-        operators.CorpusStats.histogramQuantiles(
-          df.select(col("lang"), length(col("text")).cast("long").as("len")),
+    // Histogram-bucket quantiles: one groupBy with map-side combine over 64
+    // buckets — ~n×, shuffle bounded by groups × buckets.
+    "histogram" -> { c =>
+      c.docsRows("histogram quantiles p50/p90/p99")(df => operators.CorpusStats
+        .histogramQuantiles(df.select(col("lang"), length(col("text")).cast("long").as("len")),
           "len", Seq("lang"), 16L, 64,
-          Seq(("p50", 1L, 2L), ("p90", 9L, 10L), ("p99", 99L, 100L))).count()))
-    }
+          Seq(("p50", 1L, 2L), ("p90", 9L, 10L), ("p99", 99L, 100L))).count())
+    },
 
-    // Batch sessionize: ONE window shuffle by user — runtime ~Nx, shuffle
-    // ~rows × row width. 1000 users so per-user frames grow Nx too (the
-    // skewed-key regime, worst case for the in-partition sort).
-    locally {
-      def ev(rows: Long) = spark.range(rows).select(
-        col("id").as("event_id"), pmod(col("id"), lit(1000L)).as("user_id"),
-        timestamp_micros(lit(1700000000000000L) +
-          pmod(xxhash64(col("id")), lit(30L * 86400 * 1000000L))).as("ts"))
-      Seq(100000L -> "1x", 100000L * n -> s"${n}x").foreach { case (rows, tag) =>
-        timed(s"batch sessionize gap=1h, 1k users $tag")(((),
-          operators.WindowOps.sessionize(ev(rows), "user_id", "ts", 3600,
-              Seq(col("event_id")))
-            .agg(bit_xor(xxhash64(struct(col("user_id"), col("session_idx"))))
-              .as("ck"), count(lit(1)).as("cnt")).head().getLong(1)))
+    // Batch sessionize: ONE window shuffle by user — ~n×. 1000 users, so
+    // per-user frames grow n× too (the skewed-key regime, worst case for
+    // the in-partition sort).
+    "sessionize" -> { c => import c._
+      tiers(100000L, 100000L * n).foreach { case (rows, tag) =>
+        val ev = spark.range(rows).select(
+          col("id").as("event_id"), pmod(col("id"), lit(1000L)).as("user_id"),
+          timestamp_micros(lit(1700000000000000L) +
+            pmod(xxhash64(col("id")), lit(30L * 86400 * 1000000L))).as("ts"))
+        row(s"batch sessionize gap=1h, 1k users $tag")(checksum(
+          operators.WindowOps.sessionize(ev, "user_id", "ts", 3600, Seq(col("event_id"))),
+          "user_id", "session_idx"))
       }
-    }
+    },
 
     // Z-order layout: the Morton code is a zero-shuffle projection; the
-    // range repartition is the ONE exchange — runtime ~Nx, shuffle ~rows.
-    locally {
-      def pts(rows: Long) = spark.range(rows).select(
-        pmod(col("id") * 7919, lit(1L << 16)).as("x"),
-        pmod(col("id") * 104729, lit(1L << 16)).as("y"))
-      Seq(200000L -> "1x", 200000L * n -> s"${n}x").foreach { case (rows, tag) =>
-        timed(s"zorder 16-bit 2-dim layout $tag")(((),
-          operators.Layout.zorderBy(pts(rows), Seq(col("x"), col("y")), 16, 32)
-            .agg(bit_xor(xxhash64(col("zval"))).as("ck"),
-              count(lit(1)).as("cnt")).head().getLong(1)))
+    // range repartition is the ONE exchange — ~n×, shuffle ~rows.
+    "zorder" -> { c => import c._
+      tiers(200000L, 200000L * n).foreach { case (rows, tag) =>
+        val pts = spark.range(rows).select(
+          pmod(col("id") * 7919, lit(1L << 16)).as("x"),
+          pmod(col("id") * 104729, lit(1L << 16)).as("y"))
+        row(s"zorder 16-bit 2-dim layout $tag")(checksum(
+          operators.Layout.zorderBy(pts, Seq(col("x"), col("y")), 16, 32), "zval"))
       }
-    }
+    },
 
     // Stats-pruned forget-me delete: partition COUNT scales with the data
-    // (constant partition size), the key set is FIXED — so the rewrite
-    // term is constant and what the row measures is DISCOVERY. The
-    // stats-index path probes per-file blooms (flat-ish: a tiny stats-row
-    // scan + the handful of candidate files); the full-scan path
-    // semi-joins the whole table (~Nx). Refresh is timed separately — it
-    // is the write-path's amortized cost, not the delete's.
-    locally {
+    // (constant partition size) and the key set is FIXED, so the rewrite
+    // term is constant and the row measures DISCOVERY. The stats-index path
+    // probes per-file blooms (flat: a tiny stats-row scan + the handful of
+    // candidate files); the full-scan path semi-joins the whole table (~n×)
+    // — at 100× the ordering flips and the index pays for itself. Refresh
+    // is timed separately: it is the write path's amortized cost.
+    "delete" -> { c => import c._
       import graft.catalog.{FileStats, Retention}
       def build(rows: Long, parts: Int, name: String): String = {
         val t = s"scaledel.$name"
         spark.sql("CREATE DATABASE IF NOT EXISTS scaledel")
         spark.sql(s"DROP TABLE IF EXISTS $t")
-        spark.range(rows).select(col("id").as("event_id"),
-            col("id").as("user_id"),
+        spark.range(rows).select(col("id").as("event_id"), col("id").as("user_id"),
             pmod(col("id"), lit(parts.toLong)).cast("int").as("bucket"))
           .repartition(parts, col("bucket"))
           .write.partitionBy("bucket").saveAsTable(t)
@@ -697,649 +821,506 @@ object ScaleCheck {
       }
       val keys = spark.range(10).select((col("id") * 1777L + 13L).as("user_id"))
         .localCheckpoint(true)
-      Seq((200000L, 32, "1x"), (200000L * n, 32 * n, s"${n}x")).foreach {
-        case (rows, parts, tag) =>
-          val tFull = build(rows, parts, s"full_${tag}")
-          timed(s"deleteRows FULL-SCAN discovery $tag")(((),
-            Retention.deleteRows(spark, tFull, "user_id", keys).rowsDeleted))
-          val tIdx = build(rows, parts, s"idx_${tag}")
-          val st = s"scaledel.idx_${tag}_stats"
-          spark.sql(s"DROP TABLE IF EXISTS $st")
-          timed(s"deleteRows stats REFRESH (write-path amortized) $tag")(((),
-            FileStats.refresh(spark, tIdx, st, FileStats.StatsSpec(
-              Seq("user_id"), bloomCols = Seq("user_id"),
-              bloomBits = 1 << 17)).filesScanned.toLong))
-          timed(s"deleteRows STATS-PRUNED discovery $tag")(((),
-            Retention.deleteRows(spark, tIdx, "user_id", keys,
-              statsTable = Some(st)).rowsDeleted))
+      tiers(1, n).foreach { case (m, tag) =>
+        val (rows, parts) = (200000L * m, 32 * m)
+        val tFull = build(rows, parts, s"full_$tag")
+        row(s"deleteRows FULL-SCAN discovery $tag")(
+          Retention.deleteRows(spark, tFull, "user_id", keys).rowsDeleted)
+        val tIdx = build(rows, parts, s"idx_$tag")
+        val st = s"scaledel.idx_${tag}_stats"
+        spark.sql(s"DROP TABLE IF EXISTS $st")
+        row(s"deleteRows stats REFRESH (write-path amortized) $tag")(
+          FileStats.refresh(spark, tIdx, st, FileStats.StatsSpec(Seq("user_id"),
+            bloomCols = Seq("user_id"), bloomBits = 1 << 17)).filesScanned.toLong)
+        row(s"deleteRows STATS-PRUNED discovery $tag")(
+          Retention.deleteRows(spark, tIdx, "user_id", keys, statsTable = Some(st)).rowsDeleted)
       }
-    }
+    },
 
     // Char-level ExactSubstr dedup: rolling-hash window nomination + exact
-    // verify — corpus-sized cost is ONE 8-byte-key count plus ONE
-    // (gpos, h) semi-join; every later stage (window re-extraction,
-    // content classes, span rebuild) is CANDIDATE-sized, so shuffle
-    // tracks hot positions, not corpus characters.
-    locally {
-      def sdocs(rows: Long) = spark.range(rows).select(col("id").as("doc_id"),
-        concat(lit("document body with unique trail "),
-          (col("id") * 7919L).cast("string"),
-          when(pmod(col("id"), lit(13L)) === 0,
-            lit(" shared-fortycharacter-boilerplate-banner-text")).otherwise(lit("")))
-          .as("text"))
-      Seq(20000L -> "1x", 20000L * n -> s"${n}x").foreach { case (rows, tag) =>
-        timed(s"exact-substring char dedup minLen=40 $tag")(((),
-          operators.SuffixArray.scrubRepeatedCharSpans(sdocs(rows), "doc_id",
-              "text", 40)
-            .agg(bit_xor(xxhash64(struct(col("doc_id"), col("n_masked"),
-              col("scrubbed_text")))).as("ck"), count(lit(1)).as("cnt"))
-            .head().getLong(1)))
+    // verify. Duplicated content is a FIXED 1/13 fraction, so the
+    // corpus-sized cost is ONE 8-byte-key count plus ONE (gpos, h)
+    // semi-join; every later stage is CANDIDATE-sized — wall and shuffle
+    // both track n linearly (the prefix-doubling form this replaced
+    // measured 3.3 GB shuffle at 10× and could not run at 100×).
+    "substring_dedup" -> { c => import c._
+      tiers(20000L, 20000L * n).foreach { case (rows, tag) =>
+        row(s"exact-substring char dedup minLen=40 $tag")(checksum(
+          operators.SuffixArray.scrubRepeatedCharSpans(
+            substringCorpus(c, "document body with unique trail ", rows, 0L),
+            "doc_id", "text", 40),
+          "doc_id", "n_masked", "scrubbed_text"))
       }
-    }
+    },
 
-    // Incremental sync-LPA: the stored graph scales Nx (ring communities
-    // of 10 nodes), the batch is FIXED (rewires 50 communities near the
-    // id origin). The from-scratch trace row is both the stored-state
-    // build cost and the comparison: it pays 3 full vote rounds (~Nx);
-    // the incremental pass's vote COMPUTE is frontier-bounded — its
-    // residual growth is the O(N) narrow trace-override unions and scans,
-    // with no per-node sort anywhere outside the frontier.
-    locally {
+    // Incremental sync-LPA: the stored graph scales n× (ring communities of
+    // 10), the batch is FIXED (50 rewired communities). The from-scratch
+    // trace row is both the stored-state build and the ~n× comparison; the
+    // incremental pass's vote COMPUTE is frontier-bounded — its residual
+    // growth is the O(N) narrow trace-override unions and scans. Two
+    // batches: near the id origin (stride 10) and spread over the graph
+    // (stride 1777).
+    "lpa_incremental" -> { c => import c._
       import graft.operators.GraphOps
-      def ring(rows: Long) = spark.range(rows).select(col("id").as("src"),
-        explode(array(Seq(1L, 3L, 5L).map(o =>
-          col("id") - pmod(col("id"), lit(10L)) +
-            pmod(col("id") + o, lit(10L))): _*)).as("dst"))
-      val batch = spark.range(50).select((col("id") * 10L).as("src"),
-        (col("id") * 10L + 5L).as("dst")).localCheckpoint(true)
-      Seq(100000L -> "1x", 100000L * n -> s"${n}x").foreach { case (rows, tag) =>
-        val nodes = spark.range(rows).select(col("id"))
-        val edges = ring(rows).localCheckpoint(true)
-        val trace = timed(s"LPA from-scratch 3-iter trace $tag")({
-          val t = GraphOps.labelPropagationTrace(edges, "src", "dst",
-            nodes, "id", 3).localCheckpoint(true)
-          (t, t.count())
-        })
-        timed(s"LPA incremental fixed batch $tag")(((),
-          GraphOps.incrementalLabelPropagation(edges, trace, batch,
-              "src", "dst", 3)
-            .agg(bit_xor(xxhash64(struct(col("iter"), col("id"), col("label"))))
-              .as("ck"), count(lit(1)).as("cnt")).head().getLong(1)))
+      val batches = Seq(ringBatch(c, 10L) -> "", ringBatch(c, 1777L) -> ", 1777-stride")
+      tiers(100000L, 100000L * n).foreach { case (rows, tag) =>
+        val edges = ring(c, rows, Seq(1L, 3L, 5L)).localCheckpoint(true)
+        val trace = timed(s"LPA from-scratch 3-iter trace $tag")(checkpoint(
+          GraphOps.labelPropagationTrace(edges, "src", "dst",
+            spark.range(rows).select(col("id")), "id", 3)))
+        batches.foreach { case (batch, label) =>
+          row(s"LPA incremental fixed batch$label $tag")(checksum(
+            GraphOps.incrementalLabelPropagation(edges, trace, batch, "src", "dst", 3),
+            "iter", "id", "label"))
+        }
       }
-    }
+    },
 
     // Incremental exact-substring dedup: the stored corpus (and its
-    // hot-window index) grows Nx, the batch is FIXED — the daily cost is
-    // the batch's window pass plus a map-side semi-join scan of the index
-    // (compute-light, no stored shuffle), so wall should stay near-flat
-    // while the from-scratch index build (the comparison row) grows ~Nx.
-    locally {
-      import graft.operators.SuffixArray
-      def corpus(rows: Long, off: Long) = spark.range(rows)
-        .select((col("id") + off).as("doc_id"),
-          concat(lit("stored body with unique trail "),
-            ((col("id") + off) * 7919L).cast("string"),
-            when(pmod(col("id"), lit(13L)) === 0,
-              lit(" shared-fortycharacter-boilerplate-banner-text")).otherwise(lit("")))
-            .as("text"))
-      val batch = corpus(2000L, 90000000L).localCheckpoint(true)
-      Seq(20000L -> "1x", 20000L * n -> s"${n}x").foreach { case (rows, tag) =>
-        val idx = timed(s"char-window index build $tag")({
-          val i = SuffixArray.charWindowIndex(corpus(rows, 0L), "doc_id",
-            "text", 40).localCheckpoint(true)
-          (i, i.count())
-        })
-        timed(s"incremental substring dedup, fixed batch vs $tag index")(((),
-          SuffixArray.incrementalScrubRepeatedCharSpans(idx, batch,
-              "doc_id", "text", 40, keepFirst = true)._1
-            .agg(bit_xor(xxhash64(struct(col("doc_id"), col("n_masked"),
-              col("scrubbed_text")))).as("ck"), count(lit(1)).as("cnt"))
-            .head().getLong(1)))
+    // hot-window index) grows n×, the batch is FIXED — the daily cost is the
+    // batch's window pass plus a map-side semi-join scan of the index (no
+    // stored shuffle), so wall should stay near-flat while the from-scratch
+    // index build (the comparison row) grows ~n×.
+    "substring_incremental" -> { c => import c._
+      val body = "stored body with unique trail "
+      val batch = substringCorpus(c, body, 2000L, 90000000L).localCheckpoint(true)
+      tiers(20000L, 20000L * n).foreach { case (rows, tag) =>
+        val idx = timed(s"char-window index build $tag")(checkpoint(operators.SuffixArray
+          .charWindowIndex(substringCorpus(c, body, rows, 0L), "doc_id", "text", 40)))
+        row(s"incremental substring dedup, fixed batch vs $tag index")(
+          substringScrub(idx, batch, needUpdatedIndex = true))
       }
-    }
+    },
 
-    // Stats-pruned entity-match exact leg: the primary table grows Nx,
-    // the daily batch is FIXED — the pruned read's cost tracks the
-    // batch's key set (stats rows + admitting files), while the plain
-    // exact leg's join scans the whole primary.
-    locally {
-      import graft.catalog.FileStats
-      import graft.operators.EntityMatch
-      def primary(rows: Long, t: String): Unit = {
-        spark.range(rows).select(
-          concat(lit("C"), col("id")).as("customerno"),
-          lit("A01").as("srcsystemid"),
-          concat(lit("g-"), col("id")).as("globalid"),
-          lit("2024-01-01").as("lastupdated"))
-          .repartitionByRange(32, col("customerno"))
-          .write.mode("overwrite").saveAsTable(t)
-        ()
+    // PER-DOC (gate-form) substring-index probe with a CORPUS-HOT window:
+    // the q215 gate's index keeps one row per (document, window content) so
+    // deletion is row-exact — the price is that a batch touching a window
+    // present in EVERY stored document pulls O(corpus occurrences) index
+    // rows into the batch-touched aggregation. This measures that growth:
+    // the same fixed batch probes the COMPACT one-row-per-content index and
+    // the PER-DOC index, both over a corpus with the banner in EVERY doc.
+    "hot_window" -> { c => import c._
+      import graft.operators.SuffixArray
+      val body = "stored body with unique trail "
+      val batch = substringCorpus(c, body, 2000L, 900000000L, hot = true).localCheckpoint(true)
+      tiers(20000L, 20000L * n).foreach { case (rows, tag) =>
+        Seq("COMPACT" -> SuffixArray.charWindowIndex _,
+            "PER-DOC" -> SuffixArray.charWindowIndexPerDoc _).foreach { case (form, build) =>
+          val idx = timed(s"hot-window $form index build $tag")(checkpoint(
+            build(substringCorpus(c, body, rows, 0L, hot = true), "doc_id", "text", 40)))
+          row(s"hot-window scrub, fixed batch vs $tag $form index")(
+            substringScrub(idx, batch, needUpdatedIndex = false))
+        }
       }
+    },
+
+    // Stats-pruned entity-match exact leg: the primary grows n×, the daily
+    // batch is FIXED — the pruned read tracks the batch's key set (stats
+    // rows + admitting files); the plain exact leg's join scans the whole
+    // primary.
+    "entity_exact" -> { c => import c._
+      import graft.catalog.FileStats
       val batch = spark.range(50).select(
         concat(lit("C"), col("id") * 977L).as("customerno"),
         lit("A01").as("srcsystemid"),
         lit(null).cast("string").as("globalid")).localCheckpoint(true)
-      Seq(100000L -> "1x", 100000L * n -> s"${n}x").foreach { case (rows, tag) =>
+      def leg(p: DataFrame): Long = batch.drop("globalid").join(
+          p.select(col("customerno"), col("srcsystemid"), col("globalid").as("__primary_gid")),
+          Seq("customerno", "srcsystemid"), "left")
+        .agg(count(col("__primary_gid"))).head().getLong(0)
+      tiers(100000L, 100000L * n).foreach { case (rows, tag) =>
         val db = s"emsc${System.nanoTime()}"
         spark.sql(s"CREATE DATABASE $db")
-        primary(rows, s"$db.primary")
+        spark.range(rows).select(
+            concat(lit("C"), col("id")).as("customerno"), lit("A01").as("srcsystemid"),
+            concat(lit("g-"), col("id")).as("globalid"), lit("2024-01-01").as("lastupdated"))
+          .repartitionByRange(32, col("customerno"))
+          .write.mode("overwrite").saveAsTable(s"$db.primary")
         FileStats.refresh(spark, s"$db.primary", s"$db.primary_stats",
           FileStats.StatsSpec(Seq("customerno"), bloomCols = Seq("customerno"),
             bloomBits = 1 << 17))
-        def leg(p: org.apache.spark.sql.DataFrame): Long = {
-          val joined = batch.drop("globalid").join(
-            p.select(col("customerno"), col("srcsystemid"),
-              col("globalid").as("__primary_gid")),
-            Seq("customerno", "srcsystemid"), "left")
-          joined.agg(count(col("__primary_gid"))).head().getLong(0)
-        }
-        timed(s"entity exact leg, FULL primary read $tag")(((),
-          leg(spark.table(s"$db.primary"))))
-        timed(s"entity exact leg, STATS-PRUNED read $tag")(((),
-          leg(FileStats.keysPrunedScan(spark, s"$db.primary",
-            s"$db.primary_stats", "customerno",
-            batch.select(col("customerno")), 100000).get)))
+        row(s"entity exact leg, FULL primary read $tag")(leg(spark.table(s"$db.primary")))
+        row(s"entity exact leg, STATS-PRUNED read $tag")(leg(FileStats.keysPrunedScan(
+          spark, s"$db.primary", s"$db.primary_stats", "customerno",
+          batch.select(col("customerno")), 100000).get))
       }
-    }
+    },
 
-    // Incremental fixed-point PageRank: the same ring fixture and FIXED
-    // 50-edge batch — rank influence is cycle-local (floor divisions
-    // quantize the cascade), so the incremental recompute is
-    // batch-bounded; the from-scratch trace row is both the stored-state
-    // build cost and the ~Nx comparison.
-    locally {
+    // Incremental fixed-point PageRank: ring fixture, FIXED 50-edge batch —
+    // floor divisions quantize rank cascades, so the recompute is
+    // batch-bounded; the from-scratch trace row is the ~n× comparison.
+    "pagerank_incremental" -> { c => import c._
       import graft.operators.PageRank
-      def ring(rows: Long) = spark.range(rows).select(col("id").as("src"),
-        (col("id") - pmod(col("id"), lit(10L)) +
-          pmod(col("id") + 1L, lit(10L))).as("dst"))
-      val batch = spark.range(50).select((col("id") * 10L).as("src"),
-        (col("id") * 10L + 5L).as("dst")).localCheckpoint(true)
-      Seq(100000L -> "1x", 100000L * n -> s"${n}x").foreach { case (rows, tag) =>
-        val nodes = spark.range(rows).select(col("id"))
-        val edges = ring(rows).localCheckpoint(true)
-        val trace = timed(s"PageRank from-scratch 3-iter trace $tag")({
-          val t = PageRank.fixedPointTrace(edges, "src", "dst",
-            nodes, "id", 3).localCheckpoint(true)
-          (t, t.count())
-        })
-        timed(s"PageRank incremental fixed batch $tag")(((),
-          PageRank.incrementalFixedPoint(edges, trace, batch,
-              "src", "dst", 3)
-            .agg(bit_xor(xxhash64(struct(col("iter"), col("id"), col("pr"))))
-              .as("ck"), count(lit(1)).as("cnt")).head().getLong(1)))
+      val batch = ringBatch(c, 10L)
+      tiers(100000L, 100000L * n).foreach { case (rows, tag) =>
+        val edges = ring(c, rows, Seq(1L)).localCheckpoint(true)
+        val trace = timed(s"PageRank from-scratch 3-iter trace $tag")(checkpoint(
+          PageRank.fixedPointTrace(edges, "src", "dst", spark.range(rows).select(col("id")),
+            "id", 3)))
+        row(s"PageRank incremental fixed batch $tag")(checksum(
+          PageRank.incrementalFixedPoint(edges, trace, batch, "src", "dst", 3),
+          "iter", "id", "pr"))
       }
-    }
+    },
 
     // Token-distribution divergence: one word-count combine (map-side) then
-    // vocab-bounded join+agg — runtime ~Nx, shuffle bounded by vocab (the
-    // replicas repeat the same tokens, so the count table does NOT grow Nx).
-    Seq(docs -> "1x", rep -> s"${n}x").foreach { case (df, tag) =>
-      timed(s"token divergence per lang $tag")(((),
-        operators.CorpusStats.tokenDivergence(
-            df.select(col("lang"), pmod(col("doc_id"), lit(2)).as("side"),
-              S.tokens(col("text")).as("toks")), "toks", "lang", "side")
-          .agg(bit_xor(xxhash64(struct(col("kl_ab"), col("kl_ba"),
-            col("chi2")))).as("ck"), count(lit(1)).as("cnt"))
-          .head().getLong(1)))
-    }
+    // a vocab-bounded join+agg — ~n×, shuffle bounded by vocab (replicas
+    // repeat the same tokens, so the count table does NOT grow n×).
+    "token_divergence" -> { c =>
+      c.docsRows("token divergence per lang")(df => checksum(
+        operators.CorpusStats.tokenDivergence(df.select(col("lang"),
+          pmod(col("doc_id"), lit(2)).as("side"), S.tokens(col("text")).as("toks")),
+          "toks", "lang", "side"),
+        "kl_ab", "kl_ba", "chi2"))
+    },
 
     // Whole-document NFD bin packing: one shuffle by salted bucket + a
-    // per-bucket sort/fold — runtime ~Nx with buckets scaled alongside
-    // (fixed per-bucket work), shuffle ~rows.
-    locally {
-      def lens(rows: Long) = spark.range(rows).select(col("id"),
-        (pmod(xxhash64(col("id")), lit(900L)) + 100L).as("len"))
-      Seq((100000L, 64) -> "1x", (100000L * n, 64 * n) -> s"${n}x").foreach {
-        case ((rows, buckets), tag) =>
-          timed(s"nfd bin packing cap=2048 $tag")(((),
-            operators.Sampling.binPackDocs(lens(rows), "id", "len", 2048,
-              buckets, "bp").count()))
+    // per-bucket sort/fold — ~n× with buckets scaled alongside (fixed
+    // per-bucket work), shuffle ~rows.
+    "bin_packing" -> { c => import c._
+      tiers(1, n).foreach { case (m, tag) =>
+        val lens = spark.range(100000L * m).select(col("id"),
+          (pmod(xxhash64(col("id")), lit(900L)) + 100L).as("len"))
+        row(s"nfd bin packing cap=2048 $tag")(
+          operators.Sampling.binPackDocs(lens, "id", "len", 2048, 64 * m, "bp").count())
       }
-    }
+    },
 
     // Triangle enumeration under ADVERSARIAL hub skew: a celebrity node of
-    // degree d generates d²/2 wedges naively; the degree-ordered
-    // orientation directs every hub edge INTO the hub, so the hub generates
-    // ZERO wedges and runtime must track edges ~linearly, not d².
-    locally {
-      def hubChain(leaves: Long) = {
+    // degree d generates d²/2 wedges naively; the degree-ordered orientation
+    // directs every hub edge INTO the hub, so the hub generates ZERO wedges
+    // and runtime must track edges ~linearly, not d².
+    "triangles" -> { c => import c._
+      tiers(20000L, 20000L * n).foreach { case (leaves, tag) =>
         val hub = spark.range(2, leaves + 2).select(lit(1L).as("s"), col("id").as("t"))
         val chain = spark.range(2, leaves + 1).select(col("id").as("s"), (col("id") + 1).as("t"))
-        hub.unionByName(chain)
+        row(s"triangles, hub degree=$leaves + chain $tag")(
+          operators.GraphOps.triangles(hub.unionByName(chain), "s", "t").count())
       }
-      Seq(20000L -> "1x", 200000L -> s"${n}x").foreach { case (leaves, tag) =>
-        timed(s"triangles, hub degree=$leaves + chain $tag")(((),
-          operators.GraphOps.triangles(hubChain(leaves), "s", "t").count()))
-      }
-    }
+    },
 
     // KMV set operations: sketches stay k longs per (group, side) however
-    // large the corpus — shuffle must stay ~FLAT while runtime tracks the
-    // token scan (~Nx); the set-op arithmetic is per-group constant work.
-    Seq(docs -> "1x", rep -> s"${n}x").foreach { case (df, tag) =>
-      import functions.expressions.{SketchAggregates => SK}
-      val grams = df.select(col("lang"), pmod(col("doc_id"), lit(2)).as("half"),
-          explode(S.tokens(col("text"))).as("tok"))
-        .select(col("lang"), col("half"),
-          conv(substring(md5(col("tok")), 1, 15), 16, 10).cast("long").as("h"))
-      val sks = grams.groupBy(col("lang"), col("half"))
-        .agg(SK.kmv_sketch(col("h"), 32).as("sk"))
-      timed(s"kmv set ops (union/jacc/intersect) per lang $tag")(((),
+    // large the corpus — shuffle ~FLAT while runtime tracks the token scan;
+    // the set-op arithmetic is per-group constant work.
+    "kmv_setops" -> { c =>
+      c.docsRows("kmv set ops (union/jacc/intersect) per lang") { df =>
+        val sks = df.select(col("lang"), pmod(col("doc_id"), lit(2)).as("half"),
+            explode(S.tokens(col("text"))).as("tok"))
+          .select(col("lang"), col("half"),
+            conv(substring(md5(col("tok")), 1, 15), 16, 10).cast("long").as("h"))
+          .groupBy(col("lang"), col("half")).agg(SK.kmv_sketch(col("h"), 32).as("sk"))
         sks.filter(col("half") === 0).select(col("lang"), col("sk").as("ska"))
-          .join(sks.filter(col("half") === 1)
-            .select(col("lang"), col("sk").as("skb")), Seq("lang"))
+          .join(sks.filter(col("half") === 1).select(col("lang"), col("sk").as("skb")), Seq("lang"))
           .select(SK.kmv_jaccard(col("ska"), col("skb"), 32).as("j"),
             SK.kmv_intersect_estimate(col("ska"), col("skb"), 32).as("i"))
-          .count()))
-    }
-    // Incremental dedup: FIXED daily batch against a growing stored corpus.
-    // The batch×stored prefix join is stored-TOKEN-linear on the index side
-    // (never corpus-pairs), so wall should grow well under Nx — the daily
-    // cost contract vs re-deduplicating the whole corpus each day.
-    locally {
-      val toksOf = (df: DataFrame) => df.select(col("doc_id"), col("lang"),
-        col("source"), array_distinct(S.tokens(col("text"))).as("toks"))
-      val batch = toksOf(docs.filter(pmod(col("doc_id"), lit(7)) === 0)
-        .select((col("doc_id") + lit(1000L * offset)).as("doc_id"),
-          col("lang"), col("source"), col("text")))
-        .localCheckpoint(true)
-      Seq(docs -> "1x", rep -> s"${n}x").foreach { case (df, tag) =>
-        timed(s"incremental dedup, fixed batch vs $tag stored corpus")(((),
-          operators.Dedup.incrementalDedup(toksOf(df), batch, "toks",
-            "doc_id", Seq("lang", "source"), 0.7)
-            .groupBy(col("status")).count().collect().map(_.getLong(1)).sum))
+          .count()
       }
-    }
+    },
 
-    // Incremental MinHash (signature-index path): FIXED daily batch against
-    // a growing stored INDEX. The index is built OUTSIDE the timer (it is
-    // persisted state in the daily contract); what's timed is the daily
-    // path: batch banding + broadcast semi-join of stored bucket rows down
-    // to batch-touched buckets + batch-driven pair join + verify. Pair
-    // enumeration is batch-scoped by construction, so wall must grow well
-    // under Nx (the index contributes one filtered banding scan only).
-    locally {
-      val batch = docs.filter(pmod(col("doc_id"), lit(7)) === 0)
-        .select((col("doc_id") + lit(2000L * offset)).as("doc_id"), col("text"))
-        .localCheckpoint(true)
-      Seq(docs -> "1x", rep -> s"${n}x").foreach { case (df, tag) =>
-        val idx = operators.Dedup.minhashIndex(
-            df.select(col("doc_id"), col("text")), "text", "doc_id")
-          .localCheckpoint(true)
-        timed(s"incremental minhash, fixed batch vs $tag stored index")(((),
-          operators.Dedup.incrementalMinhash(idx, batch, "text", "doc_id",
-            threshold = 0.7)._1
-            .groupBy(col("status")).count().collect().map(_.getLong(1)).sum))
-      }
-    }
+    "incremental_dedup" -> (c => incrementalDedup(c, c.docs, c.rep)),
+    "incremental_dedup_perturbed" -> (c => incrementalDedup(c, c.pert, c.pertRep)),
+    "incremental_minhash" -> (c => incrementalMinhash(c, c.docs, c.rep)),
+    "incremental_minhash_perturbed" -> (c => incrementalMinhash(c, c.pert, c.pertRep)),
 
     // Persisted IVF-PQ index: FIXED daily batch appended (encode-only) to a
-    // 1x vs 10x stored index, then searched. The stored index participates
-    // as codes only (the raw vectors are never re-read); append cost is
-    // batch-scoped and search scans only the probed lists' codes — wall
-    // must grow well under Nx.
-    locally {
-      val embAll = queries.Tables(spark, sfDir, "embeddings")
-        .select(col("vec_id"), col("embedding"))
-      val eoff = embAll.agg(max(col("vec_id"))).head().getLong(0) + 1
-      val embRep = (0 until n).map(i => embAll.select(
-          (col("vec_id") + lit(i.toLong * eoff)).as("vec_id"), col("embedding")))
-        .reduce(_ unionByName _)
-      val centroids =
-        graft.functions.expressions.HashExpressions.fixedCentroids(100, 16, 64)
-      val fc = graft.functions.expressions.HashExpressions.fixedCentroids(200, 128, 8)
-      val codebooks = Array.tabulate(8)(j => fc.slice(j * 16, j * 16 + 16))
-      val abatch = embAll.filter(pmod(col("vec_id"), lit(7)) === 0)
-        .select((col("vec_id") + lit(100L * eoff * n)).as("vec_id"), col("embedding"))
+    // 1x vs n× stored index (built outside the timer), then searched. The
+    // index participates as codes only (raw vectors never re-read); append
+    // is batch-scoped and search scans only the probed lists' codes — wall
+    // must grow well under n×.
+    "ivfpq_index" -> { c => import c._
+      val cents = HX.fixedCentroids(100, 16, 64)
+      val books = codebooks(200)
+      val batch = emb.filter(pmod(col("vec_id"), lit(7)) === 0)
+        .select((col("vec_id") + lit(100L * embOffset * n)).as("vec_id"), col("embedding"))
         .localCheckpoint(true)
-      val aq = embAll.filter(col("vec_id") < 8)
+      val q = emb.filter(col("vec_id") < 8)
         .select(col("vec_id").as("query_id"), col("embedding")).localCheckpoint(true)
-      Seq(embAll -> "1x", embRep -> s"${n}x").foreach { case (df, tag) =>
-        val idx = operators.Ann.ivfPqIndex(df, "embedding", "vec_id",
-          centroids, codebooks).localCheckpoint(true)
-        timed(s"ivf-pq append fixed batch + top-10 search vs $tag index")(((),
-          operators.Ann.ivfPqSearch(
-            operators.Ann.ivfPqAppend(idx, abatch, "embedding", "vec_id",
-              centroids, codebooks),
-            aq, "embedding", "vec_id", "query_id", centroids, codebooks,
-            k = 10, nprobe = 4).count()))
+      tiers(emb, embRep).foreach { case (df, tag) =>
+        val idx = Ann.ivfPqIndex(df, "embedding", "vec_id", cents, books).localCheckpoint(true)
+        row(s"ivf-pq append fixed batch + top-10 search vs $tag index")(Ann.ivfPqSearch(
+          Ann.ivfPqAppend(idx, batch, "embedding", "vec_id", cents, books),
+          q, "embedding", "vec_id", "query_id", cents, books, k = 10, nprobe = 4).count())
       }
-    }
+    },
 
-    // Margin-criterion pair mining: FIXED X side vs a 1x/Nx Y corpus
-    // (brute-force legs — each leg broadcasts the fixed X and streams Y, so
-    // wall must track Y ~linearly; the margin arithmetic downstream of the
-    // legs is per-query averages + two id equi-joins, never a vector).
-    locally {
-      val embAll = queries.Tables(spark, sfDir, "embeddings")
-        .select(col("vec_id"), col("embedding"))
-      val eoff = embAll.agg(max(col("vec_id"))).head().getLong(0) + 1
-      val embRep = (0 until n).map(i => embAll.select(
-          (col("vec_id") + lit(i.toLong * eoff)).as("vec_id"), col("embedding")))
-        .reduce(_ unionByName _)
-      val xside = embAll.filter(pmod(col("vec_id"), lit(4)) === 0)
-        .localCheckpoint(true)
-      Seq(embAll -> "1x", embRep -> s"${n}x").foreach { case (df, tag) =>
-        timed(s"margin mining, fixed X vs $tag Y corpus")(((),
-          operators.Ann.marginMine(xside,
-            df.filter(pmod(col("vec_id"), lit(4)) =!= 0),
-            "embedding", "vec_id", k = 4, threshold = 1.02).count()))
+    // Margin-criterion pair mining: FIXED X side vs a 1x/n× Y corpus —
+    // each brute-force leg broadcasts the fixed X and streams Y, so wall
+    // tracks Y ~linearly; the margin arithmetic is per-query averages + two
+    // id equi-joins, never a vector.
+    "margin" -> { c => import c._
+      val x = emb.filter(pmod(col("vec_id"), lit(4)) === 0).localCheckpoint(true)
+      tiers(emb, embRep).foreach { case (df, tag) =>
+        row(s"margin mining, fixed X vs $tag Y corpus")(Ann.marginMine(x,
+          df.filter(pmod(col("vec_id"), lit(4)) =!= 0), "embedding", "vec_id",
+          k = 4, threshold = 1.02).count())
       }
-    }
+    },
 
     // Sketch vs exact profiler: exact count_distinct shuffles each column's
     // distinct set (the `text` column ≈ re-shuffling the corpus), while the
-    // HLL profile's partials are 2^p bytes per column per partition — the
-    // shuffle row must stay ~FLAT from 1x to Nx while exact grows ~Nx.
-    Seq(docs -> "1x", rep -> s"${n}x").foreach { case (df, tag) =>
+    // HLL partials are 2^p bytes per column per partition — the sketch row's
+    // shuffle must stay ~FLAT from 1x to n× while exact grows ~n×. Checksum
+    // sink: count() alone lets nested-schema pruning drop every aggregate.
+    "profile" -> { c => import c._
       val cols = Seq("doc_id", "lang", "source", "text")
-      // checksum sink, NOT count(): count() alone lets nested-schema pruning
-      // drop every aggregate through the explode (the span-scrub lesson)
-      def sink(p: DataFrame): Long = p.agg(
-        bit_xor(xxhash64(struct(p.columns.map(col).toIndexedSeq: _*))).as("ck"),
-        org.apache.spark.sql.functions.count(lit(1)).as("cnt")).head().getLong(1)
-      timed(s"profile exact (count_distinct x4) $tag")(((),
-        sink(operators.Analytics.profile(df, cols))))
-      timed(s"profile sketch (hll p=12 x4) $tag")(((),
-        sink(operators.Analytics.profileSketch(df, cols, p = 12))))
-    }
-    // Kneser-Ney perplexity: LM trained on a 1x vs Nx corpus, FIXED score
-    // slice — the model is three hash-keyed aggregations off one kernel
-    // scan of the train side (8-byte keys in every exchange, map-side
-    // partial), scoring is pinned to the fixed slice; wall must track the
-    // train scan ~linearly, never a score×model product.
-    locally {
-      val scoreSlice = docs.filter(pmod(col("doc_id"), lit(11)) === 0)
-        .select(col("doc_id"), col("text")).localCheckpoint(true)
-      Seq(docs -> "1x", rep -> s"${n}x").foreach { case (df, tag) =>
-        timed(s"kn-bigram ppl, fixed score slice vs $tag train corpus")(((),
-          operators.Tfidf.knBigramPpl(df.select(col("doc_id"), col("text")),
-            scoreSlice, "text", "doc_id").count()))
+      def sink(p: DataFrame): Long = checksum(p, p.columns.toIndexedSeq: _*)
+      tiers(docs, rep).foreach { case (df, tag) =>
+        row(s"profile exact (count_distinct x4) $tag")(sink(operators.Analytics.profile(df, cols)))
+        row(s"profile sketch (hll p=12 x4) $tag")(
+          sink(operators.Analytics.profileSketch(df, cols, p = 12)))
       }
-    }
+    },
 
-    // Moore-Lewis cross-entropy difference: FIXED scoring pool vs a 1x/Nx
-    // train corpus — BOTH LMs (in-domain + general) fit and score in ONE
-    // plan via the per-group-LM machinery; the growth terms are the train
-    // scans and the vocabulary-sized model exchanges, never score×model.
-    locally {
-      val pool = docs.filter(pmod(col("doc_id"), lit(11)) === 0)
-        .select(col("doc_id"), col("text")).localCheckpoint(true)
-      Seq(docs -> "1x", rep -> s"${n}x").foreach { case (df, tag) =>
-        timed(s"moore-lewis ce-diff, fixed pool vs $tag train corpus")(((),
-          operators.Tfidf.mooreLewisScore(
-            df.filter(col("lang") === "en"), df, pool,
-            "text", "doc_id").count()))
-      }
-    }
-
-    // Trigram KN with recursive backoff: same contract as the bigram row —
-    // model aggregations are the train-scan growth term, scoring pinned to
-    // the fixed slice.
-    locally {
-      val scoreSlice = docs.filter(pmod(col("doc_id"), lit(11)) === 0)
-        .select(col("doc_id"), col("text")).localCheckpoint(true)
-      Seq(docs -> "1x", rep -> s"${n}x").foreach { case (df, tag) =>
-        timed(s"kn-trigram ppl, fixed score slice vs $tag train corpus")(((),
-          operators.Tfidf.knTrigramPpl(df.select(col("doc_id"), col("text")),
-            scoreSlice, "text", "doc_id").count()))
-      }
-    }
-
-    // N-gram novelty: FIXED score slice vs a 1x/Nx train corpus — the train
-    // side reduces to distinct 8-byte gram hashes and the anti-join
-    // shuffles both sides by that key; growth term is the train scan +
-    // its distinct aggregation, never score×train.
-    locally {
+    // Kneser-Ney perplexity (bigram, then trigram with recursive backoff):
+    // LM trained on a 1x vs n× corpus, FIXED score slice — the model is
+    // hash-keyed aggregations off one kernel scan of the train side (8-byte
+    // keys, map-side partial); wall tracks the train scan, never score×model.
+    // Moore-Lewis: BOTH LMs (in-domain + general) fit and score in ONE plan
+    // via the per-group-LM machinery. N-gram novelty: the train side reduces
+    // to distinct 8-byte gram hashes, anti-joined by that key.
+    "language_models" -> { c => import c._
       val slice = docs.filter(pmod(col("doc_id"), lit(11)) === 0)
         .select(col("doc_id"), col("text")).localCheckpoint(true)
-      Seq(docs -> "1x", rep -> s"${n}x").foreach { case (df, tag) =>
-        timed(s"ngram novelty n=13, fixed slice vs $tag train")(((),
-          operators.Dedup.ngramNovelty(df.select(col("text")), slice,
-            "text", "doc_id").count()))
+      val train = tiers(docs, rep)
+      train.foreach { case (df, tag) =>
+        row(s"kn-bigram ppl, fixed score slice vs $tag train corpus")(operators.Tfidf
+          .knBigramPpl(df.select(col("doc_id"), col("text")), slice, "text", "doc_id").count())
       }
-    }
+      train.foreach { case (df, tag) =>
+        row(s"moore-lewis ce-diff, fixed pool vs $tag train corpus")(operators.Tfidf
+          .mooreLewisScore(df.filter(col("lang") === "en"), df, slice, "text", "doc_id").count())
+      }
+      train.foreach { case (df, tag) =>
+        row(s"kn-trigram ppl, fixed score slice vs $tag train corpus")(operators.Tfidf
+          .knTrigramPpl(df.select(col("doc_id"), col("text")), slice, "text", "doc_id").count())
+      }
+      train.foreach { case (df, tag) =>
+        row(s"ngram novelty n=13, fixed slice vs $tag train")(
+          Dedup.ngramNovelty(df.select(col("text")), slice, "text", "doc_id").count())
+      }
+    },
 
-    // Span corruption: per-doc md5 coins + per-doc windows + one covered-
-    // position join — embarrassingly parallel, wall must track the corpus
-    // ~linearly with doc-keyed shuffles only.
-    Seq(docs -> "1x", rep -> s"${n}x").foreach { case (df, tag) =>
-      timed(s"span corruption rate~18% $tag")(((),
-        operators.Augment.spanCorrupt(df.select(col("doc_id"), col("text")),
-          "doc_id", "text", "sc", 60, 3).count()))
-    }
+    // Span corruption: per-doc md5 coins + per-doc windows + one
+    // covered-position join — embarrassingly parallel, ~linear.
+    "span_corrupt" -> { c =>
+      c.docsRows("span corruption rate~18%")(df => operators.Augment.spanCorrupt(
+        df.select(col("doc_id"), col("text")), "doc_id", "text", "sc", 60, 3).count())
+    },
 
     // Winnowing: the kernel scan is linear; matches bucket by 8-byte
-    // fingerprint hash. The replicated corpus is ADVERSARIAL for the match
-    // join (every doc has N-1 exact replicas → true pairs grow ~N² per
-    // clique) — growth must track OUTPUT pairs, not input².
-    Seq(docs -> "1x", rep -> s"${n}x").foreach { case (df, tag) =>
-      timed(s"winnow fingerprints+matches k=8 w=8 $tag") {
-        val m = operators.Dedup.winnowMatches(
-          df.select(col("doc_id"), col("text")), "text", "doc_id",
-          minShared = 3).localCheckpoint(true)
-        (m, m.count())
+    // fingerprint hash. Replication is ADVERSARIAL for the match join (every
+    // doc has n-1 exact replicas → true pairs ~n² per clique) — growth must
+    // track OUTPUT pairs, not input². Then incremental winnowing: FIXED
+    // daily batch vs a 1x/n× stored fingerprint index — stored rows are
+    // semi-joined to batch-touched fps before any pair forms, so wall grows
+    // well under n× though the index grows n×.
+    "winnow" -> { c => import c._
+      tiers(docs, rep).foreach { case (df, tag) =>
+        timed(s"winnow fingerprints+matches k=8 w=8 $tag")(checkpoint(Dedup.winnowMatches(
+          df.select(col("doc_id"), col("text")), "text", "doc_id", minShared = 3)))
       }
-    }
-
-    // Incremental winnowing: FIXED daily batch against a 1x vs Nx stored
-    // fingerprint index — stored text never re-read; candidate work is
-    // batch-scoped (stored rows semi-joined to batch-touched fps before any
-    // pair forms), so wall must grow well under Nx even though the index
-    // itself grows Nx.
-    locally {
       val batch = docs.filter(pmod(col("doc_id"), lit(13)) === 0)
         .select((col("doc_id") + 3000L * offset).as("doc_id"), col("text"))
         .localCheckpoint(true)
-      Seq(docs -> "1x", rep -> s"${n}x").foreach { case (df, tag) =>
-        val idx = operators.Dedup.winnowIndex(
-          df.select(col("doc_id"), col("text")), "text", "doc_id")
+      tiers(docs, rep).foreach { case (df, tag) =>
+        val idx = Dedup.winnowIndex(df.select(col("doc_id"), col("text")), "text", "doc_id")
           .localCheckpoint(true)
-        timed(s"incremental winnow, fixed batch vs $tag stored index")(((),
-          operators.Dedup.incrementalWinnow(idx, batch, "text", "doc_id",
-            minShared = 3)._1.count()))
+        row(s"incremental winnow, fixed batch vs $tag stored index")(Dedup.incrementalWinnow(
+          idx, batch, "text", "doc_id", minShared = 3)._1.count())
       }
-    }
+    },
 
-    // Sparse logistic regression: 3 GD iterations over hashed features of
-    // a 1x vs Nx corpus with the model living in a DataFrame — each
-    // iteration is one feature-keyed join + two map-side-partial
-    // aggregations over the sparse rows, so wall must grow ~linearly in
-    // the corpus, and the driver never holds a weight vector at either
-    // scale (feature building is outside the timer; the FIT is timed).
-    locally {
-      Seq(docs -> "1x", rep -> s"${n}x").foreach { case (df, tag) =>
-        val labels = df.select(col("doc_id"),
-          (length(col("text")) >= 200).cast("int").as("y"))
+    // Sparse logistic regression: 3 GD iterations over hashed features with
+    // the model living in a DataFrame — per iteration one feature-keyed
+    // join + two map-side-partial aggregations, ~linear, and the driver
+    // never holds a weight vector. Feature building is untimed; the FIT is.
+    "logistic" -> { c => import c._
+      tiers(docs, rep).foreach { case (df, tag) =>
+        val labels = df.select(col("doc_id"), (length(col("text")) >= 200).cast("int").as("y"))
           .localCheckpoint(true)
-        val feats = operators.Retrieval.hashedTokenFeatures(
-          df, "text", "doc_id", 1 << 18).localCheckpoint(true)
-        timed(s"sparse logistic 3 iters, 2^18 features $tag")(((),
-          operators.Retrieval.logisticFitSparse(feats, labels, "doc_id", "y",
-            iters = 3, lrNum = 1, lrDen = 1)._2.count()))
+        val feats = operators.Retrieval.hashedTokenFeatures(df, "text", "doc_id", 1 << 18)
+          .localCheckpoint(true)
+        row(s"sparse logistic 3 iters, 2^18 features $tag")(operators.Retrieval
+          .logisticFitSparse(feats, labels, "doc_id", "y", iters = 3, lrNum = 1, lrDen = 1)
+          ._2.count())
       }
-    }
+    },
 
-    // Co-occurrence PMI: pair volume is Σ_docs |tokens|² — replicating the
-    // corpus multiplies DOCS, not per-doc token sets, so the enumeration
-    // (and wall) must grow ~linearly in N; the maxTokens guard keeps any
-    // single doc's contribution bounded at both scales.
-    locally {
-      Seq(docs -> "1x", rep -> s"${n}x").foreach { case (df, tag) =>
-        timed(s"cooccurrencePmi minSupport-scaled $tag")(((),
-          operators.CorpusStats.cooccurrencePmi(df, "text", "doc_id",
-            minSupport = (if (df eq docs) 150 else 150 * n)).count()))
+    // Co-occurrence PMI: pair volume is Σ_docs |tokens|² — replication
+    // multiplies DOCS, not per-doc token sets, so enumeration and wall grow
+    // ~linearly; minSupport scales with n so the output stays the same
+    // collocation set, and maxTokens bounds any single doc.
+    "pmi" -> { c => import c._
+      tiers(docs -> 150, rep -> 150 * n).foreach { case ((df, ms), tag) =>
+        row(s"cooccurrencePmi minSupport-scaled $tag")(
+          operators.CorpusStats.cooccurrencePmi(df, "text", "doc_id", minSupport = ms).count())
       }
-    }
+    },
+    "pmi_perturbed" -> { c => import c._
+      tiers(pert -> 150, pertRep -> 150 * n).foreach { case ((df, ms), tag) =>
+        row(s"cooccurrencePmi minSupport=$ms $tag")(operators.CorpusStats.cooccurrencePmi(
+          df.select(col("doc_id"), col("text")), "text", "doc_id", minSupport = ms).count())
+      }
+    },
 
-    // Synchronous label propagation: 3 iterations over a 2-out-degree
-    // synthetic graph — per iteration one edge join + one vote count +
-    // one argmax window, all linear in edges.
-    locally {
-      Seq(docs -> "1x", rep -> s"${n}x").foreach { case (df, tag) =>
+    // Synchronous label propagation, 3 iterations over a 2-out-degree graph
+    // — per iteration one edge join + one vote count + one argmax window,
+    // linear in edges; labels re-materialized per round, so plan depth is
+    // constant at any scale.
+    "label_propagation" -> { c => import c._
+      tiers(docs, rep).foreach { case (df, tag) =>
         val ids = df.select(col("doc_id")).localCheckpoint(true)
-        val nn = ids.agg((max(col("doc_id")) + 1).as("__n"))
-        val edges = ids.crossJoin(broadcast(nn))
-          .select(col("doc_id").as("src"),
-            explode(array((col("doc_id") * 2 + 1) % col("__n"),
-              (col("doc_id") * 5 + 3) % col("__n"))).as("dst"))
-          .localCheckpoint(true)
-        timed(s"labelPropagation 3 iters $tag")(((),
-          operators.GraphOps.labelPropagation(edges, "src", "dst",
-            ids, "doc_id", iters = 3).count()))
+        val edges = twoOutEdges(ids).localCheckpoint(true)
+        row(s"labelPropagation 3 iters $tag")(operators.GraphOps.labelPropagation(
+          edges, "src", "dst", ids, "doc_id", iters = 3).count())
       }
-    }
+    },
+    // The same over a generated id range (5000 nodes at 1x).
+    "label_propagation_graph" -> { c => import c._
+      tiers(5000L, 5000L * n).foreach { case (nn, tag) =>
+        val ids = spark.range(nn).select(col("id").as("doc_id")).localCheckpoint(true)
+        val edges = ids.select(col("doc_id").as("src"),
+            explode(array((col("doc_id") * 2 + 1) % nn, (col("doc_id") * 5 + 3) % nn)).as("dst"))
+          .localCheckpoint(true)
+        row(s"labelPropagation 3 iters $tag")(operators.GraphOps.labelPropagation(
+          edges, "src", "dst", ids, "doc_id", iters = 3).count())
+      }
+    },
+
+    // Incremental CC over 10-star components: a FIXED batch bridging 500
+    // component pairs (the honest merge shape) vs a 1x/n× stored labeling —
+    // still batch-scoped.
+    "cc_incremental_star" -> { c => import c._
+      val batch = spark.range(500).select((col("id") * 20).as("src"), (col("id") * 20 + 10).as("dst"))
+        .localCheckpoint(true)
+      tiers(10000L, 10000L * n).foreach { case (nn, tag) =>
+        val labels = CC.run(spark.range(nn).select(col("id").as("src"),
+            (col("id") - pmod(col("id"), lit(10))).as("dst")), "src", "dst",
+          localEdgeThreshold = 0).localCheckpoint(true)
+        row(s"incremental CC, fixed 500-bridge batch vs $tag stored labeling")(
+          CC.incremental(labels, batch).count())
+      }
+    },
 
     // k-anonymity ladder: two window counts + the level split — linear.
-    locally {
-      val cust = queries.Tables(spark, sfDir, "customer")
-        .select(col("c_custkey"), col("c_nationkey"), col("c_mktsegment"),
-          floor(col("c_acctbal") / 2000.0).cast("long").as("band"))
+    "kanon" -> { c => import c._
+      val cust = table("customer").select(col("c_custkey"), col("c_nationkey"),
+          col("c_mktsegment"), floor(col("c_acctbal") / 2000.0).cast("long").as("band"))
         .localCheckpoint(true)
-      val coff = cust.agg(max(col("c_custkey"))).head().getLong(0) + 1
-      val custN = (0 until n).map(i => cust.select(
-          (col("c_custkey") + lit(i.toLong * coff)).as("c_custkey"),
-          col("c_nationkey"), col("c_mktsegment"), col("band")))
-        .reduce(_ unionByName _).localCheckpoint(true)
-      Seq(cust -> "1x", custN -> s"${n}x").foreach { case (df, tag) =>
-        timed(s"kAnonymize k=3 two-level ladder $tag")(((),
-          operators.Privacy.kAnonymize(df,
-            Seq("c_nationkey", "c_mktsegment", "band"),
-            Map("c_nationkey" -> pmod(col("c_nationkey"), lit(5)),
-              "band" -> floor(col("band") / 3.0).cast("long")), k = 3).count()))
+      val custN = replicate(cust, "c_custkey", nextId(cust, "c_custkey"), n).localCheckpoint(true)
+      tiers(cust, custN).foreach { case (df, tag) =>
+        row(s"kAnonymize k=3 two-level ladder $tag")(operators.Privacy.kAnonymize(df,
+          Seq("c_nationkey", "c_mktsegment", "band"),
+          Map("c_nationkey" -> pmod(col("c_nationkey"), lit(5)),
+            "band" -> floor(col("band") / 3.0).cast("long")), k = 3).count())
       }
-    }
-    // q209 daily-ops CHAIN at 1x/Nx with PER-LEG attribution (the
-    // composition previously had 1x bench evidence only): DQ gate →
+    },
+
+    // q209 daily-ops CHAIN at 1x/n× with PER-LEG attribution: DQ gate →
     // dedup gate → ANN gate → consolidateBatches → deleteRowsAll → DP
-    // release, corpus and embeddings replicated Nx with id offsets. The
-    // gate batch count stays 4 (grp = doc_id % 4) so Nx models a BIGGER
-    // DAY, not more days — each micro-batch grows Nx and per-leg wall
-    // should track it. Twins plant at +twinOff (multiple of 20 so the
-    // twin keeps its original's grp and the %20 selector stays disjoint).
-    locally {
+    // release, corpus and embeddings replicated with id offsets. The gate
+    // batch count stays 4 (grp = doc_id % 4), so n× models a BIGGER DAY,
+    // not more days. Twins plant at +twinOff (a multiple of 20, so the twin
+    // keeps its original's grp and the %20 selector stays disjoint). The
+    // chain's staged copies and checkpoints are n×-sized, so every temp dir
+    // and the scaleops_* database are removed at the end of each tier.
+    "daily_ops" -> { c => import c._
       import graft.catalog.{Compaction, Retention}
       import graft.streaming.{BatchCommitLog, StreamingOps}
-      val d0 = queries.Tables(spark, sfDir, "documents")
-        .select(col("doc_id"), col("lang"), col("n_chars"), col("text"))
-      val dOff = d0.agg(max(col("doc_id"))).head().getLong(0) + 1
-      val e0 = queries.Tables(spark, sfDir, "embeddings")
-      val eOff = e0.agg(max(col("vec_id"))).head().getLong(0) + 1
-      val centroids =
-        graft.functions.expressions.HashExpressions.fixedCentroids(100, 16, 64)
-      val fc = graft.functions.expressions.HashExpressions.fixedCentroids(200, 128, 8)
-      val codebooks = Array.tabulate(8)(j => fc.slice(j * 16, j * 16 + 16))
-      // bounded-footprint harness: the chain's staged parquet copies and
-      // checkpoints are Nx-sized, so repeated runs must not accumulate —
-      // every temp dir is recursively deleted and the scaleops_* database
-      // dropped at the end of chain() (best-effort: a failed leg leaves
-      // debuggable state behind; the next run's re-create still converges)
-      def rmTree(p: String): Unit =
-        try {
-          val s = java.nio.file.Files.walk(java.nio.file.Paths.get(p))
-          try s.sorted(java.util.Comparator.reverseOrder())
-            .forEach(f => { java.nio.file.Files.deleteIfExists(f); () })
-          finally s.close()
-        } catch { case _: Throwable => () }
-      def chain(k: Int, tag: String): Unit = {
+      val d0 = table("documents").select(col("doc_id"), col("lang"), col("n_chars"), col("text"))
+      val dOff = nextId(d0, "doc_id")
+      val cents = HX.fixedCentroids(100, 16, 64)
+      val books = codebooks(200)
+      def tmp(prefix: String) = java.nio.file.Files.createTempDirectory(prefix).toString
+      def stream(dir: String, schema: org.apache.spark.sql.types.StructType) =
+        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(dir)
+      def schemaOf(dir: String) = spark.read.parquet(dir).schema
+      tiers(1, n).foreach { case (k, tag) =>
         val db = s"scaleops_$tag"
         spark.sql(s"CREATE DATABASE IF NOT EXISTS $db")
         Seq("cleansed", "quarantine", "corpus", "report", "annidx")
           .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $db.$t"))
-        val docsK = (0 until k).map(i => d0.select(
-            (col("doc_id") + lit(i.toLong * dOff)).as("doc_id"),
-            col("lang"), col("n_chars"), col("text")))
-          .reduce(_ unionByName _)
+        val docsK = replicate(d0, "doc_id", dOff, k)
         val twinOff = (k.toLong * dOff + 19) / 20 * 20
-        val ingest = docsK.unionByName(
-            docsK.filter(pmod(col("doc_id"), lit(20)) === 0)
-              .select((col("doc_id") + twinOff).as("doc_id"), col("lang"),
-                col("n_chars"), col("text")))
+        val ingest = docsK.unionByName(docsK.filter(pmod(col("doc_id"), lit(20)) === 0)
+            .withColumn("doc_id", col("doc_id") + twinOff))
           .withColumn("grp", pmod(col("doc_id"), lit(4)).cast("int"))
-        val dir1 = java.nio.file.Files.createTempDirectory(s"scaleops_docs").toString
-        timed(s"daily-ops staging $tag")(((),
-          { ingest.repartition(4, col("grp"))
-              .write.mode("overwrite").partitionBy("grp").parquet(dir1); 0L }))
-        val staged1 = spark.read.parquet(dir1)
-        val ck1 = java.nio.file.Files.createTempDirectory("scaleops_dq").toString
-        timed(s"daily-ops leg1 DQ gate $tag")(((), {
-          StreamingOps.ingestDqGate(
-            spark.readStream.schema(staged1.schema).option("maxFilesPerTrigger", 1)
-              .parquet(dir1),
-            Seq("ColumnValues 'n_chars' >= 200"),
-            s"$db.cleansed", s"$db.quarantine", ck1, availableNow = true)
-            .awaitTermination()
+        val Seq(dir1, ck1, dir2, ck2, dir3, ck3) = Seq("scaleops_docs", "scaleops_dq",
+          "scaleops_clean", "scaleops_dd", "scaleops_emb", "scaleops_ann").map(tmp)
+        row(s"daily-ops staging $tag") {
+          ingest.repartition(4, col("grp")).write.mode("overwrite").partitionBy("grp").parquet(dir1)
+          0L
+        }
+        val schema1 = schemaOf(dir1)
+        row(s"daily-ops leg1 DQ gate $tag") {
+          StreamingOps.ingestDqGate(stream(dir1, schema1), Seq("ColumnValues 'n_chars' >= 200"),
+            s"$db.cleansed", s"$db.quarantine", ck1, availableNow = true).awaitTermination()
           spark.sql(s"REFRESH TABLE $db.cleansed")
           spark.sql(s"REFRESH TABLE $db.quarantine")
-          spark.table(s"$db.quarantine").count() }))
-        val dir2 = java.nio.file.Files.createTempDirectory("scaleops_clean").toString
-        val ck2 = java.nio.file.Files.createTempDirectory("scaleops_dd").toString
-        timed(s"daily-ops leg2 dedup gate $tag")(((), {
+          spark.table(s"$db.quarantine").count()
+        }
+        row(s"daily-ops leg2 dedup gate $tag") {
           spark.table(s"$db.cleansed").select("doc_id", "grp", "text")
-            .repartition(4, col("grp"))
-            .write.mode("overwrite").partitionBy("grp").parquet(dir2)
-          val staged2 = spark.read.parquet(dir2)
-          StreamingOps.ingestDedupGate(
-            spark.readStream.schema(staged2.schema).option("maxFilesPerTrigger", 1)
-              .parquet(dir2),
-            "text", "doc_id", Seq("grp"), threshold = 0.999,
-            s"$db.corpus", s"$db.report", ck2, availableNow = true)
+            .repartition(4, col("grp")).write.mode("overwrite").partitionBy("grp").parquet(dir2)
+          StreamingOps.ingestDedupGate(stream(dir2, schemaOf(dir2)), "text", "doc_id", Seq("grp"),
+            threshold = 0.999, s"$db.corpus", s"$db.report", ck2, availableNow = true)
             .awaitTermination()
           spark.sql(s"REFRESH TABLE $db.corpus")
-          spark.table(s"$db.corpus").count() }))
-        val embK = (0 until k).map(i => e0.select(
-            (col("vec_id") + lit(i.toLong * eOff)).as("vec_id"), col("embedding")))
-          .reduce(_ unionByName _)
-        val dir3 = java.nio.file.Files.createTempDirectory("scaleops_emb").toString
+          spark.table(s"$db.corpus").count()
+        }
+        val embK = replicate(table("embeddings"), "vec_id", embOffset, k)
+          .select(col("vec_id"), col("embedding"))
         embK.repartition(4).write.mode("overwrite").parquet(dir3)
-        val staged3 = spark.read.parquet(dir3)
-        val ck3 = java.nio.file.Files.createTempDirectory("scaleops_ann").toString
-        timed(s"daily-ops leg3 ANN gate $tag")(((), {
-          StreamingOps.ingestAnnGate(
-            spark.readStream.schema(staged3.schema).option("maxFilesPerTrigger", 1)
-              .parquet(dir3),
-            "embedding", "vec_id", centroids, codebooks, s"$db.annidx", ck3,
-            availableNow = true).awaitTermination()
+        val schema3 = schemaOf(dir3)
+        row(s"daily-ops leg3 ANN gate $tag") {
+          StreamingOps.ingestAnnGate(stream(dir3, schema3), "embedding", "vec_id", cents, books,
+            s"$db.annidx", ck3, availableNow = true).awaitTermination()
           spark.sql(s"REFRESH TABLE $db.annidx")
-          spark.table(s"$db.annidx").count() }))
-        timed(s"daily-ops leg4 consolidation $tag")(((), {
+          spark.table(s"$db.annidx").count()
+        }
+        row(s"daily-ops leg4 consolidation $tag") {
           val wm2 = BatchCommitLog.committed(spark, ck2).get
           val wm3 = BatchCommitLog.committed(spark, ck3).get
           (Compaction.consolidateBatches(spark, s"$db.corpus", wm2, Seq("doc_id")) +
-            Compaction.consolidateBatches(spark, s"$db.annidx", wm3, Seq("vec_id"))).toLong }))
-        timed(s"daily-ops leg5 forget $tag")(((), {
-          val docKeys = spark.table(s"$db.corpus")
-            .filter(pmod(col("doc_id"), lit(13)) === 0).select(col("doc_id")).distinct()
-          Retention.deleteRowsAll(spark, docKeys, Seq(
-            Retention.DeleteTarget(s"$db.corpus", "doc_id"),
-            Retention.DeleteTarget(s"$db.report", "doc_id")))
-          val vecKeys = embK
-            .filter(pmod(col("vec_id"), lit(13)) === 0).select(col("vec_id")).distinct()
-          Retention.deleteRowsAll(spark, vecKeys,
+            Compaction.consolidateBatches(spark, s"$db.annidx", wm3, Seq("vec_id"))).toLong
+        }
+        row(s"daily-ops leg5 forget $tag") {
+          Retention.deleteRowsAll(spark, spark.table(s"$db.corpus")
+              .filter(pmod(col("doc_id"), lit(13)) === 0).select(col("doc_id")).distinct(),
+            Seq(Retention.DeleteTarget(s"$db.corpus", "doc_id"),
+              Retention.DeleteTarget(s"$db.report", "doc_id")))
+          Retention.deleteRowsAll(spark,
+            embK.filter(pmod(col("vec_id"), lit(13)) === 0).select(col("vec_id")).distinct(),
             Seq(Retention.DeleteTarget(s"$db.annidx", "vec_id")))
-          0L }))
-        timed(s"daily-ops leg6 never-contained ANN equality $tag")(((), {
-          val survivorIdx = operators.Ann.ivfPqIndex(
-            embK.filter(pmod(col("vec_id"), lit(13)) =!= 0),
-            "embedding", "vec_id", centroids, codebooks)
+          0L
+        }
+        row(s"daily-ops leg6 never-contained ANN equality $tag") {
+          val survivorIdx = Ann.ivfPqIndex(embK.filter(pmod(col("vec_id"), lit(13)) =!= 0),
+            "embedding", "vec_id", cents, books)
           val storedIdx = spark.table(s"$db.annidx").select("vec_id", "__list", "code")
           require(storedIdx.exceptAll(survivorIdx).isEmpty &&
             survivorIdx.exceptAll(storedIdx).isEmpty,
             "post-delete ANN index must equal the never-contained build")
-          0L }))
-        timed(s"daily-ops leg7 DP release $tag")(((),
-          operators.Privacy.dpCounts(
-              spark.table(s"$db.corpus")
-                .join(ingest.select(col("doc_id"), col("lang")), Seq("doc_id")),
-              Seq("lang"), epsilon = 0.5, seed = "ops1")
-            .count()))
+          0L
+        }
+        row(s"daily-ops leg7 DP release $tag")(operators.Privacy.dpCounts(
+          spark.table(s"$db.corpus").join(ingest.select(col("doc_id"), col("lang")), Seq("doc_id")),
+          Seq("lang"), epsilon = 0.5, seed = "ops1").count())
         spark.sql(s"DROP DATABASE IF EXISTS $db CASCADE")
-        Seq(dir1, ck1, dir2, ck2, dir3, ck3).foreach(rmTree)
+        Seq(dir1, ck1, dir2, ck2, dir3, ck3).foreach(d => Harness.rmTree(java.nio.file.Paths.get(d)))
       }
-      chain(1, "1x")
-      chain(n, s"${n}x")
-    }
+    })
 
-    spark.stop()
-  }
+  private val bySection: Map[String, Ctx => Unit] = sections.toMap
+
+  /** The 100× tier: the headliner shapes whose fixtures keep output
+    * ~linear under 100× replication (perturbed replicas, generated inputs,
+    * fixed-batch incremental paths). */
+  val Tier100: Seq[String] = Seq("jaccard_perturbed", "fuzzy_zipf", "sampling", "kmv_cms",
+    "pagerank", "span_scrub_perturbed", "bloom_decontamination", "bm25", "kmv_setops",
+    "sessionize", "zorder", "bin_packing", "token_divergence", "containment_snippets",
+    "incremental_dedup_perturbed", "bm25_index_perturbed", "ivfpq_index", "cc_incremental_star",
+    "incremental_minhash_perturbed", "pmi_perturbed", "label_propagation_graph", "delete",
+    "lpa_incremental", "pagerank_incremental", "substring_incremental", "hot_window",
+    "substring_dedup")
 }

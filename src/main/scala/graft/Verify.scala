@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -13,20 +12,7 @@ object Verify {
       val unknown = w.filterNot(SparkEntry.queries.contains)
       require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // fresh warehouse per run: the in-memory catalog starts empty each JVM,
-      // so a persistent ./spark-warehouse would collide on managed-table
-      // locations written by pipeline queries
-      .config("spark.sql.warehouse.dir",
-        Files.createTempDirectory("graft_wh").toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => wanted.forall(_.contains(name)) }

@@ -32,7 +32,7 @@ trait TableFormat {
   * partition overwrite — the closest no-table-format approximation of
   * file-level MERGE: untouched partitions keep their files byte-for-byte, so
   * at 100 TB the rewrite cost tracks the batch's partition footprint, not the
-  * table size (ScaleCheck `upsert10x` asserts this). Unpartitioned tables fall
+  * table size (ScaleCheck section `upsert` measures this). Unpartitioned tables fall
   * back to a full anti-join + atomic overwrite.
   */
 object HiveParquetFormat extends TableFormat {

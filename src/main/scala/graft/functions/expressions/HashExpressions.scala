@@ -139,7 +139,7 @@ object HashExpressions {
 
   /** The fixed pseudo-random centroid matrix the replay oracles pin: row c =
     * [[planeComponent]](offset + c, ·). ONE definition for q41/q89/q90 and
-    * ScaleCheck — the DuckDB oracle CTEs hard-code `range(offset, offset+k)`,
+    * the ScaleCheck ANN/dedup sections — the DuckDB oracle CTEs hard-code `range(offset, offset+k)`,
     * so these constants must change in LOCKSTEP with the oracle SQL
     * (LcgPinSpec freezes the underlying values). */
   def fixedCentroids(offset: Int, k: Int, dim: Int): Array[Array[Double]] =

@@ -655,7 +655,7 @@ object Dedup {
       .join(rVerify.select(col("id").as("id_r"), col("toks").as("t_r")), Seq("id_r"))
       .select(col("id_l"), col("id_r"), S.jaccard(col("t_l"), col("t_r")).as("jaccard"))
     // single-eval barrier, see jaccardSelfJoin; materializeVerify=false
-    // keeps the plan inspectable (PlanDump/PlanSpec), same as there
+    // keeps the plan inspectable (`Plans` dump form/PlanSpec), same as there
     val barriered = if (materializeVerify) verified.localCheckpoint(true) else verified
     barriered.filter(col("jaccard") >= threshold)
   }
@@ -826,7 +826,7 @@ object Dedup {
     // ids) coincide. Without this, a flood of N copies of one content in a
     // batch (re-crawls, boilerplate, epoch re-delivery) makes the
     // within-batch leg enumerate and verify ~N²/2 TRUE pairs per content —
-    // the quadratic term the 10× ScaleCheck daily-ops fixture exposed;
+    // the quadratic term the 10× ScaleCheck `daily_ops` fixture exposed;
     // with it, the flood costs one group row and N-1 membership rows.
     // Docs with NULL/empty token sets never form pairs (the sz>0 contract
     // of the joins) and stay out of the grouping — each is its own rep.

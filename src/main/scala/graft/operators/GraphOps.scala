@@ -106,7 +106,8 @@ object GraphOps {
     * (a, label) count and the per-a argmax window — HashPartitioning(a)
     * satisfies ClusteredDistribution(a, label) AND ClusteredDistribution(a),
     * so the vote rows cross the network ONCE per round instead of twice
-    * (measured on the 100× ScaleCheck ring: the round-13 two-exchange form
+    * (measured on the 100× ring of ScaleCheck section `lpa_incremental`; the
+    * round-13 two-exchange form, `Plans` pseudo-query `op_lpa_vote_round_r13`,
     * shuffled every vote row through Exchange(a, label) and again through
     * Exchange(a)). A min-struct aggregation would avoid the window's sort
     * but plans as SortAggregate (struct buffers are not hash-aggregable),

@@ -132,7 +132,8 @@ object PageRank {
     * the from-scratch cost, never to wrong answers, and the guarded
     * broadcasts (`broadcastMaxRows`, counted per round on checkpointed
     * deltas) fall back to shuffle joins instead of dying. Batch-local
-    * cost whenever rank influence is (the measured ScaleCheck posture).
+    * cost whenever rank influence is (measured: ScaleCheck section
+    * `pagerank_incremental`).
     *
     * @param storedEdges the FULL stored edge set the trace was built from
     *                    (parallel edges count, as in [[fixedPoint]])

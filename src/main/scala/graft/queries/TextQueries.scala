@@ -2559,7 +2559,7 @@ object TextQueries {
     // exactly q119's oracle. EXACT (no tolerance) because the fixed-point
     // integer formulation makes rank-change detection an equality test
     // and the floor divisions quantize propagation; the batch-local cost
-    // story is the ScaleCheck row.
+    // story is ScaleCheck section `pagerank_incremental`.
     "q213_incremental_pagerank" -> ((s, d) => {
       import graft.operators.PageRank
       val docs = Tables(s, d, "documents").select(col("doc_id"))
@@ -2696,7 +2696,7 @@ object TextQueries {
     // family) merged incrementally — the final labels must equal the
     // from-scratch 3-round replay over the UNION graph, which is exactly
     // q194's oracle. Frontier-exact by construction; the batch-local cost
-    // story is the ScaleCheck row.
+    // story is ScaleCheck section `lpa_incremental`.
     "q208_incremental_lpa" -> ((s, d) => {
       import graft.operators.GraphOps
       val docs = Tables(s, d, "documents").select(col("doc_id"))

@@ -41,4 +41,44 @@ class BenchGateSpec extends org.scalatest.funsuite.AnyFunSuite {
     assert(confirmed.isEmpty)
     assert(report.head.contains("cleared"))
   }
+
+  test("a throwing query is a failure, never a timing") {
+    val out = Bench.runTimed(TestSession.spark, "unused",
+      (_, _) => throw new IllegalStateException("boom\nstack detail"))
+    assert(out == Left("IllegalStateException: boom"))
+  }
+
+  test("failures are excluded from the total, counted, named, and kept in the full record") {
+    val results = Seq("q_a" -> Right(1.5), "q_bad" -> Left("RuntimeException: x"), "q_b" -> Right(2.0))
+    val s = Bench.Summary(results, "/sf", 0.2, 0.21, 0, 8)
+    val line = graft.config.Specs.parseJson(s.line)
+    assert(line.get("value").asDouble == 3.5)
+    assert(line.get("n").asInt == 3 && line.get("failed").asInt == 1)
+    assert(line.get("failed_queries").get(0).asText == "q_bad")
+    assert(line.get("slowest").fieldNames().next() == "q_b")
+    val full = graft.config.Specs.parseJson(s.fullLine)
+    assert(full.get("value").asDouble == 3.5)
+    assert(full.get("queries").size == 2 && !full.get("queries").has("q_bad"))
+    assert(full.get("failures").get("q_bad").asText == "RuntimeException: x")
+  }
+
+  test("the stdout summary of a full-size suite fits the 1.5 KB budget") {
+    val results = (0 until 215).map { i =>
+      f"q$i%03d_incremental_substring_dedup" ->
+        (if (i % 50 == 7) Left(s"SparkException: task $i failed") else Right(100.0 / (i + 1)))
+    }
+    val s = Bench.Summary(results, "testdata/sf0.1", 0.123456789, 0.13456789, 2, 32)
+    assert(s.line.length < 1500, s"${s.line.length} chars")
+    val line = graft.config.Specs.parseJson(s.line)
+    assert(line.get("n").asInt == 215 && line.get("failed").asInt == 5)
+    assert(line.get("slowest").size == 10 && line.get("cpus").asInt == 32)
+    assert(graft.config.Specs.parseJson(s.fullLine).get("queries").size == 210)
+  }
+
+  test("only a default-core run writes the pin source") {
+    assert(Bench.pinsBaseline(32, default = 32))
+    assert(Bench.pinsBaseline(4, default = 4))
+    assert(!Bench.pinsBaseline(8, default = 32))
+    assert(!Bench.pinsBaseline(32, default = 4))
+  }
 }
