@@ -116,7 +116,7 @@ object CatalogOps {
     val rewritten = df.queryExecution.optimizedPlan.transformUp {
       case f @ LFilter(cond, child)
           if relationNameOf(child).exists(n => wanted.contains(canon(n))) &&
-            !cond.exists(_.isInstanceOf[PlanExpression[_]]) =>
+            cond.deterministic && !cond.exists(_.isInstanceOf[PlanExpression[_]]) =>
         // 2-part name: catalog metadata answers `spark_catalog.db.t`, but
         // the FileStats/TableIdentifier machinery speaks db.t
         val full = relationNameOf(child).get

@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 
 /** Structured Streaming surface (SURVEY.md §1.4).
   *
@@ -199,9 +199,9 @@ object StreamingOps {
     val stream = fileArrivalStream(spark, path, format, schemaDdl, options)
     // driver-side: foreachBatch bodies run sequentially on the stream thread
     val consecutiveCompactFailures = new java.util.concurrent.atomic.AtomicInteger(0)
-    val w = stream.writeStream
+    startQuery(stream.writeStream
       .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
+      .foreachBatch { (batch: Dataset[Row], id: Long) =>
         maintainTable.foreach { t =>
           if (compactEvery > 0 && id > 0 && id % compactEvery == 0 &&
               batch.sparkSession.catalog.tableExists(t)) {
@@ -224,9 +224,13 @@ object StreamingOps {
           }
         }
         processBatch(batch, id)
-      }
-    (if (availableNow) w.trigger(Trigger.AvailableNow()) else w).start()
+      }, availableNow)
   }
+
+  /** Starts a stream: `Trigger.AvailableNow` drains what has arrived and
+    * stops; otherwise the default trigger keeps the query running. */
+  private def startQuery(w: DataStreamWriter[Row], availableNow: Boolean): StreamingQuery =
+    (if (availableNow) w.trigger(Trigger.AvailableNow()) else w).start()
 
   /** Idempotent write of ONE batch's rows into a `batch_id`-partitioned
     * table: create-with-partitioning on first use, DYNAMIC overwrite of
@@ -288,6 +292,77 @@ object StreamingOps {
         Seq.empty[(Long, Long)].toDF("feature", "wq")
     }
 
+  /** A micro-batch as a gate step sees it: the `raw` batch, the gate's
+    * materialized `view` of it, the batch `id` and the view's row count
+    * (-1 for a gate that only probes emptiness). */
+  private final case class GateBatch(raw: DataFrame, view: DataFrame, id: Long, rows: Long)
+
+  /** The micro-batch loop every commit-logged gate runs on. foreachBatch is
+    * AT-LEAST-ONCE; this loop makes each gate exactly-once over it:
+    *   1. once per query start, converge any crashed consolidation of the
+    *      gate's `stateTables`, before a stored-side read can see
+    *      half-folded (duplicated) partitions;
+    *   2. skip a batch the [[BatchCommitLog]] holds — an O(1) marker
+    *      listing, probed BEFORE the batch is materialized, so a
+    *      re-delivered batch runs no Spark job;
+    *   3. materialize the gate's `view` (default: an eager
+    *      localCheckpoint), count it (or, without `countRows`, only probe
+    *      it with isEmpty), and skip it if empty;
+    *   4. run `step`, whose writes overwrite the batch's own `batch_id`
+    *      partitions ([[writeBatchPartition]]), so a replay replaces what
+    *      a crash half-wrote; a throwing step (a DQ halt) fails the stream
+    *      uncommitted, and the batch replays on restart;
+    *   5. publish the commit marker LAST, then run `afterCommit`;
+    *   6. run [[runMaintenance]], skipped batches included;
+    *   7. start under `Trigger.AvailableNow` or the default trigger. */
+  private def gateLoop(input: DataFrame, checkpoint: String, availableNow: Boolean,
+                       stateTables: Seq[String],
+                       maintainEvery: Int = 0,
+                       maintain: (SparkSession, Long) => Unit = (_, _) => (),
+                       view: DataFrame => DataFrame = _.localCheckpoint(true),
+                       countRows: Boolean = true,
+                       afterCommit: (SparkSession, Long) => Unit = (_, _) => ())
+                      (step: GateBatch => Unit): StreamingQuery = {
+    var converged = false // foreachBatch runs serially on the driver
+    startQuery(input.writeStream
+      .option("checkpointLocation", checkpoint)
+      .foreachBatch { (batch: Dataset[Row], id: Long) =>
+        val ss = batch.sparkSession
+        if (!converged) {
+          stateTables.foreach(graft.catalog.Compaction.convergeConsolidation(ss, _))
+          converged = true
+        }
+        if (!BatchCommitLog.applied(ss, checkpoint, id)) {
+          val v = view(batch)
+          val n = if (countRows) v.count() else if (v.isEmpty) 0L else -1L
+          if (n != 0) {
+            step(GateBatch(batch, v, id, n))
+            BatchCommitLog.commit(ss, checkpoint, id)
+            afterCommit(ss, id)
+          }
+        }
+        runMaintenance(ss, id, maintainEvery, maintain)
+      }, availableNow)
+  }
+
+  /** Runs a gate's maintenance hook on the single-writer stream thread,
+    * AFTER the batch's own commit: every `maintainEvery`-th batch calls
+    * `maintain(session, committed batch id)` — the API window
+    * [[graft.catalog.Compaction.consolidateBatches]]'s crash-safety
+    * argument requires (no other writer can be active). Failures log and
+    * skip (maintenance debt is a performance problem, ingest health is
+    * not), mirroring [[fileArrivalPipeline]]'s posture. */
+  private def runMaintenance(ss: SparkSession, id: Long, maintainEvery: Int,
+                             maintain: (SparkSession, Long) => Unit): Unit =
+    if (maintainEvery > 0 && id > 0 && id % maintainEvery == 0)
+      bestEffort(s"gate maintenance failed at batch $id — ingest proceeds")(maintain(ss, id))
+
+  /** Runs `body`; a non-fatal failure logs `warning` and is swallowed. */
+  private def bestEffort(warning: String)(body: => Unit): Unit =
+    try body
+    catch { case scala.util.control.NonFatal(e) =>
+      org.slf4j.LoggerFactory.getLogger(getClass).warn(warning, e) }
+
   /** ONLINE quality-classifier training — mini-batch SGD as a streaming
     * maintenance loop: each micro-batch applies ONE deterministic sparse-GD
     * step ([[graft.operators.Retrieval.sparseGdStep]]) to a persisted
@@ -317,41 +392,33 @@ object StreamingOps {
                         lrNum: Long = 1, lrDen: Long = 1,
                         availableNow: Boolean = false): StreamingQuery = {
     import graft.operators.Retrieval
-    val w = docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        val ss = batch.sparkSession
-        val labels = batch.select(col(idCol), col(labelCol)).localCheckpoint(true)
-        val n = labels.count()
-        if (n > 0 && !BatchCommitLog.applied(ss, checkpoint, id)) {
-          val prev = BatchCommitLog.committed(ss, checkpoint) match {
-            case Some(k) =>
-              // localCheckpoint: materialized snapshot, so the insertInto
-              // below never reads the table it writes
-              val snap = ss.table(weightsTable).filter(col("batch_id") === k)
-                .select(col("feature"), col("wq")).localCheckpoint(true)
-              if (snap.isEmpty) throw new IllegalStateException(
-                s"commit log says batch $k of $weightsTable is committed but " +
-                  "its snapshot partition is missing/empty — the table was " +
-                  "externally modified; restore an older snapshot partition " +
-                  "and repoint the log, or wipe checkpoint AND table to refit")
-              snap
-            case None =>
-              import ss.implicits._
-              Seq.empty[(Long, Long)].toDF("feature", "wq")
-          }
-          val feats = Retrieval.hashedTokenFeatures(
-            batch.toDF(), textCol, idCol, numFeatures)
-          val allFeats = Retrieval.withBias(feats, labels, idCol).localCheckpoint(true)
-          val next = Retrieval.sparseGdStep(allFeats, labels, prev, idCol,
-              labelCol, n, lrNum, lrDen)
-            .withColumn("batch_id", lit(id))
-          writeBatchPartition(next, weightsTable, id)
-          BatchCommitLog.commit(ss, checkpoint, id)
+    gateLoop(docs, checkpoint, availableNow, stateTables = Nil,
+        view = _.select(col(idCol), col(labelCol)).localCheckpoint(true)) {
+      case GateBatch(batch, labels, id, n) =>
+        val ss = labels.sparkSession
+        val prev = BatchCommitLog.committed(ss, checkpoint) match {
+          case Some(k) =>
+            // localCheckpoint: materialized snapshot, so the insertInto
+            // below never reads the table it writes
+            val snap = ss.table(weightsTable).filter(col("batch_id") === k)
+              .select(col("feature"), col("wq")).localCheckpoint(true)
+            if (snap.isEmpty) throw new IllegalStateException(
+              s"commit log says batch $k of $weightsTable is committed but " +
+                "its snapshot partition is missing/empty — the table was " +
+                "externally modified; restore an older snapshot partition " +
+                "and repoint the log, or wipe checkpoint AND table to refit")
+            snap
+          case None =>
+            import ss.implicits._
+            Seq.empty[(Long, Long)].toDF("feature", "wq")
         }
-        ()
-      }
-    (if (availableNow) w.trigger(Trigger.AvailableNow()) else w).start()
+        val feats = Retrieval.hashedTokenFeatures(batch, textCol, idCol, numFeatures)
+        val allFeats = Retrieval.withBias(feats, labels, idCol).localCheckpoint(true)
+        val next = Retrieval.sparseGdStep(allFeats, labels, prev, idCol,
+            labelCol, n, lrNum, lrDen)
+          .withColumn("batch_id", lit(id))
+        writeBatchPartition(next, weightsTable, id)
+    }
   }
 
   /** Streaming INGEST-DEDUP GATE: [[graft.operators.Dedup.incrementalDedup]]
@@ -381,26 +448,9 @@ object StreamingOps {
     * every-N-batches answer to the partition-per-batch sprawl, folding
     * committed history below the watermark into one partition), and the
     * replay probe is the commit log's O(1) marker listing, not a max over
-    * ingest history. */
-  /** Runs a gate's maintenance hook on the single-writer stream thread,
-    * AFTER the batch's own commit: every `maintainEvery`-th batch calls
-    * `maintain(session, committed batch id)` — the API window
-    * [[graft.catalog.Compaction.consolidateBatches]]'s crash-safety
-    * argument requires (no other writer can be active). Failures log and
-    * skip (maintenance debt is a performance problem, ingest health is
-    * not), mirroring [[fileArrivalPipeline]]'s posture. */
-  private def runMaintenance(ss: SparkSession, id: Long, maintainEvery: Int,
-                             maintain: (SparkSession, Long) => Unit): Unit =
-    if (maintainEvery > 0 && id > 0 && id % maintainEvery == 0) {
-      try maintain(ss, id)
-      catch {
-        case scala.util.control.NonFatal(e) =>
-          org.slf4j.LoggerFactory.getLogger(getClass).warn(
-            s"gate maintenance failed at batch $id — ingest proceeds", e)
-      }
-    }
-
-  /** @param statsTable optional [[graft.catalog.FileStats]] index over the
+    * ingest history.
+    *
+    * @param statsTable optional [[graft.catalog.FileStats]] index over the
     *        corpus table's FIRST block column (per-file bloom), maintained
     *        BY THE GATE: after each committed batch the index refreshes
     *        (scans only the new partition's files), and the next batch's
@@ -430,56 +480,38 @@ object StreamingOps {
       "statsTable pruning needs a block column to bloom on")
     val statsSpec = FileStats.StatsSpec(blockCols.take(1),
       bloomCols = blockCols.take(1), bloomBits = 1 << 17)
-    var converged = false // foreachBatch runs serially on the driver
-    val w = docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        val ss = batch.sparkSession
-        if (!converged) { // finish any crashed consolidation BEFORE the
-          // stored-side read can see half-folded (duplicated) partitions
-          graft.catalog.Compaction.convergeConsolidation(ss, corpusTable)
-          graft.catalog.Compaction.convergeConsolidation(ss, reportTable)
-          converged = true
-        }
-        val btoks = batch
-          .select(col(idCol) +: blockCols.map(col) :+
+    def refreshStats(ss: SparkSession, id: Long): Unit = statsTable.foreach { st =>
+      bestEffort(s"corpus stats refresh failed at batch $id — the new partition " +
+        "stays unpruned until the next refresh")(FileStats.refresh(ss, corpusTable, st, statsSpec))
+    }
+    gateLoop(docs, checkpoint, availableNow, Seq(corpusTable, reportTable),
+        maintainEvery, maintain,
+        view = _.select(col(idCol) +: blockCols.map(col) :+
             array_distinct(S.tokens(col(textCol))).as("__toks"): _*)
+          .localCheckpoint(true),
+        afterCommit = refreshStats) {
+      case GateBatch(_, btoks, id, _) =>
+        val ss = btoks.sparkSession
+        // batch_id < id: a replayed batch's own orphaned partition (and,
+        // on the partition-pruned read, every uncommitted write) must NOT
+        // be in its stored side — survivors would self-match as
+        // dup_of_stored and change the recomputed report
+        val stored =
+          if (!ss.catalog.tableExists(corpusTable)) btoks.limit(0)
+          else statsPrunedStored(ss, corpusTable, statsTable,
+              blockCols, btoks, maxPruneKeys)
+            .filter(col("batch_id") < id).drop("batch_id")
+        val report = Dedup.incrementalDedup(stored, btoks, "__toks", idCol,
+            blockCols, threshold)
+          .withColumn("batch_id", lit(id))
           .localCheckpoint(true)
-        if (btoks.count() > 0 && !BatchCommitLog.applied(ss, checkpoint, id)) {
-          // batch_id < id: a replayed batch's own orphaned partition (and,
-          // on the partition-pruned read, every uncommitted write) must NOT
-          // be in its stored side — survivors would self-match as
-          // dup_of_stored and change the recomputed report
-          val stored =
-            if (!ss.catalog.tableExists(corpusTable)) btoks.limit(0)
-            else statsPrunedStored(ss, corpusTable, statsTable,
-                blockCols, btoks, maxPruneKeys)
-              .filter(col("batch_id") < id).drop("batch_id")
-          val report = Dedup.incrementalDedup(stored, btoks, "__toks", idCol,
-              blockCols, threshold)
-            .withColumn("batch_id", lit(id))
-            .localCheckpoint(true)
-          val survivors = btoks.join(
-              report.filter(col("status") === "kept").select(col(idCol)),
-              Seq(idCol))
-            .withColumn("batch_id", lit(id))
-          writeBatchPartition(survivors, corpusTable, id)
-          writeBatchPartition(report, reportTable, id)
-          BatchCommitLog.commit(ss, checkpoint, id)
-          statsTable.foreach { st =>
-            try FileStats.refresh(ss, corpusTable, st, statsSpec)
-            catch {
-              case scala.util.control.NonFatal(e) =>
-                org.slf4j.LoggerFactory.getLogger(getClass).warn(
-                  s"corpus stats refresh failed at batch $id — the new " +
-                    "partition stays unpruned until the next refresh", e)
-            }
-          }
-        }
-        runMaintenance(ss, id, maintainEvery, maintain)
-        ()
-      }
-    (if (availableNow) w.trigger(Trigger.AvailableNow()) else w).start()
+        val survivors = btoks.join(
+            report.filter(col("status") === "kept").select(col(idCol)),
+            Seq(idCol))
+          .withColumn("batch_id", lit(id))
+        writeBatchPartition(survivors, corpusTable, id)
+        writeBatchPartition(report, reportTable, id)
+    }
   }
 
   /** The gate's stored-side read, file-pruned through the block bloom via
@@ -518,29 +550,13 @@ object StreamingOps {
                    checkpoint: String,
                    availableNow: Boolean = false,
                    maintainEvery: Int = 0,
-                   maintain: (SparkSession, Long) => Unit = (_, _) => ()): StreamingQuery = {
-    var converged = false // foreachBatch runs serially on the driver
-    val w = rows.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        val ss = batch.sparkSession
-        if (!converged) {
-          graft.catalog.Compaction.convergeConsolidation(ss, cleansedTable)
-          graft.catalog.Compaction.convergeConsolidation(ss, quarantineTable)
-          converged = true
-        }
-        val b = batch.toDF().localCheckpoint(true)
-        if (b.count() > 0 && !BatchCommitLog.applied(ss, checkpoint, id)) {
-          val (pass, fail) = new graft.dq.DqEngine().splitByRules(b, rules)
-          writeBatchPartition(pass.withColumn("batch_id", lit(id)), cleansedTable, id)
-          writeBatchPartition(fail.withColumn("batch_id", lit(id)), quarantineTable, id)
-          BatchCommitLog.commit(ss, checkpoint, id)
-        }
-        runMaintenance(ss, id, maintainEvery, maintain)
-        ()
-      }
-    (if (availableNow) w.trigger(Trigger.AvailableNow()) else w).start()
-  }
+                   maintain: (SparkSession, Long) => Unit = (_, _) => ()): StreamingQuery =
+    gateLoop(rows, checkpoint, availableNow, Seq(cleansedTable, quarantineTable),
+        maintainEvery, maintain) { case GateBatch(_, b, id, _) =>
+      val (pass, fail) = new graft.dq.DqEngine().splitByRules(b, rules)
+      writeBatchPartition(pass.withColumn("batch_id", lit(id)), cleansedTable, id)
+      writeBatchPartition(fail.withColumn("batch_id", lit(id)), quarantineTable, id)
+    }
 
   /** Streaming DATASET-TIER DQ GATE — the reference's warn and halt tiers
     * (`dataquality_check.py:116-171`) as a micro-batch loop, completing the
@@ -571,48 +587,17 @@ object StreamingOps {
     * operational per-delivery health check the reference runs per arriving
     * file); for dataset-level truth over everything ingested, run the batch
     * `evaluateDataset` over the drained table. Outcome rows are exact under
-    * replay because the outcome partition is per-batch overwritten. */
+    * replay because the outcome partition is per-batch overwritten.
+    *
+    * This is [[ingestRulesetDqGate]] with no quarantine tier: `sinkTable`
+    * is its cleansed table, and no quarantine table is written. */
   def ingestDatasetDqGate(rows: DataFrame, warnRules: Seq[String],
                           haltRules: Seq[String], sinkTable: String,
                           resultsTable: String, checkpoint: String,
-                          availableNow: Boolean = false): StreamingQuery = {
-    require(warnRules.nonEmpty || haltRules.nonEmpty, "no rules configured")
-    var converged = false // foreachBatch runs serially on the driver
-    val w = rows.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        val ss = batch.sparkSession
-        if (!converged) {
-          graft.catalog.Compaction.convergeConsolidation(ss, sinkTable)
-          graft.catalog.Compaction.convergeConsolidation(ss, resultsTable)
-          converged = true
-        }
-        val b = batch.toDF().localCheckpoint(true)
-        if (b.count() > 0 && !BatchCommitLog.applied(ss, checkpoint, id)) {
-          import ss.implicits._
-          val eng = new graft.dq.DqEngine()
-          val warnOut = eng.evaluateDataset(b, warnRules)
-          val haltOut = eng.evaluateDataset(b, haltRules)
-          val outcomes = (warnOut.map("warn" -> _) ++ haltOut.map("halt" -> _))
-            .map { case (tier, o) => (tier, o.rule, o.outcome,
-              o.metric.getOrElse(Double.NaN), o.failureReason.getOrElse("")) }
-            .toDF("tier", "rule", "outcome", "metric", "failure_reason")
-            .withColumn("batch_id", lit(id))
-          // results FIRST: a halt must be observable even though the batch
-          // never commits; a crash between the two writes replays both
-          writeBatchPartition(outcomes, resultsTable, id)
-          val haltFailed = haltOut.filterNot(_.passed)
-          if (haltFailed.nonEmpty)
-            throw new RuntimeException(
-              s"Dataset DQ halt at batch $id: " +
-                haltFailed.map(_.rule).mkString("; "))
-          writeBatchPartition(b.withColumn("batch_id", lit(id)), sinkTable, id)
-          BatchCommitLog.commit(ss, checkpoint, id)
-        }
-        ()
-      }
-    (if (availableNow) w.trigger(Trigger.AvailableNow()) else w).start()
-  }
+                          availableNow: Boolean = false): StreamingQuery =
+    ingestRulesetDqGate(rows, warnRules, quarantineRules = Nil, haltRules,
+      cleansedTable = sinkTable, quarantineTable = "", resultsTable, checkpoint,
+      availableNow)
 
   /** Streaming EXACT-SUBSTRING DEDUP GATE — the daily form of the
     * character-exact scrub ([[graft.operators.SuffixArray
@@ -664,64 +649,30 @@ object StreamingOps {
                                availableNow: Boolean = false,
                                maintainEvery: Int = 0,
                                maintain: (SparkSession, Long) => Unit = (_, _) => ()): StreamingQuery = {
-    var converged = false // foreachBatch runs serially on the driver
-    val w = docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        val ss = batch.sparkSession
-        if (!converged) {
-          graft.catalog.Compaction.convergeConsolidation(ss, reportTable)
-          graft.catalog.Compaction.convergeConsolidation(ss, indexTable)
-          converged = true
-        }
-        val b = batch.toDF().localCheckpoint(true)
-        if (b.count() > 0 && !BatchCommitLog.applied(ss, checkpoint, id)) {
-          val stored =
-            if (ss.catalog.tableExists(indexTable))
-              // exclude THIS batch's partition: a replay after a crash
-              // between the index append and the commit must not count
-              // the batch against itself
-              ss.table(indexTable).filter(col("batch_id") =!= lit(id))
-                .drop("batch_id")
-            else b.sparkSession.createDataFrame(
-              new java.util.ArrayList[org.apache.spark.sql.Row](),
-              org.apache.spark.sql.types.StructType(Seq(
-                org.apache.spark.sql.types.StructField("h",
-                  org.apache.spark.sql.types.LongType),
-                org.apache.spark.sql.types.StructField("w",
-                  org.apache.spark.sql.types.StringType),
-                org.apache.spark.sql.types.StructField("cnt",
-                  org.apache.spark.sql.types.LongType),
-                // first_doc carries the BATCH's id type — a hardcoded long
-                // would diverge from the type the first append creates the
-                // table with whenever idCol is not long
-                org.apache.spark.sql.types.StructField("first_doc",
-                  b.schema(idCol).dataType),
-                org.apache.spark.sql.types.StructField("first_pos",
-                  org.apache.spark.sql.types.LongType))))
-          // ONE window-kernel pass over the batch, shared by the scrub
-          // and the index append
-          val wins = graft.operators.SuffixArray
-            .batchWindows(b, idCol, textCol, minLen).localCheckpoint(true)
-          // needUpdatedIndex=false: the gate appends PER-DOC index rows
-          // below — the compact updated index the scrub can return is
-          // discarded, so its window-content distinct must not execute
-          val (report, _) = graft.operators.SuffixArray
-            .incrementalScrubRepeatedCharSpans(stored, b, idCol, textCol,
-              minLen, keepFirst, precomputedWindows = Some(wins),
-              needUpdatedIndex = false)
-          writeBatchPartition(report.withColumn("batch_id", lit(id)),
-            reportTable, id)
-          val batchIdx = graft.operators.SuffixArray
-            .perDocIndexOfWindows(wins)
-            .withColumn("batch_id", lit(id))
-          writeBatchPartition(batchIdx, indexTable, id)
-          BatchCommitLog.commit(ss, checkpoint, id)
-        }
-        runMaintenance(ss, id, maintainEvery, maintain)
-        ()
-      }
-    (if (availableNow) w.trigger(Trigger.AvailableNow()) else w).start()
+    import graft.operators.SuffixArray
+    gateLoop(docs, checkpoint, availableNow, Seq(reportTable, indexTable),
+        maintainEvery, maintain) { case GateBatch(_, b, id, _) =>
+      val ss = b.sparkSession
+      // ONE window-kernel pass over the batch, shared by the scrub
+      // and the index append
+      val wins = SuffixArray.batchWindows(b, idCol, textCol, minLen).localCheckpoint(true)
+      val batchIdx = SuffixArray.perDocIndexOfWindows(wins)
+      val stored =
+        if (ss.catalog.tableExists(indexTable))
+          // exclude THIS batch's partition: a replay after a crash
+          // between the index append and the commit must not count
+          // the batch against itself
+          ss.table(indexTable).filter(col("batch_id") =!= lit(id)).drop("batch_id")
+        else batchIdx.limit(0) // the writer's own schema: first_doc has the id type
+      // needUpdatedIndex=false: the gate appends PER-DOC index rows
+      // below — the compact updated index the scrub can return is
+      // discarded, so its window-content distinct must not execute
+      val (report, _) = SuffixArray.incrementalScrubRepeatedCharSpans(stored, b,
+        idCol, textCol, minLen, keepFirst, precomputedWindows = Some(wins),
+        needUpdatedIndex = false)
+      writeBatchPartition(report.withColumn("batch_id", lit(id)), reportTable, id)
+      writeBatchPartition(batchIdx.withColumn("batch_id", lit(id)), indexTable, id)
+    }
   }
 
   /** Streaming THREE-TIER DQ GATE — the reference's full per-hook ruleset
@@ -755,7 +706,8 @@ object StreamingOps {
     * overwrite, so a replayed batch (after a crash, a standing halt, or a
     * rule relaxation) REPLACES its outcome/quarantine rows rather than
     * duplicating them, and [[readCommitted]] exposes nothing of an
-    * uncommitted batch.
+    * uncommitted batch. With no quarantine rules, `quarantineTable` is
+    * neither written nor read.
     *
     * [[ingestDqGate]]'s batch-composition caveat applies to the DATASET
     * tiers here exactly as in [[ingestDatasetDqGate]]: warn/halt verdicts
@@ -770,63 +722,42 @@ object StreamingOps {
                           maintain: (SparkSession, Long) => Unit = (_, _) => ()): StreamingQuery = {
     require(warnRules.nonEmpty || quarantineRules.nonEmpty || haltRules.nonEmpty,
       "no rules configured")
-    var converged = false // foreachBatch runs serially on the driver
-    val w = rows.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        val ss = batch.sparkSession
-        if (!converged) {
-          graft.catalog.Compaction.convergeConsolidation(ss, cleansedTable)
-          graft.catalog.Compaction.convergeConsolidation(ss, quarantineTable)
-          graft.catalog.Compaction.convergeConsolidation(ss, resultsTable)
-          converged = true
-        }
-        val b = batch.toDF().localCheckpoint(true)
-        if (b.count() > 0 && !BatchCommitLog.applied(ss, checkpoint, id)) {
-          import ss.implicits._
-          val eng = new graft.dq.DqEngine()
-          val warnOut = if (warnRules.isEmpty) Nil
-            else eng.evaluateDataset(b, warnRules)
-          val quarOut = if (quarantineRules.isEmpty) Nil
-            else eng.evaluateDataset(b, quarantineRules)
-          val (pass, fail) =
-            if (quarantineRules.isEmpty) (b, b.limit(0))
-            else eng.splitByRules(b, quarantineRules)
-          // halt evaluates the PRE-quarantine frame (the :312 quirk)
-          val haltOut = if (haltRules.isEmpty) Nil
-            else eng.evaluateDataset(b, haltRules)
-          val outcomes = (warnOut.map("warn" -> _) ++
-              quarOut.map("quarantine" -> _) ++ haltOut.map("halt" -> _))
-            .map { case (tier, o) => (tier, o.rule, o.outcome,
-              o.metric.getOrElse(Double.NaN), o.failureReason.getOrElse("")) }
-            .toDF("tier", "rule", "outcome", "metric", "failure_reason")
-            .withColumn("batch_id", lit(id))
-          // results FIRST, quarantined rows SECOND: both must be
-          // observable even when a halt below keeps the batch uncommitted
-          writeBatchPartition(outcomes, resultsTable, id)
-          val passCount =
-            if (quarantineRules.isEmpty) -1L
-            else {
-              writeBatchPartition(fail.withColumn("batch_id", lit(id)),
-                quarantineTable, id)
-              pass.count()
-            }
-          if (passCount == 0L)
-            throw new RuntimeException(
-              s"DQ gate at batch $id: quarantined all rows")
-          val haltFailed = haltOut.filterNot(_.passed)
-          if (haltFailed.nonEmpty)
-            throw new RuntimeException(
-              s"Dataset DQ halt at batch $id: " +
-                haltFailed.map(_.rule).mkString("; "))
-          writeBatchPartition(pass.withColumn("batch_id", lit(id)),
-            cleansedTable, id)
-          BatchCommitLog.commit(ss, checkpoint, id)
-        }
-        runMaintenance(ss, id, maintainEvery, maintain)
-        ()
+    val stateTables = cleansedTable +:
+      (if (quarantineRules.isEmpty) Nil else Seq(quarantineTable)) :+ resultsTable
+    gateLoop(rows, checkpoint, availableNow, stateTables,
+        maintainEvery, maintain) { case GateBatch(_, b, id, _) =>
+      val ss = b.sparkSession
+      import ss.implicits._
+      val eng = new graft.dq.DqEngine()
+      def outcomesOf(rules: Seq[String]) =
+        if (rules.isEmpty) Nil else eng.evaluateDataset(b, rules)
+      val warnOut = outcomesOf(warnRules)
+      val quarOut = outcomesOf(quarantineRules)
+      val (pass, fail) =
+        if (quarantineRules.isEmpty) (b, b.limit(0))
+        else eng.splitByRules(b, quarantineRules)
+      // halt evaluates the PRE-quarantine frame (the :312 quirk)
+      val haltOut = outcomesOf(haltRules)
+      val outcomes = (warnOut.map("warn" -> _) ++
+          quarOut.map("quarantine" -> _) ++ haltOut.map("halt" -> _))
+        .map { case (tier, o) => (tier, o.rule, o.outcome,
+          o.metric.getOrElse(Double.NaN), o.failureReason.getOrElse("")) }
+        .toDF("tier", "rule", "outcome", "metric", "failure_reason")
+        .withColumn("batch_id", lit(id))
+      // results FIRST, quarantined rows SECOND: both must be
+      // observable even when a halt below keeps the batch uncommitted
+      writeBatchPartition(outcomes, resultsTable, id)
+      if (quarantineRules.nonEmpty) {
+        writeBatchPartition(fail.withColumn("batch_id", lit(id)), quarantineTable, id)
+        if (pass.count() == 0L)
+          throw new RuntimeException(s"DQ gate at batch $id: quarantined all rows")
       }
-    (if (availableNow) w.trigger(Trigger.AvailableNow()) else w).start()
+      val haltFailed = haltOut.filterNot(_.passed)
+      if (haltFailed.nonEmpty)
+        throw new RuntimeException(
+          s"Dataset DQ halt at batch $id: " + haltFailed.map(_.rule).mkString("; "))
+      writeBatchPartition(pass.withColumn("batch_id", lit(id)), cleansedTable, id)
+    }
   }
 
   /** Streaming ANN INGEST GATE — [[graft.operators.Ann.ivfPqAppend]]'s
@@ -850,28 +781,16 @@ object StreamingOps {
                     indexTable: String, checkpoint: String,
                     availableNow: Boolean = false,
                     maintainEvery: Int = 0,
-                    maintain: (SparkSession, Long) => Unit = (_, _) => ()): StreamingQuery = {
-    var converged = false // foreachBatch runs serially on the driver
-    val w = vecs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        val ss = batch.sparkSession
-        if (!converged) {
-          graft.catalog.Compaction.convergeConsolidation(ss, indexTable)
-          converged = true
-        }
-        if (!batch.isEmpty && !BatchCommitLog.applied(ss, checkpoint, id)) {
-          val encoded = graft.operators.Ann
-            .ivfPqIndex(batch.toDF(), vecCol, idCol, centroids, codebooks)
-            .withColumn("batch_id", lit(id))
-          writeBatchPartition(encoded, indexTable, id)
-          BatchCommitLog.commit(ss, checkpoint, id)
-        }
-        runMaintenance(ss, id, maintainEvery, maintain)
-        ()
-      }
-    (if (availableNow) w.trigger(Trigger.AvailableNow()) else w).start()
-  }
+                    maintain: (SparkSession, Long) => Unit = (_, _) => ()): StreamingQuery =
+    // encode reads the raw batch once: no checkpoint, and an isEmpty probe
+    // (one job) instead of a count (two)
+    gateLoop(vecs, checkpoint, availableNow, Seq(indexTable), maintainEvery, maintain,
+        view = identity, countRows = false) { case GateBatch(_, b, id, _) =>
+      val encoded = graft.operators.Ann
+        .ivfPqIndex(b, vecCol, idCol, centroids, codebooks)
+        .withColumn("batch_id", lit(id))
+      writeBatchPartition(encoded, indexTable, id)
+    }
 
   /** Stream-stream INTERVAL JOIN — the attribution shape (click →
     * conversion within a window): inner-join two event streams on `keyCol`

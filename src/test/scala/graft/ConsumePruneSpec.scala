@@ -56,6 +56,15 @@ class ConsumePruneSpec extends SparkSpec {
     assert(out.exceptAll(plain).isEmpty && plain.exceptAll(out).isEmpty)
   }
 
+  test("prunePlanScans: a non-deterministic filter keeps its original plan") {
+    // a pruned read re-evaluates the filter inside a fresh scan, so rand()
+    // would draw again and the result would no longer be row-identical
+    val db = s"r15rand${System.nanoTime()}"
+    val (t, st) = mkFragmented(db)
+    val df = spark.sql(s"SELECT * FROM $t WHERE cust_id = 13 AND rand(7) < 0.5")
+    assert(CatalogOps.prunePlanScans(spark, df, Map(t -> st)) eq df)
+  }
+
   test("cleanseToConsume(statsTables): end-to-end consume publish reads " +
     "pruned, result table row-identical to the unpruned run") {
     val db = s"r15c2c${System.nanoTime()}"
