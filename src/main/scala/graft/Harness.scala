@@ -4,15 +4,19 @@ import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicLong
 
 import scala.collection.mutable.ArrayBuffer
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.graftbridge.BusBridge
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** The measurement spine shared by the mains (`Bench`, `Verify`,
   * `Plans`, `ScaleCheck`): one temp-warehouse session builder, one listener
-  * counting what a timed row did, and [[Harness.Timer]], which turns each
-  * timed row into one JSON line. */
+  * counting what a timed row did, [[Harness.Timer]], which turns each
+  * timed row into one JSON line, and [[Harness.executedPlans]], which
+  * records the physical plans a body of work ran. */
 object Harness {
 
   /** Default local core count: `min(32, nproc)`. */
@@ -95,6 +99,26 @@ object Harness {
 
     def jobsBetween(a: Snapshot, b: Snapshot): Seq[Job] =
       finished.synchronized(finished.slice(a.finished, b.finished).toSeq)
+  }
+
+  /** Every plan `body` executed on `spark` through a Dataset action, as
+    * (action name, query execution) in completion order. Eager
+    * `localCheckpoint`s are actions too, so the plans an operator hides
+    * behind a materialization barrier are recorded as they ran. A public
+    * `QueryExecutionListener` does the recording; the listener bus
+    * delivers asynchronously, so it is drained before the result is read. */
+  def executedPlans(spark: SparkSession)(body: => Unit): Seq[(String, QueryExecution)] = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, QueryExecution)]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(action: String, qe: QueryExecution, ns: Long): Unit = {
+        seen.add(action -> qe); ()
+      }
+      override def onFailure(action: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try { body; BusBridge.drain(spark.sparkContext) }
+    finally spark.listenerManager.unregister(listener)
+    seen.asScala.toList
   }
 
   /** JSON string literal. */

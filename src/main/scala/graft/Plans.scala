@@ -1,69 +1,26 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions.{col, concat, count, lit, row_number, split}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.QueryExecution
 import java.nio.file.{Files, Paths}
 
 /** Dumps formatted physical plans, as reviewable evidence of
   * pushdown/broadcast/codegen behavior (PlanSpec asserts the same properties
   * mechanically). Two forms:
   *   runMain graft.Plans [sfDir] [out.md]
-  *     — the headline queries → PLANS.md;
+  *     — the headline queries' final plans, unexecuted → PLANS.md;
   *   runMain graft.Plans <outDir> <tag> <q1,q2,...> [sfDir]
-  *     — one `<outDir>/<name>_<tag>.txt` per named query or operator-internal
-  *       pseudo-query ([[pseudo]]), the before/after plan evidence of an
-  *       optimization. */
+  *     — runs each named query to completion (noop sink) and writes EVERY
+  *       plan it executed to `<outDir>/<name>_<tag>.txt`, in execution
+  *       order ([[Harness.executedPlans]]): the eager `localCheckpoint`
+  *       barriers inside operators (a prefix-filter join's verify stage, an
+  *       LPA round's labels) are actions, so the joins behind them show as
+  *       they ran. The before/after plan evidence of an optimization. */
 object Plans {
-  private def crossShape(s: SparkSession, freqFrom: String) = {
-    def side(lo: Long, hi: Long) = s.range(lo, hi).select(col("id").as("doc_id"),
-      (col("id") % 4).as("grp"),
-      split(concat(lit("tok"), col("id") % 97, lit(" tok"), col("id") % 31,
-        lit(" tok"), col("id") % 13), " ").as("toks"))
-    graft.operators.Dedup.jaccardCrossJoin(side(5000, 5500), side(0, 5000), "toks",
-      "doc_id", Seq("grp"), 0.7, freqFrom = freqFrom, materializeVerify = false)
-  }
-
-  /** Operator-internal subplans that the declared queries hide behind
-    * per-iteration localCheckpoints or a materialized verify barrier. */
-  private val pseudo: Map[String, SparkSession => DataFrame] = {
-    def ring(s: SparkSession) = {
-      val nodes = s.range(0, 1000).select(col("id"))
-      val edges = nodes.select(col("id").as("src"), ((col("id") + 1) % 1000).as("dst"))
-      val sym = edges.select(col("src").as("a"), col("dst").as("b"))
-        .unionByName(edges.select(col("dst").as("a"), col("src").as("b")))
-        .distinct()
-      (sym, nodes.select(col("id"), col("id").as("label")))
-    }
-    Map(
-      // ONE un-checkpointed LPA vote round
-      "op_lpa_vote_round" -> { s =>
-        val (sym, labels) = ring(s)
-        graft.operators.GraphOps.argmaxVote(
-          sym.join(labels.select(col("id").as("b"), col("label")), Seq("b")))
-      },
-      // the round-13 two-exchange vote formulation, kept so the before/after
-      // plan pair is mechanically generated
-      "op_lpa_vote_round_r13" -> { s =>
-        val (sym, labels) = ring(s)
-        sym.join(labels.select(col("id").as("b"), col("label")), Seq("b"))
-          .groupBy(col("a"), col("label")).agg(count(lit(1)).as("__n"))
-          .withColumn("__r", row_number().over(
-            Window.partitionBy(col("a")).orderBy(col("__n").desc, col("label"))))
-          .filter(col("__r") === 1)
-          .select(col("a").as("id"), col("label"))
-      },
-      // the incremental-dedup cross join under both canonical-order
-      // strategies; materializeVerify=false so the verify barrier does not
-      // hide the join shape; the gate's stored side is pre-tokenized, as here
-      "op_incdedup_cross_union" -> (s => crossShape(s, "union")),
-      "op_incdedup_cross_left" -> (s => crossShape(s, "left")))
-  }
-
   def main(mainArgs: Array[String]): Unit = {
     val dumpForm = mainArgs.length >= 3
     val names = if (dumpForm) mainArgs(2).split(",").toSeq else Seq.empty
-    val unknown = names.filterNot(k => pseudo.contains(k) || SparkEntry.queries.contains(k))
+    val unknown = names.filterNot(SparkEntry.queries.contains)
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
     val args = if (dumpForm) mainArgs.drop(3) else mainArgs
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
@@ -73,16 +30,21 @@ object Plans {
     spark.stop()
   }
 
-  private def explain(df: DataFrame): String =
-    df.queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode)
+  private def explain(qe: QueryExecution): String =
+    qe.explainString(org.apache.spark.sql.execution.FormattedMode)
 
   private def dump(spark: SparkSession, sfDir: String, outDir: String, tag: String,
                    names: Seq[String]): Unit = {
     new java.io.File(outDir).mkdirs()
     names.foreach { name =>
-      val df = pseudo.get(name).fold(SparkEntry.queries(name)(spark, sfDir))(_(spark))
-      Files.writeString(Paths.get(s"$outDir/${name}_$tag.txt"), explain(df) + "\n")
-      println(s"[plans] $outDir/${name}_$tag.txt")
+      val ran = Harness.executedPlans(spark) {
+        SparkEntry.queries(name)(spark, sfDir).write.format("noop").mode("overwrite").save()
+      }
+      val text = ran.zipWithIndex.map { case ((action, qe), i) =>
+        s"## plan ${i + 1} of ${ran.size}: $action\n\n" + explain(qe)
+      }.mkString("", "\n\n", "\n")
+      Files.writeString(Paths.get(s"$outDir/${name}_$tag.txt"), text)
+      println(s"[plans] $outDir/${name}_$tag.txt (${ran.size} executed plans)")
     }
   }
 
@@ -138,18 +100,7 @@ object Plans {
     sb.append("`PushedFilters`/`ReadSchema` on scans, `BroadcastHashJoin` for\n")
     sb.append("lookups, paired partial/final `HashAggregate`, `WholeStageCodegen`\n")
     sb.append("spans, and shuffle `Exchange`s only where keys genuinely change.\n")
-    // the production prefix-filter join materializes its verify stage (a
-    // pushdown barrier) which hides the join subtree behind an RDD scan —
-    // dump q25's shared LAZY form so the candidate-generation plan stays
-    // auditable (and the production form, which would both fully execute
-    // the join and print a degenerate plan, is not dumped at all)
-    val frames: Seq[(String, String, () => DataFrame)] =
-      headline.map { case (name, desc) =>
-        (name, desc, () => SparkEntry.queries(name)(spark, sfDir))
-      } :+ (("q25_jaccard_block (pre-barrier)",
-        "exact prefix-filter similarity join, lazy form: full candidate-generation plan",
-        () => graft.queries.TextQueries.jaccardBlock(spark, sfDir, materializeVerify = false)))
-    frames.foreach { case (name, desc, mk) =>
+    headline.foreach { case (name, desc) =>
       // the bucketed-join dump disables auto-broadcast: at the tiny plan-dump
       // SF the dim side is broadcastable and the plan would show a
       // BroadcastHashJoin, hiding the property being documented — the
@@ -160,9 +111,8 @@ object Plans {
       val prior = spark.conf.getOption("spark.sql.autoBroadcastJoinThreshold")
       if (pinStrategy) spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       try {
-        val df = mk()
         sb.append(s"\n## $name — $desc\n\n```\n")
-        sb.append(explain(df))
+        sb.append(explain(SparkEntry.queries(name)(spark, sfDir).queryExecution))
         sb.append("\n```\n")
       } finally if (pinStrategy) prior match {
         case Some(v) => spark.conf.set("spark.sql.autoBroadcastJoinThreshold", v)
@@ -170,6 +120,6 @@ object Plans {
       }
     }
     Files.writeString(Paths.get(out), sb.toString)
-    println(s"[plans] wrote ${frames.size} plans to $out")
+    println(s"[plans] wrote ${headline.size} plans to $out")
   }
 }

@@ -74,6 +74,11 @@ object Retention {
     val k = keys.select(col(keyCol)).distinct().localCheckpoint(true)
     val pruned = statsPrunedMatching(spark, table, keyCol, k, statsTable,
       maxDiscoveryKeys)
+    // the files the pruned discovery admitted, listed NOW: the overwrites
+    // below replace files, and the scoped refresh must name the files this
+    // delete could have touched, not what a re-listing finds afterwards
+    val admitted = pruned.filter(_ => partCols.nonEmpty)
+      .flatMap(m => scala.util.Try(m.inputFiles.toSeq).toOption)
     val matching = pruned
       .getOrElse(spark.table(table).join(k, Seq(keyCol), "left_semi"))
     val dataCols = meta.schema.fieldNames.filterNot(partCols.contains)
@@ -121,30 +126,29 @@ object Retention {
         s"partitions=${report.partitionsRewritten}/${report.partitionsSeen}"))
     spark.catalog.refreshTable(table)
     statsTable.filter(_ => report.partitionsRewritten > 0)
-      .foreach(st => specOf(spark, st).foreach { sp =>
+      .foreach(st => FileStats.cachedStatsSpecOf(spark, st).foreach { sp =>
         // SCOPED refresh (guide §6 — cost ∝ touched): a rewritten partition
         // must have held a matching row, and matching rows live only in
         // files the pruned discovery admitted — so the admitted files'
         // partition dirs are a sound SUPERSET of everything this delete
         // changed (admitted-but-unchanged files are re-recognized as
         // covered and skipped). The rels come from the pruned scan's own
-        // resolved file list, never from re-rendered partition specs.
-        // Unpartitioned tables and full-scan discovery refresh unscoped.
-        val scope: Option[Set[String]] =
-          if (partCols.isEmpty) None
-          else pruned.flatMap { m =>
-            scala.util.Try {
-              val rootNorm = new org.apache.hadoop.fs.Path(meta.location)
-                .toString.replaceFirst("^[a-zA-Z][a-zA-Z0-9+.-]*:/+", "/")
-              m.inputFiles.toSeq.map { p =>
-                val norm = p.replaceFirst("^[a-zA-Z][a-zA-Z0-9+.-]*:/+", "/")
-                val parent = norm.substring(0, norm.lastIndexOf('/'))
-                require(parent == rootNorm || parent.startsWith(rootNorm + "/"),
-                  s"input file $p outside table root $rootNorm")
-                if (parent == rootNorm) "" else parent.drop(rootNorm.length + 1)
-              }.toSet
-            }.toOption.filter(rs => rs.nonEmpty && !rs.contains(""))
-          }
+        // resolved file list, snapshotted before the overwrites, never from
+        // re-rendered partition specs. Unpartitioned tables and full-scan
+        // discovery refresh unscoped.
+        val scope: Option[Set[String]] = admitted.flatMap { files =>
+          scala.util.Try {
+            val rootNorm = new org.apache.hadoop.fs.Path(meta.location)
+              .toString.replaceFirst("^[a-zA-Z][a-zA-Z0-9+.-]*:/+", "/")
+            files.map { p =>
+              val norm = p.replaceFirst("^[a-zA-Z][a-zA-Z0-9+.-]*:/+", "/")
+              val parent = norm.substring(0, norm.lastIndexOf('/'))
+              require(parent == rootNorm || parent.startsWith(rootNorm + "/"),
+                s"input file $p outside table root $rootNorm")
+              if (parent == rootNorm) "" else parent.drop(rootNorm.length + 1)
+            }.toSet
+          }.toOption.filter(rs => rs.nonEmpty && !rs.contains(""))
+        }
         FileStats.refresh(spark, table, st, sp, scopeRels = scope)
       })
     report
@@ -211,8 +215,5 @@ object Retention {
       else FileStats.keysPrunedScan(spark, table, st, keyCol, k, maxDiscoveryKeys)
         .map(_.join(k, Seq(keyCol), "left_semi"))
     }
-
-  private def specOf(spark: SparkSession, statsTable: String): Option[FileStats.StatsSpec] =
-    FileStats.cachedStatsSpecOf(spark, statsTable)
 
 }

@@ -24,7 +24,14 @@ object Kernels {
     * in prefixLenCol), ties by binary UTF8 comparison (Spark's string
     * ordering), selection over present tokens only. One row-local sort —
     * the stored side of an incremental cross join pays NO shuffle for its
-    * prefix extraction. */
+    * prefix extraction.
+    *
+    * Returns VIEWS, not copies: each element is a `UTF8String` pointing into
+    * the input row's `toks` buffer, which the scan reuses for the next row.
+    * Safe only under a consumer that copies an element before the next row
+    * arrives — as the `explode` in Dedup.jaccardCrossJoin does (each
+    * generated row is written into its own output row). Never keep the
+    * returned array, or its strings, across rows. */
   def prefixTokens(toks: ArrayData, threshold: Double,
                    freq: java.util.HashMap[UTF8String, java.lang.Long]): ArrayData = {
     val n = toks.numElements()

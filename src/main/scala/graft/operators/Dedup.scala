@@ -400,6 +400,15 @@ object Dedup {
       .withColumn("sz", size(col("toks")))
       .filter(col("sz") > 0)
 
+  /** `df` materialized (local checkpoint) with its row count, in ONE job
+    * after its shuffle stages: the job that stores the final stage also
+    * counts it. An eager checkpoint followed by `count()` is that job plus
+    * two more under AQE (partial aggregate, then the final exchange). */
+  private def checkpointCounted(df: DataFrame): (DataFrame, Long) = {
+    val c = df.localCheckpoint(false)
+    (c, c.queryExecution.toRdd.count())
+  }
+
   /** Token frequencies over the given bases — the shared canonical order. */
   private def tokenFreq(bases: Seq[DataFrame]): DataFrame =
     bases.map(_.select(explode(col("toks")).as("token"))).reduce(_ unionByName _)
@@ -463,8 +472,7 @@ object Dedup {
     * @return (id_a, id_b, jaccard) with id_a < id_b, jaccard ≥ threshold
     */
   def jaccardSelfJoin(df: DataFrame, tokensCol: String, idCol: String,
-                      blockCols: Seq[String], threshold: Double,
-                      materializeVerify: Boolean = true): DataFrame = {
+                      blockCols: Seq[String], threshold: Double): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0, s"threshold must be in (0,1]: $threshold")
     val blocks = blockCols.map(col)
     val base = tokenSetBase(df, tokensCol, idCol, blocks)
@@ -486,178 +494,144 @@ object Dedup {
       .filter(lengthFilter("sz_a", "sz_b", threshold))
       .select(col("id_a"), col("id_b"))
       .distinct()
-    val verified0 = candidates
-      .join(base.select(col("id").as("id_a"), col("toks").as("t_a")), Seq("id_a"))
-      .join(base.select(col("id").as("id_b"), col("toks").as("t_b")), Seq("id_b"))
-      .select(col("id_a"), col("id_b"), S.jaccard(col("t_a"), col("t_b")).as("jaccard"))
     // barrier: without it PushDownPredicates folds the threshold filter
     // into the verify join via alias substitution, so array_intersect runs
     // once per candidate in the join AND again per survivor in the project.
     // Materializing (id, id, double) rows is candidate-count-proportional
-    // and tiny next to a second intersect pass over the token arrays.
-    // `materializeVerify=false` keeps the plan lazy so PlanSpec/Plans can
-    // inspect the real join shape (the barrier hides it behind an RDD scan).
-    val verified = if (materializeVerify) verified0.localCheckpoint(true) else verified0
-    verified.filter(col("jaccard") >= threshold)
+    // and tiny next to a second intersect pass over the token arrays. The
+    // join shape behind it is audited on the plan the checkpoint executed
+    // (`Harness.executedPlans`), not on a lazy variant of this operator.
+    candidates
+      .join(base.select(col("id").as("id_a"), col("toks").as("t_a")), Seq("id_a"))
+      .join(base.select(col("id").as("id_b"), col("toks").as("t_b")), Seq("id_b"))
+      .select(col("id_a"), col("id_b"), S.jaccard(col("t_a"), col("t_b")).as("jaccard"))
+      .localCheckpoint(true)
+      .filter(col("jaccard") >= threshold)
   }
 
   /** Cross-corpus EXACT Jaccard join — the decontamination operator: every
     * (left, right) pair with token-set Jaccard ≥ `threshold`, e.g. training
     * docs that near-duplicate benchmark/eval docs. Same prefix-filtering
     * principle as [[jaccardSelfJoin]] with ONE canonical token order shared
-    * by both corpora (frequencies counted over their union, so the prefix
-    * lemma applies to cross pairs); candidates join prefix-to-prefix on
-    * (block, token), then length-filter, dedupe, exact-verify.
+    * by both corpora; candidates join prefix-to-prefix on (block, token),
+    * then length-filter, dedupe, exact-verify.
     * Ids must be globally unique within each side (see [[jaccardSelfJoin]]).
     *
-    * `freqFrom` picks which side the canonical token order is counted over —
-    * `"union"` (both, the historical default), `"left"` or `"right"`. A
-    * single-side order is RESULT-IDENTICAL by the prefix-filter lemma: the
-    * lemma holds for ANY fixed total order shared by both sides (frequency
-    * ordering only minimizes bucket sizes), and a token absent from the
-    * freq side's vocabulary can be dropped from the OTHER side's ranking
-    * with recall intact — every common token of a qualifying pair lives in
-    * both documents, hence in the freq side's vocabulary, so the pair's
-    * first common token still lands inside both prefixes (the rank of that
-    * token only DROPS when non-shared tokens vanish from the ranking, and
-    * the prefix length is still computed from the FULL set size). The
-    * verify stage is exact, so the emitted pairs are the same rows either
-    * way (candidate supersets differ, results do not — spec-pinned).
+    * `freqFrom` picks the side the canonical token order is counted over:
+    *  - `"union"` (default): both sides, each materialized once. It keeps
+    *    both sides' private rare tokens as prefix keys, which two
+    *    same-distribution corpora at a low threshold need (q65 at t=0.5: a
+    *    single-side order inflated candidates, +30 % wall).
+    *  - `"left"`: the left side only — name the SMALL side left (the daily
+    *    batch of [[incrementalDedup]]). The frequency aggregation is
+    *    O(batch tokens) and the right side is never materialized
+    *    ([[tokenSetBaseLazy]]), so per-call cost tracks the batch, not the
+    *    corpus (q164 −15 %, q209 −6 % at sf0.1 vs `"union"`, matched A/B).
+    *    For a right-side order, swap the arguments and the output columns.
     *
-    * Name the SMALL side (the daily batch of [[incrementalDedup]]): the
-    * per-call frequency aggregation becomes O(small-side tokens) instead
-    * of O(corpus tokens), the big side is never materialized
-    * ([[tokenSetBaseLazy]]), and — when the order fits the driver
-    * (`freqCollectMaxRows`) and tokens are strings — BOTH sides' prefixes
-    * are extracted ROW-LOCALLY against the collected order
-    * ([[graft.functions.expressions.Kernels.prefixTokens]] as a codegen
-    * reference object): the big side pays NO explode→join→rank exchange
-    * at all, which was the remaining per-batch O(stored tokens) shuffle
-    * (measured: the 10× daily-ops dedup-gate leg's 195 MB candidate-side
-    * shuffle was this rank exchange, not the frequency aggregation). The
-    * small side's prefix rows then carry a guarded broadcast hint (bounded
-    * by its token-occurrence count) so the candidate join is map-side on
-    * the big side too. Above the collect bound, the window path runs with
-    * the order guarded-broadcast (`freqBroadcastMaxRows`); above both,
-    * the planner/AQE decide.
+    * Both orders emit the SAME pairs: the prefix-filter lemma holds for ANY
+    * fixed total order shared by both sides (frequency order only shrinks
+    * buckets), and a token outside the left vocabulary can leave the right
+    * side's ranking with recall intact — every common token of a qualifying
+    * pair is in both documents, hence in the left vocabulary, so the pair's
+    * first common token still lands inside both prefixes (its rank only
+    * drops; prefix lengths still come from the FULL set size). Verify is
+    * exact, so only the candidate supersets differ (spec-pinned).
     *
-    * Candidate-volume caveat (measured): a single-side order removes the
-    * OTHER side's private tokens from its prefixes, so prefix slots shift
-    * to shared-vocabulary tokens. On same-distribution corpora at a low
-    * threshold the private rare tokens were the discriminating keys and
-    * candidates inflate (q65 at t=0.5: +30% wall under freqFrom="right"
-    * — it stays on "union"); at the incremental gate's high thresholds
-    * with block keys the inflation is negligible and the O(stored) cut
-    * dominates (q164 −15%, q209 −6% at sf0.1, matched A/B).
+    * Under `"left"`, when the order fits the driver (`freqCollectMaxRows`)
+    * and tokens are strings, both sides' prefixes are extracted ROW-LOCALLY
+    * against the collected order
+    * ([[graft.functions.expressions.Kernels.prefixTokens]]): the right side
+    * pays no explode→join→rank exchange (the 10× daily-ops gate leg's
+    * 195 MB shuffle was that exchange). Above the collect bound the window
+    * path runs with the order guarded-broadcast (`freqBroadcastMaxRows`).
+    * The left prefix rows and then the materialized candidates are
+    * guarded-broadcast, so neither the candidate join nor verify shuffles
+    * the right side.
     *
     * @return (id_l, id_r, jaccard) with jaccard ≥ threshold */
   def jaccardCrossJoin(left: DataFrame, right: DataFrame, tokensCol: String,
                        idCol: String, blockCols: Seq[String],
                        threshold: Double, freqFrom: String = "union",
                        freqBroadcastMaxRows: Long = 4000000L,
-                       materializeVerify: Boolean = true,
                        freqCollectMaxRows: Long = 1000000L): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0, s"threshold must be in (0,1]: $threshold")
-    require(Set("union", "left", "right")(freqFrom),
-      s"freqFrom must be union|left|right: $freqFrom")
+    require(freqFrom == "union" || freqFrom == "left",
+      s"freqFrom must be union|left (for a right-side order, swap the arguments): $freqFrom")
+    val union = freqFrom == "union"
     val blocks = blockCols.map(col)
-    val lBase = if (freqFrom == "right") tokenSetBaseLazy(left, tokensCol, idCol, blocks)
-                else tokenSetBase(left, tokensCol, idCol, blocks)
-    val rBase = if (freqFrom == "left") tokenSetBaseLazy(right, tokensCol, idCol, blocks)
-                else tokenSetBase(right, tokensCol, idCol, blocks)
-    val stringToks = lBase.schema("toks").dataType match {
-      case org.apache.spark.sql.types.ArrayType(
-        org.apache.spark.sql.types.StringType, _) => true
-      case _ => false
-    }
+    val lBase = tokenSetBase(left, tokensCol, idCol, blocks)
+    val rBase = if (union) tokenSetBase(right, tokensCol, idCol, blocks)
+                else tokenSetBaseLazy(right, tokensCol, idCol, blocks)
     def prefixOf(base: DataFrame, sfx: String,
                  mk: DataFrame => DataFrame): DataFrame =
       mk(base).select(blocks ++ Seq(col("token"), col("id").as(s"id_$sfx"),
         col("sz").as(s"sz_$sfx")): _*)
-    // the canonical order, and with it the prefix strategy (doc above):
-    // row-local against the collected small-side order when it fits;
-    // window against the (guarded-broadcast) order frame otherwise
-    val (lPrefix, rPrefix) = freqFrom match {
-      case "union" =>
-        val freq = tokenFreq(Seq(lBase, rBase))
-        (prefixOf(lBase, "l", prefixRows(_, freq, blocks, threshold)),
-          prefixOf(rBase, "r", prefixRows(_, freq, blocks, threshold)))
-      case side =>
-        val small = if (side == "left") lBase else rBase
-        val f = tokenFreq(Seq(small)).localCheckpoint(true)
-        val nf = f.count()
-        if (stringToks && nf <= freqCollectMaxRows) {
-          val m = new java.util.HashMap[org.apache.spark.unsafe.types.UTF8String,
-            java.lang.Long](math.max(16, (nf * 2).toInt))
-          f.collect().foreach(r => m.put(
-            org.apache.spark.unsafe.types.UTF8String.fromString(r.getString(0)),
-            java.lang.Long.valueOf(r.getLong(1))))
-          import graft.functions.expressions.HashExpressions.prefix_tokens
-          def local(base: DataFrame): DataFrame =
-            base.select(blocks :+ col("id") :+ col("sz") :+
-              explode(prefix_tokens(col("toks"), threshold, m)).as("token"): _*)
-          (prefixOf(lBase, "l", local), prefixOf(rBase, "r", local))
-        } else {
-          val freq = if (nf <= freqBroadcastMaxRows) broadcast(f) else f
-          (prefixOf(lBase, "l", prefixRows(_, freq, blocks, threshold)),
-            prefixOf(rBase, "r", prefixRows(_, freq, blocks, threshold)))
+    def windowed(freq: DataFrame) =
+      (prefixOf(lBase, "l", prefixRows(_, freq, blocks, threshold)),
+        prefixOf(rBase, "r", prefixRows(_, freq, blocks, threshold)))
+    val (lPrefix, rPrefix) =
+      if (union) windowed(tokenFreq(Seq(lBase, rBase)))
+      else {
+        val (f, nf) = checkpointCounted(tokenFreq(Seq(lBase)))
+        val stringToks = lBase.schema("toks").dataType match {
+          case org.apache.spark.sql.types.ArrayType(
+            org.apache.spark.sql.types.StringType, _) => true
+          case _ => false
         }
-    }
-    // guarded broadcast of the SMALL side's prefix rows (bounded above by
-    // its token-occurrence count — prefixes are a subset of occurrences),
-    // so the candidate join never shuffles the big side's prefix rows
-    def occOf(base: DataFrame): Long =
-      base.agg(sum(col("sz"))).head() match {
-        case r if r.isNullAt(0) => 0L
-        case r => r.getLong(0)
+        // (prefix rows, left token occurrences): f counts exactly the
+        // exploded distinct tokens, so Σ cnt = Σ sz over lBase
+        val (l, r, occ) =
+          if (stringToks && nf <= freqCollectMaxRows) {
+            val counts = f.collect()
+            val m = new java.util.HashMap[org.apache.spark.unsafe.types.UTF8String,
+              java.lang.Long](math.max(16, (nf * 2).toInt))
+            counts.foreach(r => m.put(
+              org.apache.spark.unsafe.types.UTF8String.fromString(r.getString(0)),
+              java.lang.Long.valueOf(r.getLong(1))))
+            import graft.functions.expressions.HashExpressions.prefix_tokens
+            // prefix_tokens returns views into the input row; explode
+            // copies each element before the next row (Kernels.prefixTokens)
+            def local(base: DataFrame): DataFrame =
+              base.select(blocks :+ col("id") :+ col("sz") :+
+                explode(prefix_tokens(col("toks"), threshold, m)).as("token"): _*)
+            (prefixOf(lBase, "l", local), prefixOf(rBase, "r", local),
+              counts.map(_.getLong(1)).sum)
+          } else {
+            val (lw, rw) = windowed(if (nf <= freqBroadcastMaxRows) broadcast(f) else f)
+            (lw, rw, f.agg(coalesce(sum(col("cnt")), lit(0L))).head().getLong(0))
+          }
+        // guarded broadcast of the left prefix rows (a subset of its token
+        // occurrences), so the candidate join never shuffles the right side
+        (if (occ <= freqBroadcastMaxRows) broadcast(l) else l, r)
       }
-    val (lHinted, rHinted) = freqFrom match {
-      case "left" if occOf(lBase) <= freqBroadcastMaxRows =>
-        (broadcast(lPrefix), rPrefix)
-      case "right" if occOf(rBase) <= freqBroadcastMaxRows =>
-        (lPrefix, broadcast(rPrefix))
-      case _ => (lPrefix, rPrefix)
-    }
-    val candidates0 = lHinted.join(rHinted, blockCols :+ "token")
+    val candidates0 = lPrefix.join(rPrefix, blockCols :+ "token")
       .filter(lengthFilter("sz_l", "sz_r", threshold))
       .select(col("id_l"), col("id_r"))
       .distinct()
-    // single-side mode: candidates are materialized and guarded-broadcast
-    // into the verify joins, so the big (lazy) side's verify leg is a
-    // map-side scan — it never shuffle-writes its token arrays. Union mode
-    // keeps the historical lazy candidates (both bases are checkpointed
-    // there; AQE handles the join strategy).
-    val candidates =
-      if (freqFrom == "union" || !materializeVerify) candidates0
+    // "left": candidates are materialized and guarded-broadcast into the
+    // verify joins, and the lazy right side is cut to candidate ids BEFORE
+    // its token expression evaluates (semi-join on the RAW side, tokenize
+    // survivors) — its verify leg is a candidate-proportional map-side scan
+    // that never shuffle-writes token arrays; the prefix leg stays the single
+    // full tokenization pass. "union" keeps the candidates lazy (both bases
+    // are checkpointed there; AQE handles the join strategy).
+    val (candidates, rVerify) =
+      if (union) (candidates0, rBase)
       else {
-        val c = candidates0.localCheckpoint(true)
-        if (c.count() <= freqBroadcastMaxRows) broadcast(c) else c
+        val (c, nc) = checkpointCounted(candidates0)
+        val hinted = if (nc <= freqBroadcastMaxRows) broadcast(c) else c
+        (hinted, tokenSetBaseLazy(
+          right.join(hinted.select(col("id_r").as(idCol)), Seq(idCol), "left_semi"),
+          tokensCol, idCol, blocks))
       }
-    // verify legs: the LAZY side is cut to candidate ids BEFORE its token
-    // expression evaluates (semi-join on the RAW side, tokenize survivors),
-    // so re-deriving tokens on the big side costs candidate-proportional
-    // work — the prefix leg stays the single full tokenization pass.
-    // Only with materialized candidates: a lazy candidate frame would
-    // re-run the whole candidate subtree once per verify leg.
-    def slimLazy(src: DataFrame, ids: DataFrame): DataFrame =
-      tokenSetBaseLazy(src.join(ids, Seq(idCol), "left_semi"),
-        tokensCol, idCol, blocks)
-    val lVerify =
-      if (freqFrom == "right" && materializeVerify)
-        slimLazy(left, candidates.select(col("id_l").as(idCol)))
-      else lBase
-    val rVerify =
-      if (freqFrom == "left" && materializeVerify)
-        slimLazy(right, candidates.select(col("id_r").as(idCol)))
-      else rBase
-    val verified = candidates
-      .join(lVerify.select(col("id").as("id_l"), col("toks").as("t_l")), Seq("id_l"))
+    // single-eval barrier, see jaccardSelfJoin
+    candidates
+      .join(lBase.select(col("id").as("id_l"), col("toks").as("t_l")), Seq("id_l"))
       .join(rVerify.select(col("id").as("id_r"), col("toks").as("t_r")), Seq("id_r"))
       .select(col("id_l"), col("id_r"), S.jaccard(col("t_l"), col("t_r")).as("jaccard"))
-    // single-eval barrier, see jaccardSelfJoin; materializeVerify=false
-    // keeps the plan inspectable (`Plans` dump form/PlanSpec), same as there
-    val barriered = if (materializeVerify) verified.localCheckpoint(true) else verified
-    barriered.filter(col("jaccard") >= threshold)
+      .localCheckpoint(true)
+      .filter(col("jaccard") >= threshold)
   }
 
   /** Build the persistent MinHash INDEX for [[incrementalMinhash]]: one

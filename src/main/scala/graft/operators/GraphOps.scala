@@ -107,10 +107,11 @@ object GraphOps {
     * satisfies ClusteredDistribution(a, label) AND ClusteredDistribution(a),
     * so the vote rows cross the network ONCE per round instead of twice
     * (measured on the 100× ring of ScaleCheck section `lpa_incremental`; the
-    * round-13 two-exchange form, `Plans` pseudo-query `op_lpa_vote_round_r13`,
-    * shuffled every vote row through Exchange(a, label) and again through
-    * Exchange(a)). A min-struct aggregation would avoid the window's sort
-    * but plans as SortAggregate (struct buffers are not hash-aggregable),
+    * round-13 two-exchange form, plan evidence in
+    * `plans/r14/op_lpa_vote_round_{before,after}.txt`, shuffled every vote
+    * row through Exchange(a, label) and again through Exchange(a)). A
+    * min-struct aggregation would avoid the window's sort but plans as
+    * SortAggregate (struct buffers are not hash-aggregable),
     * which SORTS the full vote set twice — measured 4× slower at 100×.
     *
     * HUB-SKEW tradeoff (deliberate): keying the first exchange by `a`

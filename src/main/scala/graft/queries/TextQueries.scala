@@ -13,18 +13,6 @@ import org.apache.spark.sql.types._
   */
 object TextQueries {
 
-  /** q25's pipeline, parameterized on the verify barrier — the SINGLE
-    * definition of docs→tokens→prefix-filter join, shared by the production
-    * query and by the plan-audit surfaces (PlanSpec / Plans) which need the
-    * lazy form: the barrier hides the join subtree behind an RDD scan. */
-  def jaccardBlock(s: SparkSession, d: String,
-                   materializeVerify: Boolean = true): DataFrame = {
-    val docs = Tables(s, d, "documents")
-      .select(col("doc_id"), col("lang"), col("source"), S.tokens(col("text")).as("toks"))
-    Dedup.jaccardSelfJoin(docs, "toks", "doc_id", Seq("lang", "source"), 0.5,
-      materializeVerify = materializeVerify)
-  }
-
   /** Shared doc_id → URL injection + canonicalization projection for
     * q115 (per-doc rows) and q116 (per-domain stats). */
   /** Shared q215/q216 fixture: stage banner-planted documents as 4
@@ -124,8 +112,12 @@ object TextQueries {
     // n-gram (unigram) Jaccard near-dup within (lang, source) blocks — EXACT
     // result via the prefix-filtering similarity join (100% recall, no
     // all-pairs-per-block quadratics), fully oracle-checked.
-    "q25_jaccard_block" -> ((s, d) =>
-      jaccardBlock(s, d).orderBy(col("id_a"), col("id_b"))),
+    "q25_jaccard_block" -> ((s, d) => {
+      val docs = Tables(s, d, "documents")
+        .select(col("doc_id"), col("lang"), col("source"), S.tokens(col("text")).as("toks"))
+      Dedup.jaccardSelfJoin(docs, "toks", "doc_id", Seq("lang", "source"), 0.5)
+        .orderBy(col("id_a"), col("id_b"))
+    }),
 
     // Decontamination: training docs that near-duplicate "benchmark" docs
     // (the held-out tenth of the corpus), via the EXACT cross-corpus

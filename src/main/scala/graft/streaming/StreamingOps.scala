@@ -293,9 +293,19 @@ object StreamingOps {
     }
 
   /** A micro-batch as a gate step sees it: the `raw` batch, the gate's
-    * materialized `view` of it, the batch `id` and the view's row count
-    * (-1 for a gate that only probes emptiness). */
-  private final case class GateBatch(raw: DataFrame, view: DataFrame, id: Long, rows: Long)
+    * materialized `view` of it and the batch `id`. */
+  private final case class GateBatch(raw: DataFrame, view: DataFrame, id: Long)
+
+  /** Whether `df` holds a row, in ONE Spark job: each partition reports only
+    * whether it has a first row. `Dataset.isEmpty` scans partitions
+    * incrementally (a job per round while they come up empty) and `count()`
+    * is two jobs under AQE (partial aggregate, then the final exchange). On
+    * a lazy `localCheckpoint(false)` frame the same job also materializes
+    * it: a checkpoint-marked partition is stored in full before its first
+    * row is read, and the job end checkpoints the frame. */
+  private def hasRows(df: DataFrame): Boolean =
+    df.queryExecution.toRdd.mapPartitions(it => Iterator.single(it.hasNext))
+      .fold(false)(_ || _)
 
   /** The micro-batch loop every commit-logged gate runs on. foreachBatch is
     * AT-LEAST-ONCE; this loop makes each gate exactly-once over it:
@@ -305,9 +315,10 @@ object StreamingOps {
     *   2. skip a batch the [[BatchCommitLog]] holds — an O(1) marker
     *      listing, probed BEFORE the batch is materialized, so a
     *      re-delivered batch runs no Spark job;
-    *   3. materialize the gate's `view` (default: an eager
-    *      localCheckpoint), count it (or, without `countRows`, only probe
-    *      it with isEmpty), and skip it if empty;
+    *   3. build the gate's `view` (default: a lazy localCheckpoint) and
+    *      skip the batch if the view is empty; the probe ([[hasRows]]) is
+    *      one job that also materializes a lazy checkpoint, so an empty
+    *      batch costs that one job;
     *   4. run `step`, whose writes overwrite the batch's own `batch_id`
     *      partitions ([[writeBatchPartition]]), so a replay replaces what
     *      a crash half-wrote; a throwing step (a DQ halt) fails the stream
@@ -319,8 +330,7 @@ object StreamingOps {
                        stateTables: Seq[String],
                        maintainEvery: Int = 0,
                        maintain: (SparkSession, Long) => Unit = (_, _) => (),
-                       view: DataFrame => DataFrame = _.localCheckpoint(true),
-                       countRows: Boolean = true,
+                       view: DataFrame => DataFrame = _.localCheckpoint(false),
                        afterCommit: (SparkSession, Long) => Unit = (_, _) => ())
                       (step: GateBatch => Unit): StreamingQuery = {
     var converged = false // foreachBatch runs serially on the driver
@@ -334,9 +344,8 @@ object StreamingOps {
         }
         if (!BatchCommitLog.applied(ss, checkpoint, id)) {
           val v = view(batch)
-          val n = if (countRows) v.count() else if (v.isEmpty) 0L else -1L
-          if (n != 0) {
-            step(GateBatch(batch, v, id, n))
+          if (hasRows(v)) {
+            step(GateBatch(batch, v, id))
             BatchCommitLog.commit(ss, checkpoint, id)
             afterCommit(ss, id)
           }
@@ -393,16 +402,18 @@ object StreamingOps {
                         availableNow: Boolean = false): StreamingQuery = {
     import graft.operators.Retrieval
     gateLoop(docs, checkpoint, availableNow, stateTables = Nil,
-        view = _.select(col(idCol), col(labelCol)).localCheckpoint(true)) {
-      case GateBatch(batch, labels, id, n) =>
+        view = _.select(col(idCol), col(labelCol)).localCheckpoint(false)) {
+      case GateBatch(batch, labels, id) =>
         val ss = labels.sparkSession
+        // rows of the checkpointed labels in one job (count() is two)
+        val n = labels.queryExecution.toRdd.count()
         val prev = BatchCommitLog.committed(ss, checkpoint) match {
           case Some(k) =>
-            // localCheckpoint: materialized snapshot, so the insertInto
-            // below never reads the table it writes
+            // localCheckpoint, materialized by the emptiness probe: the
+            // insertInto below never reads the table it writes
             val snap = ss.table(weightsTable).filter(col("batch_id") === k)
-              .select(col("feature"), col("wq")).localCheckpoint(true)
-            if (snap.isEmpty) throw new IllegalStateException(
+              .select(col("feature"), col("wq")).localCheckpoint(false)
+            if (!hasRows(snap)) throw new IllegalStateException(
               s"commit log says batch $k of $weightsTable is committed but " +
                 "its snapshot partition is missing/empty — the table was " +
                 "externally modified; restore an older snapshot partition " +
@@ -488,9 +499,9 @@ object StreamingOps {
         maintainEvery, maintain,
         view = _.select(col(idCol) +: blockCols.map(col) :+
             array_distinct(S.tokens(col(textCol))).as("__toks"): _*)
-          .localCheckpoint(true),
+          .localCheckpoint(false),
         afterCommit = refreshStats) {
-      case GateBatch(_, btoks, id, _) =>
+      case GateBatch(_, btoks, id) =>
         val ss = btoks.sparkSession
         // batch_id < id: a replayed batch's own orphaned partition (and,
         // on the partition-pruned read, every uncommitted write) must NOT
@@ -552,7 +563,7 @@ object StreamingOps {
                    maintainEvery: Int = 0,
                    maintain: (SparkSession, Long) => Unit = (_, _) => ()): StreamingQuery =
     gateLoop(rows, checkpoint, availableNow, Seq(cleansedTable, quarantineTable),
-        maintainEvery, maintain) { case GateBatch(_, b, id, _) =>
+        maintainEvery, maintain) { case GateBatch(_, b, id) =>
       val (pass, fail) = new graft.dq.DqEngine().splitByRules(b, rules)
       writeBatchPartition(pass.withColumn("batch_id", lit(id)), cleansedTable, id)
       writeBatchPartition(fail.withColumn("batch_id", lit(id)), quarantineTable, id)
@@ -651,7 +662,7 @@ object StreamingOps {
                                maintain: (SparkSession, Long) => Unit = (_, _) => ()): StreamingQuery = {
     import graft.operators.SuffixArray
     gateLoop(docs, checkpoint, availableNow, Seq(reportTable, indexTable),
-        maintainEvery, maintain) { case GateBatch(_, b, id, _) =>
+        maintainEvery, maintain) { case GateBatch(_, b, id) =>
       val ss = b.sparkSession
       // ONE window-kernel pass over the batch, shared by the scrub
       // and the index append
@@ -725,7 +736,7 @@ object StreamingOps {
     val stateTables = cleansedTable +:
       (if (quarantineRules.isEmpty) Nil else Seq(quarantineTable)) :+ resultsTable
     gateLoop(rows, checkpoint, availableNow, stateTables,
-        maintainEvery, maintain) { case GateBatch(_, b, id, _) =>
+        maintainEvery, maintain) { case GateBatch(_, b, id) =>
       val ss = b.sparkSession
       import ss.implicits._
       val eng = new graft.dq.DqEngine()
@@ -782,10 +793,10 @@ object StreamingOps {
                     availableNow: Boolean = false,
                     maintainEvery: Int = 0,
                     maintain: (SparkSession, Long) => Unit = (_, _) => ()): StreamingQuery =
-    // encode reads the raw batch once: no checkpoint, and an isEmpty probe
-    // (one job) instead of a count (two)
+    // encode reads the raw batch once: no checkpoint; the loop's probe
+    // reads only each partition's first row
     gateLoop(vecs, checkpoint, availableNow, Seq(indexTable), maintainEvery, maintain,
-        view = identity, countRows = false) { case GateBatch(_, b, id, _) =>
+        view = identity) { case GateBatch(_, b, id) =>
       val encoded = graft.operators.Ann
         .ivfPqIndex(b, vecCol, idCol, centroids, codebooks)
         .withColumn("batch_id", lit(id))

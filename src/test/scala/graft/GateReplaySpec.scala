@@ -18,7 +18,10 @@ import graft.streaming.StreamingOps
   * restarts over the same stream and checkpoint, so Spark re-runs that
   * batch through foreachBatch. The gate must skip it on its commit log
   * alone — no Spark job, every table row-identical, no partition and no
-  * marker added — and a following empty micro-batch must commit nothing. */
+  * marker added — and a following empty micro-batch must commit nothing
+  * and cost at most one Spark job: the emptiness probe, which also
+  * materializes the gate's view (an eager checkpoint plus a `count()`
+  * probe was 3 jobs under AQE). */
 class GateReplaySpec extends SparkSpec {
   implicit def sqlCtx: SQLContext = spark.sqlContext
   import spark.implicits._
@@ -71,11 +74,16 @@ class GateReplaySpec extends SparkSpec {
       BusBridge.drain(spark.sparkContext)
       assert(q2.recentProgress.exists(_.batchId == redelivered),
         s"$name: Spark did not re-deliver batch $redelivered")
-      val jobs = counters.jobsBetween(s0, counters.snapshot)
+      val s1 = counters.snapshot
+      val jobs = counters.jobsBetween(s0, s1)
       assert(jobs.isEmpty, s"$name: the re-delivered batch ran Spark jobs: $jobs")
       mem.addData(Seq.empty[A]); q2.processAllAvailable()
+      BusBridge.drain(spark.sparkContext)
       assert(q2.recentProgress.exists(_.batchId == redelivered + 1),
         s"$name: the empty micro-batch did not run")
+      val emptyJobs = counters.jobsBetween(s1, counters.snapshot)
+      assert(emptyJobs.size <= 1,
+        s"$name: the empty micro-batch ran ${emptyJobs.size} Spark jobs: $emptyJobs")
     } finally {
       q2.stop()
       spark.sparkContext.removeSparkListener(counters)

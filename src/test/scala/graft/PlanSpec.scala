@@ -96,13 +96,20 @@ class PlanSpec extends SparkSpec {
   }
 
   test("exact similarity join never plans a cartesian or nested-loop join") {
-    // materializeVerify=false: the production barrier hides the join behind
-    // an RDD scan, which would make this assertion vacuous
-    val p = plan(TextQueries.jaccardBlock(spark, dir, materializeVerify = false))
-    assert(p.contains("SortMergeJoin") || p.contains("ShuffledHashJoin") ||
-      p.contains("BroadcastHashJoin"), "prefix join must be an equi-join")
-    assert(!p.contains("CartesianProduct"), "prefix-filter join must not cross-join")
-    assert(!p.contains("BroadcastNestedLoopJoin"), "prefix-filter join must stay an equi-join")
+    // every plan a real q25 run executed: the verify barrier is an eager
+    // localCheckpoint, so the prefix join behind it is recorded as it ran
+    val ran = Harness.executedPlans(spark) {
+      TextQueries.queries("q25_jaccard_block")(spark, dir).collect(); ()
+    }.map(_._2.executedPlan.toString)
+    // the prefix join: an equi-join keyed on (block columns, prefix token)
+    val prefixJoin =
+      "(SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin) \\[lang#\\d+, source#\\d+, token#\\d+\\]".r
+    assert(ran.exists(prefixJoin.findFirstIn(_).isDefined),
+      s"no executed plan has the prefix equi-join:\n${ran.mkString("\n")}")
+    ran.foreach { p =>
+      assert(!p.contains("CartesianProduct"), s"prefix-filter join must not cross-join:\n$p")
+      assert(!p.contains("BroadcastNestedLoopJoin"), s"prefix-filter join must stay an equi-join:\n$p")
+    }
   }
 
   test("ivfPqSearch broadcasts probes and ADC tables — the index side never shuffles for the join") {

@@ -7,7 +7,8 @@ import graft.operators.Dedup
 /** Round-15: the dedup gate's per-batch canonical-order fix —
   * [[Dedup.jaccardCrossJoin]]'s `freqFrom` is a PHYSICAL-strategy knob only
   * (which side the prefix order is counted over); the emitted pair set is
-  * identical for union/left/right by the prefix-filter lemma + exact verify.
+  * identical for union/left by the prefix-filter lemma + exact verify, and a
+  * right-side order is the left order with the arguments swapped.
   * The fixture stresses exactly the places a wrong order could lose recall:
   * tokens private to one side's vocabulary (they drop out of the other
   * side's ranking under a single-side order) and threshold-boundary pairs
@@ -44,18 +45,35 @@ class Round15OpsSpec extends SparkSpec {
       .filter($"jaccard" >= t)
       .as[(Long, Long, Double)].collect().toSet
 
-  test("jaccardCrossJoin: freqFrom union/left/right emit the identical " +
+  test("jaccardCrossJoin: freqFrom union/left emit the identical " +
     "pair set (= brute force), incl. at an exact-threshold boundary") {
     for (t <- Seq(0.5, 0.7)) {
       val expect = brute(t)
       assert(expect.nonEmpty, s"fixture must have cross pairs at $t")
-      for (side <- Seq("union", "left", "right")) {
+      for (side <- Seq("union", "left")) {
         val got = Dedup.jaccardCrossJoin(lhs, rhs, "toks", "id", Seq("lang"),
             t, freqFrom = side)
           .as[(Long, Long, Double)].collect().toSet
         assert(got == expect, s"freqFrom=$side t=$t: $got vs $expect")
       }
     }
+  }
+
+  test("jaccardCrossJoin: a right-side order is the left order over swapped " +
+    "arguments — same pair set (= brute force) once id_l/id_r swap back") {
+    for (t <- Seq(0.5, 0.7)) {
+      val got = Dedup.jaccardCrossJoin(rhs, lhs, "toks", "id", Seq("lang"),
+          t, freqFrom = "left")
+        .select($"id_r".as("id_l"), $"id_l".as("id_r"), $"jaccard")
+        .as[(Long, Long, Double)].collect().toSet
+      assert(got == brute(t), s"swapped left order t=$t: $got")
+    }
+  }
+
+  test("jaccardCrossJoin: freqFrom accepts only union|left") {
+    val e = intercept[IllegalArgumentException](
+      Dedup.jaccardCrossJoin(lhs, rhs, "toks", "id", Seq("lang"), 0.5, freqFrom = "right"))
+    assert(e.getMessage.contains("swap the arguments"), e.getMessage)
   }
 
   test("jaccardCrossJoin: all three single-side physical strategies emit " +
