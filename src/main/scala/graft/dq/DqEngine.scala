@@ -1,7 +1,7 @@
 package graft.dq
 
 import graft.dq.Dqdl._
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
 
@@ -19,8 +19,9 @@ case class QuarantineResult(passed: DataFrame, failed: DataFrame,
 /** Compiles parsed DQDL rules to Spark and evaluates them with the reference's
   * three action tiers (dataquality_check.py:116-258).
   *
-  * Scale design: all aggregate metrics of a ruleset are folded into ONE
-  * `df.agg(...)` pass (the reference's Glue DQ evaluates per-ruleset too); the
+  * Scale design: the aggregate metrics of a ruleset's three tiers and the
+  * quarantine split's row counts are folded into ONE `df.agg(...)` pass
+  * ([[RulesetPass]]; the reference's Glue DQ evaluates per-ruleset too); the
   * row-level quarantine split is a pair of complementary filters over one
   * boolean column — no extra shuffle. Each `CustomSql` rule is its own Spark
   * job by nature (arbitrary SQL over a temp view named `primary`).
@@ -96,16 +97,13 @@ class DqEngine(quarantineSink: Option[(DataFrame, String) => Unit] = None) {
 
   // --------------------------------------------------------- dataset evaluation
 
-  /** Evaluate rules dataset-level: one combined agg pass for metric rules plus
-    * one spark.sql per CustomSql (temp view `primary`). */
-  def evaluateDataset(df: DataFrame, rules: Seq[String]): Seq[RuleOutcome] = {
-    val parsed = rules.map(r => r -> Dqdl.parse(r))
-
-    // Collect (metricName, aggExpr) for every leaf that needs aggregation.
-    val aggs = scala.collection.mutable.LinkedHashMap.empty[String, Column]
-    def collect(e: Expr): Unit = e match {
-      case And(l, r) => collect(l); collect(r)
-      case Or(l, r)  => collect(l); collect(r)
+  /** Adds to `aggs` the aggregate each metric leaf of `e` needs, keyed by
+    * metric name: rules that share a metric share its column. */
+  private def collectAggs(df: DataFrame, e: Expr,
+                          aggs: scala.collection.mutable.LinkedHashMap[String, Column]): Unit =
+    e match {
+      case And(l, r) => collectAggs(df, l, aggs); collectAggs(df, r, aggs)
+      case Or(l, r)  => collectAggs(df, l, aggs); collectAggs(df, r, aggs)
       case Leaf(rule) => rule match {
         // NULL predicate results count as VIOLATIONS (coalesce to false):
         // a plain avg would skip them and report an all-NULL column as 100%
@@ -141,119 +139,186 @@ class DqEngine(quarantineSink: Option[(DataFrame, String) => Unit] = None) {
         case _ => ()
       }
     }
-    parsed.foreach { case (_, e) => collect(e) }
 
-    val metrics: Map[String, Double] =
-      if (aggs.isEmpty) Map.empty
-      else {
-        val row = df.agg(aggs.values.head, aggs.values.tail.toSeq: _*).head()
-        aggs.keys.zipWithIndex.map { case (k, i) =>
-          k -> (if (row.isNullAt(i)) 1.0 else row.getDouble(i)) // empty frame → vacuous pass
-        }.toMap
-      }
-
-    def verdict(e: Expr): (Boolean, Option[Double], Option[String]) = e match {
-      case And(l, r) =>
-        val (p1, m1, r1) = verdict(l); val (p2, _, r2) = verdict(r)
-        (p1 && p2, m1, Seq(r1, r2).flatten.headOption)
-      case Or(l, r) =>
-        val (p1, m1, r1) = verdict(l); val (p2, _, r2) = verdict(r)
-        (p1 || p2, m1, if (p1 || p2) None else Seq(r1, r2).flatten.headOption)
-      case Leaf(rule) => rule match {
-        case ColumnValues(c, _) if !df.columns.contains(c) =>
-          (false, None, Some(s"column $c does not exist"))
-        case r @ ColumnValues(_, _) =>
-          val m = metrics(s"cv:${r.describe}")
-          (m == 1.0, Some(m), if (m == 1.0) None else Some(f"compliance ${m * 100}%.2f%%"))
-        case ColumnDataType(c, t) if !df.columns.contains(c) =>
-          (false, None, Some(s"column $c does not exist"))
-        case ColumnDataType(c, t) =>
-          val m = metrics(s"cdt:$c:$t")
-          (m == 1.0, Some(m), if (m == 1.0) None else Some(f"castable ${m * 100}%.2f%%"))
-        case Completeness(c, _, _) if !df.columns.contains(c) =>
-          (false, None, Some(s"column $c does not exist"))
-        case Completeness(c, op, t) =>
-          val m = metrics(s"comp:$c")
-          (cmpD(m, op, t), Some(m), if (cmpD(m, op, t)) None else Some(f"completeness $m%.4f not $op $t"))
-        case ColumnExists(c) =>
-          (df.columns.contains(c), None,
-            if (df.columns.contains(c)) None else Some(s"column $c does not exist"))
-        case IsComplete(c) if !df.columns.contains(c) =>
-          (false, None, Some(s"column $c does not exist"))
-        case IsComplete(c) =>
-          val m = metrics(s"comp:$c")
-          (m == 1.0, Some(m), if (m == 1.0) None else Some(f"completeness $m%.4f < 1.0"))
-        case IsUnique(c) if !df.columns.contains(c) =>
-          (false, None, Some(s"column $c does not exist"))
-        case IsUnique(c) =>
-          val m = metrics(s"uniq:$c")
-          (m == 1.0, Some(m), if (m == 1.0) None else Some("duplicate values present"))
-        case RowCount(op, n) =>
-          val m = metrics("rowcount")
-          (cmpD(m, op, n), Some(m), if (cmpD(m, op, n)) None else Some(f"row count $m%.0f not $op $n"))
-        case AggRule(agg, c, _, _) if !df.columns.contains(c) =>
-          (false, None, Some(s"column $c does not exist"))
-        case AggRule(agg, c, op, n) =>
-          val m = metrics(s"agg:$agg:$c")
-          (cmpD(m, op, n), Some(m), if (cmpD(m, op, n)) None else Some(f"$agg $m%.4f not $op $n"))
-        case ColumnLength(c, _, _) if !df.columns.contains(c) =>
-          (false, None, Some(s"column $c does not exist"))
-        case r @ ColumnLength(_, _, _) =>
-          val m = metrics(s"len:${r.describe}")
-          (m == 1.0, Some(m), if (m == 1.0) None else Some(f"length compliance ${m * 100}%.2f%%"))
-        case CustomSql(sql, cmpOpt) =>
-          // same registration+analysis atomicity as markByRules
-          val res = DqEngine.primaryViewLock.synchronized {
-            df.createOrReplaceTempView("primary")
-            df.sparkSession.sql(sql)
-          }
-          cmpOpt match {
-            case Some((op, n)) =>
-              // empty result (e.g. aggregate + HAVING with no groups) → NaN,
-              // which fails every comparator, instead of head() throwing
-              val v = res.limit(1).collect().headOption
-                .flatMap(r => Option(r.get(0))).map(_.toString.toDouble)
-                .getOrElse(Double.NaN)
-              (cmpD(v, op, n), Some(v), if (cmpD(v, op, n)) None else Some(s"custom sql returned $v, expected $op $n"))
-            case None =>
-              val c = res.limit(1).count()
-              (c > 0, Some(c.toDouble), if (c > 0) None else Some("custom sql returned no rows"))
-          }
-      }
-    }
-
-    parsed.map { case (text, e) =>
-      val (p, m, reason) = verdict(e)
-      RuleOutcome(text, p, m, reason)
+  /** A rule's (passed, metric, failure reason) from the pass's `metrics`;
+    * a CustomSql rule runs its own query over the temp view `primary`. */
+  private def verdict(df: DataFrame, metrics: Map[String, Double],
+                      e: Expr): (Boolean, Option[Double], Option[String]) = e match {
+    case And(l, r) =>
+      val (p1, m1, r1) = verdict(df, metrics, l); val (p2, _, r2) = verdict(df, metrics, r)
+      (p1 && p2, m1, Seq(r1, r2).flatten.headOption)
+    case Or(l, r) =>
+      val (p1, m1, r1) = verdict(df, metrics, l); val (p2, _, r2) = verdict(df, metrics, r)
+      (p1 || p2, m1, if (p1 || p2) None else Seq(r1, r2).flatten.headOption)
+    case Leaf(rule) => rule match {
+      case ColumnValues(c, _) if !df.columns.contains(c) =>
+        (false, None, Some(s"column $c does not exist"))
+      case r @ ColumnValues(_, _) =>
+        val m = metrics(s"cv:${r.describe}")
+        (m == 1.0, Some(m), if (m == 1.0) None else Some(f"compliance ${m * 100}%.2f%%"))
+      case ColumnDataType(c, t) if !df.columns.contains(c) =>
+        (false, None, Some(s"column $c does not exist"))
+      case ColumnDataType(c, t) =>
+        val m = metrics(s"cdt:$c:$t")
+        (m == 1.0, Some(m), if (m == 1.0) None else Some(f"castable ${m * 100}%.2f%%"))
+      case Completeness(c, _, _) if !df.columns.contains(c) =>
+        (false, None, Some(s"column $c does not exist"))
+      case Completeness(c, op, t) =>
+        val m = metrics(s"comp:$c")
+        (cmpD(m, op, t), Some(m), if (cmpD(m, op, t)) None else Some(f"completeness $m%.4f not $op $t"))
+      case ColumnExists(c) =>
+        (df.columns.contains(c), None,
+          if (df.columns.contains(c)) None else Some(s"column $c does not exist"))
+      case IsComplete(c) if !df.columns.contains(c) =>
+        (false, None, Some(s"column $c does not exist"))
+      case IsComplete(c) =>
+        val m = metrics(s"comp:$c")
+        (m == 1.0, Some(m), if (m == 1.0) None else Some(f"completeness $m%.4f < 1.0"))
+      case IsUnique(c) if !df.columns.contains(c) =>
+        (false, None, Some(s"column $c does not exist"))
+      case IsUnique(c) =>
+        val m = metrics(s"uniq:$c")
+        (m == 1.0, Some(m), if (m == 1.0) None else Some("duplicate values present"))
+      case RowCount(op, n) =>
+        val m = metrics("rowcount")
+        (cmpD(m, op, n), Some(m), if (cmpD(m, op, n)) None else Some(f"row count $m%.0f not $op $n"))
+      case AggRule(agg, c, _, _) if !df.columns.contains(c) =>
+        (false, None, Some(s"column $c does not exist"))
+      case AggRule(agg, c, op, n) =>
+        val m = metrics(s"agg:$agg:$c")
+        (cmpD(m, op, n), Some(m), if (cmpD(m, op, n)) None else Some(f"$agg $m%.4f not $op $n"))
+      case ColumnLength(c, _, _) if !df.columns.contains(c) =>
+        (false, None, Some(s"column $c does not exist"))
+      case r @ ColumnLength(_, _, _) =>
+        val m = metrics(s"len:${r.describe}")
+        (m == 1.0, Some(m), if (m == 1.0) None else Some(f"length compliance ${m * 100}%.2f%%"))
+      case CustomSql(sql, cmpOpt) =>
+        // same registration+analysis atomicity as markByRules
+        val res = DqEngine.primaryViewLock.synchronized {
+          df.createOrReplaceTempView("primary")
+          df.sparkSession.sql(sql)
+        }
+        cmpOpt match {
+          case Some((op, n)) =>
+            // empty result (e.g. aggregate + HAVING with no groups) → NaN,
+            // which fails every comparator, instead of head() throwing
+            val v = res.limit(1).collect().headOption
+              .flatMap(r => Option(r.get(0))).map(_.toString.toDouble)
+              .getOrElse(Double.NaN)
+            (cmpD(v, op, n), Some(v), if (cmpD(v, op, n)) None else Some(s"custom sql returned $v, expected $op $n"))
+          case None =>
+            val c = res.limit(1).count()
+            (c > 0, Some(c.toDouble), if (c > 0) None else Some("custom sql returned no rows"))
+        }
     }
   }
+
+  /** A row-level CustomSql rule: a semi-join on the keys its query returns. */
+  private def isSemiJoin(e: Expr): Boolean = e match {
+    case Leaf(CustomSql(_, None)) => true
+    case _ => false
+  }
+
+  /** One ruleset's three tiers over ONE metrics pass of `df`: the dataset
+    * metrics of every tier's rules and the quarantine split's row counts
+    * share a single `df.agg` (each separate aggregate is 2–3 Spark jobs
+    * under AQE). Lazy: the aggregate runs when the first verdict or count
+    * is read, and a tier's CustomSql queries run when that tier's verdicts
+    * are first read, so a caller keeps the reference's side-effect order
+    * (warn, then quarantine, then halt). */
+  final class RulesetPass private[DqEngine] (df: DataFrame, warnRules: Seq[String],
+                                             quarantineRules: Seq[String],
+                                             haltRules: Seq[String]) {
+    private val quarantineExprs = quarantineRules.map(Dqdl.parse)
+    // a semi-join rule's per-row verdict needs its join: the split is then
+    // counted over the marked frame, not in this pass
+    private val semiJoin = quarantineExprs.exists(isSemiJoin)
+    private val aggs = scala.collection.mutable.LinkedHashMap.empty[String, Column]
+    (warnRules ++ quarantineRules ++ haltRules).foreach(r => collectAggs(df, Dqdl.parse(r), aggs))
+    // the quarantine tier's row-level predicates, conjoined; its
+    // dataset-level rules fold in on the driver (see `counts`)
+    private val rowPass: Option[Column] =
+      if (quarantineRules.isEmpty || semiJoin) None
+      else Some(quarantineExprs.flatMap(rowPredicate(df, _)).foldLeft(lit(true))(_ && _))
+    private val columns = aggs.values.toSeq ++
+      rowPass.toSeq.flatMap(p => Seq(count(lit(1)), count(when(p, 1))))
+    private lazy val row: Option[Row] =
+      if (columns.isEmpty) None else Some(df.agg(columns.head, columns.tail: _*).head())
+    private lazy val metrics: Map[String, Double] = row.fold(Map.empty[String, Double]) { r =>
+      aggs.keys.zipWithIndex.map { case (k, i) =>
+        k -> (if (r.isNullAt(i)) 1.0 else r.getDouble(i)) // empty frame → vacuous pass
+      }.toMap
+    }
+    private def outcomes(rules: Seq[String]): Seq[RuleOutcome] = rules.map { text =>
+      val (p, m, reason) = verdict(df, metrics, Dqdl.parse(text))
+      RuleOutcome(text, p, m, reason)
+    }
+
+    lazy val warn: Seq[RuleOutcome] = outcomes(warnRules)
+    lazy val quarantine: Seq[RuleOutcome] = outcomes(quarantineRules)
+    lazy val halt: Seq[RuleOutcome] = outcomes(haltRules)
+
+    private lazy val marked = markByRules(df, quarantineRules, () => quarantine)
+    /** Rows that pass every quarantine rule. */
+    def passed: DataFrame = marked._1.filter(col("__dq_pass_all")).drop(marked._2: _*)
+    /** Rows that fail a quarantine rule. */
+    def failed: DataFrame = marked._1.filter(!col("__dq_pass_all")).drop(marked._2: _*)
+
+    /** (rows, passing rows) of the quarantine split; (0, 0) without
+      * quarantine rules. The pass counts the rows that meet every row-level
+      * rule; a failed dataset-level rule then makes the passing count 0 —
+      * the `lit(passed)` fold [[markByRules]] applies per row. A CustomSql
+      * semi-join is counted over the marked frame instead. */
+    lazy val counts: (Long, Long) =
+      if (quarantineRules.isEmpty) (0L, 0L)
+      else if (semiJoin) {
+        val r = marked._1.agg(count(lit(1)), count(when(col("__dq_pass_all"), 1))).head()
+        (r.getLong(0), r.getLong(1))
+      } else {
+        val r = row.get
+        val datasetFailed = quarantineExprs.zip(quarantine).exists { case (e, o) =>
+          rowPredicate(df, e).isEmpty && !o.passed
+        }
+        (r.getLong(aggs.size), if (datasetFailed) 0L else r.getLong(aggs.size + 1))
+      }
+  }
+
+  /** The tiers' shared metrics pass over `df` (see [[RulesetPass]]); runs
+    * nothing until a verdict or count is read. */
+  private[graft] def pass(df: DataFrame, warnRules: Seq[String] = Nil,
+                          quarantineRules: Seq[String] = Nil,
+                          haltRules: Seq[String] = Nil): RulesetPass =
+    new RulesetPass(df, warnRules, quarantineRules, haltRules)
+
+  /** Evaluate rules dataset-level: one combined agg pass for metric rules plus
+    * one spark.sql per CustomSql (temp view `primary`). */
+  def evaluateDataset(df: DataFrame, rules: Seq[String]): Seq[RuleOutcome] =
+    pass(df, warnRules = rules).warn
 
   // ------------------------------------------------------------------- actions
 
   /** warn_rules: evaluate + log; never mutates the frame.
     * Ref: dataquality_check.py:145-171. */
-  def runWarn(df: DataFrame, rules: Seq[String]): Seq[RuleOutcome] = {
-    val outcomes = evaluateDataset(df, rules)
+  def runWarn(df: DataFrame, rules: Seq[String]): Seq[RuleOutcome] =
+    logWarnings(pass(df, warnRules = rules).warn)
+
+  private def logWarnings(outcomes: Seq[RuleOutcome]): Seq[RuleOutcome] = {
     outcomes.filterNot(_.passed).foreach(o =>
       System.err.println(s"[dq][warn] ${o.rule}: ${o.failureReason.getOrElse("")}"))
     outcomes
   }
 
   /** halt_rules: raise if any rule fails. Ref: dataquality_check.py:116-142. */
-  def runHalt(df: DataFrame, rules: Seq[String]): Seq[RuleOutcome] = {
-    val outcomes = evaluateDataset(df, rules)
+  def runHalt(df: DataFrame, rules: Seq[String]): Seq[RuleOutcome] =
+    haltOn(pass(df, haltRules = rules).halt)
+
+  private def haltOn(outcomes: Seq[RuleOutcome]): Seq[RuleOutcome] = {
     if (outcomes.exists(!_.passed))
       throw new RuntimeException("Data quality check failed: " +
         outcomes.filterNot(_.passed).map(_.rule).mkString("; "))
     outcomes
   }
 
-  /** quarantine_rules: row-level split. Rows failing ANY rule are quarantined
-    * (with `quarantine_timestamp`); dataset-only rules apply their verdict to
-    * every row; row-level CustomSql keeps rows whose projected key(s) appear in
-    * the query result (left-semi join — the reference's process_rows
-    * semantics). Throws when every row fails.
-    * Ref: dataquality_check.py:175-258. */
   /** The quarantine tier's marked frame: every input row plus the combined
     * `__dq_pass_all` flag (and per-CustomSql marker columns to drop).
     * Shared by [[runQuarantine]] (the reference's batch semantics: sink,
@@ -263,9 +328,9 @@ class DqEngine(quarantineSink: Option[(DataFrame, String) => Unit] = None) {
                           outcomesF: () => Seq[RuleOutcome]): (DataFrame, Seq[String]) = {
     val parsed = rules.map(r => r -> Dqdl.parse(r))
     // dataset-level verdicts are only needed when a rule falls through to
-    // the fallback branch — computed at most once, and NOT AT ALL for
+    // the fallback branch — read at most once, and NOT AT ALL for
     // row-level-only rulesets (the streaming gate's per-batch hot path:
-    // evaluateDataset is a full metrics pass and re-runs CustomSql)
+    // the verdicts need the metrics pass and re-run CustomSql)
     lazy val outcomes = outcomesF()
     // Combine row predicates; CustomSql row-level rules become semi-joins.
     var current = df
@@ -310,56 +375,53 @@ class DqEngine(quarantineSink: Option[(DataFrame, String) => Unit] = None) {
     * same predicate compiler, same CustomSql semi-joins, same
     * dataset-level fold. */
   def splitByRules(df: DataFrame, rules: Seq[String]): (DataFrame, DataFrame) = {
-    val (marked, dropCols) = markByRules(df, rules, () => evaluateDataset(df, rules))
-    (marked.filter(col("__dq_pass_all")).drop(dropCols: _*),
-      marked.filter(!col("__dq_pass_all")).drop(dropCols: _*))
+    val p = pass(df, quarantineRules = rules)
+    (p.passed, p.failed)
   }
 
+  /** quarantine_rules: row-level split. Rows failing ANY rule are quarantined
+    * (with `quarantine_timestamp`); dataset-only rules apply their verdict to
+    * every row; row-level CustomSql keeps rows whose projected key(s) appear in
+    * the query result (left-semi join — the reference's process_rows
+    * semantics). Throws when every row fails.
+    * Ref: dataquality_check.py:175-258. */
   def runQuarantine(df: DataFrame, rules: Seq[String],
-                    sinkName: String = "quarantine"): QuarantineResult = {
-    val outcomes = evaluateDataset(df, rules)
-    val (marked, dropCols) = markByRules(df, rules, () => outcomes)
-    val passed = marked.filter(col("__dq_pass_all")).drop(dropCols: _*)
-    val failed = marked.filter(!col("__dq_pass_all")).drop(dropCols: _*)
-      .withColumn("quarantine_timestamp", current_timestamp())
+                    sinkName: String = "quarantine"): QuarantineResult =
+    quarantine(pass(df, quarantineRules = rules), sinkName)
 
-    // one pass for both counts (two isEmpty probes would each run the plan)
-    val cnts = marked.agg(count(lit(1)), count(when(col("__dq_pass_all"), 1))).head()
-    val (total, passCount) = (cnts.getLong(0), cnts.getLong(1))
-
+  private def quarantine(p: RulesetPass, sinkName: String): QuarantineResult = {
+    val failed = p.failed.withColumn("quarantine_timestamp", current_timestamp())
+    val (total, passCount) = p.counts
     if (total > passCount) quarantineSink.foreach(sink => sink(failed, sinkName))
-
     if (total > 0 && passCount == 0)
       throw new RuntimeException("Data quality check quarantined all rows")
-    QuarantineResult(passed, failed, outcomes)
+    QuarantineResult(p.passed, failed, p.quarantine)
   }
 
   /** Full ruleset orchestration, matching run_data_quality ordering and the
-    * halt-runs-on-PRE-quarantine-frame quirk (dataquality_check.py:296-316).
+    * halt-runs-on-PRE-quarantine-frame quirk (dataquality_check.py:296-316):
+    * every tier's metrics come from ONE pass over `df`, then warn is logged,
+    * the quarantine sink written, and halt thrown, in that order.
     * Rule outcomes from every tier are appended to [[resultsLog]] (K7 — the
     * reference's DynamoDB DQ-results table); flush with [[writeResults]]. */
   def runRuleset(df: DataFrame, ruleset: Map[String, Seq[String]],
                  rulesetName: String = "ruleset"): DataFrame = {
     if (ruleset.isEmpty) return df
-    ruleset.get("warn_rules").foreach { rules =>
-      record(rulesetName, "warn", runWarn(df, rules))
-    }
-    val filtered = ruleset.get("quarantine_rules") match {
-      case Some(q) =>
-        val res = runQuarantine(df, q, rulesetName)
+    val p = pass(df, ruleset.getOrElse("warn_rules", Nil),
+      ruleset.getOrElse("quarantine_rules", Nil), ruleset.getOrElse("halt_rules", Nil))
+    if (ruleset.contains("warn_rules"))
+      record(rulesetName, "warn", logWarnings(p.warn))
+    val filtered =
+      if (ruleset.contains("quarantine_rules")) {
+        val res = quarantine(p, rulesetName)
         record(rulesetName, "quarantine", res.outcomes)
         res.passed
-      case None => df
-    }
-    ruleset.get("halt_rules").foreach { rules =>
-      // evaluate once, record, THEN throw — runHalt would discard the
-      // outcomes it computed when throwing (NOTE: original frame, the
-      // reference's pre-quarantine halt quirk)
-      val outcomes = evaluateDataset(df, rules)
-      record(rulesetName, "halt", outcomes)
-      if (outcomes.exists(!_.passed))
-        throw new RuntimeException("Data quality check failed: " +
-          outcomes.filterNot(_.passed).map(_.rule).mkString("; "))
+      } else df
+    // record, THEN throw (NOTE: the original frame, the reference's
+    // pre-quarantine halt quirk)
+    if (ruleset.contains("halt_rules")) {
+      record(rulesetName, "halt", p.halt)
+      haltOn(p.halt)
     }
     filtered
   }

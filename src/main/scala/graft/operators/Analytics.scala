@@ -95,8 +95,9 @@ object Analytics {
         else matches.join(frontier, Seq("__u"))
           .filter(col("__o") > col("__reached"))
           .groupBy(col("__u")).agg(min(col("__o")).as("__reached"))
-      frontier = stepHits.localCheckpoint(true) // feeds count AND next step
-      (i + 1, step, frontier.count())
+      val (hits, n) = Checkpoints.counted(stepHits) // feeds count AND next step
+      frontier = hits
+      (i + 1, step, n)
     }
     val s = events.sparkSession
     import s.implicits._

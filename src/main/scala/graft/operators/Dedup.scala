@@ -400,15 +400,6 @@ object Dedup {
       .withColumn("sz", size(col("toks")))
       .filter(col("sz") > 0)
 
-  /** `df` materialized (local checkpoint) with its row count, in ONE job
-    * after its shuffle stages: the job that stores the final stage also
-    * counts it. An eager checkpoint followed by `count()` is that job plus
-    * two more under AQE (partial aggregate, then the final exchange). */
-  private def checkpointCounted(df: DataFrame): (DataFrame, Long) = {
-    val c = df.localCheckpoint(false)
-    (c, c.queryExecution.toRdd.count())
-  }
-
   /** Token frequencies over the given bases — the shared canonical order. */
   private def tokenFreq(bases: Seq[DataFrame]): DataFrame =
     bases.map(_.select(explode(col("toks")).as("token"))).reduce(_ unionByName _)
@@ -573,7 +564,7 @@ object Dedup {
     val (lPrefix, rPrefix) =
       if (union) windowed(tokenFreq(Seq(lBase, rBase)))
       else {
-        val (f, nf) = checkpointCounted(tokenFreq(Seq(lBase)))
+        val (f, nf) = Checkpoints.counted(tokenFreq(Seq(lBase)))
         val stringToks = lBase.schema("toks").dataType match {
           case org.apache.spark.sql.types.ArrayType(
             org.apache.spark.sql.types.StringType, _) => true
@@ -619,7 +610,7 @@ object Dedup {
     val (candidates, rVerify) =
       if (union) (candidates0, rBase)
       else {
-        val (c, nc) = checkpointCounted(candidates0)
+        val (c, nc) = Checkpoints.counted(candidates0)
         val hinted = if (nc <= freqBroadcastMaxRows) broadcast(c) else c
         (hinted, tokenSetBaseLazy(
           right.join(hinted.select(col("id_r").as(idCol)), Seq(idCol), "left_semi"),

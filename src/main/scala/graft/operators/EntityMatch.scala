@@ -187,19 +187,18 @@ object EntityMatch {
       // bounded on a frame that is already distinct-tuple-collapsed. Both
       // salted sides are EXPLICITLY co-repartitioned on (block, salt) —
       // explicit numPartitions is exempt from AQE coalescing, which is
-      // what serialized the unguarded run. The hot map is eager (one
-      // aggregate-sized job, same control-flow-scalar pattern as the
+      // what serialized the unguarded run. The hot map is materialized and
+      // counted in one job (same control-flow-scalar pattern as the
       // isEmpty gate above): no hot blocks → the common path is untouched,
       // no extra joins, no salt column, no repartition.
-      val hotMap = prDistinct.groupBy(col("__block"))
+      val (hotMap, hotBlocks) = Checkpoints.counted(prDistinct.groupBy(col("__block"))
         .agg(count(lit(1)).as("__tup_cnt"))
         .filter(col("__tup_cnt") > saltTupleThreshold)
         .select(col("__block"), least(lit(64),
           ceil(col("__tup_cnt") / lit(math.max(1, saltTupleThreshold / 8))))
-          .cast("int").as("__nsalt"))
-        .localCheckpoint(true)
+          .cast("int").as("__nsalt")))
       val cands =
-        if (hotMap.isEmpty) leftFrame.join(prDistinct, Seq("__block"))
+        if (hotBlocks == 0) leftFrame.join(prDistinct, Seq("__block"))
         else {
           val np = incoming.sparkSession.sessionState.conf.numShufflePartitions
           val saltHashCols =

@@ -223,9 +223,10 @@ object GraphOps {
       .localCheckpoint(true)
     // changed_0: new nodes only (stored iteration-0 labels are ids, as are
     // the union run's)
-    var changed = newIds.select(col("id"), col("id").as("label"))
-      .localCheckpoint(true)
-    var changedSmall = changed.count() <= broadcastMaxRows
+    val (newLabels, newCount) =
+      Checkpoints.counted(newIds.select(col("id"), col("id").as("label")))
+    var changed = newLabels
+    var changedSmall = newCount <= broadcastMaxRows
     var out = trace.filter(col("iter") === 0)
       .unionByName(changed.withColumn("iter", lit(0)))
     // Every join below pairs an O(graph) frame with a FRONTIER-BOUNDED
@@ -244,28 +245,27 @@ object GraphOps {
       val prevStored = trace.filter(col("iter") === i - 1).select(col("id"), col("label"))
       def ch(df: DataFrame): DataFrame = if (changedSmall) broadcast(df) else df
       // frontier: dirty adjacency ∪ neighbors of last round's label changes
-      val frontier = dirtyAdj.unionByName(
+      val (frontier, frontierCount) = Checkpoints.counted(dirtyAdj.unionByName(
           symUnion.join(ch(changed.select(col("id").as("b"))), Seq("b"), "left_semi")
             .select(col("a").as("id")))
-        .distinct().localCheckpoint(true)
+        .distinct())
       // one count per round decides every frontier hint
-      val frontierIsSmall = frontier.count() <= broadcastMaxRows
+      val frontierIsSmall = frontierCount <= broadcastMaxRows
       def fh(df: DataFrame): DataFrame = if (frontierIsSmall) broadcast(df) else df
       // frontier-incident edges, materialized ONCE: the vote join's left
       // side AND the source of the neighbor-id cut below
-      val frontEdges = symUnion
-        .join(fh(frontier.select(col("id").as("a"))), Seq("a"), "left_semi")
-        .localCheckpoint(true)
+      val (frontEdges, frontEdgeCount) = Checkpoints.counted(symUnion
+        .join(fh(frontier.select(col("id").as("a"))), Seq("a"), "left_semi"))
       // bNeeded stays LAZY (guide §1.2): its distinct runs once inside the
       // broadcast build (the two bh() uses below are identical subtrees —
       // exchange reuse), so a per-round localCheckpoint + count of it were
       // two driver jobs and a shuffle materialization for a frame with one
       // other consumer. The hint is guarded by |frontEdges| ≥ |bNeeded| —
-      // a NARROW count over the already-checkpointed edge blocks; the
+      // counted by the job that checkpoints the edges; the
       // bound is conservative (hint downgrade on huge edge sets, never an
       // oversized broadcast).
       val bNeeded = frontEdges.select(col("b").as("id")).distinct()
-      val bSmall = frontEdges.count() <= broadcastMaxRows
+      val bSmall = frontEdgeCount <= broadcastMaxRows
       def bh(df: DataFrame): DataFrame = if (bSmall) broadcast(df) else df
       // i−1 labels of the union run, restricted to the neighbors the vote
       // join reads: stored slice cut map-side to bNeeded, the (small)
@@ -291,9 +291,9 @@ object GraphOps {
       // frontier ids FIRST (map-side via the broadcast), so the change
       // detection never shuffles the trace.
       val curStoredF = curStored.join(fh(frontier), Seq("id"), "left_semi")
-      val override_ = recomputed.join(curStoredF, Seq("id", "label"), "left_anti")
-        .localCheckpoint(true)
-      val overrideSmall = override_.count() <= broadcastMaxRows
+      val (override_, overrideCount) =
+        Checkpoints.counted(recomputed.join(curStoredF, Seq("id", "label"), "left_anti"))
+      val overrideSmall = overrideCount <= broadcastMaxRows
       val full = curStored
         .join(if (overrideSmall) broadcast(override_) else override_,
           Seq("id"), "left_anti")

@@ -155,16 +155,15 @@ object PageRank {
     val outdeg = union.groupBy(col(srcCol)).agg(count(lit(1)).as("__deg"))
     val degEdges = union.join(outdeg, srcCol).localCheckpoint(true)
     // dirty sources: out-degree changed (covers new edges' contributions)
-    val dirtySrc = batchEdges.select(col(srcCol).as("id")).distinct()
-      .localCheckpoint(true)
-    val nDirtySrc = dirtySrc.count() // once — feeds every round's touched bound
+    // counted once — feeds every round's touched bound
+    val (dirtySrc, nDirtySrc) =
+      Checkpoints.counted(batchEdges.select(col(srcCol).as("id")).distinct())
     val storedIds = trace.filter(col("iter") === 0).select(col("id"))
     val newIds = batchEdges.select(col(srcCol).as("id"))
       .unionByName(batchEdges.select(col(dstCol).as("id"))).distinct()
       .join(storedIds, Seq("id"), "left_anti").localCheckpoint(true)
     // changed_0: new nodes only (iteration 0 is uniform scale everywhere)
-    var changed = newIds.withColumn("pr", lit(scale)).localCheckpoint(true)
-    var changedCount = changed.count()
+    var (changed, changedCount) = Checkpoints.counted(newIds.withColumn("pr", lit(scale)))
     var changedSmall = changedCount <= broadcastMaxRows
     var out = trace.filter(col("iter") === 0)
       .unionByName(changed.withColumn("iter", lit(0)))
@@ -190,25 +189,24 @@ object PageRank {
       // build anyway. Conservative: the bound can only downgrade the hint.
       val touchedSrc = dirtySrc.unionByName(changed.select(col("id"))).distinct()
       val touchedSmall = nDirtySrc + changedCount <= broadcastMaxRows
-      val frontier = degEdges
+      val (frontier, frontierCount) = Checkpoints.counted(degEdges
         .join(if (touchedSmall) broadcast(touchedSrc.withColumnRenamed("id", srcCol))
               else touchedSrc.withColumnRenamed("id", srcCol),
           Seq(srcCol), "left_semi")
         .select(col(dstCol).as("id"))
-        .unionByName(newIds).distinct().localCheckpoint(true)
-      val frontierIsSmall = frontier.count() <= broadcastMaxRows
+        .unionByName(newIds).distinct())
+      val frontierIsSmall = frontierCount <= broadcastMaxRows
       def fh(df: DataFrame): DataFrame = if (frontierIsSmall) broadcast(df) else df
       // edges INTO the frontier, materialized ONCE: the contribution
       // join's left side AND the source of the src-id cut below
-      val frontEdges = degEdges
-        .join(fh(frontier.withColumnRenamed("id", dstCol)), Seq(dstCol), "left_semi")
-        .localCheckpoint(true)
+      val (frontEdges, frontEdgeCount) = Checkpoints.counted(degEdges
+        .join(fh(frontier.withColumnRenamed("id", dstCol)), Seq(dstCol), "left_semi"))
       // srcNeeded stays LAZY: distinct runs once inside the broadcast
       // build (the two sh() uses are identical subtrees — exchange reuse);
-      // the hint is guarded by |frontEdges| ≥ |srcNeeded|, a NARROW count
-      // over the checkpointed edge blocks (the GraphOps bNeeded fold)
+      // the hint is guarded by |frontEdges| ≥ |srcNeeded|, counted by the
+      // job that checkpoints the edges (the GraphOps bNeeded fold)
       val srcNeeded = frontEdges.select(col(srcCol).as("id")).distinct()
-      val srcSmall = frontEdges.count() <= broadcastMaxRows
+      val srcSmall = frontEdgeCount <= broadcastMaxRows
       def sh(df: DataFrame): DataFrame = if (srcSmall) broadcast(df) else df
       // i−1 ranks of the union run, restricted to the sources the
       // contribution join reads: stored slice cut map-side, override
@@ -231,9 +229,8 @@ object PageRank {
       // change detection against the stored slice, frontier-cut map-side
       val curStored = trace.filter(col("iter") === i).select(col("id"), col("pr"))
       val curStoredF = curStored.join(fh(frontier), Seq("id"), "left_semi")
-      val override_ = recomputed.join(curStoredF, Seq("id", "pr"), "left_anti")
-        .localCheckpoint(true)
-      val overrideCount = override_.count()
+      val (override_, overrideCount) =
+        Checkpoints.counted(recomputed.join(curStoredF, Seq("id", "pr"), "left_anti"))
       val overrideSmall = overrideCount <= broadcastMaxRows
       val full = curStored
         .join(if (overrideSmall) broadcast(override_) else override_,

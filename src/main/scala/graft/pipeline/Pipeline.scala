@@ -64,13 +64,19 @@ class PipelineRunner(spark: SparkSession) {
       case MappingRow(_, dest, Some(w), _) if isFixed =>
         Sources.FixedWidthField(dest, w.toInt)
     }
+    // read once per call: a lazy local checkpoint that the `before` audit's
+    // job fills. Not cache(): the CacheManager matches cached plans by
+    // path, so a file re-delivered to the same path in the same session
+    // would be served from the first delivery's cache, and every call
+    // would leave a cache entry behind
     val initial = Sources.read(spark, args.sourcePath, spec.inputSpec, fixedFields)
-    initial.cache()
+      .localCheckpoint(false)
     lineage.update(initial, "read", args.sourcePath)
-    lineage.numericAudit(initial, "before")
+    val before = lineage.numericAudit(initial, "before")
 
-    // 2. empty-input abort (etl_collect_to_cleanse.py:249-250)
-    if (initial.isEmpty)
+    // 2. empty-input abort (etl_collect_to_cleanse.py:249-250), from the
+    // audit's row count
+    if (before("rowcount") == 0.0)
       throw new RuntimeException("No data found in source file; aborting")
 
     // 3. mapping (or generated clean-names mapping when absent)
@@ -115,16 +121,17 @@ class PipelineRunner(spark: SparkSession) {
       args.partition.map { case (k, v) => k -> lit(v) } +
         ("execution_id" -> lit(args.executionId)))
 
-    // 7. DQ after_transform + audit
+    // 7. DQ after_transform
     val afterDq2 = engine.runRuleset(withPartition,
       dqRules.getOrElse("after_transform", Map.empty), "after_transform")
-    lineage.numericAudit(afterDq2, "after")
 
-    // 8. schema-evolution gate + partitioned write
+    // 8. schema-evolution gate + partitioned write, which also takes the
+    // `after` audit
     val policy = spec.inputSpec.flatMap(_.str("allow_schema_change"))
       .getOrElse(SchemaEvolution.defaultPolicy(args.environment))
-    writePartitioned(afterDq2, s"${args.databaseName}.${args.tableName}",
-      args.partition.keys.toSeq, policy)
+    lineage.auditOnWrite(afterDq2, "after")(observed =>
+      write(observed, afterDq2, s"${args.databaseName}.${args.tableName}",
+        args.partition.keys.toSeq, policy))
 
     // 9. K7: persist every recorded rule outcome next to the dataset (the
     // reference writes one DynamoDB item per rule on every job,
@@ -170,12 +177,13 @@ class PipelineRunner(spark: SparkSession) {
     val engine = new DqEngine(Some(quarantineSink(args)))
     val filtered = engine.runRuleset(df,
       dqRules.getOrElse("after_sparksql", Map.empty), "after_sparksql")
-    new Lineage(args.executionId, args.lineageSink).numericAudit(filtered, "consume")
-
     val partCols = args.partition.keys.toSeq.filter(filtered.columns.contains)
     // repartition on partition cols pre-write to avoid small files (:186)
-    val toWrite = if (partCols.nonEmpty) filtered.repartition(partCols.map(col): _*) else filtered
-    writePartitioned(toWrite, target, partCols, "permissive", overwriteAll = true)
+    def spread(df: DataFrame): DataFrame =
+      if (partCols.nonEmpty) df.repartition(partCols.map(col): _*) else df
+    new Lineage(args.executionId, args.lineageSink).auditOnWrite(filtered, "consume")(observed =>
+      write(spread(observed), spread(filtered), target, partCols, "permissive",
+        overwriteAll = true))
     viewSql.foreach(v => spark.sql(v)) // Athena/Redshift passthrough → local views
     // K7: rule outcomes land beside the ACTUAL consume target (which a
     // CREATE TABLE <t> AS prefix may have overridden), keyed by execution_id
@@ -196,7 +204,16 @@ class PipelineRunner(spark: SparkSession) {
     * that falls back to a full-table rewrite (at real scale this is the cue to
     * use a table format with native evolution — Iceberg/Delta). */
   def writePartitioned(df: DataFrame, table: String, partitionCols: Seq[String],
-                       policy: String, overwriteAll: Boolean = false): Unit = {
+                       policy: String, overwriteAll: Boolean = false): Unit =
+    write(df, df, table, partitionCols, policy, overwriteAll)
+
+  /** [[writePartitioned]] of `observed`, which is `df` with an audit
+    * attached ([[Lineage.auditOnWrite]]): every branch runs `observed`
+    * exactly once, and the widening rewrite takes the incoming partition
+    * keys from the plain `df`, so the observation is never duplicated. */
+  private def write(observed: DataFrame, df: DataFrame, table: String,
+                    partitionCols: Seq[String], policy: String,
+                    overwriteAll: Boolean = false): Unit = {
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     // zstd: ~30% smaller than snappy at similar read speed — at 100 TB the
     // scan-bytes saving dominates the extra write cpu
@@ -205,7 +222,7 @@ class PipelineRunner(spark: SparkSession) {
     ensureDatabase(table)
     val exists = spark.catalog.tableExists(table)
     if (!exists) {
-      val w = df.write.format("parquet").mode(SaveMode.Overwrite)
+      val w = observed.write.format("parquet").mode(SaveMode.Overwrite)
       (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w).saveAsTable(table)
     } else {
       val existing = spark.table(table).schema
@@ -223,9 +240,9 @@ class PipelineRunner(spark: SparkSession) {
       val targetSchema = spark.table(table).schema
       val aligned =
         if (sameTypes)
-          df.select(targetSchema.fieldNames.toIndexedSeq.map(n =>
+          observed.select(targetSchema.fieldNames.toIndexedSeq.map(n =>
             if (df.columns.contains(n)) col(n) else lit(null).cast(targetSchema(n).dataType).as(n)): _*)
-        else df
+        else observed
       if (sameTypes) {
         // dynamic partitionOverwriteMode → Overwrite replaces only the
         // incoming partitions (idempotent per-partition reload, K1);
@@ -251,7 +268,7 @@ class PipelineRunner(spark: SparkSession) {
             oldAligned.join(df.select(partitionCols.map(col): _*).distinct(),
               partitionCols, "left_anti")
           else oldAligned.limit(0)
-        val merged = oldKept.unionByName(df)
+        val merged = oldKept.unionByName(observed)
         // materialize to a scratch path (on the warehouse filesystem, so it
         // works on a real cluster) BEFORE dropping — DROP TABLE on a managed
         // table deletes its files and a spilled cache is not durable

@@ -696,9 +696,10 @@ object StreamingOps {
     *
     * Per batch, in reference order:
     *   1. WARN outcomes are evaluated and recorded; the batch always flows.
-    *   2. QUARANTINE rules split the batch row-wise
-    *      ([[graft.dq.DqEngine.splitByRules]] — the batch tier's predicate
-    *      compiler); failing rows land in `quarantineTable`, and the
+    *   2. QUARANTINE rules split the batch row-wise (the batch tiers'
+    *      predicate compiler and metrics pass, [[graft.dq.DqEngine.RulesetPass]],
+    *      which evaluates all three tiers and counts the split in one
+    *      aggregate); failing rows land in `quarantineTable`, and the
     *      tier's per-rule outcomes are recorded. Quarantining EVERY row is
     *      itself a halt (`dataquality_check.py:257-259`) — checked BEFORE
     *      the halt tier, as the reference does.
@@ -739,18 +740,11 @@ object StreamingOps {
         maintainEvery, maintain) { case GateBatch(_, b, id) =>
       val ss = b.sparkSession
       import ss.implicits._
-      val eng = new graft.dq.DqEngine()
-      def outcomesOf(rules: Seq[String]) =
-        if (rules.isEmpty) Nil else eng.evaluateDataset(b, rules)
-      val warnOut = outcomesOf(warnRules)
-      val quarOut = outcomesOf(quarantineRules)
-      val (pass, fail) =
-        if (quarantineRules.isEmpty) (b, b.limit(0))
-        else eng.splitByRules(b, quarantineRules)
-      // halt evaluates the PRE-quarantine frame (the :312 quirk)
-      val haltOut = outcomesOf(haltRules)
-      val outcomes = (warnOut.map("warn" -> _) ++
-          quarOut.map("quarantine" -> _) ++ haltOut.map("halt" -> _))
+      // every tier's metrics and the split's counts in ONE pass over the
+      // batch; halt evaluates the PRE-quarantine frame (the :312 quirk)
+      val tiers = new graft.dq.DqEngine().pass(b, warnRules, quarantineRules, haltRules)
+      val outcomes = (tiers.warn.map("warn" -> _) ++
+          tiers.quarantine.map("quarantine" -> _) ++ tiers.halt.map("halt" -> _))
         .map { case (tier, o) => (tier, o.rule, o.outcome,
           o.metric.getOrElse(Double.NaN), o.failureReason.getOrElse("")) }
         .toDF("tier", "rule", "outcome", "metric", "failure_reason")
@@ -759,14 +753,15 @@ object StreamingOps {
       // observable even when a halt below keeps the batch uncommitted
       writeBatchPartition(outcomes, resultsTable, id)
       if (quarantineRules.nonEmpty) {
-        writeBatchPartition(fail.withColumn("batch_id", lit(id)), quarantineTable, id)
-        if (pass.count() == 0L)
+        writeBatchPartition(tiers.failed.withColumn("batch_id", lit(id)), quarantineTable, id)
+        if (tiers.counts._2 == 0L)
           throw new RuntimeException(s"DQ gate at batch $id: quarantined all rows")
       }
-      val haltFailed = haltOut.filterNot(_.passed)
+      val haltFailed = tiers.halt.filterNot(_.passed)
       if (haltFailed.nonEmpty)
         throw new RuntimeException(
           s"Dataset DQ halt at batch $id: " + haltFailed.map(_.rule).mkString("; "))
+      val pass = if (quarantineRules.isEmpty) b else tiers.passed
       writeBatchPartition(pass.withColumn("batch_id", lit(id)), cleansedTable, id)
     }
   }

@@ -9,6 +9,9 @@ import sys, os, json, glob, subprocess
 import duckdb
 import pandas as pd
 
+# the checkout this script belongs to, wherever it is run from
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 OUT = sys.argv[2] if len(sys.argv) > 2 else "/tmp/graft_verify"
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
@@ -17,7 +20,7 @@ TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
 if "--skip-verify" not in sys.argv:
     r = subprocess.run(
         ["sbt", "-batch", f'runMain graft.Verify {SF} {OUT}'],
-        capture_output=True, text=True, cwd="/root/repo",
+        capture_output=True, text=True, cwd=ROOT,
         env={**os.environ, "SPARK_GRAFT_CPUS": "8"})
     if r.returncode != 0:
         print(r.stdout[-4000:]); print(r.stderr[-4000:]); sys.exit(1)
