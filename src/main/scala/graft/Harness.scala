@@ -6,9 +6,11 @@ import java.util.concurrent.atomic.AtomicLong
 import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd,
+  SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.ui.{SparkListenerSQLExecutionEnd, SparkListenerSQLExecutionStart}
 import org.apache.spark.sql.graftbridge.BusBridge
 import org.apache.spark.sql.util.QueryExecutionListener
 
@@ -69,14 +71,29 @@ object Harness {
     private val input = new AtomicLong
     private val running = new ConcurrentHashMap[Int, (Long, String)]()
     private val finished = ArrayBuffer.empty[Job]
+    // running SQL execution -> the call site of its root execution: AQE
+    // runs query stages from a helper thread, whose own call site has no
+    // graft frame
+    private val execSites = new ConcurrentHashMap[Long, String]()
+
+    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+      case s: SparkListenerSQLExecutionStart => execSites.put(s.executionId,
+        s.rootExecutionId.flatMap(r => Option(execSites.get(r.asInstanceOf[Long])))
+          .getOrElse(Option(s.description).getOrElse("")))
+      case s: SparkListenerSQLExecutionEnd => execSites.remove(s.executionId)
+      case _ =>
+    }
 
     override def onJobStart(e: SparkListenerJobStart): Unit = {
       jobs.incrementAndGet()
-      val p = Option(e.properties)
-      // an explicit call site or job description if one was set, else the
-      // short call site Spark gives the job's final stage
-      val site = p.flatMap(x => Option(x.getProperty("callSite.short")))
-        .orElse(p.flatMap(x => Option(x.getProperty("spark.job.description"))))
+      def prop(k: String) = Option(e.properties).flatMap(x => Option(x.getProperty(k)))
+      // the root execution's call site, else an explicit call site or job
+      // description if one was set, else the short call site Spark gives
+      // the job's final stage
+      val site = prop("spark.sql.execution.id").flatMap(_.toLongOption)
+        .flatMap(id => Option(execSites.get(id))).filter(_.nonEmpty)
+        .orElse(prop("callSite.short"))
+        .orElse(prop("spark.job.description"))
         .orElse(e.stageInfos.sortBy(-_.stageId).headOption.map(_.name))
         .getOrElse("")
       running.put(e.jobId, (e.time, site))

@@ -3,7 +3,7 @@ package graft.catalog
 import java.util.concurrent.{Callable, Executors, TimeUnit}
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -206,14 +206,11 @@ object Compaction {
       fs.delete(scratch, true) // stale WAL from a fully-completed prior run
       return 0
     }
-    val dataCols = meta.schema.fieldNames.filterNot(_ == "batch_id")
     // WRITE-AHEAD copy: durable before anything is deleted
     if (!fs.exists(new Path(scratch, "_SUCCESS")))
-      spark.table(table).filter(col("batch_id") <= upTo)
-        .dropDuplicates(dedupKeys)
-        .select(dataCols.map(col).toIndexedSeq: _*)
-        .write.mode(SaveMode.Overwrite).parquet(scratch.toString)
-    finishFromScratch(spark, table, upTo, sources.toSeq, dataCols.toSeq, scratch, fs)
+      TableWrite.scratch(spark.table(table).filter(col("batch_id") <= upTo)
+        .dropDuplicates(dedupKeys).drop("batch_id"), scratch.toString)
+    finishFromScratch(spark, table, upTo, sources.toSeq, scratch, fs)
     sources.length
   }
 
@@ -223,23 +220,18 @@ object Compaction {
     * idempotent against a crash at any point, which is what lets
     * [[convergeConsolidation]] replay it verbatim. */
   private def finishFromScratch(spark: SparkSession, table: String, upTo: Long,
-                                sources: Seq[Long], dataCols: Seq[String],
-                                scratch: Path, fs: FileSystem): Unit = {
-    val v = s"graft_consol_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    spark.read.parquet(scratch.toString).createOrReplaceTempView(v)
-    try spark.sql(s"INSERT OVERWRITE TABLE $table PARTITION (batch_id=$upTo) " +
-      s"SELECT ${dataCols.map(c => s"`$c`").mkString(", ")} FROM $v")
-    finally { spark.catalog.dropTempView(v); () }
+                                sources: Seq[Long], scratch: Path, fs: FileSystem): Unit = {
+    TableWrite.overwritePartition(spark.read.parquet(scratch.toString), table,
+      Seq("batch_id" -> upTo))
     sources.foreach(p =>
       spark.sql(s"ALTER TABLE $table DROP IF EXISTS PARTITION (batch_id=$p)"))
     fs.delete(scratch, true)
-    spark.catalog.refreshTable(table)
   }
 
   /** STARTUP CONVERGENCE for [[consolidateBatches]]: finish any
     * consolidation that crashed mid-swap, BEFORE a gate processes its
     * first batch. The crash window this closes: after the target
-    * partition's INSERT OVERWRITE but before every source-partition drop,
+    * partition's overwrite but before every source-partition drop,
     * rows exist in BOTH the upTo partition and the undropped sources — a
     * gate reader's `batch_id < id` range would see them twice until the
     * next maintenance tick happened to re-fold (and row-count-sensitive
@@ -291,8 +283,7 @@ object Compaction {
         // — duplicates, the exact state this verb exists to repair. Sweep.
         fs.delete(scratch, true)
       } else {
-        val dataCols = meta.schema.fieldNames.filterNot(_ == "batch_id").toSeq
-        finishFromScratch(spark, table, upTo, sources, dataCols, scratch, fs)
+        finishFromScratch(spark, table, upTo, sources, scratch, fs)
         folded += sources.length
       }
     }
@@ -380,7 +371,7 @@ object Compaction {
               } else if (kllBounds)
                 graft.operators.Layout.repartitionByKllRange(part, key, nBins)
               else part.repartitionByRange(nBins, key).sortWithinPartitions(key)
-            arranged.write.mode(SaveMode.Overwrite).parquet(s"$scratch/$i")
+            TableWrite.scratch(arranged, s"$scratch/$i")
           }
         })
       }

@@ -483,32 +483,21 @@ object FileStats {
     }
     if (fullRewrite) {
       // full-table checkpoint only here, where the whole frame is written —
-      // and BEFORE the drop (the lineage reads the table being replaced)
-      val next = nextOf(
+      // settled because the replace drops the table it reads
+      TableWrite.createOrReplace(nextOf(
         if (exists) spark.table(statsTable).drop("sb")
         else spark.createDataFrame(
           new java.util.ArrayList[org.apache.spark.sql.Row](), statsSchema))
-        .localCheckpoint(true)
-      if (exists) spark.sql(s"DROP TABLE $statsTable") // migration / rebucket
-      next.write.partitionBy("sb").mode("overwrite").saveAsTable(statsTable)
+        .localCheckpoint(true), statsTable, Seq("sb"))
       spark.sql(s"ALTER TABLE $statsTable SET TBLPROPERTIES ('$BucketsProp' = '$nb')")
     } else if (changedBuckets.nonEmpty) {
       // materialize ONLY the changed buckets (the whole point of the
       // bucketed layout — a full-frame checkpoint would pay O(total stats
       // bytes) per refresh); lineage is already settled, every input is a
       // checkpointed or driver-local frame
-      val delta = nextOf(spark.table(statsTable)
+      TableWrite.overwritePresent(nextOf(spark.table(statsTable)
           .filter(col("sb").isin(changedBuckets.toSeq: _*)).drop("sb"))
-        .localCheckpoint(true)
-      // insertInto reads the SESSION conf, not the per-write option
-      // (TableFormat.mergeUpsert's convention)
-      val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      try delta.write.mode("overwrite").insertInto(statsTable)
-      finally prev match {
-        case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
+        .localCheckpoint(true), statsTable)
     }
     // record the maintenance spec as metadata (spec discovery becomes a
     // catalog read) and prime the memo with exactly what a discovery would
@@ -521,7 +510,6 @@ object FileStats {
         specCache.put(specCacheKey(statsTable), Some(canonical))
       case None => specCache.remove(specCacheKey(statsTable))
     }
-    spark.catalog.refreshTable(statsTable)
     RefreshReport(toScan.length, removed, files.length - toScan.length)
   }
 

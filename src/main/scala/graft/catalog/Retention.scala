@@ -8,19 +8,14 @@ import org.apache.spark.sql.functions._
   * ([[Compaction]]): given a frame of keys, rewrite ONLY the partitions that
   * contain matching rows, leaving every other partition's files untouched.
   *
-  * Mechanism: one semi-join finds the affected partition tuples
-  * (driver-bounded — one row per affected PARTITION, not per deleted row);
-  * each affected partition's survivors are materialized
-  * (localCheckpoint — the overwrite below must not read the path it
-  * replaces) and written back with a STATIC `INSERT OVERWRITE … PARTITION`
-  * spec. Static, not dynamic, deliberately: dynamic partition overwrite
-  * only replaces partitions PRESENT in the result, so a partition whose
-  * rows are ALL deleted would emit nothing, be skipped, and silently keep
-  * the very rows the delete targeted — static overwrite of an empty result
-  * clears the partition. Each statement goes through Spark's file
-  * committer (staging dir + rename), so a crash mid-delete leaves
-  * partitions either old or new, never mixed; re-running the same delete
-  * is a no-op (no matching keys remain → no affected partitions).
+  * One semi-join finds the affected partitions (one row per PARTITION, not
+  * per deleted row); each one's survivors are written back with
+  * [[TableWrite.overwritePartition]]. Static, not dynamic, deliberately:
+  * dynamic overwrite only replaces partitions PRESENT in the result, so a
+  * partition whose rows are ALL deleted would be skipped and silently keep
+  * the very rows the delete targeted. A crash mid-delete leaves partitions
+  * either old or new (Spark's file committer), never mixed; re-running the
+  * same delete is a no-op (no matching keys remain).
   *
   * Scale shape: cost is one pruned scan + rewrite per AFFECTED partition —
   * a handful of deletion requests against a date-partitioned 100 TB table
@@ -32,18 +27,6 @@ object Retention {
 
   final case class DeleteReport(rowsDeleted: Long, partitionsRewritten: Int,
                                 partitionsSeen: Int)
-
-  /** Partition-spec literal: numbers and booleans render bare, EVERYTHING
-    * else (strings, dates, timestamps — anything whose toString the
-    * partition-spec grammar cannot lex as one token) renders as a quoted,
-    * escaped string; Hive partition semantics coerce quoted literals to
-    * the partition column's type. */
-  private def sqlLit(v: Any): String = v match {
-    case null => "NULL"
-    case n: java.lang.Number => n.toString
-    case b: java.lang.Boolean => b.toString
-    case other => "'" + other.toString.replace("'", "''") + "'"
-  }
 
   /** Delete every row of `table` whose `keyCol` appears in `keys`.
     * Unpartitioned tables rewrite wholesale (there is nothing to prune).
@@ -81,26 +64,20 @@ object Retention {
       .flatMap(m => scala.util.Try(m.inputFiles.toSeq).toOption)
     val matching = pruned
       .getOrElse(spark.table(table).join(k, Seq(keyCol), "left_semi"))
-    val dataCols = meta.schema.fieldNames.filterNot(partCols.contains)
 
-    def overwrite(partSpecSql: Option[String], pred: Option[org.apache.spark.sql.Column]): Unit = {
+    def overwrite(spec: Seq[(String, Any)]): Unit = {
+      val pred = spec.map { case (c, v) => col(c) <=> lit(v) }.reduceOption(_ && _)
       val base = pred.fold(spark.table(table))(p => spark.table(table).filter(p))
-      val remaining = base.join(k, Seq(keyCol), "left_anti")
-        .select((dataCols ++ partCols).map(col).toIndexedSeq: _*)
-        .localCheckpoint(true) // settle before overwriting the same path
-      val v = s"graft_del_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-      remaining.createOrReplaceTempView(v)
-      val target = partSpecSql.fold(s"INSERT OVERWRITE TABLE $table")(ps =>
-        s"INSERT OVERWRITE TABLE $table PARTITION ($ps)")
-      try spark.sql(
-        s"$target SELECT ${dataCols.map(c => s"`$c`").mkString(", ")} FROM $v")
-      finally { spark.catalog.dropTempView(v); () }
+      TableWrite.overwritePartition(
+        base.join(k, Seq(keyCol), "left_anti")
+          .localCheckpoint(true), // settle before overwriting the same files
+        table, spec)
     }
 
     val report =
       if (partCols.isEmpty) {
         val n = matching.count()
-        if (n > 0) overwrite(None, None)
+        if (n > 0) overwrite(Nil)
         DeleteReport(n, if (n > 0) 1 else 0, 1)
       } else {
         // partition COUNT from the partition listing only (SHOW PARTITIONS
@@ -111,20 +88,13 @@ object Retention {
         val affected = matching
           .groupBy(partCols.map(col): _*).agg(count(lit(1)).as("__n"))
           .collect()
-        affected.foreach { row =>
-          val spec = partCols.zipWithIndex
-            .map { case (c, i) => s"$c=${sqlLit(row.get(i))}" }.mkString(", ")
-          val pred = partCols.zipWithIndex
-            .map { case (c, i) => col(c) <=> lit(row.get(i)) }.reduce(_ && _)
-          overwrite(Some(spec), Some(pred))
-        }
+        affected.foreach(row => overwrite(partCols.indices.map(i => partCols(i) -> row.get(i))))
         DeleteReport(affected.map(_.getLong(partCols.length)).sum,
           affected.length, seen)
       }
     lineage.foreach(_.update(spark.emptyDataFrame, "delete",
       s"table=$table key=$keyCol rows=${report.rowsDeleted} " +
         s"partitions=${report.partitionsRewritten}/${report.partitionsSeen}"))
-    spark.catalog.refreshTable(table)
     statsTable.filter(_ => report.partitionsRewritten > 0)
       .foreach(st => FileStats.cachedStatsSpecOf(spark, st).foreach { sp =>
         // SCOPED refresh (guide §6 — cost ∝ touched): a rewritten partition

@@ -1,6 +1,6 @@
 package graft.catalog
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Row-level MERGE seam (SURVEY.md §2.2 K5).
@@ -28,12 +28,12 @@ trait TableFormat {
 /** Default format: managed Hive-style Parquet tables, no table-format jar
   * required.
   *
-  * Partitioned tables rewrite ONLY the affected partitions via dynamic
-  * partition overwrite — the closest no-table-format approximation of
-  * file-level MERGE: untouched partitions keep their files byte-for-byte, so
-  * at 100 TB the rewrite cost tracks the batch's partition footprint, not the
-  * table size (ScaleCheck section `upsert` measures this). Unpartitioned tables fall
-  * back to a full anti-join + atomic overwrite.
+  * Partitioned tables rewrite ONLY the affected partitions
+  * ([[TableWrite.overwritePresent]]) — the closest no-table-format
+  * approximation of file-level MERGE: untouched partitions keep their files
+  * byte-for-byte, so at 100 TB the rewrite cost tracks the batch's partition
+  * footprint, not the table size (ScaleCheck section `upsert` measures
+  * this). Unpartitioned tables fall back to a full anti-join + replace.
   */
 object HiveParquetFormat extends TableFormat {
 
@@ -44,14 +44,13 @@ object HiveParquetFormat extends TableFormat {
       try spark.catalog.listColumns(table).filter(_.isPartition)
         .collect().map(_.name).toSeq
       catch { case _: Exception => Seq.empty }
-    // The drained-partition DROP below serializes partition values as SQL
-    // literals via toString; that round-trips exactly for string, integral
-    // and DATE keys (java.sql.Date.toString is the ISO 'yyyy-MM-dd' form
-    // partition specs parse) but NOT in general for timestamp/decimal/float
-    // (Timestamp.toString, e.g. '2024-01-01 00:00:00.0', may not cast back
-    // to the stored partition value, turning DROP IF EXISTS into a silent
-    // no-op that leaves a stale duplicate key). Fail fast rather than
-    // corrupt silently.
+    // The drained-partition DROP below renders partition values as SQL
+    // literals ([[TableWrite.literal]]); that round-trips exactly for
+    // string, integral and DATE keys but NOT in general for
+    // timestamp/decimal/float (Timestamp.toString, e.g. '2024-01-01
+    // 00:00:00.0', may not cast back to the stored partition value, turning
+    // DROP IF EXISTS into a silent no-op that leaves a stale duplicate key).
+    // Fail fast rather than corrupt silently.
     partCols.foreach { c =>
       val dt = primary.schema(c).dataType
       import org.apache.spark.sql.types._
@@ -68,9 +67,8 @@ object HiveParquetFormat extends TableFormat {
       val kept = primary.join(latest.select(col(keyCol)), Seq(keyCol), "left_anti")
       val merged = kept.unionByName(latest.select(primary.columns.toIndexedSeq.map(col): _*))
       Scratch.withScratch(spark, "upsert") { scratch =>
-        merged.write.mode(SaveMode.Overwrite).parquet(scratch)
-        spark.read.parquet(scratch).write.mode(SaveMode.Overwrite)
-          .option("overwriteSchema", "true").saveAsTable(table)
+        TableWrite.scratch(merged, scratch)
+        TableWrite.createOrReplace(spark.read.parquet(scratch), table)
       }
     } else {
       // Affected partitions = those holding a stale version of an upserted
@@ -93,7 +91,7 @@ object HiveParquetFormat extends TableFormat {
         .join(latest.select(col(keyCol)), Seq(keyCol), "left_anti")
       val replacement = keptInAffected.unionByName(latest.select(primary.columns.toIndexedSeq.map(col): _*))
       Scratch.withScratch(spark, "upsert") { scratch =>
-        replacement.write.mode(SaveMode.Overwrite).parquet(scratch)
+        TableWrite.scratch(replacement, scratch)
         val materialized = spark.read.parquet(scratch)
         // A MERGE can DRAIN a partition: if a key's only row moves to another
         // partition and nothing else lives in the old one, the replacement
@@ -107,24 +105,10 @@ object HiveParquetFormat extends TableFormat {
             .toDF(partCols.map(c => s"__aff_$c"): _*),
             nullSafeOn, "left_anti")
           .collect()
-        val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try materialized
-          // insertInto is position-based against the table schema
-          .select(primary.columns.toIndexedSeq.map(col): _*)
-          .write.mode(SaveMode.Overwrite).insertInto(table)
-        finally prev match {
-          case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-          case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-        }
+        TableWrite.overwritePresent(materialized, table)
         drained.foreach { row =>
-          val partSpec = partCols.zipWithIndex.map { case (c, i) =>
-            val v = row.get(i)
-            // escape backslashes too: SQL string literals process them, and
-            // IF EXISTS would make a mangled key a silent no-op
-            if (v == null) s"$c = null"
-            else s"$c = '${v.toString.replace("\\", "\\\\").replace("'", "''")}'"
-          }.mkString(", ")
+          val partSpec = partCols.zipWithIndex
+            .map { case (c, i) => s"$c = ${TableWrite.literal(row.get(i))}" }.mkString(", ")
           spark.sql(s"ALTER TABLE $table DROP IF EXISTS PARTITION ($partSpec)")
         }
       }

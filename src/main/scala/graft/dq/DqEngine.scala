@@ -474,7 +474,8 @@ class DqEngine(quarantineSink: Option[(DataFrame, String) => Unit] = None) {
         "or point writeResults at a fresh target")
     }
     if (target.contains("/")) df.write.mode("append").parquet(target)
-    else df.write.mode("append").saveAsTable(target)
+    else if (existing.isEmpty) graft.catalog.TableWrite.createOrReplace(df, target)
+    else graft.catalog.TableWrite.append(df, target)
   }
 }
 

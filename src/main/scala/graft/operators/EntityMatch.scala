@@ -3,7 +3,7 @@ package graft.operators
 import com.fasterxml.jackson.databind.JsonNode
 import graft.config.Specs.NodeOps
 import graft.functions.{SimilarityFunctions => S}
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -348,9 +348,7 @@ object EntityMatch {
 
     if (!spark.catalog.tableExists(spec.primaryTable)) {
       val filled = fillGlobalId(incoming, gid)
-      val w = filled.write.mode(SaveMode.Overwrite)
-      (if (spec.partitionBy.nonEmpty) w.partitionBy(spec.partitionBy: _*) else w)
-        .saveAsTable(spec.primaryTable)
+      graft.catalog.TableWrite.createOrReplace(filled, spec.primaryTable, spec.partitionBy)
       // return the PERSISTED rows: uuid() is nondeterministic per execution,
       // so re-running the unmaterialized plan would hand the caller gids that
       // match nothing in the primary table
@@ -378,7 +376,7 @@ object EntityMatch {
       // This scratch intentionally outlives the call (the returned frame
       // reads from it) — under the warehouse FS so executors see it.
       val scratch = graft.catalog.Scratch.newDir(spark, "match_result")
-      all.write.mode(SaveMode.Overwrite).parquet(scratch)
+      graft.catalog.TableWrite.scratch(all, scratch)
       val materialized = spark.read.parquet(scratch)
       upsert(spark, spec.primaryTable, materialized, spec)
       // write-path index maintenance, the Retention.deleteRows convention:

@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import com.fasterxml.jackson.databind.JsonNode
-import graft.catalog.SchemaEvolution
+import graft.catalog.{SchemaEvolution, TableWrite}
 import graft.config.Specs
 import graft.config.Specs.NodeOps
 import graft.dq.DqEngine
@@ -9,7 +9,7 @@ import graft.lineage.Lineage
 import graft.mapping.{CustomMapping, MappingRow}
 import graft.sources.Sources
 import graft.transforms.{TransformContext, TransformRegistry}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Job arguments shared by the pipeline stages — the Scala analog of the Glue
@@ -157,47 +157,53 @@ class PipelineRunner(spark: SparkSession) {
                        dqRules: Map[String, Map[String, Seq[String]]],
                        viewSql: Seq[String] = Seq.empty,
                        statsTables: Map[String, String] = Map.empty): DataFrame = {
-    spark.conf.set("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
-    val substituted = substitutions.foldLeft(sql) { case (s, (k, v)) =>
-      s.replace(s"{$k}", v)
-    }
-    // CREATE TABLE <t> AS prefix overrides the target TABLE name; a bare name
-    // stays inside the consume database, as in the reference (its regex only
-    // captures a bare [\w]+ and swaps target_table within target_database,
-    // etl_cleanse_to_consume.py:126-131). A dotted name overrides the db too
-    // (extension).
-    val createRe = "(?is)^\\s*CREATE\\s+TABLE\\s+([\\w.]+)\\s+AS\\s+(.*)".r
-    val (target, query) = substituted match {
-      case createRe(t, rest) =>
-        (if (t.contains(".")) t else s"${args.databaseName}_consume.$t", rest)
-      case q => (s"${args.databaseName}_consume.${args.tableName}", q)
-    }
-    val df = graft.catalog.CatalogOps.prunePlanScans(spark,
-      spark.sql(query), statsTables)
-    val engine = new DqEngine(Some(quarantineSink(args)))
-    val filtered = engine.runRuleset(df,
-      dqRules.getOrElse("after_sparksql", Map.empty), "after_sparksql")
-    val partCols = args.partition.keys.toSeq.filter(filtered.columns.contains)
-    // repartition on partition cols pre-write to avoid small files (:186)
-    def spread(df: DataFrame): DataFrame =
-      if (partCols.nonEmpty) df.repartition(partCols.map(col): _*) else df
-    new Lineage(args.executionId, args.lineageSink).auditOnWrite(filtered, "consume")(observed =>
-      write(spread(observed), spread(filtered), target, partCols, "permissive",
-        overwriteAll = true))
-    viewSql.foreach(v => spark.sql(v)) // Athena/Redshift passthrough → local views
-    // K7: rule outcomes land beside the ACTUAL consume target (which a
-    // CREATE TABLE <t> AS prefix may have overridden), keyed by execution_id
-    if (engine.resultsLog.nonEmpty)
-      engine.writeResults(spark, s"${target}_dq_results", args.executionId)
-    filtered
+    // the reference's consume-job setting, for this stage only: the caller's
+    // session conf is restored on return
+    val dedup = "spark.sql.mapKeyDedupPolicy"
+    val prior = spark.conf.getAll.get(dedup) // getOption would answer the default
+    spark.conf.set(dedup, "LAST_WIN")
+    try {
+      val substituted = substitutions.foldLeft(sql) { case (s, (k, v)) =>
+        s.replace(s"{$k}", v)
+      }
+      // CREATE TABLE <t> AS prefix overrides the target TABLE name; a bare name
+      // stays inside the consume database, as in the reference (its regex only
+      // captures a bare [\w]+ and swaps target_table within target_database,
+      // etl_cleanse_to_consume.py:126-131). A dotted name overrides the db too
+      // (extension).
+      val createRe = "(?is)^\\s*CREATE\\s+TABLE\\s+([\\w.]+)\\s+AS\\s+(.*)".r
+      val (target, query) = substituted match {
+        case createRe(t, rest) =>
+          (if (t.contains(".")) t else s"${args.databaseName}_consume.$t", rest)
+        case q => (s"${args.databaseName}_consume.${args.tableName}", q)
+      }
+      val df = graft.catalog.CatalogOps.prunePlanScans(spark,
+        spark.sql(query), statsTables)
+      val engine = new DqEngine(Some(quarantineSink(args)))
+      val filtered = engine.runRuleset(df,
+        dqRules.getOrElse("after_sparksql", Map.empty), "after_sparksql")
+      val partCols = args.partition.keys.toSeq.filter(filtered.columns.contains)
+      // repartition on partition cols pre-write to avoid small files (:186)
+      def spread(df: DataFrame): DataFrame =
+        if (partCols.nonEmpty) df.repartition(partCols.map(col): _*) else df
+      new Lineage(args.executionId, args.lineageSink).auditOnWrite(filtered, "consume")(observed =>
+        write(spread(observed), spread(filtered), target, partCols, "permissive",
+          overwriteAll = true))
+      viewSql.foreach(v => spark.sql(v)) // Athena/Redshift passthrough → local views
+      // K7: rule outcomes land beside the ACTUAL consume target (which a
+      // CREATE TABLE <t> AS prefix may have overridden), keyed by execution_id
+      if (engine.resultsLog.nonEmpty)
+        engine.writeResults(spark, s"${target}_dq_results", args.executionId)
+      filtered
+    } finally prior.fold(spark.conf.unset(dedup))(spark.conf.set(dedup, _))
   }
 
-  /** Partitioned parquet table write with the evolution gate.
-    *
-    * Idempotent reload is Spark-native: `partitionOverwriteMode=dynamic` +
-    * `mode=overwrite` replaces exactly the partitions present in the incoming
-    * frame — the reference's clear-partition-then-append
-    * (etl_collect_to_cleanse.py:335-350) without the manual delete.
+  /** Partitioned parquet table write with the evolution gate, through
+    * [[TableWrite]]: an idempotent reload replaces exactly the partitions
+    * present in the incoming frame — the reference's
+    * clear-partition-then-append (etl_collect_to_cleanse.py:335-350)
+    * without the manual delete — and `overwriteAll` (consume's
+    * purge-then-publish) replaces the whole table.
     *
     * Schema changes: gate decides via [[SchemaEvolution.allowed]]; added
     * columns are applied with ALTER TABLE ADD COLUMNS; widening/reorder beyond
@@ -214,17 +220,9 @@ class PipelineRunner(spark: SparkSession) {
   private def write(observed: DataFrame, df: DataFrame, table: String,
                     partitionCols: Seq[String], policy: String,
                     overwriteAll: Boolean = false): Unit = {
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    // zstd: ~30% smaller than snappy at similar read speed — at 100 TB the
-    // scan-bytes saving dominates the extra write cpu
-    spark.conf.set("spark.sql.parquet.compression.codec",
-      spark.conf.get("graft.parquet.codec", "zstd"))
-    ensureDatabase(table)
-    val exists = spark.catalog.tableExists(table)
-    if (!exists) {
-      val w = observed.write.format("parquet").mode(SaveMode.Overwrite)
-      (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w).saveAsTable(table)
-    } else {
+    if (!spark.catalog.tableExists(table))
+      TableWrite.createOrReplace(observed, table, partitionCols)
+    else {
       val existing = spark.table(table).schema
       if (!SchemaEvolution.allowed(existing, df.schema, policy))
         throw new RuntimeException(
@@ -233,25 +231,13 @@ class PipelineRunner(spark: SparkSession) {
       val newCols = df.schema.fields.filterNot(f => existingNames.contains(f.name))
       val sameTypes = df.schema.fields.filter(f => existingNames.contains(f.name))
         .forall(f => existing(f.name).dataType == f.dataType)
-      if (newCols.nonEmpty && sameTypes) {
-        val ddl = newCols.map(f => s"`${f.name}` ${f.dataType.sql}").mkString(", ")
-        spark.sql(s"ALTER TABLE $table ADD COLUMNS ($ddl)")
-      }
-      val targetSchema = spark.table(table).schema
-      val aligned =
-        if (sameTypes)
-          observed.select(targetSchema.fieldNames.toIndexedSeq.map(n =>
-            if (df.columns.contains(n)) col(n) else lit(null).cast(targetSchema(n).dataType).as(n)): _*)
-        else observed
       if (sameTypes) {
-        // dynamic partitionOverwriteMode → Overwrite replaces only the
-        // incoming partitions (idempotent per-partition reload, K1);
-        // overwriteAll (consume's purge-then-publish, K2) needs STATIC mode
-        // so partitions absent from this run are dropped too.
-        if (overwriteAll)
-          spark.conf.set("spark.sql.sources.partitionOverwriteMode", "static")
-        try aligned.write.mode(SaveMode.Overwrite).insertInto(table)
-        finally spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+        if (newCols.nonEmpty) {
+          val ddl = newCols.map(f => s"`${f.name}` ${f.dataType.sql}").mkString(", ")
+          spark.sql(s"ALTER TABLE $table ADD COLUMNS ($ddl)")
+        }
+        if (overwriteAll) TableWrite.overwritePartition(observed, table, Nil)
+        else TableWrite.overwritePresent(observed, table)
       } else {
         // widening under evolve/permissive: full rewrite with the new schema.
         // Keep the overwrite semantics of the fast path: overwriteAll keeps
@@ -268,15 +254,11 @@ class PipelineRunner(spark: SparkSession) {
             oldAligned.join(df.select(partitionCols.map(col): _*).distinct(),
               partitionCols, "left_anti")
           else oldAligned.limit(0)
-        val merged = oldKept.unionByName(observed)
         // materialize to a scratch path (on the warehouse filesystem, so it
-        // works on a real cluster) BEFORE dropping — DROP TABLE on a managed
-        // table deletes its files and a spilled cache is not durable
+        // works on a real cluster) BEFORE the replace drops the table's files
         graft.catalog.Scratch.withScratch(spark, "evolve") { scratch =>
-          merged.write.mode(SaveMode.Overwrite).parquet(scratch)
-          spark.sql(s"DROP TABLE $table")
-          val w = spark.read.parquet(scratch).write.format("parquet").mode(SaveMode.Overwrite)
-          (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w).saveAsTable(table)
+          TableWrite.scratch(oldKept.unionByName(observed), scratch)
+          TableWrite.createOrReplace(spark.read.parquet(scratch), table, partitionCols)
         }
       }
     }
@@ -290,31 +272,17 @@ class PipelineRunner(spark: SparkSession) {
     java.nio.file.Files.writeString(p, text)
   }
 
-  private def ensureDatabase(table: String): Unit = {
-    val parts = table.split("\\.")
-    if (parts.length == 2)
-      spark.sql(s"CREATE DATABASE IF NOT EXISTS ${parts(0)}")
-  }
-
   /** Quarantine rows land in `<db>.<table>_quarantine_<ruleset>`
     * (dataquality_check.py:219-255). */
   private def quarantineSink(args: JobArgs)(failed: DataFrame, rulesetName: String): Unit = {
     val withPart = failed.withColumns(args.partition.map { case (k, v) => k -> lit(v) })
     val table = s"${args.databaseName}.${args.tableName}_quarantine_$rulesetName"
-    ensureDatabase(table)
-    val exists = spark.catalog.tableExists(table)
-    if (!exists)
-      withPart.write.format("parquet").mode(SaveMode.Append)
-        .partitionBy(args.partition.keys.toSeq: _*).saveAsTable(table)
-    else {
-      // align leniently to the stored quarantine schema: historical columns
-      // the failed frame no longer has become nulls (a quarantine side-write
-      // must never kill the job over mapping drift); new columns are dropped
-      val target = spark.table(table).schema
-      val aligned = withPart.select(target.fields.map(f =>
-        (if (withPart.columns.contains(f.name)) col(f.name).cast(f.dataType)
-         else lit(null).cast(f.dataType)).as(f.name)).toSeq: _*)
-      aligned.write.mode(SaveMode.Append).insertInto(table)
-    }
+    // appends align leniently to the stored quarantine schema: historical
+    // columns the failed frame no longer has become nulls (a quarantine
+    // side-write must never kill the job over mapping drift); new columns
+    // are dropped
+    if (!spark.catalog.tableExists(table))
+      TableWrite.createOrReplace(withPart, table, args.partition.keys.toSeq)
+    else TableWrite.append(withPart, table)
   }
 }

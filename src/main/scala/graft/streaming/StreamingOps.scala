@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.catalog.TableWrite
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
@@ -233,17 +234,18 @@ object StreamingOps {
     (if (availableNow) w.trigger(Trigger.AvailableNow()) else w).start()
 
   /** Idempotent write of ONE batch's rows into a `batch_id`-partitioned
-    * table: create-with-partitioning on first use, DYNAMIC overwrite of
-    * exactly the `batch_id=<id>` partition afterwards — a replayed batch
-    * REPLACES its own half-committed partition instead of appending beside
-    * it, and committed partitions are never rewritten (the immutability
-    * that makes [[BatchCommitLog]]'s guard sound: the data a committed
-    * marker vouches for cannot be damaged by a later crash). */
+    * table, through [[graft.catalog.TableWrite]]: created partitioned on
+    * first use, afterwards a STATIC overwrite of exactly the
+    * `batch_id=<id>` partition — a replayed batch REPLACES its own
+    * half-committed partition instead of appending beside it, and
+    * committed partitions are never rewritten (the immutability that makes
+    * [[BatchCommitLog]]'s guard sound: the data a committed marker vouches
+    * for cannot be damaged by a later crash). */
   private def writeBatchPartition(df: DataFrame, table: String, id: Long): Unit = {
     val ss = df.sparkSession
     if (!ss.catalog.tableExists(table)) {
-      // overwrite: leftover files from a crash mid-create are uncommitted
-      df.write.mode("overwrite").partitionBy("batch_id").saveAsTable(table)
+      // replace: leftover files from a crash mid-create are uncommitted
+      TableWrite.createOrReplace(df, table, Seq("batch_id"))
     } else {
       val meta = ss.sessionState.catalog.getTableMetadata(
         ss.sessionState.sqlParser.parseTableIdentifier(table))
@@ -251,16 +253,7 @@ object StreamingOps {
         s"$table must be partitioned by batch_id for idempotent replay — " +
           "drop it and let the operator create it, or recreate it " +
           "PARTITIONED BY (batch_id)")
-      // STATIC partition spec: INSERT OVERWRITE of exactly this batch's
-      // partition, independent of the session's partitionOverwriteMode
-      // (the writer-level dynamic option is not honored by insertInto)
-      val dataCols = meta.schema.fieldNames
-        .filterNot(meta.partitionColumnNames.contains)
-      val v = s"graft_batch_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-      df.drop("batch_id").createOrReplaceTempView(v)
-      try ss.sql(s"INSERT OVERWRITE TABLE $table PARTITION (batch_id=$id) " +
-        s"SELECT ${dataCols.map(c => s"`$c`").mkString(", ")} FROM $v")
-      finally { ss.catalog.dropTempView(v); () }
+      TableWrite.overwritePartition(df, table, Seq("batch_id" -> id))
     }
   }
 
@@ -410,7 +403,7 @@ object StreamingOps {
         val prev = BatchCommitLog.committed(ss, checkpoint) match {
           case Some(k) =>
             // localCheckpoint, materialized by the emptiness probe: the
-            // insertInto below never reads the table it writes
+            // partition write below never reads the table it writes
             val snap = ss.table(weightsTable).filter(col("batch_id") === k)
               .select(col("feature"), col("wq")).localCheckpoint(false)
             if (!hasRows(snap)) throw new IllegalStateException(

@@ -97,9 +97,9 @@ class CompactionSpec extends SparkSpec {
     // largest ends with >1 file (the bin split happened)
     assert(after.values.map(_.size).max > 1)
     // bin targets come from the PRE-compaction manifest (what the operator
-    // binned on): the rewritten files can compress differently (e.g. a
-    // session-level codec change from an earlier suite), so re-deriving the
-    // target from post-compaction bytes would be asserting a different run
+    // binned on): compaction rewrites zstd whatever codec the fixture was
+    // written with, so re-deriving the target from post-compaction bytes
+    // would be asserting a different run
     val preBins = manifests.map(m =>
       m.rel -> math.max(1L, (m.bytes + target - 1) / target)).toMap
     val (_, m2) = Compaction.listManifests(spark, t)

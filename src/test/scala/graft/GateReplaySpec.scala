@@ -4,7 +4,7 @@ import java.nio.file.{Files, Path}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, Encoder, SQLContext}
+import org.apache.spark.sql.{DataFrame, Encoder, SQLContext, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.graftbridge.BusBridge
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -24,7 +24,6 @@ import graft.streaming.StreamingOps
   * probe was 3 jobs under AQE). */
 class GateReplaySpec extends SparkSpec {
   implicit def sqlCtx: SQLContext = spark.sqlContext
-  import spark.implicits._
 
   private def names(dir: Path): Seq[String] =
     if (!Files.exists(dir)) Nil
@@ -45,14 +44,15 @@ class GateReplaySpec extends SparkSpec {
     id
   }
 
-  private def replayCase[A: Encoder](name: String, cols: Seq[String],
-                                     batches: Seq[Seq[A]], tables: Seq[String])
-                                    (gate: (DataFrame, String) => StreamingQuery): Unit = {
+  private def replayCase[A](c: GateCase[A]): Unit = {
+    import c.enc
+    val name = c.name
     val ckpt = Files.createTempDirectory(s"graft_replay_$name").toString
+    val tables = c.tables(GateCases.db(spark, name))
     val mem = MemoryStream[A]
-    def start() = gate(mem.toDF().toDF(cols: _*), ckpt)
+    def start() = c.start(tables, mem.toDF().toDF(c.cols: _*), ckpt)
     val q = start()
-    batches.foreach { b => mem.addData(b); q.processAllAvailable() }
+    c.batches.foreach { b => mem.addData(b); q.processAllAvailable() }
     q.stop()
     def state() = tables.map { t =>
       spark.catalog.refreshTable(t)
@@ -92,90 +92,80 @@ class GateReplaySpec extends SparkSpec {
     assert(markers(ckpt) == marks, s"$name: a commit marker was added")
   }
 
-  private def db(name: String): String = {
-    val d = s"replay_$name${System.nanoTime()}"
+  GateCases.all(spark).foreach(c =>
+    test(s"${c.name}: a forced re-delivery is skipped without a job")(replayCase(c)))
+}
+
+/** One commit-logged gate on a small fixture: the columns of its input
+  * stream, its micro-batches, the tables it writes (named under a fresh
+  * database) and how to start it over a stream and a checkpoint. */
+final case class GateCase[A](name: String, cols: Seq[String], batches: Seq[Seq[A]],
+                             tables: String => Seq[String],
+                             start: (Seq[String], DataFrame, String) => StreamingQuery)
+                            (implicit val enc: Encoder[A])
+
+/** The seven gates on the fixtures `GateReplaySpec` and `JobBudgetSpec`
+  * share. */
+object GateCases {
+
+  /** A fresh database for one gate case. */
+  def db(spark: SparkSession, name: String): String = {
+    val d = s"gate_${name.toLowerCase}${System.nanoTime()}"
     spark.sql(s"CREATE DATABASE $d")
     d
   }
 
-  test("onlineLogisticFit: a forced re-delivery is skipped without a job") {
-    val wt = s"${db("olf")}.weights"
-    val docs = (1 to 40).map(i =>
-      (i.toLong, if (i % 2 == 0) "spam junk" else "clean text", i % 2))
-    replayCase("olf", Seq("doc_id", "text", "y"), docs.grouped(20).toSeq, Seq(wt)) {
-      (df, ckpt) => StreamingOps.onlineLogisticFit(df, "text", "doc_id", "y",
-        numFeatures = 64, weightsTable = wt, checkpoint = ckpt)
-    }
-  }
-
-  test("ingestDedupGate: a forced re-delivery is skipped without a job") {
-    val d = db("dedup")
-    val (ct, rt) = (s"$d.corpus", s"$d.report")
-    val b1 = Seq((1L, "b", "alpha beta gamma delta"), (2L, "b", "alpha beta gamma delta"),
-      (3L, "b", "epsilon zeta eta theta"))
-    val b2 = Seq((10L, "b", "alpha beta gamma delta"), (11L, "b", "iota kappa lambda mu"))
-    replayCase("dedup", Seq("doc_id", "blk", "text"), Seq(b1, b2), Seq(ct, rt)) {
-      (df, ckpt) => StreamingOps.ingestDedupGate(df, "text", "doc_id", Seq("blk"), 0.7,
-        ct, rt, ckpt)
-    }
-  }
-
-  test("ingestDqGate: a forced re-delivery is skipped without a job") {
-    val d = db("dq")
-    val (ct, qt) = (s"$d.cleansed", s"$d.quarantine")
-    val rows = Seq[(Long, Integer, String)](
-      (1L, 50, "a"), (2L, 5, "a"), (3L, 50, null), (4L, null, "b"), (5L, 11, "b"))
-    replayCase("dq", Seq("id", "v", "cat"), Seq(rows.take(3), rows.drop(3)), Seq(ct, qt)) {
-      (df, ckpt) => StreamingOps.ingestDqGate(df, Seq("ColumnValues 'v' >= 10"), ct, qt, ckpt)
-    }
-  }
-
-  test("ingestDatasetDqGate: a forced re-delivery is skipped without a job") {
-    val d = db("dsdq")
-    val (sink, res) = (s"$d.sink", s"$d.results")
-    replayCase("dsdq", Seq("id", "status"),
-      Seq(Seq((1L, "ok"), (2L, "bad")), Seq((3L, "ok"))), Seq(sink, res)) {
-      (df, ckpt) => StreamingOps.ingestDatasetDqGate(df,
-        warnRules = Seq("ColumnValues 'status' in ['ok']"),
-        haltRules = Seq("RowCount <= 3"), sink, res, ckpt)
-    }
-  }
-
-  test("ingestSubstringDedupGate: a forced re-delivery is skipped without a job") {
-    val d = db("substr")
-    val (rt, it) = (s"$d.report", s"$d.windex")
+  def all(spark: SparkSession): Seq[GateCase[_]] = {
+    import spark.implicits._
     val banner = "replay-shared-banner-text-block!!"
-    replayCase("substr", Seq("doc_id", "text"),
-      Seq(Seq((1L, s"first $banner"), (2L, s"second $banner")),
-        Seq((3L, s"third $banner"), (4L, "quiet unique one"))), Seq(rt, it)) {
-      (df, ckpt) => StreamingOps.ingestSubstringDedupGate(df, "text", "doc_id",
-        banner.length, keepFirst = true, rt, it, ckpt)
-    }
-  }
-
-  test("ingestRulesetDqGate: a forced re-delivery is skipped without a job") {
-    val d = db("rsdq")
-    val (cl, qt, res) = (s"$d.cleansed", s"$d.quarantine", s"$d.results")
-    replayCase("rsdq", Seq("id", "status", "amount"),
-      Seq(Seq((1L, "ok", 5.0), (2L, "bad", 7.0), (3L, "ok", -1.0)),
-        Seq((4L, "ok", 2.0), (5L, "ok", -3.0))), Seq(cl, qt, res)) {
-      (df, ckpt) => StreamingOps.ingestRulesetDqGate(df,
-        warnRules = Seq("ColumnValues 'status' in ['ok']"),
-        quarantineRules = Seq("ColumnValues 'amount' >= 0"),
-        haltRules = Seq("ColumnValues 'amount' >= -100"), cl, qt, res, ckpt)
-    }
-  }
-
-  test("ingestAnnGate: a forced re-delivery is skipped without a job") {
-    val it = s"${db("ann")}.idx"
     val cs = fixedCentroids(100, 4, 8)
     val fc = fixedCentroids(200, 8, 4)
     val cb = Array.tabulate(2)(j => fc.slice(j * 4, j * 4 + 4))
     val vecs = Seq.tabulate(40)(i =>
       (i.toLong, Array.tabulate(8)(d => ((i * 7 + d * 3) % 11).toFloat)))
-    replayCase("ann", Seq("vec_id", "embedding"), Seq(vecs.take(25), vecs.drop(25)),
-      Seq(it)) {
-      (df, ckpt) => StreamingOps.ingestAnnGate(df, "embedding", "vec_id", cs, cb, it, ckpt)
-    }
+    val dqRows = Seq[(Long, Integer, String)](
+      (1L, 50, "a"), (2L, 5, "a"), (3L, 50, null), (4L, null, "b"), (5L, 11, "b"))
+    Seq(
+      GateCase("onlineLogisticFit", Seq("doc_id", "text", "y"),
+        (1 to 40).map(i => (i.toLong, if (i % 2 == 0) "spam junk" else "clean text", i % 2))
+          .grouped(20).toSeq,
+        d => Seq(s"$d.weights"),
+        (t, df, ckpt) => StreamingOps.onlineLogisticFit(df, "text", "doc_id", "y",
+          numFeatures = 64, weightsTable = t(0), checkpoint = ckpt)),
+      GateCase("ingestDedupGate", Seq("doc_id", "blk", "text"),
+        Seq(Seq((1L, "b", "alpha beta gamma delta"), (2L, "b", "alpha beta gamma delta"),
+          (3L, "b", "epsilon zeta eta theta")),
+          Seq((10L, "b", "alpha beta gamma delta"), (11L, "b", "iota kappa lambda mu"))),
+        d => Seq(s"$d.corpus", s"$d.report"),
+        (t, df, ckpt) => StreamingOps.ingestDedupGate(df, "text", "doc_id", Seq("blk"), 0.7,
+          t(0), t(1), ckpt)),
+      GateCase("ingestDqGate", Seq("id", "v", "cat"), Seq(dqRows.take(3), dqRows.drop(3)),
+        d => Seq(s"$d.cleansed", s"$d.quarantine"),
+        (t, df, ckpt) => StreamingOps.ingestDqGate(df, Seq("ColumnValues 'v' >= 10"),
+          t(0), t(1), ckpt)),
+      GateCase("ingestDatasetDqGate", Seq("id", "status"),
+        Seq(Seq((1L, "ok"), (2L, "bad")), Seq((3L, "ok"))),
+        d => Seq(s"$d.sink", s"$d.results"),
+        (t, df, ckpt) => StreamingOps.ingestDatasetDqGate(df,
+          warnRules = Seq("ColumnValues 'status' in ['ok']"),
+          haltRules = Seq("RowCount <= 3"), t(0), t(1), ckpt)),
+      GateCase("ingestSubstringDedupGate", Seq("doc_id", "text"),
+        Seq(Seq((1L, s"first $banner"), (2L, s"second $banner")),
+          Seq((3L, s"third $banner"), (4L, "quiet unique one"))),
+        d => Seq(s"$d.report", s"$d.windex"),
+        (t, df, ckpt) => StreamingOps.ingestSubstringDedupGate(df, "text", "doc_id",
+          banner.length, keepFirst = true, t(0), t(1), ckpt)),
+      GateCase("ingestRulesetDqGate", Seq("id", "status", "amount"),
+        Seq(Seq((1L, "ok", 5.0), (2L, "bad", 7.0), (3L, "ok", -1.0)),
+          Seq((4L, "ok", 2.0), (5L, "ok", -3.0))),
+        d => Seq(s"$d.cleansed", s"$d.quarantine", s"$d.results"),
+        (t, df, ckpt) => StreamingOps.ingestRulesetDqGate(df,
+          warnRules = Seq("ColumnValues 'status' in ['ok']"),
+          quarantineRules = Seq("ColumnValues 'amount' >= 0"),
+          haltRules = Seq("ColumnValues 'amount' >= -100"), t(0), t(1), t(2), ckpt)),
+      GateCase("ingestAnnGate", Seq("vec_id", "embedding"), Seq(vecs.take(25), vecs.drop(25)),
+        d => Seq(s"$d.idx"),
+        (t, df, ckpt) => StreamingOps.ingestAnnGate(df, "embedding", "vec_id", cs, cb,
+          t(0), ckpt)))
   }
 }

@@ -35,6 +35,24 @@ class HarnessSpec extends SparkSpec {
     } finally spark.sparkContext.removeSparkListener(counters)
   }
 
+  test("an AQE query-stage job is named by its root SQL execution's call site") {
+    val db = s"harness${System.nanoTime()}"
+    spark.sql(s"CREATE DATABASE $db")
+    val (path, sink) = StageFixture.files()
+    StageFixture.collect(spark, db, path, sink, "warm")
+    val counters = new Harness.Counters
+    spark.sparkContext.addSparkListener(counters)
+    try {
+      org.apache.spark.sql.graftbridge.BusBridge.drain(spark.sparkContext)
+      val before = counters.snapshot
+      StageFixture.collect(spark, db, path, sink, "timed")
+      org.apache.spark.sql.graftbridge.BusBridge.drain(spark.sparkContext)
+      val jobs = counters.jobsBetween(before, counters.snapshot)
+      assert(jobs.nonEmpty && jobs.forall(j => j.site.nonEmpty &&
+        !j.site.contains("CompletableFuture.java")), jobs.map(_.site).mkString("; "))
+    } finally spark.sparkContext.removeSparkListener(counters)
+  }
+
   test("an unknown section or query name is rejected, not measured as empty") {
     val e = intercept[IllegalArgumentException](ScaleCheck.resolve(Some("jaccard,jacard")))
     assert(e.getMessage.contains("jacard") && !e.getMessage.contains("jaccard,"))

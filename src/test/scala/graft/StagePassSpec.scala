@@ -8,7 +8,6 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.BusBridge
 
 import graft.config.Specs
 import graft.dq.{DqEngine, RuleOutcome}
@@ -263,36 +262,5 @@ class PipelineStageSpec extends SparkSpec {
     val e = intercept[RuntimeException](
       run(uniqueDb, path, dir.resolve("lineage.jsonl").toString, "e1"))
     assert(e.getMessage == "No data found in source file; aborting")
-  }
-
-  // 11 jobs: two for the CSV read's schema inference, two for the before
-  // audit (which also fills the read's checkpoint), two for each ruleset's
-  // one metrics pass, the quarantine sink, the table write (which also
-  // takes the after audit) and the DQ results. The per-tier passes, the
-  // separate after audit and the isEmpty probe made it 20.
-  test("job budget: one collect-to-cleanse with warn, quarantine and halt rules") {
-    val dir = Files.createTempDirectory("graft_budget")
-    val sink = dir.resolve("lineage.jsonl").toString
-    val db = uniqueDb
-    val path = csv(dir, day1 :+ (("P4", "-4.5", 9)))
-    val dq = Specs.dqRules(Specs.parseJson(
-      """{"before_transform": {"warn_rules": ["Completeness 'premium' > 0.5"]},
-          "after_transform": {
-            "warn_rules": ["ColumnValues 'units' <= 5"],
-            "quarantine_rules": ["ColumnValues 'premium' >= 0"],
-            "halt_rules": ["IsComplete 'policynumber'", "RowCount > 0"]}}"""))
-    run(db, path, sink, "warm", dq = dq) // creates the tables
-    val counters = new Harness.Counters
-    spark.sparkContext.addSparkListener(counters)
-    try {
-      BusBridge.drain(spark.sparkContext)
-      val s0 = counters.snapshot
-      run(db, path, sink, "timed", dq = dq)
-      BusBridge.drain(spark.sparkContext)
-      val jobs = counters.jobsBetween(s0, counters.snapshot)
-      assert(jobs.size <= 14, s"${jobs.size} jobs: ${jobs.map(_.site).mkString("; ")}")
-    } finally spark.sparkContext.removeSparkListener(counters)
-    assert(spark.table(s"$db.policy").count() == 3)
-    assert(spark.table(s"$db.policy_quarantine_after_transform").count() == 2)
   }
 }
