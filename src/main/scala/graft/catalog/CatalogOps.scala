@@ -15,12 +15,13 @@ import org.apache.spark.sql.catalyst.expressions.{And, Attribute, EqualTo,
   * hit repeatedly (here: orderkey between orders and lineitem). */
 object CatalogOps {
 
+  /** Creates `table` (and its database) bucketed, zstd like every
+    * [[TableWrite]] table; an existing table is replaced. */
   def writeBucketed(df: DataFrame, table: String, bucketCols: Seq[String],
                     numBuckets: Int, sortCols: Seq[String] = Seq.empty): Unit = {
-    val parts = table.split("\\.")
-    if (parts.length == 2)
-      df.sparkSession.sql(s"CREATE DATABASE IF NOT EXISTS ${parts(0)}")
-    var w = df.write.format("parquet").mode(SaveMode.Overwrite)
+    TableWrite.createDatabaseOf(df.sparkSession, table)
+    var w = df.write.format("parquet").option("compression", TableWrite.Codec)
+      .mode(SaveMode.Overwrite)
       .bucketBy(numBuckets, bucketCols.head, bucketCols.tail: _*)
     if (sortCols.nonEmpty) w = w.sortBy(sortCols.head, sortCols.tail: _*)
     w.saveAsTable(table)
@@ -43,21 +44,11 @@ object CatalogOps {
     * staleness for the same reason [[FileStats.pruneFiles]] is: unknown
     * files always survive. */
   def readPruned(spark: SparkSession, table: String, statsTable: String,
-                 filter: Column): DataFrame =
-    readPruned(spark, table, statsTable, filter, indexedCols = None)
-
-  /** `indexedCols`: the columns the stats table indexes, when the caller
-    * already knows them ([[FileStats.keysPrunedScan]] probes exactly its
-    * key column) — skips the [[FileStats.statsSpecOf]] discovery pass,
-    * which reads the stats table's bloom bytes and would be a real cost
-    * on a per-micro-batch hot path. */
-  private[catalog] def readPruned(spark: SparkSession, table: String,
-                                  statsTable: String, filter: Column,
-                                  indexedCols: Option[Set[String]]): DataFrame = {
+                 filter: Column): DataFrame = {
     val plain = spark.table(table).filter(filter)
     // EVERYTHING stats-related degrades to the plain read — a malformed or
     // concurrently-dropped stats table must cost pruning, never the read
-    try readPrunedOrThrow(spark, table, statsTable, filter, plain, indexedCols)
+    try readPrunedOrThrow(spark, table, statsTable, filter, plain)
     catch {
       case scala.util.control.NonFatal(e) =>
         org.slf4j.LoggerFactory.getLogger(getClass).warn(
@@ -147,16 +138,11 @@ object CatalogOps {
 
   private def readPrunedOrThrow(spark: SparkSession, table: String,
                                 statsTable: String, filter: Column,
-                                plain: DataFrame,
-                                indexedCols: Option[Set[String]]): DataFrame = {
-    val indexed: Set[String] = indexedCols.getOrElse {
-      // memoized: statsSpecOf scans the whole stats table (bloom payload
-      // lengths included) and the spec is invariant between refreshes
-      FileStats.cachedStatsSpecOf(spark, statsTable) match {
-        case Some(spec) => spec.cols.toSet
-        case None => return plain
-      }
-    }
+                                plain: DataFrame): DataFrame = {
+    // looked up once: the indexed columns here, the bloom geometry in prune
+    val spec = FileStats.statsSpecOf(spark, statsTable)
+    if (spec.isEmpty) return plain
+    val indexed = spec.get.cols.toSet
 
     // the RESOLVED predicate, from the analyzed plan (the public Column is
     // ColumnNode-backed in Spark 4 — analysis is what turns it into real
@@ -233,16 +219,7 @@ object CatalogOps {
     // PRUNE with the extracted predicates, FILTER with the original Column
     // (the extracted set is a superset-admitting relaxation, so the full
     // row-level filter restores exact semantics)
-    val (root, selected, _) =
-      FileStats.pruneFiles(spark, table, statsTable, preds)
-    val tableSchema = spark.table(table).schema
-    val cols = tableSchema.fields.map(f => org.apache.spark.sql.functions.col(f.name)).toSeq
-    if (selected.isEmpty)
-      spark.table(table).filter(org.apache.spark.sql.functions.lit(false))
-        .select(cols: _*)
-    else spark.read.schema(tableSchema).option("basePath", root.toString)
-      .parquet(selected.map(f => FileStats.absDataPath(root, f)): _*)
-      .filter(filter)
-      .select(cols: _*)
+    val (root, selected, _) = FileStats.prune(spark, table, statsTable, spec, preds)
+    FileStats.readFiles(spark, table, root, selected, filter)
   }
 }

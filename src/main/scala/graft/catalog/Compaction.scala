@@ -1,7 +1,5 @@
 package graft.catalog
 
-import java.util.concurrent.{Callable, Executors, TimeUnit}
-
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -68,82 +66,13 @@ object Compaction {
     def filesRemoved: Int = filesBefore - filesAfter
   }
 
-  private def isDataName(n: String): Boolean =
-    !n.startsWith("_") && !n.startsWith(".")
-
-  /** Driver-side manifest walk: data files grouped by partition directory.
-    * Recursive `listStatus`, NOT `listFiles(recursive)`: the located-status
-    * iterator materializes permissions, which on the local FS forks an
-    * `ls -ld` PER FILE (measured 1.8 s for a 280-file table — the walk was
-    * the dominant term of a no-op compaction); plain statuses keep
-    * permissions lazy and we only read path/length. Hidden dirs are pruned
-    * BEFORE descent, so staging/scratch trees cost nothing.
-    *
-    * The walk is PARALLEL over top-level partition directories (bounded
-    * pool, `walkParallelism` threads). NOTE the threads share one cached
-    * Hadoop `FileSystem` instance: concurrent `listStatus` is safe on the
-    * stock HDFS / S3A / local implementations but is NOT guaranteed by the
-    * `FileSystem` contract — for a store whose client is not thread-safe,
-    * pass `walkParallelism = 1` (plumbed through [[compactTable]]) to
-    * serialize the walk. A single-threaded listing is the one piece of the
-    * OPTIMIZE verb that grows with table file count even when nothing needs
-    * compacting, and on object stores each directory listing is a network
-    * round-trip — serializing thousands of them turns a no-op pass into
-    * minutes. Production table formats answer this listing from persisted
-    * manifests; the parallel walk is the Hive-layout equivalent. */
-  def listManifests(spark: SparkSession, table: String,
-                    walkParallelism: Int = 8): (Path, Seq[PartitionManifest]) = {
-    val ident = spark.sessionState.sqlParser.parseTableIdentifier(table)
-    val meta = spark.sessionState.catalog.getTableMetadata(ident)
-    val root = new Path(meta.location)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    type Acc = scala.collection.mutable.LinkedHashMap[String, (Int, Long)]
-    def walk(dir: Path, rel: String, into: Acc): Unit =
-      fs.listStatus(dir).foreach { st =>
-        val name = st.getPath.getName
-        if (st.isDirectory) {
-          if (isDataName(name)) walk(st.getPath, if (rel.isEmpty) name else s"$rel/$name", into)
-        } else if (isDataName(name)) {
-          val (c, b) = into.getOrElse(rel, (0, 0L))
-          into(rel) = (c + 1, b + st.getLen)
-        }
-      }
-    val top = fs.listStatus(root)
-    val byDir: Acc = scala.collection.mutable.LinkedHashMap.empty
-    top.foreach { st => // root-level data files ("" partition) stay inline
-      if (!st.isDirectory && isDataName(st.getPath.getName)) {
-        val (c, b) = byDir.getOrElse("", (0, 0L))
-        byDir("") = (c + 1, b + st.getLen)
-      }
-    }
-    val dirs = top.filter(st => st.isDirectory && isDataName(st.getPath.getName))
-    if (dirs.nonEmpty) {
-      val pool = Executors.newFixedThreadPool(
-        math.max(1, math.min(walkParallelism, dirs.length)))
-      try {
-        val futures = dirs.map { st =>
-          pool.submit(new Callable[Acc] {
-            def call(): Acc = {
-              val local: Acc = scala.collection.mutable.LinkedHashMap.empty
-              walk(st.getPath, st.getPath.getName, local)
-              local
-            }
-          })
-        }
-        try futures.foreach(f => byDir ++= f.get()) // merged in top-listing order
-        catch {
-          case e: java.util.concurrent.ExecutionException =>
-            // callers match on the raw IO error, not the pool wrapper; and
-            // the other in-flight listings are doomed work — cancel them
-            pool.shutdownNow()
-            throw Option(e.getCause).getOrElse(e)
-        }
-      } finally {
-        pool.shutdown()
-        pool.awaitTermination(1, TimeUnit.MINUTES)
-      }
-    }
-    (root, byDir.toSeq.map { case (rel, (c, b)) => PartitionManifest(rel, c, b) })
+  /** Data files grouped by partition directory, in the order of the one
+    * walk ([[FileStats.listDataFiles]]): cost ∝ file count, zero data read. */
+  def listManifests(spark: SparkSession, table: String): (Path, Seq[PartitionManifest]) = {
+    val (root, files) = FileStats.listDataFiles(spark, table)
+    val byRel = files.groupBy(_.rel)
+    (root, files.map(_.rel).distinct.map(rel =>
+      PartitionManifest(rel, byRel(rel).size, byRel(rel).map(_.bytes).sum)))
   }
 
   private def binCount(bytes: Long, targetBytes: Long): Int =
@@ -308,10 +237,6 @@ object Compaction {
     *                 live destination path just before each new file is
     *                 renamed into its partition dir; throwing exercises the
     *                 mid-sweep rollback path.
-    * @param walkParallelism threads for the manifest listing
-    *                        ([[listManifests]]); 1 serializes the walk for
-    *                        stores whose FileSystem client is not
-    *                        thread-safe.
     */
   def compactTable(spark: SparkSession, table: String, targetBytes: Long,
                    curve: Option[Column] = None, minFiles: Int = 2,
@@ -319,11 +244,10 @@ object Compaction {
                    lineage: Option[graft.lineage.Lineage] = None,
                    kllBounds: Boolean = false,
                    swapHook: Path => Unit = _ => (),
-                   walkParallelism: Int = 8,
                    statsTable: Option[String] = None): CompactReport = {
     require(targetBytes > 0, "targetBytes must be positive")
     require(minFiles >= 2, "minFiles < 2 would select single-file partitions")
-    val (root, manifests) = listManifests(spark, table, walkParallelism)
+    val (root, manifests) = listManifests(spark, table)
     val selected = manifests.filter(m =>
       m.files >= minFiles && m.files > binCount(m.bytes, targetBytes))
     val filesBeforeAll = manifests.map(_.files).sum
@@ -341,8 +265,7 @@ object Compaction {
     // table relation eagerly file-lists the WHOLE table (measured 0.6 s →
     // 3.4 s at 10× table size with identical affected bytes — the one
     // growth term in an otherwise flat operation).
-    val ident = spark.sessionState.sqlParser.parseTableIdentifier(table)
-    val meta = spark.sessionState.catalog.getTableMetadata(ident)
+    val meta = FileStats.tableMeta(spark, table)
     val partCols = meta.partitionColumnNames.toSet
     val dataSchema = StructType(meta.schema.filterNot(f => partCols.contains(f.name)))
     val dataCols = dataSchema.fieldNames.toIndexedSeq
@@ -351,40 +274,26 @@ object Compaction {
 
     def liveDir(m: PartitionManifest): Path =
       if (m.rel.isEmpty) root else new Path(root, m.rel)
+    def dataFilesIn(dir: Path) =
+      fs.listStatus(dir).filter(s => s.isFile && FileStats.isDataName(s.getPath.getName))
 
     // Phase 1: write each selected partition's replacement files to scratch.
     // Independent Spark jobs, submitted from a bounded pool — the Spark
     // scheduler runs them concurrently, so many small partitions don't pay
     // serial per-job latency.
-    val pool = Executors.newFixedThreadPool(math.max(1, math.min(parallelism, selected.size)))
-    try {
-      val futures = selected.zipWithIndex.map { case (m, i) =>
-        pool.submit(new Callable[Unit] {
-          def call(): Unit = {
-            val part = spark.read.schema(dataSchema).parquet(liveDir(m).toString)
-            val nBins = binCount(m.bytes, targetBytes)
-            val key = curve.getOrElse(xxhash64(dataCols.map(col): _*))
-            val arranged =
-              if (nBins == 1) {
-                val one = part.coalesce(1) // narrow: merge reads, zero shuffle
-                if (curve.isDefined) one.sortWithinPartitions(key) else one
-              } else if (kllBounds)
-                graft.operators.Layout.repartitionByKllRange(part, key, nBins)
-              else part.repartitionByRange(nBins, key).sortWithinPartitions(key)
-            TableWrite.scratch(arranged, s"$scratch/$i")
-          }
-        })
-      }
-      try futures.foreach(_.get())
-      catch {
-        case e: java.util.concurrent.ExecutionException =>
-          pool.shutdownNow() // remaining rewrites are doomed work
-          throw Option(e.getCause).getOrElse(e)
-      }
-    } finally {
-      pool.shutdown()
-      pool.awaitTermination(1, TimeUnit.MINUTES)
-    }
+    FileStats.inParallel(parallelism)(selected.zipWithIndex.map { case (m, i) => () =>
+      val part = spark.read.schema(dataSchema).parquet(liveDir(m).toString)
+      val nBins = binCount(m.bytes, targetBytes)
+      val key = curve.getOrElse(xxhash64(dataCols.map(col): _*))
+      val arranged =
+        if (nBins == 1) {
+          val one = part.coalesce(1) // narrow: merge reads, zero shuffle
+          if (curve.isDefined) one.sortWithinPartitions(key) else one
+        } else if (kllBounds)
+          graft.operators.Layout.repartitionByKllRange(part, key, nBins)
+        else part.repartitionByRange(nBins, key).sortWithinPartitions(key)
+      TableWrite.scratch(arranged, s"$scratch/$i")
+    })
 
     // Phase 2: file-level swap per partition — old data files to trash, new
     // files in. On any swap failure, FIRST rename already-swapped-in new
@@ -400,15 +309,13 @@ object Compaction {
         val dir = liveDir(m)
         val trash = new Path(scratch, s"trash_$i")
         fs.mkdirs(trash)
-        fs.listStatus(dir).filter(s => s.isFile && isDataName(s.getPath.getName)).foreach { s =>
+        dataFilesIn(dir).foreach { s =>
           val dst = new Path(trash, s.getPath.getName)
           if (!fs.rename(s.getPath, dst))
             throw new java.io.IOException(s"rename to trash failed: ${s.getPath}")
           moved += ((dst, s.getPath))
         }
-        val newFiles = fs.listStatus(new Path(s"$scratch/$i"))
-          .filter(s => s.isFile && isDataName(s.getPath.getName))
-        newFiles.foreach { s =>
+        dataFilesIn(new Path(s"$scratch/$i")).foreach { s =>
           val dst = new Path(dir, s.getPath.getName)
           swapHook(dst)
           if (!fs.rename(s.getPath, dst))
@@ -441,7 +348,7 @@ object Compaction {
     Scratch.delete(spark, scratch)
     spark.catalog.refreshTable(table)
 
-    val (_, after) = listManifests(spark, table, walkParallelism)
+    val (_, after) = listManifests(spark, table)
     val report = CompactReport(manifests.size, selected.size,
       filesBeforeAll, after.map(_.files).sum, selected.map(_.bytes).sum)
     // the OPTIMIZE event belongs in the same audit trail as the writes that
@@ -459,7 +366,7 @@ object Compaction {
       // as failed (stats staleness is a performance problem, the OPTIMIZE
       // result is not) — same posture as the gates' refresh hooks
       try FileStats.statsSpecOf(spark, st).foreach(sp =>
-        FileStats.refresh(spark, table, st, sp, walkParallelism))
+        FileStats.refresh(spark, table, st, sp))
       catch {
         case scala.util.control.NonFatal(e) =>
           org.slf4j.LoggerFactory.getLogger(getClass).warn(

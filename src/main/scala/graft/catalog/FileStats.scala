@@ -1,9 +1,10 @@
 package graft.catalog
 
-import java.util.concurrent.{Callable, Executors, TimeUnit}
+import java.util.concurrent.{Callable, ExecutionException, Executors, TimeUnit}
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.CatalogTable
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -38,12 +39,15 @@ import org.apache.spark.sql.types._
   *     never correctness. Files whose stats VIOLATE any predicate (range
   *     disjoint, or Bloom says no key present — no false negatives) are
   *     skipped.
-  *   - [[scanPruned]] reads only the surviving files (basePath-anchored so
-  *     partition columns reconstruct) and re-applies the row-level
-  *     predicate, so its result EQUALS `spark.table(t).filter(pred)`
-  *     bit-for-bit — the oracle-checkable contract.
+  *   - [[scanPruned]] and [[CatalogOps.readPruned]] read only the surviving
+  *     files through ONE builder ([[readFiles]]: basePath-anchored so
+  *     partition columns reconstruct) and re-apply the row-level predicate,
+  *     so the result EQUALS `spark.table(t).filter(pred)` bit-for-bit — the
+  *     oracle-checkable contract.
   *
-  * The driver-side file listing mirrors Spark's own scan planning (an
+  * Every reader and writer lists files through ONE walk, [[listDataFiles]],
+  * and looks up the spec through ONE catalog read, [[statsSpecOf]]. The
+  * driver-side file listing mirrors Spark's own scan planning (an
   * InMemoryFileIndex holds every file status on the driver); the per-file
   * stats rows it joins against stay distributed.
   *
@@ -73,68 +77,76 @@ object FileStats {
 
   // ------------------------------------------------------------------ listing
 
-  /** File-level manifest walk: every data file with its partition-relative
-    * dir — [[Compaction.listManifests]]'s shape at file granularity, same
-    * parallel-walk/hidden-dir-pruning posture.
+  /** Threads of the [[listDataFiles]] walk over top-level directories. */
+  private val WalkThreads = 8
+
+  /** Data file or directory name: hidden `_`/`.` names (staging, scratch,
+    * `_SUCCESS`) are never data. */
+  private[catalog] def isDataName(n: String): Boolean =
+    !n.startsWith("_") && !n.startsWith(".")
+
+  private[catalog] def tableMeta(spark: SparkSession, table: String): CatalogTable =
+    spark.sessionState.catalog.getTableMetadata(
+      spark.sessionState.sqlParser.parseTableIdentifier(table))
+
+  /** The one driver-side walk of a table's data files, each with its
+    * partition-relative dir ("" at the root) — what a table format's
+    * manifests would answer, and what [[Compaction.listManifests]] folds
+    * per directory. Recursive `listStatus`, NOT `listFiles(recursive)`:
+    * the located-status iterator materializes permissions, which on the
+    * local FS forks an `ls -ld` PER FILE (measured 1.8 s for a 280-file
+    * table — the walk was the dominant term of a no-op compaction); plain
+    * statuses keep permissions lazy and only path/length are read. Hidden
+    * dirs are pruned BEFORE descent, so staging/scratch trees cost nothing.
+    *
+    * The walk runs on [[WalkThreads]] threads over top-level directories:
+    * on object stores each directory listing is a network round-trip, and
+    * serializing thousands of them turns a no-op pass into minutes. The
+    * threads share one cached Hadoop `FileSystem`: concurrent `listStatus`
+    * is safe on the stock HDFS / S3A / local implementations but is not
+    * guaranteed by the `FileSystem` contract.
     *
     * `onlyRels`: walk ONLY the given partition-relative dirs (the scoped
     * refresh of [[Retention.deleteRows]] — listing cost ∝ touched
     * partitions, not table size). A scoped rel that no longer exists lists
     * as empty (its files are gone — exactly what the caller must see). */
   def listDataFiles(spark: SparkSession, table: String,
-                    walkParallelism: Int = 8,
                     onlyRels: Option[Seq[String]] = None): (Path, Seq[FileEntry]) = {
-    val meta = spark.sessionState.catalog.getTableMetadata(
-      spark.sessionState.sqlParser.parseTableIdentifier(table))
-    val root = new Path(meta.location)
+    val root = new Path(tableMeta(spark, table).location)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    def ok(n: String) = !n.startsWith("_") && !n.startsWith(".")
-    type Acc = scala.collection.mutable.ArrayBuffer[FileEntry]
-    def walk(dir: Path, rel: String, into: Acc): Unit =
-      fs.listStatus(dir).foreach { st =>
-        val name = st.getPath.getName
-        if (st.isDirectory) {
-          if (ok(name)) walk(st.getPath, if (rel.isEmpty) name else s"$rel/$name", into)
-        } else if (ok(name)) into += FileEntry(rel, name, st.getLen)
-      }
-    onlyRels.foreach { rels =>
-      val out: Acc = scala.collection.mutable.ArrayBuffer.empty
-      rels.distinct.foreach { r =>
-        if (r.isEmpty) { // root-level files of an unpartitioned layout
-          fs.listStatus(root).foreach { st =>
-            if (!st.isDirectory && ok(st.getPath.getName))
-              out += FileEntry("", st.getPath.getName, st.getLen)
-          }
-        } else {
-          try walk(new Path(root, r), r, out)
-          catch { case _: java.io.FileNotFoundException => () } // emptied partition
-        }
-      }
-      return (root, out.toSeq)
+    def listed(dir: Path) = fs.listStatus(dir).toSeq.filter(st => isDataName(st.getPath.getName))
+    def entry(rel: String, st: FileStatus) = FileEntry(rel, st.getPath.getName, st.getLen)
+    def walk(dir: Path, rel: String): Seq[FileEntry] = listed(dir).flatMap { st =>
+      val name = st.getPath.getName
+      if (st.isDirectory) walk(st.getPath, if (rel.isEmpty) name else s"$rel/$name")
+      else Seq(entry(rel, st))
     }
-    val top = fs.listStatus(root)
-    val out: Acc = scala.collection.mutable.ArrayBuffer.empty
-    top.foreach { st =>
-      if (!st.isDirectory && ok(st.getPath.getName))
-        out += FileEntry("", st.getPath.getName, st.getLen)
+    val files = onlyRels match {
+      case Some(rels) => rels.distinct.flatMap { r =>
+        if (r.isEmpty) listed(root).filterNot(_.isDirectory).map(entry("", _))
+        else try walk(new Path(root, r), r)
+        catch { case _: java.io.FileNotFoundException => Nil } // emptied partition
+      }
+      case None =>
+        val (dirs, top) = listed(root).partition(_.isDirectory)
+        top.map(entry("", _)) ++ inParallel(WalkThreads)(
+          dirs.map(d => () => walk(d.getPath, d.getPath.getName))).flatten
     }
-    val dirs = top.filter(st => st.isDirectory && ok(st.getPath.getName))
-    if (dirs.nonEmpty) {
-      val pool = Executors.newFixedThreadPool(
-        math.max(1, math.min(walkParallelism, dirs.length)))
+    (root, files)
+  }
+
+  /** Runs `tasks` on at most `threads` threads and returns their results in
+    * task order. The first failure cancels the tasks still running and is
+    * rethrown as the task threw it, not wrapped by the pool. */
+  private[catalog] def inParallel[A](threads: Int)(tasks: Seq[() => A]): Seq[A] =
+    if (tasks.isEmpty) Nil
+    else {
+      val pool = Executors.newFixedThreadPool(math.max(1, math.min(threads, tasks.length)))
       try {
-        val futures = dirs.map { st =>
-          pool.submit(new Callable[Acc] {
-            def call(): Acc = {
-              val local: Acc = scala.collection.mutable.ArrayBuffer.empty
-              walk(st.getPath, st.getPath.getName, local)
-              local
-            }
-          })
-        }
-        try futures.foreach(f => out ++= f.get())
+        val futures = tasks.map(t => pool.submit(new Callable[A] { def call(): A = t() }))
+        try futures.map(_.get())
         catch {
-          case e: java.util.concurrent.ExecutionException =>
+          case e: ExecutionException =>
             pool.shutdownNow()
             throw Option(e.getCause).getOrElse(e)
         }
@@ -143,8 +155,6 @@ object FileStats {
         pool.awaitTermination(1, TimeUnit.MINUTES)
       }
     }
-    (root, out.toSeq)
-  }
 
   // ------------------------------------------------------------------ encoding
 
@@ -214,10 +224,6 @@ object FileStats {
     if (f.rel.isEmpty) new Path(root, f.name)
     else new Path(new Path(root, f.rel), f.name)
 
-  /** Absolute path of a pruned-scan survivor — for callers assembling
-    * their own reads over [[pruneFiles]] output ([[CatalogOps.readPruned]]). */
-  def absDataPath(root: Path, f: FileEntry): String = absPath(root, f).toString
-
   private val statsSchema = StructType(Seq(
     StructField("rel", StringType), StructField("file", StringType),
     StructField("bytes", LongType), StructField("n_rows", LongType),
@@ -227,11 +233,10 @@ object FileStats {
     StructField("min_str", StringType), StructField("max_str", StringType),
     StructField("bloom", BinaryType), StructField("bloom_k", LongType)))
 
-  private def dataSchemaOf(spark: SparkSession, table: String) = {
-    val meta = spark.sessionState.catalog.getTableMetadata(
-      spark.sessionState.sqlParser.parseTableIdentifier(table))
+  private def dataSchemaOf(spark: SparkSession, table: String): StructType = {
+    val meta = tableMeta(spark, table)
     val partCols = meta.partitionColumnNames.toSet
-    (meta, StructType(meta.schema.filterNot(f => partCols.contains(f.name))))
+    StructType(meta.schema.filterNot(f => partCols.contains(f.name)))
   }
 
   // ------------------------------------------------------------------ refresh
@@ -249,12 +254,12 @@ object FileStats {
     * wrong bit positions — a correctness hazard, never tolerated); legacy
     * tables without the property must still be dropped to resize. */
   def refresh(spark: SparkSession, table: String, statsTable: String,
-              spec: StatsSpec, walkParallelism: Int = 8,
+              spec: StatsSpec,
               scopeRels: Option[Set[String]] = None): RefreshReport = {
     require(spec.cols.nonEmpty, "spec.cols must be non-empty")
     require(spec.bloomCols.toSet.subsetOf(spec.cols.toSet),
       "bloomCols must be a subset of cols")
-    val (meta, dataSchema) = dataSchemaOf(spark, table)
+    val dataSchema = dataSchemaOf(spark, table)
     val fieldsByName = dataSchema.fields.map(f => f.name -> f).toMap
     spec.cols.foreach { c =>
       require(fieldsByName.contains(c),
@@ -276,7 +281,7 @@ object FileStats {
     // the full listing) falls back to an unscoped refresh. The auto-
     // rebucket growth check is deliberately skipped in scoped mode: it is
     // deferred to the next full refresh, never lost.
-    val (root, files) = listDataFiles(spark, table, walkParallelism, scopeRels.map(_.toSeq))
+    val (root, files) = listDataFiles(spark, table, scopeRels.map(_.toSeq))
     import scala.jdk.CollectionConverters._
     val curDf = spark.createDataFrame(
       files.map(f => org.apache.spark.sql.Row(f.rel, f.name, f.bytes)).asJava,
@@ -284,8 +289,7 @@ object FileStats {
         StructField("bytes", LongType)))).localCheckpoint(true)
 
     val exists = spark.catalog.tableExists(statsTable)
-    val statsMeta = if (exists) Some(spark.sessionState.catalog.getTableMetadata(
-      spark.sessionState.sqlParser.parseTableIdentifier(statsTable))) else None
+    val statsMeta = if (exists) Some(tableMeta(spark, statsTable)) else None
     val storedBuckets = statsMeta.flatMap(_.properties.get(BucketsProp))
       .flatMap(v => scala.util.Try(v.toInt).toOption)
     val legacyLayout = exists && (statsMeta.exists(
@@ -302,7 +306,7 @@ object FileStats {
     // the scoped path needs a healthy same-geometry table — anything that
     // would force a full rewrite re-runs unscoped (full listing)
     if (scopeRels.isDefined && (!exists || legacyLayout || geometryChanged))
-      return refresh(spark, table, statsTable, spec, walkParallelism, None)
+      return refresh(spark, table, statsTable, spec, None)
 
     // NARROW bookkeeping read: coverage and vanish detection never touch
     // the bloom payload bytes (bloom presence is answered by bloom_k,
@@ -312,15 +316,12 @@ object FileStats {
       StructField("file", StringType), StructField("bytes", LongType),
       StructField("col_name", StringType), StructField("n_rows", LongType),
       StructField("has_bloom", BooleanType)))
-    val hasKCol = !exists || spark.table(statsTable).columns.contains("bloom_k")
     val oldNarrow = (
       if (exists) scopeRels
         .fold(spark.table(statsTable))(rs =>
           spark.table(statsTable).filter(col("rel").isin(rs.toSeq: _*)))
         .select(col("rel"), col("file"),
-        col("bytes"), col("col_name"), col("n_rows"),
-        (if (hasKCol) col("bloom_k").isNotNull else col("bloom").isNotNull)
-          .as("has_bloom"))
+        col("bytes"), col("col_name"), col("n_rows"), col("bloom_k").isNotNull.as("has_bloom"))
       else spark.createDataFrame(
         new java.util.ArrayList[org.apache.spark.sql.Row](), narrowSchema)
     ).localCheckpoint(true)
@@ -499,44 +500,12 @@ object FileStats {
           .filter(col("sb").isin(changedBuckets.toSeq: _*)).drop("sb"))
         .localCheckpoint(true), statsTable)
     }
-    // record the maintenance spec as metadata (spec discovery becomes a
-    // catalog read) and prime the memo with exactly what a discovery would
-    // now answer; renderSpec-unrepresentable column names keep the
-    // aggregation fallback
-    renderSpec(spec).flatMap(parseSpec) match {
-      case Some(canonical) =>
-        spark.sql(s"ALTER TABLE $statsTable SET TBLPROPERTIES " +
-          s"('$SpecProp' = '${renderSpec(spec).get}')")
-        specCache.put(specCacheKey(statsTable), Some(canonical))
-      case None => specCache.remove(specCacheKey(statsTable))
-    }
+    // record the maintenance spec as metadata: spec discovery is a catalog
+    // read ([[statsSpecOf]])
+    spark.sql(s"ALTER TABLE $statsTable SET TBLPROPERTIES " +
+      s"('$SpecProp' = ${TableWrite.literal(renderSpec(spec))})")
     RefreshReport(toScan.length, removed, files.length - toScan.length)
   }
-
-  // spec memoization: the discovered spec is invariant between refreshes,
-  // and statsSpecOf aggregates the whole stats table (incl. octet_length
-  // over the bloom payloads) — an O(stats-table) scan a hot read path must
-  // not pay per call. Keyed by the (case-normalized) table name; refresh is
-  // the ONLY writer/creator of stats tables, so invalidating there covers
-  // creation, spec widening, and rebucket rebuilds. A stale entry for a
-  // dropped-and-never-refreshed table only sends readPruned into its
-  // degrade-to-plain-read path (pruneFiles fails on the missing table).
-  private val specCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Option[StatsSpec]]()
-  private def specCacheKey(statsTable: String): String =
-    statsTable.toLowerCase(java.util.Locale.ROOT)
-
-  /** Memoized [[statsSpecOf]] — what per-read callers
-    * ([[CatalogOps.readPruned]]) use. Callers must name the stats table
-    * consistently (always qualified or always bare) for the cache to hit. */
-  def cachedStatsSpecOf(spark: SparkSession, statsTable: String): Option[StatsSpec] =
-    specCache.computeIfAbsent(specCacheKey(statsTable),
-      _ => statsSpecOf(spark, statsTable))
-
-  /** Drops a memoized spec — for callers that drop/recreate a stats table
-    * outside [[refresh]] (tests, manual rebuilds). */
-  def invalidateStatsSpec(statsTable: String): Unit =
-    specCache.remove(specCacheKey(statsTable))
 
   /** Table property recording the stats table's bucket count (set at
     * creation, then immutable until an auto-rebucket rebuild — a file's
@@ -546,24 +515,30 @@ object FileStats {
   /** Table property recording the spec the stats table is maintained under
     * (`bits|k|cols,csv|bloomCols,csv`) — what [[statsSpecOf]] answers from,
     * so spec discovery is a metadata read instead of an O(stats-table)
-    * aggregation over the bloom payloads. Set on every [[refresh]];
-    * tables predating it fall back to the aggregation. Skipped (never set)
-    * for column names containing the delimiters — the fallback handles
-    * them. */
+    * aggregation over the bloom payloads. Set at the end of every
+    * [[refresh]]. A column name carries the delimiters, and the escape
+    * character `%`, percent-encoded. */
   private val SpecProp = "graft.stats.spec"
 
-  private def renderSpec(spec: StatsSpec): Option[String] =
-    if (spec.cols.exists(c => c.contains(",") || c.contains("|"))) None
-    else Some(s"${spec.bloomBits}|${spec.bloomHashes}|" +
-      s"${spec.cols.sorted.mkString(",")}|${spec.bloomCols.sorted.mkString(",")}")
+  private val NameEscapes = Seq("%" -> "%25", "," -> "%2C", "|" -> "%7C")
+
+  private def encodeName(c: String): String =
+    NameEscapes.foldLeft(c) { case (acc, (raw, esc)) => acc.replace(raw, esc) }
+
+  private def decodeName(c: String): String =
+    "%(25|2C|7C)".r.replaceAllIn(c, m => scala.util.matching.Regex.quoteReplacement(
+      NameEscapes.collectFirst { case (raw, esc) if esc == m.matched => raw }.get))
+
+  private def renderSpec(spec: StatsSpec): String =
+    (Seq(spec.bloomBits.toString, spec.bloomHashes.toString) ++
+      Seq(spec.cols, spec.bloomCols).map(_.sorted.map(encodeName).mkString(","))).mkString("|")
 
   private def parseSpec(s: String): Option[StatsSpec] = {
     val parts = s.split("\\|", -1)
     if (parts.length != 4) None
     else scala.util.Try {
-      val cols = parts(2).split(",", -1).toSeq.filter(_.nonEmpty)
-      val bloomCols = parts(3).split(",", -1).toSeq.filter(_.nonEmpty)
-      StatsSpec(cols, bloomCols, parts(0).toInt, parts(1).toInt)
+      def names(p: String) = p.split(",", -1).toSeq.filter(_.nonEmpty).map(decodeName)
+      StatsSpec(names(parts(2)), names(parts(3)), parts(0).toInt, parts(1).toInt)
     }.toOption
   }
 
@@ -629,39 +604,25 @@ object FileStats {
 
   /** Files of `table` that MIGHT satisfy every predicate, per the stats.
     * Unknown files (no stats rows) survive; a file is excluded only when a
-    * recorded stats row rules it out. The Bloom probe's hash count comes
-    * from the stats table itself (`bloom_k`, recorded at build time) — a
-    * probe with the wrong k would read unset bit positions and could
-    * falsely report "absent"; `bloomHashes` is only the fallback for
-    * tables predating the column. */
+    * recorded stats row rules it out. The Bloom probe's hash count is the
+    * spec's ([[statsSpecOf]]) — a probe with the wrong k would read unset
+    * bit positions and could falsely report "absent". */
   def pruneFiles(spark: SparkSession, table: String, statsTable: String,
-                 preds: Seq[StatsPredicate], bloomHashes: Int = 5,
-                 walkParallelism: Int = 8): (Path, Seq[FileEntry], PruneReport) = {
-    val (meta, dataSchema) = dataSchemaOf(spark, table)
-    val fieldsByName = dataSchema.fields.map(f => f.name -> f).toMap
+                 preds: Seq[StatsPredicate]): (Path, Seq[FileEntry], PruneReport) =
+    prune(spark, table, statsTable, statsSpecOf(spark, statsTable), preds)
+
+  /** [[pruneFiles]] under a spec the caller already looked up; no spec (no
+    * stats table) selects every file. */
+  private[catalog] def prune(spark: SparkSession, table: String, statsTable: String,
+                             spec: Option[StatsSpec],
+                             preds: Seq[StatsPredicate]): (Path, Seq[FileEntry], PruneReport) = {
+    val fieldsByName = dataSchemaOf(spark, table).fields.map(f => f.name -> f).toMap
     preds.foreach(p => require(fieldsByName.contains(p.column),
       s"${p.column} is not a data column of $table"))
-    val (root, files) = listDataFiles(spark, table, walkParallelism)
-    if (preds.isEmpty || !spark.catalog.tableExists(statsTable))
+    val (root, files) = listDataFiles(spark, table)
+    if (preds.isEmpty || spec.isEmpty)
       return (root, files, PruneReport(files.length, files.length, files.length))
-    // hash count: the spec property (a catalog metadata read) when present;
-    // only legacy tables pay the bloom_k scan — which keeps its strict
-    // mixed-geometry check (a wrong k reads unset bit positions and could
-    // falsely exclude a file)
-    val kHashes: Int = scala.util.Try(spark.sessionState.catalog.getTableMetadata(
-        spark.sessionState.sqlParser.parseTableIdentifier(statsTable))
-        .properties.get(SpecProp)).toOption.flatten.flatMap(parseSpec)
-      .map(_.bloomHashes).getOrElse {
-        if (!spark.table(statsTable).columns.contains("bloom_k")) bloomHashes
-        else {
-          val ks = spark.table(statsTable).filter(col("bloom_k").isNotNull)
-            .select(col("bloom_k")).distinct().collect().map(_.getLong(0))
-          require(ks.length <= 1,
-            s"$statsTable mixes bloom hash counts (${ks.mkString(", ")}) — " +
-              "rebuild it under one spec")
-          ks.headOption.map(_.toInt).getOrElse(bloomHashes)
-        }
-      }
+    val kHashes = spec.get.bloomHashes
     // ALL predicates on a column must admit its stats row (a when-chain
     // would silently drop every predicate after the first per column —
     // e.g. readPruned's range + key pair on one column); rows of
@@ -695,15 +656,15 @@ object FileStats {
 
   /** The bounded key-probe read both stats-pruned consumers share
     * ([[Retention.deleteRows]] discovery, the dedup gate's stored-side
-    * read): collect up to `maxKeys` distinct keys, prune `table`'s files
-    * through [[KeysPredicate]] and return the residual-filtered scan.
-    * None ⇒ caller must fall back to the plain table read — key set over
-    * the bound (checked on the RAW collected rows, BEFORE null filtering,
-    * so a null can never mask a truncated key set), missing index, or a
-    * probe failure (logged — silently losing pruning forever is how a
-    * perf feature dies unnoticed). NULL keys are dropped after the bound
-    * check: they never equi-match, so their stored rows are irrelevant;
-    * an all-null key set returns an EMPTY frame for the same reason. */
+    * read): collect up to `maxKeys` distinct keys and return
+    * [[CatalogOps.readPruned]] of `table` filtered to them — which prunes
+    * through [[KeysPredicate]] and falls back to the plain filtered read on
+    * any stats failure. None ⇒ caller must fall back to the plain table
+    * read: key set over the bound (checked on the RAW collected rows,
+    * BEFORE null filtering, so a null can never mask a truncated key set)
+    * or missing index. NULL keys are dropped after the bound check: they
+    * never equi-match, so their stored rows are irrelevant; an all-null
+    * key set returns an EMPTY frame for the same reason. */
   def keysPrunedScan(spark: SparkSession, table: String, statsTable: String,
                      keyCol: String, keys: DataFrame,
                      maxKeys: Int): Option[DataFrame] = {
@@ -712,55 +673,39 @@ object FileStats {
     if (raw.length > maxKeys) None
     else {
       val values = raw.map(_.get(0)).toSeq.filterNot(_ == null)
-      if (values.isEmpty) Some(spark.table(table).limit(0))
-      else
-        // delegate to the general read-path hook — ONE pruning engine for
-        // every stats consumer (readPruned extracts the isin back into a
-        // KeysPredicate and degrades to the plain filtered read on any
-        // stats failure, which still satisfies this probe's contract)
-        try Some(CatalogOps.readPruned(spark, table, statsTable,
-          col(keyCol).isin(values: _*), indexedCols = Some(Set(keyCol))))
-        catch {
-          case scala.util.control.NonFatal(e) =>
-            org.slf4j.LoggerFactory.getLogger(getClass).warn(
-              s"stats-pruned probe of $table via $statsTable failed — " +
-                "falling back to the unpruned read", e)
-            None
-        }
+      Some(if (values.isEmpty) spark.table(table).limit(0)
+        else CatalogOps.readPruned(spark, table, statsTable, col(keyCol).isin(values: _*)))
     }
   }
 
-  /** Recover the column spec an existing stats table was built under
-    * (columns recorded, which carry blooms, bitset size from any stored
-    * bitset, hash count from `bloom_k`) — what the write-path maintenance
-    * hooks ([[Retention.deleteRows]]'s auto-refresh,
-    * [[Compaction.compactTable]]'s `statsTable`) use so no caller-side
-    * spec plumbing is needed and geometries never mix. None for an empty
-    * table. */
+  /** The column spec an existing stats table is maintained under — what
+    * every pruned read and the write-path maintenance hooks
+    * ([[Retention.deleteRows]]'s auto-refresh, [[Compaction.compactTable]]'s
+    * `statsTable`) use, so no caller-side spec plumbing is needed and
+    * geometries never mix. A catalog read of the property [[refresh]]
+    * records; only a stats table whose refresh crashed before recording it
+    * pays an aggregation (columns recorded, which carry blooms, bitset size
+    * from any stored bitset, hash count from `bloom_k`, which must hold one
+    * value). None when no stats table exists, or an unrecorded one is empty. */
   def statsSpecOf(spark: SparkSession, statsTable: String): Option[StatsSpec] = {
     if (!spark.catalog.tableExists(statsTable)) return None
-    // metadata fast path: refresh records its spec as a table property —
-    // the aggregation below (which reads every bloom payload) is only the
-    // fallback for tables predating the property
-    val fromProp = scala.util.Try(spark.sessionState.catalog.getTableMetadata(
-        spark.sessionState.sqlParser.parseTableIdentifier(statsTable))
-      .properties.get(SpecProp)).toOption.flatten.flatMap(parseSpec)
-    if (fromProp.isDefined) return fromProp
-    val rows = spark.table(statsTable)
-      .groupBy(col("col_name"))
-      .agg(max(when(col("bloom").isNotNull, octet_length(col("bloom"))))
-        .as("bloom_bytes"),
-        max(col("bloom_k")).as("bk"))
-      .collect()
-    if (rows.isEmpty) None
-    else {
-      val cols = rows.map(_.getString(0)).toSeq.sorted
+    tableMeta(spark, statsTable).properties.get(SpecProp).flatMap(parseSpec).orElse {
+      val rows = spark.table(statsTable)
+        .groupBy(col("col_name"))
+        .agg(max(when(col("bloom").isNotNull, octet_length(col("bloom"))))
+          .as("bloom_bytes"),
+          min(col("bloom_k")), max(col("bloom_k")))
+        .collect()
+      val ks = rows.flatMap(r => Seq(2, 3).filterNot(r.isNullAt).map(r.getLong)).distinct
+      require(ks.length <= 1,
+        s"$statsTable mixes bloom hash counts (${ks.sorted.mkString(", ")}) — " +
+          "rebuild it under one spec")
       val blooms = rows.filter(!_.isNullAt(1))
       val bits = blooms.map(_.getInt(1) * 8)
-      val k = rows.flatMap(r => if (r.isNullAt(2)) None else Some(r.getLong(2).toInt))
-        .headOption.getOrElse(5)
-      Some(StatsSpec(cols, blooms.map(_.getString(0)).toSeq.sorted,
-        if (bits.isEmpty) 1 << 20 else bits.max, k))
+      if (rows.isEmpty) None
+      else Some(StatsSpec(rows.map(_.getString(0)).toSeq.sorted,
+        blooms.map(_.getString(0)).toSeq.sorted,
+        if (bits.isEmpty) 1 << 20 else bits.max, ks.headOption.fold(5)(_.toInt)))
     }
   }
 
@@ -776,26 +721,32 @@ object FileStats {
   }
 
   /** `spark.table(table).filter(preds)` that reads ONLY the files the stats
-    * admit. Partition columns reconstruct via basePath; column order is
-    * realigned to the table's. */
+    * admit. */
   def scanPruned(spark: SparkSession, table: String, statsTable: String,
-                 preds: Seq[StatsPredicate], bloomHashes: Int = 5,
-                 walkParallelism: Int = 8): DataFrame = {
-    val (root, selected, _) =
-      pruneFiles(spark, table, statsTable, preds, bloomHashes, walkParallelism)
-    // CATALOG schema, not inference: data columns read under the table's
-    // declared types, and partition values parse as strings cast to the
-    // declared partition type (Spark skips type inference when the user
-    // schema names the column) — so a date-shaped STRING partition can't
-    // drift to DATE and break the bit-for-bit contract (or feed a wrongly
-    // typed partition spec to Retention.deleteRows' rewrite)
+                 preds: Seq[StatsPredicate]): DataFrame = {
+    val (root, selected, _) = pruneFiles(spark, table, statsTable, preds)
+    readFiles(spark, table, root, selected,
+      preds.map(residual).reduceOption(_ && _).getOrElse(lit(true)))
+  }
+
+  /** The one pruned-scan builder ([[scanPruned]], [[CatalogOps.readPruned]]):
+    * `table`'s `selected` files filtered by `rowFilter`, in the table's
+    * column order; no file selected gives an empty frame. Read under the
+    * CATALOG schema, not inference: data columns read under the table's
+    * declared types, and partition values (reconstructed via basePath)
+    * parse as strings cast to the declared partition type (Spark skips
+    * type inference when the user schema names the column) — so a
+    * date-shaped STRING partition can't drift to DATE and break the
+    * bit-for-bit contract (or feed a wrongly typed partition spec to
+    * Retention.deleteRows' rewrite). */
+  private[catalog] def readFiles(spark: SparkSession, table: String, root: Path,
+                                 selected: Seq[FileEntry], rowFilter: Column): DataFrame = {
     val tableSchema = spark.table(table).schema
     val cols = tableSchema.fields.map(f => col(f.name)).toSeq
-    val rowPred = preds.map(residual).reduceOption(_ && _).getOrElse(lit(true))
     if (selected.isEmpty) spark.table(table).filter(lit(false)).select(cols: _*)
     else spark.read.schema(tableSchema).option("basePath", root.toString)
       .parquet(selected.map(f => absPath(root, f).toString): _*)
-      .filter(rowPred)
+      .filter(rowFilter)
       .select(cols: _*)
   }
 }

@@ -96,7 +96,7 @@ object Retention {
       s"table=$table key=$keyCol rows=${report.rowsDeleted} " +
         s"partitions=${report.partitionsRewritten}/${report.partitionsSeen}"))
     statsTable.filter(_ => report.partitionsRewritten > 0)
-      .foreach(st => FileStats.cachedStatsSpecOf(spark, st).foreach { sp =>
+      .foreach(st => FileStats.statsSpecOf(spark, st).foreach { sp =>
         // SCOPED refresh (guide §6 — cost ∝ touched): a rewritten partition
         // must have held a matching row, and matching rows live only in
         // files the pruned discovery admitted — so the admitted files'
@@ -172,16 +172,15 @@ object Retention {
   /** Stats-pruned replacement for the discovery semi-join: the shared
     * [[FileStats.keysPrunedScan]] probe, semi-joined back to the exact key
     * frame. None → caller falls back to the full scan (no/missing index,
-    * key set over the probe bound, keyCol not indexed, or probe failure —
-    * the helper logs it). */
+    * key set over the probe bound, or keyCol not indexed). */
   private def statsPrunedMatching(spark: SparkSession, table: String,
                                   keyCol: String, k: DataFrame,
                                   statsTable: Option[String],
                                   maxDiscoveryKeys: Int): Option[DataFrame] =
     statsTable.filter(spark.catalog.tableExists).flatMap { st =>
-      // spec-level indexed-column check — a metadata/memoized read, not a
+      // spec-level indexed-column check — a catalog read, not a
       // stats-table job on the discovery hot path
-      if (!FileStats.cachedStatsSpecOf(spark, st).exists(_.cols.contains(keyCol))) None
+      if (!FileStats.statsSpecOf(spark, st).exists(_.cols.contains(keyCol))) None
       else FileStats.keysPrunedScan(spark, table, st, keyCol, k, maxDiscoveryKeys)
         .map(_.join(k, Seq(keyCol), "left_semi"))
     }

@@ -1,12 +1,13 @@
 package graft.catalog
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.lit
 
 /** The one way graft writes a catalog table (the bucketed create of
-  * [[CatalogOps.writeBucketed]] aside): the reference's partitioned reload,
-  * purge-then-publish, quarantine append and entity create/upsert (SURVEY.md
-  * §2.2 K1, K2, K3, K5) are each one of four verbs. Every verb
+  * [[CatalogOps.writeBucketed]] aside, which writes [[Codec]] too): the
+  * reference's partitioned reload, purge-then-publish, quarantine append
+  * and entity create/upsert (SURVEY.md §2.2 K1, K2, K3, K5) are each one
+  * of four verbs. Every verb
   * writes zstd ([[Codec]]), leaves the session conf as it found it (the
   * overwrite mode and the codec are options of the one statement, so a
   * stream thread and a pipeline stage can share a session) and aligns the
@@ -25,11 +26,15 @@ object TableWrite {
   /** Creates `table` (and its database) from `df`; an existing table is
     * dropped and replaced, definition included (Spark refreshes it). */
   def createOrReplace(df: DataFrame, table: String, partitionBy: Seq[String] = Nil): Unit = {
-    df.sparkSession.sessionState.sqlParser.parseTableIdentifier(table).database
-      .foreach(db => df.sparkSession.sql(s"CREATE DATABASE IF NOT EXISTS $db"))
+    createDatabaseOf(df.sparkSession, table)
     val w = df.write.format("parquet").option("compression", Codec).mode(SaveMode.Overwrite)
     (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).saveAsTable(table)
   }
+
+  /** Creates the database `table` names, if it names one that is missing. */
+  private[catalog] def createDatabaseOf(spark: SparkSession, table: String): Unit =
+    spark.sessionState.sqlParser.parseTableIdentifier(table).database
+      .foreach(db => spark.sql(s"CREATE DATABASE IF NOT EXISTS $db"))
 
   /** Static overwrite of the one partition `spec` names (column → value):
     * an empty `df` clears it. An empty `spec` replaces the whole table. */

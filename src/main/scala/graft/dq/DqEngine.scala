@@ -473,7 +473,8 @@ class DqEngine(quarantineSink: Option[(DataFrame, String) => Unit] = None) {
         "(add an execution_id string column, e.g. rewrite with a '' default) " +
         "or point writeResults at a fresh target")
     }
-    if (target.contains("/")) df.write.mode("append").parquet(target)
+    if (target.contains("/"))
+      df.write.mode("append").option("compression", graft.catalog.TableWrite.Codec).parquet(target)
     else if (existing.isEmpty) graft.catalog.TableWrite.createOrReplace(df, target)
     else graft.catalog.TableWrite.append(df, target)
   }

@@ -151,7 +151,9 @@ class PipelineRunner(spark: SparkSession) {
     * ([[graft.catalog.CatalogOps.prunePlanScans]]): a `WHERE` on an indexed
     * column then reads only the files whose per-file stats admit it —
     * row-identical, degrade-to-plain on any failure. Empty map (the
-    * default) leaves the plan untouched. */
+    * default) leaves the plan untouched.
+    *
+    * Returns a read of the published target, in the query's column order. */
   def cleanseToConsume(args: JobArgs, sql: String,
                        substitutions: Map[String, String],
                        dqRules: Map[String, Map[String, Seq[String]]],
@@ -194,7 +196,10 @@ class PipelineRunner(spark: SparkSession) {
       // CREATE TABLE <t> AS prefix may have overridden), keyed by execution_id
       if (engine.resultsLog.nonEmpty)
         engine.writeResults(spark, s"${target}_dq_results", args.executionId)
-      filtered
+      // the published rows, not the lazy query: re-running it after the
+      // policy is restored would fail on the duplicate map keys it built
+      spark.table(target)
+        .select(filtered.columns.toSeq.map(c => col(s"`${c.replace("`", "``")}`")): _*)
     } finally prior.fold(spark.conf.unset(dedup))(spark.conf.set(dedup, _))
   }
 

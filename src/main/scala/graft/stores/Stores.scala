@@ -75,7 +75,8 @@ class TokenStore(path: String) {
       if (existing.isEmpty) pairs.dropDuplicates("raw_data")
       else pairs.dropDuplicates("raw_data")
         .join(existing.select(col("raw_data")), Seq("raw_data"), "left_anti")
-    if (!fresh.isEmpty) fresh.write.mode("append").parquet(path)
+    if (!fresh.isEmpty)
+      fresh.write.mode("append").option("compression", graft.catalog.TableWrite.Codec).parquet(path)
   }
 
   def read(spark: SparkSession): DataFrame = spark.read.parquet(path)

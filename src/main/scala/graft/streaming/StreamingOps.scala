@@ -520,9 +520,9 @@ object StreamingOps {
 
   /** The gate's stored-side read, file-pruned through the block bloom via
     * the shared [[graft.catalog.FileStats.keysPrunedScan]] probe; plain
-    * table read when the index is absent, the batch's block set exceeds
-    * the bound, or the probe fails (the helper logs it) — identical rows
-    * either way: pruned-away files hold only blocks the batch never
+    * table read when the index is absent or the batch's block set exceeds
+    * the bound (a failing probe reads the plain filtered table) — identical
+    * rows either way: pruned-away files hold only blocks the batch never
     * joins. */
   private def statsPrunedStored(ss: SparkSession, corpusTable: String,
                                 statsTable: Option[String],

@@ -534,4 +534,75 @@ class FileStatsSpec extends SparkSpec {
     val expect = spark.table(t).filter(col("user_id") === 7L)
     assert(got.exceptAll(expect).isEmpty && expect.exceptAll(got).isEmpty)
   }
+
+  test("a column named with the spec delimiters records the spec property and prunes") {
+    val db = s"fdelim${System.nanoTime()}"
+    spark.sql(s"CREATE DATABASE $db")
+    val t = s"$db.t"
+    spark.range(0, 4000).select(col("id").as("a,b"), (col("id") % 7L).as("x|y"))
+      .repartitionByRange(8, col("`a,b`")).write.saveAsTable(t)
+    val st = s"$db.t_stats"
+    FileStats.refresh(spark, t, st, StatsSpec(Seq("x|y", "a,b"), bloomCols = Seq("a,b"),
+      bloomBits = 1 << 14))
+    val props = spark.sessionState.catalog.getTableMetadata(
+      spark.sessionState.sqlParser.parseTableIdentifier(st)).properties
+    assert(props.contains("graft.stats.spec"), props.toString)
+    val spec = FileStats.statsSpecOf(spark, st)
+    assert(spec.exists(s => s.cols == Seq("a,b", "x|y") && s.bloomCols == Seq("a,b")),
+      spec.toString)
+    val pred = col("`a,b`") === 1234L
+    val pruned = graft.catalog.CatalogOps.readPruned(spark, t, st, pred)
+    val plain = spark.table(t).filter(pred)
+    assert(pruned.exceptAll(plain).isEmpty && plain.exceptAll(pruned).isEmpty)
+    assert(pruned.count() == 1)
+    assert(pruned.inputFiles.length < plain.inputFiles.length,
+      s"${pruned.inputFiles.length} vs ${plain.inputFiles.length} files")
+  }
+
+  test("a stats table of the wrong schema costs pruning, never rows, at every entry point") {
+    import graft.catalog.CatalogOps
+    import graft.pipeline.{JobArgs, PipelineRunner}
+    val db = s"fwrong${System.nanoTime()}"
+    val t = mkTable(db)
+    val st = s"$db.not_stats"
+    Seq((1, "x")).toDF("a", "b").write.saveAsTable(st)
+    val pred = col("user_id").isin(13L, 14L)
+    val plain = spark.table(t).filter(pred)
+    def same(df: DataFrame): Unit =
+      assert(df.exceptAll(plain).isEmpty && plain.exceptAll(df).isEmpty)
+    same(FileStats.keysPrunedScan(spark, t, st, "user_id",
+      Seq(13L, 14L).toDF("user_id"), 100).get)
+    same(CatalogOps.readPruned(spark, t, st, pred))
+    val args = JobArgs("S", "wrong_stats", "", "e", Map.empty, db)
+    same(new PipelineRunner(spark).cleanseToConsume(args,
+      s"SELECT * FROM $t WHERE user_id IN (13, 14)", Map.empty, Map.empty,
+      statsTables = Map(t -> st)))
+    same(spark.table(s"${db}_consume.wrong_stats"))
+  }
+
+  test("without its spec property statsSpecOf aggregates the spec, refusing mixed hash counts") {
+    import graft.catalog.{CatalogOps, TableWrite}
+    val db = s"fnoprop${System.nanoTime()}"
+    val t = mkTable(db)
+    val st = s"$db.events_stats"
+    val spec = StatsSpec(Seq("user_id", "value"), bloomCols = Seq("user_id"),
+      bloomBits = 1 << 14, bloomHashes = 3)
+    FileStats.refresh(spark, t, st, spec)
+    // what a refresh that crashed before recording the property leaves
+    spark.sql(s"ALTER TABLE $st UNSET TBLPROPERTIES ('graft.stats.spec')")
+    assert(FileStats.statsSpecOf(spark, st).contains(spec))
+    val pred = col("user_id") === 13L
+    val plain = spark.table(t).filter(pred)
+    def same(df: DataFrame): Unit =
+      assert(df.exceptAll(plain).isEmpty && plain.exceptAll(df).isEmpty)
+    val pruned = CatalogOps.readPruned(spark, t, st, pred)
+    same(pruned)
+    assert(pruned.inputFiles.length < plain.inputFiles.length)
+    // one bloom row recorded under another hash count
+    TableWrite.append(spark.table(st).filter(col("bloom_k").isNotNull).limit(1)
+      .withColumn("bloom_k", lit(5L)).localCheckpoint(true), st)
+    val e = intercept[IllegalArgumentException](FileStats.statsSpecOf(spark, st))
+    assert(e.getMessage.contains("mixes bloom hash counts"), e.getMessage)
+    same(CatalogOps.readPruned(spark, t, st, pred))
+  }
 }

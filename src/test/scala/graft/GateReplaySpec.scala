@@ -115,6 +115,13 @@ object GateCases {
     d
   }
 
+  /** The dedup gate's two batches: a near-duplicate inside batch 0 and
+    * one of batch 1 against the stored side, all in block `b`. */
+  val dedupBatches: Seq[Seq[(Long, String, String)]] = Seq(
+    Seq((1L, "b", "alpha beta gamma delta"), (2L, "b", "alpha beta gamma delta"),
+      (3L, "b", "epsilon zeta eta theta")),
+    Seq((10L, "b", "alpha beta gamma delta"), (11L, "b", "iota kappa lambda mu")))
+
   def all(spark: SparkSession): Seq[GateCase[_]] = {
     import spark.implicits._
     val banner = "replay-shared-banner-text-block!!"
@@ -132,10 +139,7 @@ object GateCases {
         d => Seq(s"$d.weights"),
         (t, df, ckpt) => StreamingOps.onlineLogisticFit(df, "text", "doc_id", "y",
           numFeatures = 64, weightsTable = t(0), checkpoint = ckpt)),
-      GateCase("ingestDedupGate", Seq("doc_id", "blk", "text"),
-        Seq(Seq((1L, "b", "alpha beta gamma delta"), (2L, "b", "alpha beta gamma delta"),
-          (3L, "b", "epsilon zeta eta theta")),
-          Seq((10L, "b", "alpha beta gamma delta"), (11L, "b", "iota kappa lambda mu"))),
+      GateCase("ingestDedupGate", Seq("doc_id", "blk", "text"), dedupBatches,
         d => Seq(s"$d.corpus", s"$d.report"),
         (t, df, ckpt) => StreamingOps.ingestDedupGate(df, "text", "doc_id", Seq("blk"), 0.7,
           t(0), t(1), ckpt)),

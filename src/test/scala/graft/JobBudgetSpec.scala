@@ -10,6 +10,7 @@ import org.apache.spark.sql.graftbridge.BusBridge
 import graft.catalog.{Compaction, FileStats, HiveParquetFormat, Retention}
 import graft.config.Specs
 import graft.operators.EntityMatch
+import graft.streaming.StreamingOps
 import graft.pipeline.{JobArgs, PipelineRunner}
 import graft.transforms.TransformContext
 
@@ -48,10 +49,13 @@ object StageFixture {
     new PipelineRunner(spark).collectToCleanse(args(db, "policy", path, sink, exec), spec,
       Specs.mappingCsv(mappingCsv), dq, TransformContext(spark, filename = "policy.csv"))
 
-  def consume(spark: SparkSession, db: String, sink: String, exec: String): DataFrame =
+  /** With `statsTables`, the query reads one policy through the index. */
+  def consume(spark: SparkSession, db: String, sink: String, exec: String,
+              statsTables: Map[String, String] = Map.empty): DataFrame =
     new PipelineRunner(spark).cleanseToConsume(args(db, "premiums", "", sink, exec),
-      s"SELECT policynumber, premium * 2 AS premium2, year FROM $db.policy",
-      Map.empty, Map.empty)
+      s"SELECT policynumber, premium * 2 AS premium2, year FROM $db.policy" +
+        (if (statsTables.isEmpty) "" else " WHERE policynumber = 'P2'"),
+      Map.empty, Map.empty, statsTables = statsTables)
 }
 
 /** Spark jobs per call of each public write-path entry point on a small
@@ -109,12 +113,26 @@ class JobBudgetSpec extends SparkSpec {
     assert(spark.table(s"${db}_consume.premiums").count() == 3)
   }
 
+  test("budget: cleanseToConsume with statsTables, existing consume table") {
+    val db = freshDb("consumest")
+    val (path, sink) = StageFixture.files()
+    StageFixture.collect(spark, db, path, sink, "e1")
+    FileStats.refresh(spark, s"$db.policy", s"$db.policy_stats",
+      FileStats.StatsSpec(Seq("policynumber"), bloomCols = Seq("policynumber")))
+    val stats = Map(s"$db.policy" -> s"$db.policy_stats")
+    StageFixture.consume(spark, db, sink, "c1", stats)
+    within("cleanseToConsume statsTables", 4)(StageFixture.consume(spark, db, sink, "c2", stats))
+    assert(spark.table(s"${db}_consume.premiums").count() == 1)
+  }
+
   // per gate: [batch 0 (creates the tables), batch 1, empty batch]. The
-  // dedup gate's batch 1 runs 47 or 48 jobs (48 in 2 of 5 runs): AQE
-  // sometimes adds a job to the report checkpoint over two sort-merge joins
+  // dedup gate's batch 1 runs 47 or 48 jobs (48 in 2 of 5 runs), and 76 or
+  // 77 with its stats index (77 in 3 of 5): AQE sometimes adds a job to
+  // the report checkpoint over two sort-merge joins
   private val gateBudgets = Map(
     "onlineLogisticFit" -> Seq(11, 14, 1),
     "ingestDedupGate" -> Seq(35, 48, 1),
+    "ingestDedupGateStats" -> Seq(52, 77, 1),
     "ingestDqGate" -> Seq(3, 3, 1),
     "ingestDatasetDqGate" -> Seq(5, 5, 1),
     "ingestSubstringDedupGate" -> Seq(15, 18, 1),
@@ -140,6 +158,15 @@ class JobBudgetSpec extends SparkSpec {
   GateCases.all(spark).foreach(c =>
     test(s"budget: ${c.name}, batch 0, batch 1 and an empty batch")(gateRows(c)))
 
+  // the dedup gate's fixture with its FileStats block index: each batch
+  // also runs the pruned stored-side read and the after-commit refresh
+  test("budget: ingestDedupGate with statsTable, batch 0, batch 1 and an empty batch") {
+    gateRows(GateCase("ingestDedupGateStats", Seq("doc_id", "blk", "text"),
+      GateCases.dedupBatches, d => Seq(s"$d.corpus", s"$d.report", s"$d.corpus_stats"),
+      (t, df, ckpt) => StreamingOps.ingestDedupGate(df, "text", "doc_id", Seq("blk"), 0.7,
+        t(0), t(1), ckpt, statsTable = Some(t(2)))))
+  }
+
   private def events(t: String, partitioned: Boolean): Unit = {
     val w = (0 until 24).map(i => (i.toLong, s"payload $i", s"d${i % 4}"))
       .toDF("user_id", "payload", "day").write
@@ -160,6 +187,17 @@ class JobBudgetSpec extends SparkSpec {
     within("deleteRows unpartitioned", 8)(
       Retention.deleteRows(spark, t, "user_id", Seq(1L, 2L).toDF("user_id")))
     assert(spark.table(t).count() == 22)
+  }
+
+  test("budget: deleteRows with statsTable, pruned discovery and scoped refresh") {
+    val db = freshDb("delst")
+    val (t, st) = (s"$db.events", s"$db.events_stats")
+    events(t, partitioned = true)
+    FileStats.refresh(spark, t, st,
+      FileStats.StatsSpec(Seq("user_id"), bloomCols = Seq("user_id")))
+    val r = within("deleteRows statsTable", 43)(Retention.deleteRows(spark, t, "user_id",
+      Seq(1L, 2L, 5L).toDF("user_id"), statsTable = Some(st)))
+    assert(r.partitionsRewritten == 2 && spark.table(t).count() == 21)
   }
 
   test("budget: FileStats.refresh, create, full and scoped") {
@@ -192,6 +230,17 @@ class JobBudgetSpec extends SparkSpec {
     assert(spark.table(t).count() == 40)
   }
 
+  test("budget: compactTable with statsTable, both partitions compacted") {
+    val db = freshDb("compst")
+    val (t, st) = (s"$db.frag", s"$db.frag_stats")
+    (0 until 40).map(i => (i.toLong, s"v$i", i % 2)).toDF("id", "v", "p")
+      .repartition(4).write.partitionBy("p").saveAsTable(t)
+    FileStats.refresh(spark, t, st, FileStats.StatsSpec(Seq("id")))
+    val r = within("compactTable statsTable", 28)(
+      Compaction.compactTable(spark, t, targetBytes = 1L << 30, statsTable = Some(st)))
+    assert(r.partitionsCompacted == 2 && spark.table(t).count() == 40)
+  }
+
   test("budget: mergeUpsert, partitioned, one partition drained") {
     val t = s"${freshDb("upsert")}.primary"
     Seq(("k1", "a", 1), ("k2", "a", 1), ("k3", "b", 1)).toDF("k", "part", "v")
@@ -203,8 +252,9 @@ class JobBudgetSpec extends SparkSpec {
       Set(("k1", "a", 2), ("k2", "a", 1), ("k3", "c", 2)))
   }
 
-  test("budget: EntityMatch.run, creating the primary, then matching and upserting") {
-    val table = s"${freshDb("em")}.primary"
+  /** The entity-match fixture: a spec over `table`, a two-customer first
+    * day and a second day with an exact, a fuzzy and a new customer. */
+  private def emFixture(table: String) = {
     val spec = EntityMatch.parseSpec(Specs.parseJson(
       """{"global_id_field": "globalid", "sort_field": "lastupdated",
           "exact_match_fields": {"source_primary_key": "customerno",
@@ -220,10 +270,27 @@ class JobBudgetSpec extends SparkSpec {
     val day2 = Seq(("C1", "A01", "alice", "1990-01-01", "10001", "2024-03-01"),
       ("N1", "C25", "alicia", "1990-01-01", "10001", "2024-03-01"),
       ("N2", "C25", "nina", "1992-02-02", "40004", "2024-03-01")).toDF(cols: _*)
-    val key = Seq("customerno", "srcsystemid")
+    (spec, day1, day2, Seq("customerno", "srcsystemid"))
+  }
+
+  test("budget: EntityMatch.run, creating the primary, then matching and upserting") {
+    val table = s"${freshDb("em")}.primary"
+    val (spec, day1, day2, key) = emFixture(table)
     within("EntityMatch.run create", 1)(EntityMatch.run(spark, day1, spec, key))
     within("EntityMatch.run match", 21)(EntityMatch.run(spark, day2, spec, key))
     // C1 matches exactly, N1 (alicia) fuzzily onto C1's entity, N2 is new
+    assert(spark.table(table).count() == 3)
+  }
+
+  test("budget: EntityMatch.run with statsTable, matching and upserting") {
+    val table = s"${freshDb("emst")}.primary"
+    val st = s"${table}_stats"
+    val (spec, day1, day2, key) = emFixture(table)
+    EntityMatch.run(spark, day1, spec, key)
+    FileStats.refresh(spark, table, st,
+      FileStats.StatsSpec(Seq("customerno"), bloomCols = Seq("customerno")))
+    within("EntityMatch.run match statsTable", 51)(
+      EntityMatch.run(spark, day2, spec, key, statsTable = Some(st)))
     assert(spark.table(table).count() == 3)
   }
 }

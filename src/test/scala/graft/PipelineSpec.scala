@@ -456,6 +456,21 @@ class PipelineE2eSpec extends SparkSpec {
     assert(spark.table(s"${db}_consume.renamed").count() == 1)
   }
 
+  test("cleanse-to-consume: the returned frame keeps the stage's last-win map keys") {
+    // the stage runs under mapKeyDedupPolicy=LAST_WIN and restores the
+    // caller's policy on return: the frame must not depend on it
+    val db = uniqueDb
+    spark.sql(s"CREATE DATABASE IF NOT EXISTS $db")
+    Seq("P1", "P2").toDF("policynumber").write.format("parquet").saveAsTable(s"$db.maps_src")
+    val args = JobArgs("S", "maps", "", "e", Map.empty, db)
+    val out = new PipelineRunner(spark).cleanseToConsume(args,
+      s"SELECT policynumber, map(policynumber, 1, policynumber, 2) AS m FROM $db.maps_src",
+      Map.empty, Map.empty)
+    assert(out.columns.toSeq == Seq("policynumber", "m"))
+    assert(out.collect().map(r => r.getString(0) -> r.getMap[String, Int](1).toMap).toMap ==
+      Map("P1" -> Map("P1" -> 2), "P2" -> Map("P2" -> 2)))
+  }
+
   test("tokenize persists distinct pairs to the token store idempotently") {
     val dir = Files.createTempDirectory("graft_tok").resolve("store").toString
     val store = new TokenStore(dir)

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** Round-14: the ADVICE-item fixes (memoized stats-spec discovery,
+/** Round-14: the ADVICE-item fixes (stats-spec discovery,
   * case-insensitive indexed-column resolution in readPruned, batch-typed
   * empty-index schema in the substring gate). */
 class Round14OpsSpec extends SparkSpec {
@@ -24,23 +24,18 @@ class Round14OpsSpec extends SparkSpec {
     t
   }
 
-  test("cachedStatsSpecOf: memoized between refreshes; a spec-widening " +
-    "refresh invalidates the entry") {
+  test("statsSpecOf: none before creation, then the spec, then the widened spec") {
     val db = s"r14spec${System.nanoTime()}"
     val t = mkTable(db)
     val st = s"$db.events_stats"
-    assert(FileStats.cachedStatsSpecOf(spark, st).isEmpty)
+    assert(FileStats.statsSpecOf(spark, st).isEmpty)
     FileStats.refresh(spark, t, st, StatsSpec(Seq("value")))
-    // the refresh must have dropped the cached None
-    val s1 = FileStats.cachedStatsSpecOf(spark, st)
+    val s1 = FileStats.statsSpecOf(spark, st)
     assert(s1.exists(_.cols == Seq("value")), s1.toString)
-    // cache hit: same instance back without re-reading the stats table
-    assert(FileStats.cachedStatsSpecOf(spark, st) eq s1)
-    // widening refresh invalidates -> the new spec is discovered
     FileStats.refresh(spark, t, st,
       StatsSpec(Seq("value", "user_id"), bloomCols = Seq("user_id"),
         bloomBits = 1 << 14))
-    val s2 = FileStats.cachedStatsSpecOf(spark, st)
+    val s2 = FileStats.statsSpecOf(spark, st)
     assert(s2.exists(_.cols == Seq("user_id", "value")), s2.toString)
     assert(s2.exists(_.bloomCols == Seq("user_id")), s2.toString)
   }

@@ -8,8 +8,10 @@ import org.apache.spark.sql.{DataFrame, SQLContext, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions.lit
 
-import graft.catalog.{Compaction, FileStats, HiveParquetFormat, Retention}
+import graft.catalog.{CatalogOps, Compaction, FileStats, HiveParquetFormat, Retention}
+import graft.dq.DqEngine
 import graft.pipeline.PipelineRunner
+import graft.stores.TokenStore
 import graft.streaming.StreamingOps
 
 /** What every table write of the library promises, seen from the entry
@@ -29,9 +31,8 @@ class TableWriteSpec extends SparkSpec {
     Paths.get(new java.net.URI(ss.sessionState.catalog.getTableMetadata(
       ss.sessionState.sqlParser.parseTableIdentifier(table)).location.toString))
 
-  /** Data files under `table`'s root, relative to it. */
-  private def dataFiles(ss: SparkSession, table: String): Seq[String] = {
-    val root = location(ss, table)
+  /** Data files under `root`, relative to it. */
+  private def dataFiles(root: Path): Seq[String] = {
     val s = Files.walk(root)
     try s.iterator().asScala.filter(Files.isRegularFile(_))
       .map(root.relativize(_).toString)
@@ -124,11 +125,12 @@ class TableWriteSpec extends SparkSpec {
     import ss.implicits._
     implicit val sqlCtx: SQLContext = ss.sqlContext
     val db = freshDb(ss, "zstd")
-    def zstdOnly(table: String): Unit = {
-      val files = dataFiles(ss, table)
+    def zstdAt(root: Path): Unit = {
+      val files = dataFiles(root)
       assert(files.nonEmpty && files.forall(_.endsWith(".zstd.parquet")),
-        s"$table: ${files.mkString(", ")}")
+        s"$root: ${files.mkString(", ")}")
     }
+    def zstdOnly(table: String): Unit = zstdAt(location(ss, table))
 
     val mem = MemoryStream[(Long, Int)]
     val q = StreamingOps.ingestDqGate(mem.toDF().toDF("id", "v"),
@@ -159,5 +161,19 @@ class TableWriteSpec extends SparkSpec {
     assert(Compaction.compactTable(ss, frag, targetBytes = 1L << 30)
       .partitionsCompacted == 2)
     zstdOnly(frag)
+
+    val bucketed = s"${db}_b.orders" // writeBucketed creates the database too
+    CatalogOps.writeBucketed(Seq((1L, "a"), (2L, "b")).toDF("id", "v"), bucketed, Seq("id"), 2)
+    zstdOnly(bucketed)
+
+    val tokens = Files.createTempDirectory("graft_zstd_tokens").resolve("store")
+    new TokenStore(tokens.toString).append(Seq(("a", "h1")).toDF("raw_data", "hash_key"))
+    zstdAt(tokens)
+
+    val results = Files.createTempDirectory("graft_zstd_dq").resolve("results")
+    val engine = new DqEngine()
+    engine.runRuleset(Seq(1L, 2L).toDF("id"), Map("warn_rules" -> Seq("RowCount > 0")), "t")
+    engine.writeResults(ss, results.toString, "e1")
+    zstdAt(results)
   }
 }
