@@ -30,9 +30,12 @@ import org.apache.spark.sql.types._
   *   - [[refresh]] is INCREMENTAL in data cost: it diffs the current file
   *     listing against the recorded files and scans ONLY uncovered files
   *     (one pass: per-file min/max/count plus an optional per-file Bloom
-  *     filter over declared key columns), then rewrites the narrow stats
-  *     table. At 100 TB the rewrite is O(total files) TINY rows while the
-  *     scan is O(new bytes) — the term that matters.
+  *     filter over declared key columns), then rewrites the changed stats
+  *     buckets. Its Spark jobs are a fixed handful whatever the delta: the
+  *     narrow collect of the recorded rows, the scan, the collect of the
+  *     scan's file keys and the rewrite (a no-op refresh runs only the
+  *     first). At 100 TB the bookkeeping is O(total files) TINY rows while
+  *     the scan is O(new bytes) — the term that matters.
   *   - [[pruneFiles]] evaluates predicates AGAINST THE STATS TABLE and
   *     returns the surviving files. Files with no stats rows (written since
   *     the last refresh) always survive — staleness costs performance,
@@ -48,8 +51,10 @@ import org.apache.spark.sql.types._
   * Every reader and writer lists files through ONE walk, [[listDataFiles]],
   * and looks up the spec through ONE catalog read, [[statsSpecOf]]. The
   * driver-side file listing mirrors Spark's own scan planning (an
-  * InMemoryFileIndex holds every file status on the driver); the per-file
-  * stats rows it joins against stay distributed.
+  * InMemoryFileIndex holds every file status on the driver), and the
+  * O(files) bookkeeping beside it — [[refresh]]'s diff, [[prune]]'s
+  * per-file verdicts — runs on the driver too, against that listing; only
+  * the bloom payloads and the scanned data stay distributed.
   *
   * Single writer assumed during [[refresh]] (the Hive-layout caveat shared
   * with [[Compaction.compactTable]]); readers are safe at any time because
@@ -218,7 +223,7 @@ object FileStats {
   /** Scheme-independent path key: both the driver-built absolute path and
     * `_metadata.file_path` reduce to the same string. */
   private val SchemeRe = "^[a-zA-Z][a-zA-Z0-9+.-]*:/+"
-  private def normPath(p: String): String = p.replaceFirst(SchemeRe, "/")
+  private[catalog] def normPath(p: String): String = p.replaceFirst(SchemeRe, "/")
 
   private def absPath(root: Path, f: FileEntry): Path =
     if (f.rel.isEmpty) new Path(root, f.name)
@@ -252,7 +257,13 @@ object FileStats {
     * `bloomHashes` against a table carrying the spec property forces a
     * FULL RESCAN under the new geometry (mixed-geometry blooms would probe
     * wrong bit positions — a correctness hazard, never tolerated); legacy
-    * tables without the property must still be dropped to resize. */
+    * tables without the property must still be dropped to resize.
+    *
+    * Spark runs four steps (the SPARK STEP comments below), each a job or
+    * two: the narrow collect, the scan of uncovered files, the collect of
+    * its file keys and the rewrite; everything between them is driver
+    * arithmetic over the listing. A refresh with nothing to do runs only
+    * the first and alters no table property. */
   def refresh(spark: SparkSession, table: String, statsTable: String,
               spec: StatsSpec,
               scopeRels: Option[Set[String]] = None): RefreshReport = {
@@ -283,10 +294,10 @@ object FileStats {
     // deferred to the next full refresh, never lost.
     val (root, files) = listDataFiles(spark, table, scopeRels.map(_.toSeq))
     import scala.jdk.CollectionConverters._
-    val curDf = spark.createDataFrame(
-      files.map(f => org.apache.spark.sql.Row(f.rel, f.name, f.bytes)).asJava,
-      StructType(Seq(StructField("rel", StringType), StructField("file", StringType),
-        StructField("bytes", LongType)))).localCheckpoint(true)
+    def localDf(rows: Seq[Seq[Any]], schema: StructType): DataFrame =
+      spark.createDataFrame(rows.map(org.apache.spark.sql.Row.fromSeq).asJava, schema)
+    val identitySchema = StructType(Seq(StructField("rel", StringType),
+      StructField("file", StringType), StructField("bytes", LongType)))
 
     val exists = spark.catalog.tableExists(statsTable)
     val statsMeta = if (exists) Some(tableMeta(spark, statsTable)) else None
@@ -298,9 +309,8 @@ object FileStats {
     // property the table is maintained under forces a full rescan —
     // mixed-geometry blooms would be probed at wrong bit positions, and a
     // false "absent" falsely excludes a file (correctness, not perf)
-    val storedSpecProp = statsMeta.flatMap(_.properties.get(SpecProp))
-      .flatMap(parseSpec)
-    val geometryChanged = storedSpecProp.exists(p =>
+    val storedSpec = statsMeta.flatMap(_.properties.get(SpecProp))
+    val geometryChanged = storedSpec.flatMap(parseSpec).exists(p =>
       p.bloomHashes != spec.bloomHashes ||
         (spec.bloomCols.nonEmpty && p.bloomBits != spec.bloomBits))
     // the scoped path needs a healthy same-geometry table — anything that
@@ -308,48 +318,40 @@ object FileStats {
     if (scopeRels.isDefined && (!exists || legacyLayout || geometryChanged))
       return refresh(spark, table, statsTable, spec, None)
 
-    // NARROW bookkeeping read: coverage and vanish detection never touch
-    // the bloom payload bytes (bloom presence is answered by bloom_k,
-    // written iff the bloom is) — a steady-state refresh of a large table
-    // must not pay an O(total bloom bytes) scan to conclude "nothing to do"
-    val narrowSchema = StructType(Seq(StructField("rel", StringType),
-      StructField("file", StringType), StructField("bytes", LongType),
-      StructField("col_name", StringType), StructField("n_rows", LongType),
-      StructField("has_bloom", BooleanType)))
-    val oldNarrow = (
-      if (exists) scopeRels
-        .fold(spark.table(statsTable))(rs =>
-          spark.table(statsTable).filter(col("rel").isin(rs.toSeq: _*)))
-        .select(col("rel"), col("file"),
-        col("bytes"), col("col_name"), col("n_rows"), col("bloom_k").isNotNull.as("has_bloom"))
-      else spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](), narrowSchema)
-    ).localCheckpoint(true)
-    // join includes BYTES so a same-name in-place rewrite (different
+    // SPARK STEP 1 of 4, the NARROW bookkeeping collect, diffed here against
+    // the listing the driver already holds: O(files × cols) small rows, the
+    // posture of the listing itself and of prune's verdict collect, in one
+    // job instead of a join, an aggregate and three collects. Coverage and
+    // vanish detection never touch the bloom payload bytes (bloom presence
+    // is answered by bloom_k, written iff the bloom is): a steady-state
+    // refresh of a large table must not pay an O(total bloom bytes) scan to
+    // conclude "nothing to do"
+    final case class Old(f: FileEntry, colName: String, nRows: Long, hasBloom: Boolean)
+    val old = if (!exists) Seq.empty[Old] else scopeRels
+      .fold(spark.table(statsTable))(rs =>
+        spark.table(statsTable).filter(col("rel").isin(rs.toSeq: _*)))
+      .select(col("rel"), col("file"), col("bytes"), col("col_name"), col("n_rows"),
+        col("bloom_k").isNotNull)
+      .collect().toSeq.map(r => Old(FileEntry(r.getString(0), r.getString(1), r.getLong(2)),
+        r.getString(3), r.getLong(4), r.getBoolean(5)))
+    // a file is COVERED iff every spec col has a row, with a bloom where one
+    // is declared — anything else rescans (one pass re-derives everything).
+    // Its identity includes BYTES so a same-name in-place rewrite (different
     // length) drops the stale rows and forces a rescan — without it the
     // old stats would keep pruning against the replaced content. (A
     // rewrite preserving name AND length is not detectable from the
     // listing; Spark's UUID part names make both vanishingly unlikely.)
-    val oldKept = oldNarrow.join(curDf, Seq("rel", "file", "bytes"))
+    val coveredCols = old.filter(o => spec.cols.contains(o.colName) &&
+        (!spec.bloomCols.contains(o.colName) || o.hasBloom || o.nRows == 0L))
+      .groupMapReduce(_.f)(o => Set(o.colName))(_ ++ _)
+    val toScan = if (geometryChanged) files
+      else files.filterNot(f => coveredCols.get(f).exists(_.size == spec.cols.size))
+    val live = files.map(f => (f.rel, f.name)).toSet
+    val gone = old.map(o => (o.f.rel, o.f.name)).distinct.filterNot(live)
 
-    // a file is COVERED iff every spec col has a row, with a bloom where one
-    // is declared — anything else rescans (one pass re-derives everything)
-    val coveredFiles = oldKept
-      .filter(col("col_name").isin(spec.cols: _*) &&
-        (!col("col_name").isin(spec.bloomCols: _*) || col("has_bloom") ||
-          col("n_rows") === 0L))
-      .select("rel", "file", "col_name").distinct()
-      .groupBy("rel", "file").agg(count(lit(1)).as("__ncov"))
-      .filter(col("__ncov") === spec.cols.size)
-      .select("rel", "file")
-    val toScan = (if (geometryChanged) curDf
-      else curDf.join(coveredFiles, Seq("rel", "file"), "left_anti"))
-      .select("rel", "file", "bytes").collect()
-      .map(r => FileEntry(r.getString(0), r.getString(1), r.getLong(2)))
-
-    val fresh: DataFrame =
-      if (toScan.isEmpty)
-        spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), statsSchema)
+    // (fresh stats rows, paths of the scanned files that hold a row)
+    val (fresh, scanned): (DataFrame, Set[String]) =
+      if (toScan.isEmpty) (localDf(Nil, statsSchema), Set.empty)
       else {
         val paths = toScan.map(f => absPath(root, f).toString)
         val aggCols = count(lit(1)).as("__n") +: spec.cols.flatMap { c =>
@@ -361,23 +363,23 @@ object FileStats {
               .as(s"__bloom_$c")
           else base
         }
-        // the one O(new bytes) pass — checkpointed HERE so the
-        // path-mapping require and every downstream select reuse the
-        // materialized per-file aggregates instead of rescanning parquet
+        // SPARK STEP 2, the one O(new bytes) pass. Barrier: two consumers (the key
+        // collect and the rewrite), and parquet is scanned once
         val wide = spark.read.schema(dataSchema).parquet(paths: _*)
           .groupBy(regexp_replace(col("_metadata.file_path"), SchemeRe, "/").as("__p"))
           .agg(aggCols.head, aggCols.tail: _*)
           .localCheckpoint(true)
-        val mapDf = spark.createDataFrame(
-          toScan.map(f => org.apache.spark.sql.Row(
-            normPath(absPath(root, f).toString), f.rel, f.name, f.bytes)).toSeq.asJava,
-          StructType(Seq(StructField("__p", StringType), StructField("rel", StringType),
-            StructField("file", StringType), StructField("bytes", LongType))))
-        val joined = wide.join(broadcast(mapDf), Seq("__p"))
-        require(joined.count() == wide.count(),
+        val byPath = toScan.map(f => normPath(absPath(root, f).toString) -> f)
+        // SPARK STEP 3, the key collect: every aggregate row must map back to a
+        // listed file; a listed file without one held zero rows
+        val keys = wide.select("__p").collect().map(_.getString(0)).toSet
+        require(keys.subsetOf(byPath.map(_._1).toSet),
           s"stats path mapping lost files for $table — path normalization " +
             "does not round-trip on this filesystem")
-        spec.cols.map { c =>
+        val joined = wide.join(broadcast(localDf(
+          byPath.map { case (p, f) => Seq(p, f.rel, f.name, f.bytes) },
+          StructType(StructField("__p", StringType) +: identitySchema.fields))), Seq("__p"))
+        (spec.cols.map { c =>
           val fam = family(fieldsByName(c).dataType)
           def pick(want: String, t: DataType, side: String): Column =
             if (fam == want) col(s"__${side}_$c").cast(t)
@@ -394,29 +396,17 @@ object FileStats {
              else lit(null).cast(BinaryType)).as("bloom"),
             (if (spec.bloomCols.contains(c)) lit(spec.bloomHashes.toLong)
              else lit(null).cast(LongType)).as("bloom_k"))
-        }.reduce(_ unionByName _)
+        }.reduce(_ unionByName _), keys)
       }
 
     // ZERO-ROW files produce no aggregate row; record explicit markers
     // (n_rows = 0, all stats null) so steady-state refresh really scans
     // nothing — and pruning correctly excludes them (no value matches an
     // empty file)
-    val scannedSet = if (toScan.isEmpty) Set.empty[(String, String)]
-      else fresh.select("rel", "file").distinct().collect()
-        .map(r => (r.getString(0), r.getString(1))).toSet
-    val markers = toScan.filterNot(f => scannedSet((f.rel, f.name))).flatMap(f =>
-      spec.cols.map(cn => org.apache.spark.sql.Row(
-        f.rel, f.name, f.bytes, 0L, cn,
-        family(fieldsByName(cn).dataType), null, null, null, null, null, null,
-        null, null)))
-    val markerDf = spark.createDataFrame(markers.toSeq.asJava, statsSchema)
-    val rescanned = spark.createDataFrame(
-      toScan.map(f => org.apache.spark.sql.Row(f.rel, f.name)).toSeq.asJava,
-      StructType(Seq(StructField("rel", StringType), StructField("file", StringType))))
-    val gone = oldNarrow.select("rel", "file").distinct()
-      .join(curDf.select("rel", "file"), Seq("rel", "file"), "left_anti")
-      .collect().map(r => (r.getString(0), r.getString(1)))
-    val removed = gone.length
+    val markerDf = localDf(toScan.filterNot(f => scanned(normPath(absPath(root, f).toString)))
+      .flatMap(f => spec.cols.map(cn => Seq(f.rel, f.name, f.bytes, 0L, cn,
+        family(fieldsByName(cn).dataType), null, null, null, null, null, null, null, null))),
+      statsSchema)
     // BUCKETED incremental rewrite: the stats table is partitioned by a
     // hash bucket of the file identity, and only buckets holding CHANGED
     // files (scanned, or vanished) rewrite — with per-file Bloom payloads
@@ -449,26 +439,27 @@ object FileStats {
     val sbCol = pmod(
       expr("hash(concat(rel, '/', file))").cast(LongType), lit(nb.toLong))
       .cast("int")
-    // changed buckets computed through the SAME Spark hash expression the
-    // rows are bucketed with (a driver-side reimplementation would have to
-    // track Spark's Murmur3 seed forever)
-    val changedFiles = toScan.map(f => (f.rel, f.name)) ++ gone
+    // changed buckets through the SAME Spark hash expression the rows are
+    // bucketed with (a driver-side reimplementation would have to track
+    // Spark's Murmur3 seed forever), projected over a driver-local frame
+    // and deduplicated here: Spark evaluates it locally, with no job
     val changedBuckets: Set[Int] =
-      if (fullRewrite || changedFiles.isEmpty) Set.empty
-      else spark.createDataFrame(
-        changedFiles.map { case (r, f) => org.apache.spark.sql.Row(r, f) }.toSeq.asJava,
-        StructType(Seq(StructField("rel", StringType), StructField("file", StringType))))
-        .select(sbCol.as("sb")).distinct().collect().map(_.getInt(0)).toSet
+      if (fullRewrite) Set.empty
+      else localDf((toScan.map(f => (f.rel, f.name)) ++ gone).map { case (r, f) => Seq(r, f) },
+          StructType(identitySchema.fields.take(2)))
+        .select(sbCol).collect().map(_.getInt(0)).toSet
     // surviving old rows (FULL width, bloom payloads included) + fresh +
     // markers for a given source of old rows — the full-rewrite path feeds
     // the whole table through, the delta path only the changed buckets
     // (partition-pruned read: unchanged buckets' bloom bytes are never
     // touched; every fresh/marker row lies in a changed bucket by
     // construction, since its file is in toScan)
+    val keptDf = localDf(files.filterNot(toScan.toSet).map(f => Seq(f.rel, f.name, f.bytes)),
+      identitySchema)
     def nextOf(oldFull: DataFrame): DataFrame = {
       // scoped mode: rows OUTSIDE the scope pass through UNTOUCHED — the
-      // caller warrants they did not change, and the scoped curDf cannot
-      // vouch for them (joining them against a scoped listing would drop
+      // caller warrants they did not change, and the scoped listing cannot
+      // vouch for them (matching them against a scoped listing would drop
       // live rows of unchanged files that merely share a hash bucket with
       // a changed one)
       val (inScope, outScope) = scopeRels match {
@@ -476,35 +467,33 @@ object FileStats {
           oldFull.filter(!col("rel").isin(rs.toSeq: _*)))
         case None => (oldFull, oldFull.limit(0))
       }
-      inScope.join(curDf, Seq("rel", "file", "bytes"))
-        .join(rescanned, Seq("rel", "file"), "left_anti")
+      inScope.join(keptDf, Seq("rel", "file", "bytes"), "left_semi")
         .unionByName(outScope)
         .unionByName(fresh).unionByName(markerDf)
         .withColumn("sb", sbCol)
     }
-    if (fullRewrite) {
-      // full-table checkpoint only here, where the whole frame is written —
-      // settled because the replace drops the table it reads
+    // SPARK STEP 4, the rewrite: checkpointed because it settles rows read from the
+    // table it overwrites, then written
+    if (fullRewrite)
       TableWrite.createOrReplace(nextOf(
-        if (exists) spark.table(statsTable).drop("sb")
-        else spark.createDataFrame(
-          new java.util.ArrayList[org.apache.spark.sql.Row](), statsSchema))
+        if (exists) spark.table(statsTable).drop("sb") else localDf(Nil, statsSchema))
         .localCheckpoint(true), statsTable, Seq("sb"))
-      spark.sql(s"ALTER TABLE $statsTable SET TBLPROPERTIES ('$BucketsProp' = '$nb')")
-    } else if (changedBuckets.nonEmpty) {
-      // materialize ONLY the changed buckets (the whole point of the
+    else if (changedBuckets.nonEmpty)
+      // only the changed buckets materialize (the whole point of the
       // bucketed layout — a full-frame checkpoint would pay O(total stats
-      // bytes) per refresh); lineage is already settled, every input is a
-      // checkpointed or driver-local frame
+      // bytes) per refresh)
       TableWrite.overwritePresent(nextOf(spark.table(statsTable)
           .filter(col("sb").isin(changedBuckets.toSeq: _*)).drop("sb"))
         .localCheckpoint(true), statsTable)
-    }
-    // record the maintenance spec as metadata: spec discovery is a catalog
-    // read ([[statsSpecOf]])
-    spark.sql(s"ALTER TABLE $statsTable SET TBLPROPERTIES " +
-      s"('$SpecProp' = ${TableWrite.literal(renderSpec(spec))})")
-    RefreshReport(toScan.length, removed, files.length - toScan.length)
+    // record the bucket count and the maintenance spec as metadata (spec
+    // discovery is a catalog read, [[statsSpecOf]]); a replaced table lost
+    // both, an unchanged one is not altered
+    val props = (if (fullRewrite) Seq(BucketsProp -> nb.toString) else Nil) ++
+      Seq(SpecProp -> renderSpec(spec)).filter(p => fullRewrite || !storedSpec.contains(p._2))
+    if (props.nonEmpty)
+      spark.sql(s"ALTER TABLE $statsTable SET TBLPROPERTIES " +
+        props.map { case (k, v) => s"'$k' = ${TableWrite.literal(v)}" }.mkString("(", ", ", ")"))
+    RefreshReport(toScan.length, gone.length, files.length - toScan.length)
   }
 
   /** Table property recording the stats table's bucket count (set at

@@ -108,10 +108,9 @@ object Retention {
         // discovery refresh unscoped.
         val scope: Option[Set[String]] = admitted.flatMap { files =>
           scala.util.Try {
-            val rootNorm = new org.apache.hadoop.fs.Path(meta.location)
-              .toString.replaceFirst("^[a-zA-Z][a-zA-Z0-9+.-]*:/+", "/")
+            val rootNorm = FileStats.normPath(new org.apache.hadoop.fs.Path(meta.location).toString)
             files.map { p =>
-              val norm = p.replaceFirst("^[a-zA-Z][a-zA-Z0-9+.-]*:/+", "/")
+              val norm = FileStats.normPath(p)
               val parent = norm.substring(0, norm.lastIndexOf('/'))
               require(parent == rootNorm || parent.startsWith(rootNorm + "/"),
                 s"input file $p outside table root $rootNorm")

@@ -605,4 +605,88 @@ class FileStatsSpec extends SparkSpec {
     assert(e.getMessage.contains("mixes bloom hash counts"), e.getMessage)
     same(CatalogOps.readPruned(spark, t, st, pred))
   }
+
+  // ------------------------------------------------- refresh's diff
+
+  /** Every stats row, bucket and bloom bytes (as hex) included. */
+  private def statsRows(st: String): Set[org.apache.spark.sql.Row] =
+    spark.table(st).withColumn("bloom", hex(col("bloom"))).collect().toSet
+
+  test("a new bloom geometry rescans every file and leaves one geometry") {
+    val db = s"fgeo${System.nanoTime()}"
+    val t = mkTable(db)
+    val st = s"$db.events_stats"
+    val small = StatsSpec(Seq("user_id"), Seq("user_id"), bloomBits = 1 << 12)
+    val r1 = FileStats.refresh(spark, t, st, small)
+    val big = small.copy(bloomBits = 1 << 14)
+    val r2 = FileStats.refresh(spark, t, st, big)
+    assert(r2.filesScanned == r1.filesScanned && r2.filesKept == 0, r2.toString)
+    assert(FileStats.statsSpecOf(spark, st).contains(big))
+    val widths = spark.table(st).select(octet_length(col("bloom"))).distinct()
+      .as[Int].collect().toSeq
+    assert(widths == Seq((1 << 14) / 8), widths.toString)
+    assert(spark.table(st).count() == r2.filesScanned.toLong, "one row per file")
+    for (k <- Seq(0L, 13L, 500L, 996L)) {
+      val got = FileStats.scanPruned(spark, t, st, Seq(KeysPredicate("user_id", Seq(k))))
+      val expect = spark.table(t).filter(col("user_id") === k)
+      assert(got.count() == expect.count() && got.exceptAll(expect).isEmpty, s"key $k")
+    }
+  }
+
+  test("widening the spec's columns rescans every file and prunes on the new column") {
+    val db = s"fwide${System.nanoTime()}"
+    val t = mkTable(db)
+    val st = s"$db.events_stats"
+    val r1 = FileStats.refresh(spark, t, st, StatsSpec(Seq("user_id")))
+    val wide = StatsSpec(Seq("user_id", "value"))
+    val r2 = FileStats.refresh(spark, t, st, wide)
+    assert(r2.filesScanned == r1.filesScanned && r2.filesKept == 0, r2.toString)
+    assert(FileStats.statsSpecOf(spark, st).contains(wide))
+    assert(spark.table(st).count() == 2L * r2.filesScanned, "one row per file and column")
+    val preds = Seq(RangePredicate("value", Some(100.0), Some(180.0)))
+    val (_, _, rep) = FileStats.pruneFiles(spark, t, st, preds)
+    assert(rep.filesUnknown == 0 && rep.filesSelected <= rep.filesTotal / 4, rep.toString)
+    val pruned = FileStats.scanPruned(spark, t, st, preds)
+    val full = spark.table(t).filter(col("value") >= 100.0 && col("value") <= 180.0)
+    assert(pruned.exceptAll(full).isEmpty && full.exceptAll(pruned).isEmpty)
+  }
+
+  test("a scoped refresh leaves every out-of-scope stats row identical") {
+    val db = s"fscope${System.nanoTime()}"
+    val t = mkTable(db)
+    val st = s"$db.events_stats"
+    val spec = StatsSpec(Seq("user_id", "value"), Seq("user_id"), bloomBits = 1 << 14)
+    FileStats.refresh(spark, t, st, spec)
+    def outside() = statsRows(st).filter(_.getAs[String]("rel") != "bucket=1")
+    val before = outside()
+    val inBefore = spark.table(st).filter(col("rel") === "bucket=1").count()
+    Seq((900003L, 8L, "type_x", 45.0, 1))
+      .toDF("event_id", "user_id", "kind", "value", "bucket")
+      .repartition(1).write.mode("append").insertInto(t)
+    val r = FileStats.refresh(spark, t, st, spec, scopeRels = Some(Set("bucket=1")))
+    assert(r.filesScanned == 1 && r.filesRemoved == 0, r.toString)
+    assert(outside() == before, "out-of-scope stats rows changed")
+    assert(spark.table(st).filter(col("rel") === "bucket=1").count() == inBefore + 2)
+  }
+
+  test("a refresh after a file vanished drops exactly its rows and reports it removed") {
+    val db = s"fgone${System.nanoTime()}"
+    val t = mkTable(db)
+    val st = s"$db.events_stats"
+    val spec = StatsSpec(Seq("user_id"), Seq("user_id"), bloomBits = 1 << 14)
+    FileStats.refresh(spark, t, st, spec)
+    val (root, files) = FileStats.listDataFiles(spark, t)
+    val victim = files.head
+    val before = statsRows(st)
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    assert(fs.delete(new org.apache.hadoop.fs.Path(
+      new org.apache.hadoop.fs.Path(root, victim.rel), victim.name), false))
+    spark.catalog.refreshTable(t)
+    val r = FileStats.refresh(spark, t, st, spec)
+    assert(r == FileStats.RefreshReport(0, 1, files.length - 1), r.toString)
+    def ofVictim(row: org.apache.spark.sql.Row) =
+      row.getAs[String]("rel") == victim.rel && row.getAs[String]("file") == victim.name
+    assert(before.count(ofVictim) == 1)
+    assert(statsRows(st) == before.filterNot(ofVictim))
+  }
 }
